@@ -270,23 +270,30 @@ object SimilarityOps {
     var cents = vecs.filter(_._1 < k).sortBy(_._1).map(_._2.clone)
     if (cents.isEmpty) return None
     try {
+      // iteration-invariant per-vector inputs, built once: the kernel's
+      // ArrayData view and the scale-10 unscaled longs of every element
+      val views = vecs.map(v =>
+        org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(v._2))
+      val units = vecs.map(_._2.map(decimalUnscaled10))
+      val dim = vecs.iterator.map(_._2.length).max
       for (_ <- 0 until iters) {
         val cNorms = cents.map(c =>
           math.sqrt(c.foldLeft(0.0)((a, x) => a + x.toDouble * x.toDouble)))
         val nc = cents.length
-        val dim = vecs.iterator.map(_._2.length).max
         val sums = Array.ofDim[Long](nc, dim)
         val cnts = Array.ofDim[Long](nc, dim)
-        vecs.foreach { case (_, v) =>
+        var i = 0
+        while (i < vecs.length) {
           val cell = graft.functions.VectorMath.ivfProbeCells(
-            org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(v),
-            cents, cNorms, 1).getInt(0)
+            views(i), cents, cNorms, 1).getInt(0)
+          val u = units(i)
           var d = 0
-          while (d < v.length) {
-            sums(cell)(d) = Math.addExact(sums(cell)(d), decimalUnscaled10(v(d)))
+          while (d < u.length) {
+            sums(cell)(d) = Math.addExact(sums(cell)(d), u(d))
             cnts(cell)(d) += 1
             d += 1
           }
+          i += 1
         }
         val next = cents.map(_.clone)
         var c = 0
@@ -332,27 +339,36 @@ object SimilarityOps {
     // pass). Query-layer callers that know the corpus identity memo
     // the artifact by sfDir (PipelineQueries.kmFor) and feed the
     // ...With variants.
-    // DRIVER KERNEL under the count-before-collect gate (the
-    // bpe_learn / LocalGraph device): each distributed Lloyd round is
-    // one serial assignment+explode+agg+collect job over a corpus
-    // whose k × dim decimal partials fit in kilobytes — measured as
-    // the dominant job count of every quantizer consumer once the
-    // session memos were bench-disabled (sim_pq 29 jobs / 2.5 s,
-    // sim_ivfpq 33 / 2.7, JobProbe sf0.1/32c). Under the cap the
-    // vectors collect ONCE and the rounds run locally through the
-    // SAME VectorMath.ivfProbeCells assignment kernel and the same
-    // scale-10 HALF_UP decimal sums (exact, order-independent), so
-    // the trained centroids are bit-identical by construction
-    // (SimilarityOpsSpec pins local == distributed); a long-sum
-    // overflow (impossible under the cap for unit-scale embeddings,
-    // but checked) falls through to the distributed rounds, as does
-    // any corpus past the cap — the honest 100 TB form.
-    if (emb.count() <= driverCap) {
-      val rows = emb.select(col("vec_id"), col("embedding")).collect()
-        .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-      kmeansLloydLocal(rows, k, iters) match {
-        case Some(c) => return c
-        case None => ()
+    // DRIVER KERNEL behind a bounded-collect gate: each distributed
+    // Lloyd round is one serial assignment+explode+agg+collect job over
+    // a corpus whose k × dim decimal partials fit in kilobytes —
+    // measured as the dominant job count of every quantizer consumer
+    // once the session memos were bench-disabled (sim_pq 29 jobs /
+    // 2.5 s, sim_ivfpq 33 / 2.7, JobProbe sf0.1/32c). ONE collect of at
+    // most driverCap + 1 vectors decides and feeds the gate at once (no
+    // count job first): if it holds ≤ driverCap vectors that is the
+    // whole corpus, and the rounds run locally through the SAME
+    // VectorMath.ivfProbeCells assignment kernel and the same scale-10
+    // HALF_UP decimal sums (exact, order-independent), so the trained
+    // centroids are bit-identical by construction (SimilarityOpsSpec
+    // pins local == distributed). One more vector means the corpus is
+    // past the cap and takes the distributed rounds — the honest
+    // 100 TB form — as does a long-sum overflow (impossible under the
+    // cap for unit-scale embeddings, but checked). The limit collect
+    // is one job over a one-file table (a many-partition input is
+    // scanned in rounds of growing size, one job each). driverCap = 0
+    // skips the collect; a cap past Int.MaxValue - 1 is clamped there
+    // (no JVM array holds more).
+    if (driverCap > 0) {
+      val take = math.min(driverCap, Int.MaxValue - 1L).toInt
+      val rows = emb.select(col("vec_id"), col("embedding"))
+        .limit(take + 1).collect()
+      if (rows.length <= take) {
+        val vecs = rows.map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
+        kmeansLloydLocal(vecs, k, iters) match {
+          case Some(c) => return c
+          case None => ()
+        }
       }
     }
     var cents = seedCentroids(emb, k)

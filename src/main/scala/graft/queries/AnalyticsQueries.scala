@@ -369,12 +369,14 @@ object AnalyticsQueries {
    *  (~10× the hourly rows here: gap hours outnumber observations).
    *  Grid, join and fill are all per-user decisions over that user's
    *  own observations, so they now run ROW-LOCALLY over one per-user
-   *  sorted observation array: each observation opens a segment
-   *  [its hour, next observation − 1h] (the last one closes at max h),
-   *  every hour in the segment carries its opener's value — exactly
-   *  LOCF on the dense grid, same rows, same values (spec-pinned
-   *  against the join+window reference). Guide §2.4: the join and the
-   *  window's grid-sized sort are gone; what remains is the hourly agg
+   *  sorted observation array: each observation with a non-NULL hourly
+   *  value opens a segment [its hour, next such observation − 1h] (the
+   *  last one closes at max h), every hour in the segment carries its
+   *  opener's value, and hours before the first opener are NULL —
+   *  exactly LOCF on the dense grid, same rows, same values
+   *  (spec-pinned against the join+window reference, NULL values
+   *  included). Guide §2.4: the join and the window's grid-sized sort
+   *  are gone; what remains is the hourly agg
    *  exchange plus ONE user-keyed agg exchange of hourly-sized rows.
    *  Per-user state is the observation array — bounded by hours in the
    *  time range (time-bounded, corpus-size-independent), the qForecast
@@ -389,18 +391,31 @@ object AnalyticsQueries {
     val perUser = hourly.groupBy("user_id")
       .agg(sort_array(collect_list(
         struct(unix_millis(col("h")).as("hm"), col("hv")))).as("obs"))
-    // segment expansion: get(obs, i+1) is the NEXT observation
-    // (0-indexed, NULL past the end — ANSI-safe, unlike element_at);
-    // the last segment is one hour
-    val segs = flatten(transform(col("obs"), (o, i) =>
+      // a column of its own, so the lambda below reads it, not refilters
+      .withColumn("nn", filter(col("obs"), o => o.getField("hv").isNotNull))
+    // segment expansion: only observations with a non-NULL hv open a
+    // segment (an hour whose values are all NULL carries the previous
+    // value forward, as last(ignoreNulls) does); get(nn, i+1) is the
+    // NEXT opener (0-indexed, NULL past the end — ANSI-safe, unlike
+    // element_at), and the last segment closes at the user's last hour.
+    // Hours before the first opener have nothing to carry: they form a
+    // leading NULL segment, empty when the first hour has a value.
+    val obs = col("obs")
+    val nn = col("nn")
+    val h0 = get(obs, lit(0)).getField("hm")
+    val h1 = element_at(obs, -1).getField("hm")
+    val leadEnd = coalesce(get(nn, lit(0)).getField("hm") - HourMs, h1)
+    val lead = transform(
+      filter(sequence(h0, greatest(h0, leadEnd), lit(HourMs)), _ <= leadEnd),
+      hm => struct(hm.as("h_ms"), lit(null).cast("double").as("v_ff")))
+    val segs = flatten(transform(nn, (o, i) =>
       transform(
         sequence(o.getField("hm"),
-          coalesce(get(col("obs"), i + 1).getField("hm") - HourMs,
-            o.getField("hm")),
+          coalesce(get(nn, i + 1).getField("hm") - HourMs, h1),
           lit(HourMs)),
         hm => struct(hm.as("h_ms"),
           round(o.getField("hv"), 4).as("v_ff")))))
-    perUser.select(col("user_id"), explode(segs).as("s"))
+    perUser.select(col("user_id"), explode(concat(lead, segs)).as("s"))
       .select(col("user_id"), col("s.h_ms").as("h_ms"),
         col("s.v_ff").as("v_ff"))
   }

@@ -4517,8 +4517,11 @@ object PipelineQueries {
    *  genuinely round-trip — decode correctness, not decoder echo.
    *  Ignores sfDir by construction (the fixture is scale-free). */
   def mmDecodePng(spark: SparkSession, sfDir: String): DataFrame =
+    // every fixture read goes through Tables.parquet like the sfDir
+    // tables, so its schema is inferred once per session, not per query
+    // (SourceHygieneSpec keeps raw parquet reads out of ops/ and queries/)
     MultimodalOps.decodeImagePartitioned(
-      spark.read.parquet(graft.tools.PngFixture.Path), "img_id", "png")
+      Tables.parquet(spark, graft.tools.PngFixture.Path), "img_id", "png")
       .toDF()
       .select(col("id").as("img_id"),
         col("width").cast("bigint").as("width"),
@@ -4538,7 +4541,7 @@ object PipelineQueries {
    *  exact hash compare. Ignores sfDir (scale-free fixture). */
   def mmDecodeJpeg(spark: SparkSession, sfDir: String): DataFrame =
     MultimodalOps.decodeImagePartitioned(
-      spark.read.parquet(graft.tools.JpegFixture.Path), "img_id", "jpeg")
+      Tables.parquet(spark, graft.tools.JpegFixture.Path), "img_id", "jpeg")
       .toDF()
       .select(col("id").as("img_id"),
         col("width").cast("bigint").as("width"),
@@ -4558,7 +4561,7 @@ object PipelineQueries {
     val B = graft.tools.ImageRemuxFixture.IdBase
     val M = graft.tools.ImageRemuxFixture.M
     MultimodalOps.decodeImagePartitioned(
-      spark.read.parquet(graft.tools.ImageRemuxFixture.Path)
+      Tables.parquet(spark, graft.tools.ImageRemuxFixture.Path)
         .filter(col("img_id") >= B + 2 * M && col("img_id") < B + 3 * M),
       "img_id", "image")
       .toDF()
@@ -4581,7 +4584,7 @@ object PipelineQueries {
    *  round-trip together. Ignores sfDir (scale-free fixture). */
   def mmDecodeResize(spark: SparkSession, sfDir: String): DataFrame =
     MultimodalOps.decodeImageResized(
-      spark.read.parquet(graft.tools.PngFixture.Path), "img_id", "png",
+      Tables.parquet(spark, graft.tools.PngFixture.Path), "img_id", "png",
       ResizeFactor)
       .toDF()
       .select(col("id").as("img_id"),
@@ -4601,7 +4604,7 @@ object PipelineQueries {
    *  (the fixture is scale-free). */
   def mmDecodeWav(spark: SparkSession, sfDir: String): DataFrame =
     MultimodalOps.decodeWavPartitioned(
-      spark.read.parquet(graft.tools.WavFixture.Path), "clip_id", "wav")
+      Tables.parquet(spark, graft.tools.WavFixture.Path), "clip_id", "wav")
       .toDF()
       .select(col("id").as("clip_id"),
         col("sample_rate").cast("bigint").as("sample_rate"),
@@ -4622,7 +4625,7 @@ object PipelineQueries {
    *  as VALUES literals. Ignores sfDir (scale-free fixture). */
   def mmAudioFeatures(spark: SparkSession, sfDir: String): DataFrame =
     MultimodalOps.audioFrameFeaturesPartitioned(
-      spark.read.parquet(graft.tools.WavFixture.Path), "clip_id", "wav",
+      Tables.parquet(spark, graft.tools.WavFixture.Path), "clip_id", "wav",
       graft.tools.WavFixture.FrameWin, graft.tools.WavFixture.SilenceThr)
       .toDF()
       .select(col("id").as("clip_id"), col("n_windows"),
@@ -4662,11 +4665,11 @@ object PipelineQueries {
    *  re-master fixture (id ranges disjoint by construction —
    *  [[graft.tools.AudioRemuxFixture.IdBase]]). */
   private def mixedAudioCorpus(spark: SparkSession): DataFrame =
-    spark.read.parquet(graft.tools.AudioDupFixture.Path)
+    Tables.parquet(spark, graft.tools.AudioDupFixture.Path)
       .select(col("clip_id"), col("wav").as("audio"))
-      .unionAll(spark.read.parquet(graft.tools.AudioRemuxFixture.Path)
+      .unionAll(Tables.parquet(spark, graft.tools.AudioRemuxFixture.Path)
         .select(col("clip_id"), col("audio")))
-      .unionAll(spark.read.parquet(graft.tools.AiffRemuxFixture.Path)
+      .unionAll(Tables.parquet(spark, graft.tools.AiffRemuxFixture.Path)
         .select(col("clip_id"), col("audio")))
 
   /** AUDIO NEAR-DUP pairs — the perceptual-hash dedup loop on sound,
@@ -4739,7 +4742,7 @@ object PipelineQueries {
     // The handle stays live under the returned frame — left to the
     // ContextCleaner (the pagerank non-boundary convention)
     val base = MultimodalOps.phashPartitioned(
-      spark.read.parquet(PngFixture.Path), "img_id", "png", PhashShift)
+      Tables.parquet(spark, PngFixture.Path), "img_id", "png", PhashShift)
       .toDF()
       .select(col("id").as("img_id"), col("phash"),
         bit_count(col("phash").bitwiseXOR(col("phash_shifted")))
@@ -4813,9 +4816,9 @@ object PipelineQueries {
    *  re-encode fixture (id ranges disjoint by construction —
    *  [[graft.tools.ImageRemuxFixture.IdBase]]). */
   private def mixedImageCorpus(spark: SparkSession): DataFrame =
-    spark.read.parquet(graft.tools.PngFixture.Path)
+    Tables.parquet(spark, graft.tools.PngFixture.Path)
       .select(col("img_id"), col("png").as("image"))
-      .unionAll(spark.read.parquet(graft.tools.ImageRemuxFixture.Path)
+      .unionAll(Tables.parquet(spark, graft.tools.ImageRemuxFixture.Path)
         .select(col("img_id"), col("image")))
 
   /** The [[mmPhashClusters]] engine over any image frame (columns
@@ -4918,11 +4921,11 @@ object PipelineQueries {
    *  re-mux fixture (id ranges disjoint by construction —
    *  [[graft.tools.VideoRemuxFixture.IdBase]]). */
   private def mixedVideoCorpus(spark: SparkSession): DataFrame =
-    spark.read.parquet(graft.tools.VideoDupFixture.Path)
+    Tables.parquet(spark, graft.tools.VideoDupFixture.Path)
       .select(col("clip_id"), col("gif").as("video"))
-      .unionAll(spark.read.parquet(graft.tools.VideoRemuxFixture.Path)
+      .unionAll(Tables.parquet(spark, graft.tools.VideoRemuxFixture.Path)
         .select(col("clip_id"), col("video")))
-      .unionAll(spark.read.parquet(graft.tools.Mp4RemuxFixture.Path)
+      .unionAll(Tables.parquet(spark, graft.tools.Mp4RemuxFixture.Path)
         .select(col("clip_id"), col("video")))
 
   /** The [[mmVideoNeardup]] engine over any (clip_id, video) frame
@@ -5015,7 +5018,7 @@ object PipelineQueries {
    *  sfDir (scale-free fixture). */
   def mmFramesGif(spark: SparkSession, sfDir: String): DataFrame =
     MultimodalOps.decodeGifFramesPartitioned(
-      spark.read.parquet(graft.tools.GifFixture.Path), "clip_id", "gif")
+      Tables.parquet(spark, graft.tools.GifFixture.Path), "clip_id", "gif")
       .toDF()
       .select(col("id").as("clip_id"), col("n_frames"),
         col("width").cast("bigint").as("width"),
@@ -5038,7 +5041,7 @@ object PipelineQueries {
    *  sfDir by construction (the fixture is scale-free). */
   def mmProbeMp4(spark: SparkSession, sfDir: String): DataFrame =
     MultimodalOps.probeMp4Partitioned(
-      spark.read.parquet(graft.tools.Mp4Fixture.Path), "clip_id", "mp4")
+      Tables.parquet(spark, graft.tools.Mp4Fixture.Path), "clip_id", "mp4")
       .toDF()
       .select(col("id").as("clip_id"), col("brand"), col("timescale"),
         col("duration_ms"), col("n_tracks"), col("mdat_bytes"))
@@ -5057,7 +5060,7 @@ object PipelineQueries {
    *  compare. Ignores sfDir (scale-free fixture). */
   def mmFramesMjpeg(spark: SparkSession, sfDir: String): DataFrame =
     MultimodalOps.decodeMjpegAviPartitioned(
-      spark.read.parquet(graft.tools.AviFixture.Path), "clip_id", "avi")
+      Tables.parquet(spark, graft.tools.AviFixture.Path), "clip_id", "avi")
       .toDF()
       .select(col("id").as("clip_id"), col("n_frames"),
         col("width").cast("bigint").as("width"),
@@ -5081,7 +5084,7 @@ object PipelineQueries {
    *  Ignores sfDir (scale-free fixture). */
   def mmFramesMp4(spark: SparkSession, sfDir: String): DataFrame =
     MultimodalOps.decodeMjpegMp4Partitioned(
-      spark.read.parquet(graft.tools.Mp4RemuxFixture.Path),
+      Tables.parquet(spark, graft.tools.Mp4RemuxFixture.Path),
       "clip_id", "video")
       .toDF()
       .select(col("id").as("clip_id"), col("n_frames"),

@@ -14,7 +14,9 @@ import org.scalatest.funsuite.AnyFunSuite
  * `FanOut.fanOut`). Plan tests pin the queries that exist; this spec
  * pins the CODE so a new operator can't quietly reintroduce a raw
  * call site: every `.repartition(` in ops/ + queries/ must be one of
- * the frozen, individually-justified sites below.
+ * the frozen, individually-justified sites below. It also keeps raw
+ * `read.parquet(` calls out of ops/ + queries/: every table and fixture
+ * loads through `model.Tables`, which infers each schema once per session.
  */
 class SourceHygieneSpec extends AnyFunSuite {
 
@@ -69,5 +71,22 @@ class SourceHygieneSpec extends AnyFunSuite {
       assert(got == n,
         s"$name has $got call sites, allowlist says $n — update the freeze")
     }
+  }
+
+  test("no raw parquet reads in ops/ or queries/ — tables and fixtures " +
+      "load through model.Tables, which infers each schema once per " +
+      "session") {
+    val offenders = roots.flatMap { root =>
+      Files.walk(Paths.get(root)).iterator().asScala
+        .filter(p => p.toString.endsWith(".scala") && Files.isRegularFile(p))
+        .filter(p => "read\\s*\\.parquet\\(".r
+          .findFirstIn(new String(Files.readAllBytes(p), "UTF-8")).isDefined)
+        .map(_.toString)
+    }
+    assert(offenders.isEmpty,
+      offenders.mkString(
+        "a raw spark.read.parquet infers the schema with one Spark job " +
+          "per call; read through graft.model.Tables.parquet (or " +
+          "Tables.table for an sfDir table) instead:\n", "\n", ""))
   }
 }

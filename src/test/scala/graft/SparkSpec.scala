@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -15,6 +19,24 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     // managed tables (bucketing specs) land under target/, not the repo root
     .config("spark.sql.warehouse.dir", "target/spark-warehouse")
     .getOrCreate()
+
+  /** `body`'s result and the number of Spark jobs it started, counted
+   *  with a listener between two listener-bus drains. */
+  def countJobs[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    ListenerBusDrain.drain(sc)
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      ListenerBusDrain.drain(sc)
+      (out, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
 
   override def afterAll(): Unit = {
     // keep the session alive across suites in the same JVM (sbt forks once)

@@ -195,6 +195,33 @@ class SimilarityOpsSpec extends SparkSpec {
     assert(d2.map(_.toSeq).toSeq == r2.map(_.toSeq).toSeq)
   }
 
+  test("kmeansCentroids gate boundaries: driverCap vectors train " +
+      "locally in one Spark job, driverCap + 1 take the distributed " +
+      "rounds, bit-identical; driverCap = 0 and the empty corpus") {
+    val rnd = new scala.util.Random(11)
+    val dir = java.nio.file.Files.createTempDirectory("km-gate").toString
+    // one parquet file, the shape of the embeddings table
+    (0L until 40L).map(i => (i, Seq.fill(5)((rnd.nextFloat() - 0.5f) * 2.3f)))
+      .toDF("vec_id", "embedding").coalesce(1).write.parquet(s"$dir/corpus")
+    val corpus = spark.read.parquet(s"$dir/corpus")
+    val n = corpus.count()
+    def train(cap: Long) = countJobs(
+      SimilarityOps.kmeansCentroids(corpus, k = 4, iters = 3, driverCap = cap)
+        .map(_.toSeq).toSeq)
+    val (atCap, atCapJobs) = train(n)
+    val (pastCap, pastCapJobs) = train(n - 1)
+    val (off, offJobs) = train(0L)
+    assert(atCapJobs == 1, s"local path ran $atCapJobs jobs")
+    assert(pastCapJobs > 1 + 3, s"distributed path ran $pastCapJobs jobs")
+    assert(offJobs < pastCapJobs, "driverCap = 0 must skip the bounded collect")
+    assert(atCap.length == 4)
+    assert(atCap == pastCap && atCap == off)
+    // empty corpus: no seeds on either arm, no centroids
+    val empty = corpus.filter(col("vec_id") < 0)
+    assert(SimilarityOps.kmeansCentroids(empty, 4, 3).isEmpty)
+    assert(SimilarityOps.kmeansCentroids(empty, 4, 3, driverCap = 0L).isEmpty)
+  }
+
   test("ivfTopKKmeans neighbors are a subset of brute force") {
     val brute = SimilarityOps.cosineTopK(emb, Seq(0L), 3)
       .select("neighbor_id").as[Long].collect().toSet

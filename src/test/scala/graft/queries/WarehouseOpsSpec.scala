@@ -75,14 +75,13 @@ class WarehouseOpsSpec extends SparkSpec {
     }
   }
 
-  test("resampleLocf: the row-local segment expansion reproduces the " +
-      "dense-grid join + running last(ignoreNulls) window reference " +
-      "bit for bit — grid coverage, LOCF fill, gap-heavy users, " +
-      "single-observation users") {
+  /** The former resampleLocf formulation, verbatim, as the reference:
+   *  dense grid LEFT-joined to the hourly relation, filled by a running
+   *  last(ignoreNulls) window — the oracle's last_value(hv IGNORE NULLS). */
+  private def locfReference(
+      events: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Option[Double])] = {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.expressions.Window
-    val events = graft.model.Tables.events(spark, sfd)
-    // the former formulation, verbatim, as the reference
     val hourly = events
       .withColumn("h", date_trunc("hour", col("ts")))
       .groupBy(col("user_id"), col("h"))
@@ -95,14 +94,24 @@ class WarehouseOpsSpec extends SparkSpec {
           expr("INTERVAL 1 HOUR"))).as("h"))
     val w = Window.partitionBy(col("user_id")).orderBy(col("h"))
       .rowsBetween(Window.unboundedPreceding, 0)
-    val want = grid.join(hourly, Seq("user_id", "h"), "left")
+    locfRows(grid.join(hourly, Seq("user_id", "h"), "left")
       .select(col("user_id"), unix_millis(col("h")).as("h_ms"),
-        round(last(col("hv"), ignoreNulls = true).over(w), 4).as("v_ff"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      .sortBy(identity).toSeq
-    val got = AnalyticsQueries.resampleLocf(events)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      .sortBy(identity).toSeq
+        round(last(col("hv"), ignoreNulls = true).over(w), 4).as("v_ff")))
+  }
+
+  private def locfRows(
+      df: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Option[Double])] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1),
+      if (r.isNullAt(2)) None else Some(r.getDouble(2))))
+      .sortBy(r => (r._1, r._2)).toSeq
+
+  test("resampleLocf: the row-local segment expansion reproduces the " +
+      "dense-grid join + running last(ignoreNulls) window reference " +
+      "bit for bit — grid coverage, LOCF fill, gap-heavy users, " +
+      "single-observation users") {
+    val events = graft.model.Tables.events(spark, sfd)
+    val want = locfReference(events)
+    val got = locfRows(AnalyticsQueries.resampleLocf(events))
     assert(got.size == want.size, s"${got.size} rows vs ${want.size}")
     assert(got == want,
       s"first diff: ${got.zip(want).find(p => p._1 != p._2)}")
@@ -112,5 +121,39 @@ class WarehouseOpsSpec extends SparkSpec {
     val perUser = got.groupBy(_._1)
     assert(perUser.exists { case (_, rows) => rows.size > 1 &&
       rows.map(_._3).distinct.size < rows.size })
+  }
+
+  test("resampleLocf: an hour whose values are all NULL carries the " +
+      "last non-NULL hourly value forward, as the reference does") {
+    import spark.implicits._
+    val t0 = 1704067200000L + 600000L // 2024-01-01T00:10Z
+    def at(hours: Int, min: Int) =
+      new java.sql.Timestamp(t0 + hours * 3600000L + min * 60000L)
+    val events = Seq[(Long, java.sql.Timestamp, Option[Double])](
+      // user 1: leading all-NULL hour, a value, a gap, an all-NULL hour
+      // mid-run, a gap, a value, a trailing all-NULL hour
+      (1L, at(0, 0), None), (1L, at(0, 5), None),
+      (1L, at(1, 0), Some(2.5)),
+      (1L, at(4, 0), None),
+      (1L, at(7, 0), Some(1.25)), (1L, at(7, 9), Some(0.75)),
+      (1L, at(8, 0), None),
+      // user 2: every value NULL
+      (2L, at(0, 0), None), (2L, at(3, 0), None),
+      // user 3: an hour mixing NULL and non-NULL values (count(*) counts
+      // the NULL row), then an all-NULL hour after a gap
+      (3L, at(0, 0), Some(3.0)), (3L, at(0, 1), None),
+      (3L, at(2, 0), None),
+      // user 4: a single observation
+      (4L, at(5, 0), Some(9.99)))
+      .toDF("user_id", "ts", "value")
+    val want = locfReference(events)
+    val got = locfRows(AnalyticsQueries.resampleLocf(events))
+    assert(got == want,
+      s"first diff: ${got.zip(want).find(p => p._1 != p._2)}")
+    // non-vacuity: NULL hours are filled, leading ones stay NULL
+    val u1 = got.filter(_._1 == 1L).map(_._3)
+    assert(u1 == Seq(None, Some(2.5), Some(2.5), Some(2.5), Some(2.5),
+      Some(2.5), Some(2.5), Some(1.0), Some(1.0)))
+    assert(got.filter(_._1 == 2L).map(_._3) == Seq(None, None, None, None))
   }
 }

@@ -29,54 +29,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3").toInt
-    // Session memos (trained centroids/codebooks, converged cluster
-    // frames — the production service's persisted artifacts) are
-    // DISABLED under the bench: warm passes would otherwise serve
-    // results the uncounted cold pass stored, timing artifact serving
-    // instead of the declared computation (the r21 gaming finding).
-    // Every timed invocation computes from the parquet inputs.
-    System.setProperty(graft.queries.SessionMemo.Prop,
-      sys.env.getOrElse("SPARK_GRAFT_SESSION_MEMO", "off"))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Checkpoint blocks and per-round broadcast relations are
-      // released by the ContextCleaner, which only drains on a driver
-      // GC; a 189-query suite (or any long-lived local-mode service)
-      // accumulates them faster than the 30-minute default ever fires,
-      // squeezing execution memory for UNRELATED queries (measured:
-      // graph_kcore 4.4 → 14.2 s across passes of one run with
-      // untouched code, while a fresh-JVM standalone probe reads a
-      // stable 3.6 s). The bench now drains BETWEEN queries (an
-      // explicit System.gc() outside every timed region — see timed()
-      // below), so the in-query timer keeps Spark's 30-minute default:
-      // the r21 45s cadence put 2-3 full-GC pauses INSIDE whichever
-      // query happened to be running, scattering ~0.8x phantom
-      // regressions across untouched sub-second queries (r21 verdict).
-      // Env-parameterized for long-lived services without a between-
-      // queries boundary to drain at.
-      .config("spark.cleaner.periodicGC.interval",
-        sys.env.getOrElse("SPARK_GRAFT_PERIODIC_GC", "30min"))
-      // The generated-code cache (static conf) defaults to 100 classes
-      // — sized for a handful of repeated plans, not a many-query
-      // service. 189 distinct queries hold thousands of codegen
-      // fragments, so at the default every fragment is EVICTED before
-      // its query runs again: each warm pass re-runs Janino and
-      // re-enters HotSpot interpretation for every stage (measured:
-      // warm pass totals 150-167 s at the default vs 119-125 s
-      // retained, graph_pagerank 5.0 -> 2.5 s, matching its
-      // fresh-JVM standalone floor — the suite floor WAS
-      // recompilation). Bounded: ~5000 compiled classes, heap-resident
-      // bytecode; pairs with the ReservedCodeCacheSize raise in
-      // build.sbt (overflowing the JIT code cache disables
-      // compilation, which showed up as a uniform tail slowdown).
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "5000"))
-      .getOrCreate()
+    val iters = GraftEnv.int("SPARK_GRAFT_BENCH_ITERS", 3, min = 1)
+    val spark = GraftSession("graft-bench")
     spark.sparkContext.setLogLevel("WARN")
     // warm-up (uncounted): JVM/codegen/parquet-footer machinery
     try SparkEntry.queries("wordcount")(spark, sfDir)

@@ -98,13 +98,7 @@ object Run {
     val checkpoint = opts.getOrElse("checkpoint",
       Files.createTempDirectory("graft-run").toString)
 
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName(s"graft-$name")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val spark = GraftSession(s"graft-$name", sys.env.get("SPARK_MASTER"))
     spark.sparkContext.setLogLevel("WARN")
 
     /** Source -> (ts, value) string lines, per --source. */

@@ -1,35 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Oracle invocations compute from the parquet inputs: session
-    // memos (the service's persisted model artifacts) are disabled
-    // here exactly as in Bench, so the dumped results come from fresh
-    // per-invocation computation (memoized == fresh is spec-pinned,
-    // but the oracle should not have to trust that).
-    System.setProperty(graft.queries.SessionMemo.Prop,
-      sys.env.getOrElse("SPARK_GRAFT_SESSION_MEMO", "off"))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // block release between queries via explicit System.gc() (the
-      // Bench rationale: drain the ContextCleaner at query boundaries,
-      // keep Spark's 30-minute timer default; env-parameterized)
-      .config("spark.cleaner.periodicGC.interval",
-        sys.env.getOrElse("SPARK_GRAFT_PERIODIC_GC", "30min"))
-      // generated-code cache sized for a 189-query service (the Bench
-      // rationale: the 100-class default evicts every fragment between
-      // passes; env-parameterized, same knob)
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "5000"))
-      .getOrCreate()
+    val spark = GraftSession("graft-verify")
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // Dev-only subset filter (SPARK_GRAFT_ONLY=q1,q2): dump + oracle for

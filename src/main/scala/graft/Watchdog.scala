@@ -40,5 +40,5 @@ private[graft] object Watchdog {
   }
 
   def timeoutSec: Long =
-    sys.env.getOrElse("SPARK_GRAFT_QUERY_TIMEOUT_SEC", "240").toLong
+    GraftEnv.long("SPARK_GRAFT_QUERY_TIMEOUT_SEC", 240L, min = 1)
 }

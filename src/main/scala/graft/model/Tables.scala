@@ -26,8 +26,7 @@ import org.apache.spark.sql.types.StructType
  *  - the path plus the file count, total length and latest modification
  *    time under it, so a rewritten table is inferred again.
  * This is catalog metadata — what Spark's own catalog tables keep — not
- * a result memo: `graft.session.memo=off` does not disable it, and every
- * call still returns a fresh relation (new file listing, new attribute
+ * a result cache: every call still returns a fresh relation (new file listing, new attribute
  * ids, so self-joins and plan shapes are as with a plain read) that
  * lists and scans its input when executed.
  */

@@ -28,8 +28,8 @@ object DedupOps {
    *  outgrows any executor, and that fallback is the honest 100 TB
    *  form. Env-parameterized so a cluster deployment sizes it to its
    *  executor memory instead of this local default. */
-  private[graft] val MaxBroadcastNodes: Long =
-    sys.env.getOrElse("SPARK_GRAFT_GRAPH_BC_NODES", "4000000").toLong
+  private[graft] lazy val MaxBroadcastNodes: Long =
+    graft.GraftEnv.long("SPARK_GRAFT_GRAPH_BC_NODES", 4000000L, min = 0)
 
   /** Exact dedup: group identical keys, keep the smallest id as the
    *  canonical survivor. Output: (keeper, n) per duplicate group. */
@@ -265,22 +265,8 @@ object DedupOps {
    *  ~2M fixed-width rows ≈ 50–150 MB — the guide's 100 MB–1 GB
    *  post-shuffle band. Env-parameterized (`SPARK_GRAFT_ROWS_PER_PART`)
    *  so a cluster deployment can retune without code. */
-  private[graft] val AdaptiveRowsPerPartition: Long = {
-    // defensive parse: a malformed or non-positive value must not
-    // surface as an ExceptionInInitializerError on first DedupOps
-    // touch (nor collapse every adaptive target to nonsense)
-    val default = 2000000L
-    sys.env.get("SPARK_GRAFT_ROWS_PER_PART") match {
-      case None => default
-      case Some(raw) =>
-        scala.util.Try(raw.trim.toLong).toOption.filter(_ > 0).getOrElse {
-          org.slf4j.LoggerFactory.getLogger(getClass).warn(
-            "SPARK_GRAFT_ROWS_PER_PART='{}' is not a positive long; " +
-              "using the default {}", raw, default)
-          default
-        }
-    }
-  }
+  private[graft] lazy val AdaptiveRowsPerPartition: Long =
+    graft.GraftEnv.long("SPARK_GRAFT_ROWS_PER_PART", 2000000L, min = 1)
 
   /** Row-count gate for the iterative engines' hash-partitioned
    *  snapshot rebuild: BELOW it the build (an edge-relation shuffle +
@@ -292,19 +278,9 @@ object DedupOps {
    *  never a core-count constant; env-parameterized like its sibling
    *  knobs. Default: two partitions' worth of rows — any smaller and
    *  the whole relation is at most a couple of round-task's work. */
-  private[graft] val HashSnapMinRows: Long = {
-    val default = 2L * AdaptiveRowsPerPartition
-    sys.env.get("SPARK_GRAFT_HASH_SNAP_MIN_ROWS") match {
-      case None => default
-      case Some(raw) =>
-        scala.util.Try(raw.trim.toLong).toOption.filter(_ >= 0).getOrElse {
-          org.slf4j.LoggerFactory.getLogger(getClass).warn(
-            "SPARK_GRAFT_HASH_SNAP_MIN_ROWS='{}' is not a non-negative " +
-              "long; using the default {}", raw, default)
-          default
-        }
-    }
-  }
+  private[graft] lazy val HashSnapMinRows: Long =
+    graft.GraftEnv.long("SPARK_GRAFT_HASH_SNAP_MIN_ROWS",
+      2L * AdaptiveRowsPerPartition, min = 0)
 
   /** Narrow READ VIEW over a materialized snapshot: coalesce to
    *  ceil(rows / rowsPerPartition) partitions — no shuffle, nothing

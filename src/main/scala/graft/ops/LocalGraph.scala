@@ -45,19 +45,8 @@ object LocalGraph {
    *  (~64 MB packed; the transient collect is bounded and released on
    *  return). Env-parameterized so a cluster deployment sizes it to
    *  its driver heap; 0 disables every driver kernel. */
-  private[graft] val MaxDriverPairs: Long = {
-    val default = 4000000L
-    sys.env.get("SPARK_GRAFT_DRIVER_GRAPH_PAIRS") match {
-      case None => default
-      case Some(raw) =>
-        scala.util.Try(raw.trim.toLong).toOption.filter(_ >= 0).getOrElse {
-          org.slf4j.LoggerFactory.getLogger(getClass).warn(
-            "SPARK_GRAFT_DRIVER_GRAPH_PAIRS='{}' is not a non-negative " +
-              "long; using the default {}", raw, default)
-          default
-        }
-    }
-  }
+  private[graft] lazy val MaxDriverPairs: Long =
+    graft.GraftEnv.long("SPARK_GRAFT_DRIVER_GRAPH_PAIRS", 4000000L, min = 0)
 
   /** Collect a two-long-column pair relation iff its row count is
    *  known (counted by the caller — typically over an already
@@ -308,19 +297,8 @@ object LocalGraph {
    *  edge count passes the pair gate but whose wedge volume does not
    *  still takes the distributed census. ~2^28 merge steps ≈ well
    *  under a second of driver time. */
-  private[graft] val MaxDriverTriWork: Long = {
-    val default = 1L << 28
-    sys.env.get("SPARK_GRAFT_DRIVER_TRI_WORK") match {
-      case None => default
-      case Some(raw) =>
-        scala.util.Try(raw.trim.toLong).toOption.filter(_ >= 0).getOrElse {
-          org.slf4j.LoggerFactory.getLogger(getClass).warn(
-            "SPARK_GRAFT_DRIVER_TRI_WORK='{}' is not a non-negative " +
-              "long; using the default {}", raw, default)
-          default
-        }
-    }
-  }
+  private[graft] lazy val MaxDriverTriWork: Long =
+    graft.GraftEnv.long("SPARK_GRAFT_DRIVER_TRI_WORK", 1L << 28, min = 0)
 
   /** Exact degree-orientation triangle census (the census engine's
    *  adjacency-intersection arm, driver-side): each undirected edge

@@ -232,19 +232,8 @@ object SimilarityOps {
    *  vectors ≈ 64 MB of 64-dim floats — the LocalGraph.MaxDriverPairs
    *  budget class; 0 disables it, env-parameterized for cluster
    *  drivers). */
-  private[graft] val KmDriverMaxVectors: Long = {
-    val default = 250000L
-    sys.env.get("SPARK_GRAFT_DRIVER_KM_VECS") match {
-      case None => default
-      case Some(raw) =>
-        scala.util.Try(raw.trim.toLong).toOption.filter(_ >= 0).getOrElse {
-          org.slf4j.LoggerFactory.getLogger(getClass).warn(
-            "SPARK_GRAFT_DRIVER_KM_VECS='{}' is not a non-negative " +
-              "long; using the default {}", raw, default)
-          default
-        }
-    }
-  }
+  private[graft] lazy val KmDriverMaxVectors: Long =
+    graft.GraftEnv.long("SPARK_GRAFT_DRIVER_KM_VECS", 250000L, min = 0)
 
   /** Spark's FLOAT → DECIMAL(20,10) cast, driver-side: the decimal
    *  string value of the widened double (BigDecimal.valueOf ==
@@ -331,20 +320,12 @@ object SimilarityOps {
    */
   def kmeansCentroids(emb: DataFrame, k: Int, iters: Int,
       driverCap: Long = KmDriverMaxVectors): Array[Array[Float]] = {
-    // NOT memoized here: a cache key would need the input DATA's
-    // identity, and no plan-derived key carries it (a CANONICALIZED
-    // plan erases attribute names, parquet paths and LocalRelation
-    // rows — two different corpora with the same column count
-    // collide; verified empirically on this Spark build in a review
-    // pass). Query-layer callers that know the corpus identity memo
-    // the artifact by sfDir (PipelineQueries.kmFor) and feed the
-    // ...With variants.
     // DRIVER KERNEL behind a bounded-collect gate: each distributed
     // Lloyd round is one serial assignment+explode+agg+collect job over
     // a corpus whose k × dim decimal partials fit in kilobytes —
     // measured as the dominant job count of every quantizer consumer
-    // once the session memos were bench-disabled (sim_pq 29 jobs /
-    // 2.5 s, sim_ivfpq 33 / 2.7, JobProbe sf0.1/32c). ONE collect of at
+    // (sim_pq 29 jobs / 2.5 s, sim_ivfpq 33 / 2.7, JobProbe
+    // sf0.1/32c). ONE collect of at
     // most driverCap + 1 vectors decides and feeds the gate at once (no
     // count job first): if it holds ≤ driverCap vectors that is the
     // whole corpus, and the rounds run locally through the SAME
@@ -461,14 +442,8 @@ object SimilarityOps {
    * hash-partitioned by cell, never all-pairs.
    */
   def semDedup(emb: DataFrame, k: Int, iters: Int,
-      threshold: Double): DataFrame =
-    semDedupWith(emb, kmeansCentroids(emb, k, iters), threshold)
-
-  /** [[semDedup]] over an ALREADY-TRAINED quantizer — factored so the
-   *  query layer can feed the session-memoized centroids
-   *  (PipelineQueries.kmFor). */
-  def semDedupWith(emb: DataFrame, cents: Array[Array[Float]],
       threshold: Double): DataFrame = {
+    val cents = kmeansCentroids(emb, k, iters)
     val cNorms = cents.map(c =>
       math.sqrt(c.foldLeft(0.0)((a, x) => a + x.toDouble * x.toDouble)))
     // fanOut: the self-join below broadcasts one side, so assignment
@@ -508,19 +483,15 @@ object SimilarityOps {
    * ZERO exchanges beyond the training passes.
    */
   def centroidOutliers(emb: DataFrame, k: Int, iters: Int,
-      threshold: Double): DataFrame =
-    centroidOutliersWith(emb, kmeansCentroids(emb, k, iters), threshold)
-
-  /** [[centroidOutliers]] over an ALREADY-TRAINED quantizer — factored
-   *  for the session-memoized centroids (PipelineQueries.kmFor). */
-  def centroidOutliersWith(emb: DataFrame, cents: Array[Array[Float]],
-      threshold: Double): DataFrame =
+      threshold: Double): DataFrame = {
+    val cents = kmeansCentroids(emb, k, iters)
     // fanOut HERE, not in centroidScore — the scoring expressions are
     // shared with the live gate, whose streaming frames must not hit
     // the batch width probe (FanOut contract: scan-stage frames only)
     centroidScore(FanOut.fanOut(emb.select(col("vec_id"), col("embedding"))),
       cents, threshold)
       .select(col("vec_id"), col("cell"), col("cos_r"), col("is_outlier"))
+  }
 
   /**
    * Row-local own-centroid scoring against an ALREADY-TRAINED
@@ -729,27 +700,17 @@ object SimilarityOps {
    * arrays — the corpus floats are read ONCE (encode) and never
    * shuffle; the rank cut is the WindowGroupLimit contract.
    */
-  /** Sub-vector slice i of an embedding relation — the ONE definition
-   *  both in-op PQ training and the query-layer codebook memo
-   *  (PipelineQueries.pqBooksFor) train from, so the memoized and
-   *  freshly-trained codebooks are identical by construction. */
-  private[graft] def pqSubEmb(emb: DataFrame, i: Int, sub: Int): DataFrame =
-    emb.select(col("vec_id"),
-      slice(col("embedding"), i * sub + 1, sub).as("embedding"))
-
   def pqTopK(emb: DataFrame, queryIds: Seq[Long], kTop: Int, dim: Int,
-      m: Int = 4, ks: Int = 8, iters: Int = 2,
-      codebooks: Option[Seq[Array[Array[Float]]]] = None): DataFrame = {
+      m: Int = 4, ks: Int = 8, iters: Int = 2): DataFrame = {
     require(dim % m == 0, "dim must split evenly into m subspaces")
     val sub = dim / m
     val spark = emb.sparkSession
     import spark.implicits._
-    // trained HERE only when the caller holds no session-memoized
-    // artifact (the kmeansCentroids not-memoized-here contract:
-    // query-layer callers that know the corpus identity pass
-    // PipelineQueries.pqBooksFor's codebooks in)
-    val books = codebooks.getOrElse((0 until m).map(i =>
-      kmeansCentroids(pqSubEmb(emb, i, sub), ks, iters)))
+    // one Lloyd codebook per sub-vector slice
+    val books = (0 until m).map(i => kmeansCentroids(
+      emb.select(col("vec_id"),
+        slice(col("embedding"), i * sub + 1, sub).as("embedding")),
+      ks, iters))
     require(books.length == m && books.forall(_.nonEmpty),
       s"expected $m non-empty sub-codebooks, got shapes " +
         books.map(_.length).mkString(","))
@@ -869,12 +830,10 @@ object SimilarityOps {
    * stage-1 candidate set (both spec-pinned).
    */
   def rerankTopK(emb: DataFrame, queryIds: Seq[Long], kTop: Int,
-      cand: Int, dim: Int, m: Int = 4, ks: Int = 8, iters: Int = 2,
-      codebooks: Option[Seq[Array[Array[Float]]]] = None)
+      cand: Int, dim: Int, m: Int = 4, ks: Int = 8, iters: Int = 2)
       : DataFrame = {
     require(cand >= kTop, "candidate pool must cover the final top-k")
-    val candidates = pqTopK(emb, queryIds, cand, dim, m, ks, iters,
-        codebooks)
+    val candidates = pqTopK(emb, queryIds, cand, dim, m, ks, iters)
       .select(col("query_id"), col("neighbor_id"))
     val q = emb.filter(col("vec_id").isInCollection(queryIds))
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
@@ -926,30 +885,15 @@ object SimilarityOps {
    * more bytes per vector than m=4 codes, near-exact recall —
    * SimilarityOpsSpec pins recall@10 strictly above PQ's and ≥ 0.9.
    */
-  /** The SQ8 model artifact — per-dim (min, max), exact order-
-   *  independent aggregates — factored out as the ONE definition both
-   *  the in-op training and the query-layer memo
-   *  (PipelineQueries.sq8StatsFor) compute, so memoized == freshly
-   *  trained bit for bit (the pqSubEmb pattern). */
-  private[graft] def sq8Stats(emb: DataFrame, dim: Int)
-      : (Seq[Double], Seq[Double]) = {
+  def sq8TopK(emb: DataFrame, queryIds: Seq[Long], kTop: Int,
+      dim: Int): DataFrame = {
+    // the model artifact: per-dim min/max (exact, order-independent)
     val statsAggs = (0 until dim).flatMap(i => Seq(
       min(element_at(col("embedding"), i + 1)).as(s"mn$i"),
       max(element_at(col("embedding"), i + 1)).as(s"mx$i")))
     val st = emb.agg(statsAggs.head, statsAggs.tail: _*).collect()(0)
-    ((0 until dim).map(i => st.getFloat(2 * i).toDouble),
-      (0 until dim).map(i => st.getFloat(2 * i + 1).toDouble))
-  }
-
-  def sq8TopK(emb: DataFrame, queryIds: Seq[Long], kTop: Int, dim: Int,
-      stats: Option[(Seq[Double], Seq[Double])] = None): DataFrame = {
-    // the model artifact: per-dim min/max (exact, order-independent) —
-    // trained HERE only when the caller holds no session-memoized
-    // artifact (the kmeansCentroids not-memoized-here contract)
-    val (mins, maxs) = stats.getOrElse(sq8Stats(emb, dim))
-    require(mins.length == dim && maxs.length == dim,
-      s"sq8TopK: stats must carry $dim mins/maxs, got " +
-        s"${mins.length}/${maxs.length}")
+    val mins = (0 until dim).map(i => st.getFloat(2 * i).toDouble)
+    val maxs = (0 until dim).map(i => st.getFloat(2 * i + 1).toDouble)
     val mnC = typedlit(mins)
     val mxC = typedlit(maxs)
     // encode + decode fused, row-local: code = clamp(floor((x-mn)*255/(mx-mn)))
@@ -1025,11 +969,8 @@ object SimilarityOps {
    */
   def ivfPqTopK(emb: DataFrame, queryIds: Seq[Long], kTop: Int, dim: Int,
       nCells: Int = 8, nProbe: Int = 4, m: Int = 4, ks: Int = 8,
-      iters: Int = 2,
-      coarse: Option[Array[Array[Float]]] = None,
-      books: Option[Seq[Array[Array[Float]]]] = None): DataFrame = {
-    val idx = buildIvfPqIndex(emb, dim, nCells, nProbe, m, ks, iters,
-      coarse, books)
+      iters: Int = 2): DataFrame = {
+    val idx = buildIvfPqIndex(emb, dim, nCells, nProbe, m, ks, iters)
     val qvecs = emb.filter(col("vec_id").isInCollection(queryIds))
       .select("vec_id", "embedding").collect()
       .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toMap
@@ -1049,11 +990,9 @@ object SimilarityOps {
       cross: Seq[Seq[Seq[Double]]], bw2: Seq[Seq[Double]],
       codes: DataFrame)
 
-  /** The per-vector (cell, float32 residual) relation — factored out
-   *  as the ONE definition both residual-codebook training
-   *  ([[trainIvfPqBooks]]) and corpus encoding derive from, so
-   *  memoized and freshly-trained books are identical by construction
-   *  (the pqSubEmb pattern). */
+  /** The per-vector (cell, float32 residual) relation — the ONE
+   *  definition both residual-codebook training ([[trainIvfPqBooks]])
+   *  and corpus encoding derive from. */
   private[graft] def ivfPqResiduals(emb: DataFrame,
       cents: Array[Array[Float]]): DataFrame = {
     val cNorms = cents.map(c => math.sqrt(seqDot(c, c)))
@@ -1093,18 +1032,14 @@ object SimilarityOps {
   /** Train + encode ([[ivfPqTopK]]'s build half, factored so the
    *  streaming service builds ONCE and serves per trigger). */
   private[graft] def buildIvfPqIndex(emb: DataFrame, dim: Int, nCells: Int,
-      nProbe: Int, m: Int, ks: Int, iters: Int,
-      coarse: Option[Array[Array[Float]]] = None,
-      books0: Option[Seq[Array[Array[Float]]]] = None): IvfPqIndex = {
+      nProbe: Int, m: Int, ks: Int, iters: Int): IvfPqIndex = {
     require(dim % m == 0, "dim must split evenly into m subspaces")
     val sub = dim / m
-    // coarse quantizer + per-vector cell + float32 residual; callers
-    // holding the session-memoized artifacts pass them via `coarse` /
-    // `books0` (the kmeansCentroids not-memoized-here contract)
-    val cents = coarse.getOrElse(kmeansCentroids(emb, nCells, iters))
+    // coarse quantizer + per-vector cell + float32 residual
+    val cents = kmeansCentroids(emb, nCells, iters)
     val cNorms = cents.map(c => math.sqrt(seqDot(c, c)))
     val res = ivfPqResiduals(emb, cents)
-    val books = books0.getOrElse(trainIvfPqBooks(emb, dim, m, ks, iters, cents))
+    val books = trainIvfPqBooks(emb, dim, m, ks, iters, cents)
     require(books.length == m && books.forall(_.length == ks),
       s"expected $m sub-codebooks of $ks codewords, got shapes " +
         books.map(_.length).mkString(","))

@@ -244,14 +244,9 @@ object LinkageQueries {
         .select((-(col("p_partkey") + 1)).as("rec_id"),
           expr(deleteAt("p_name", "p_partkey")).as("name")))
 
-  /** No session memo here (removed, round-22): the (surfaces,
-   *  clusters, fits) triple is essentially this query's OUTPUT — a
-   *  per-session memo of it let the bench's warm passes time ~0.2 s
-   *  of label joins against a stored fixpoint instead of the declared
-   *  computation (the round-21 verdict's gaming finding). Each
-   *  invocation runs the full pass; the exact-surface collapse +
-   *  fuzzy join + CC fixpoint are still shared WITHIN the invocation
-   *  (one [[selfClusterLabels]] call feeds every consumer). */
+  /** Each invocation runs the full pass; the exact-surface collapse +
+   *  fuzzy join + CC fixpoint are shared WITHIN the invocation (one
+   *  [[selfClusterLabels]] call feeds every consumer). */
   def erSelfClusters(spark: SparkSession, sfDir: String): DataFrame =
     erSelfClustersOf(selfDedupRecsOf(Tables.part(spark, sfDir)))
 

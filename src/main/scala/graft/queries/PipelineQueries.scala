@@ -171,91 +171,29 @@ object PipelineQueries {
   def dedupClusters(spark: SparkSession, sfDir: String): DataFrame =
     clusterFrame(spark, sfDir)
 
-  /** The converged cluster frame, computed ONCE per (session, corpus)
-   *  and shared by [[dedupClusters]] and [[dedupSurvivors]] — the
-   *  fixpoint is deterministic, so reuse is semantics-free, and
-   *  re-running the whole iteration per consumer (the round-8 shape)
-   *  just re-pays the most expensive plan in the suite. The frame's
+  /** The converged cluster frame [[dedupClusters]],
+   *  [[dedupClusterSizes]] and [[dedupSurvivors]] read. Each call
+   *  converges its own fixpoint from the parquet inputs; the frame's
    *  lineage is already truncated to the final label snapshot
-   *  (connectedComponents checkpoints every iteration), so later
-   *  consumers re-read that materialized snapshot instead of
-   *  re-propagating labels. Keyed by session so concurrent/TEST
-   *  sessions never share localCheckpoint blocks across stores. */
-  private val clusterCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]
-
-  /** Contexts that already carry the cache-eviction listener (by
-   *  applicationId; one SparkContext is active per JVM at a time). */
-  private val hookedContexts = java.util.Collections.newSetFromMap(
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean])
-
-  /** EVICTION: without this, entries for stopped sessions pin their
-   *  DataFrames (and localCheckpoint lineage) for the JVM's life — a
-   *  slow leak in a long-lived multi-session service. Every cached
-   *  frame's lineage lives in the (single-per-JVM) SparkContext, so
-   *  when that context ends ALL entries are unusable regardless of
-   *  which session created them — clear the whole cache on
-   *  applicationEnd. `SparkContext.stop()` drains the listener bus
-   *  before returning, so the clear is visible as soon as the stop
-   *  completes (PipelineQueriesSpec pins this). */
-  private def ensureEvictionHook(spark: SparkSession): Unit = {
-    val sc = spark.sparkContext
-    if (hookedContexts.add(sc.applicationId)) {
-      sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onApplicationEnd(
-            e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
-          clusterCache.clear()
-          nbModelCache.clear()
-          classifierCache.clear()
-          knnGraphCache.clear()
-          kmCache.clear()
-          pqBooksCache.clear()
-          ivfPqBooksCache.clear()
-          sq8StatsCache.clear()
-          hookedContexts.remove(sc.applicationId)
-        }
-      })
-    }
-  }
-
-  /** Test-visible view of the cache keys (session UUID, corpus dir). */
-  private[queries] def cachedClusterKeys: Set[(String, String)] = {
-    import scala.jdk.CollectionConverters._
-    clusterCache.keySet.asScala.toSet
-  }
-
-  /** The session's UUID (never reused, unlike an identity hash, so a
-   *  stopped test session can't alias a later one's cache slot) via
-   *  the private-API bridge. */
-  private def sessionKey(spark: SparkSession): String =
-    org.apache.spark.sql.GraftColumnBridge.sessionUUID(spark)
-
+   *  (connectedComponents checkpoints every iteration), so a query's
+   *  later operators re-read that materialized snapshot instead of
+   *  re-propagating labels. */
   private def clusterFrame(spark: SparkSession, sfDir: String): DataFrame = {
-    def build = {
-      val docs = Tables.documents(spark, sfDir)
-      val pairs = DedupOps.minhashNearDups(docs, col("doc_id"), col("text"),
-        threshold = 0.5).select("id1", "id2")
-      DedupOps.connectedComponents(pairs, docs.select(col("doc_id").as("id")))
-        .select(col("id").as("doc_id"), col("cluster"))
-    }
-    // memo disabled ([[SessionMemo]]): each invocation converges its
-    // own fixpoint from the parquet inputs — the timed-bench contract
-    if (!SessionMemo.enabled) build
-    else {
-      ensureEvictionHook(spark)
-      clusterCache.computeIfAbsent((sessionKey(spark), sfDir), _ => build)
-    }
+    val docs = Tables.documents(spark, sfDir)
+    val pairs = DedupOps.minhashNearDups(docs, col("doc_id"), col("text"),
+      threshold = 0.5).select("id1", "id2")
+    DedupOps.connectedComponents(pairs, docs.select(col("doc_id").as("id")))
+      .select(col("id").as("doc_id"), col("cluster"))
   }
 
   /** Duplication DISTRIBUTION — the standard dedup diagnostic (how much
    *  of the corpus sits in how-large duplicate clusters, the histogram
    *  dedup papers report and a curation monitor tracks across crawls):
-   *  cluster sizes from the shared memoized [[clusterFrame]], rolled to
+   *  cluster sizes from [[clusterFrame]], rolled to
    *  (cluster_size, n_clusters, n_docs). Singletons included — the
    *  mass NOT in any dup cluster is the number that matters most.
    *  Scale shape: two fixed-width aggs over the already-converged
-   *  frame (cluster-count then size-count groups); the CC fixpoint is
-   *  paid once per session like its siblings. */
+   *  frame (cluster-count then size-count groups). */
   def dedupClusterSizes(spark: SparkSession, sfDir: String): DataFrame =
     clusterFrame(spark, sfDir)
       .groupBy(col("cluster")).agg(count(lit(1)).as("sz"))
@@ -272,9 +210,8 @@ object PipelineQueries {
    *  the delete list. Scale shape: clusters and row-local scores join
    *  on doc_id, then ONE two-phase max_by/count agg on the 64-bit
    *  cluster id — no window over the corpus, no skew (cluster sizes
-   *  are near-dup groups, inherently small). Reads the SHARED converged
-   *  cluster frame ([[clusterFrame]]) — it never re-runs the CC
-   *  fixpoint when [[dedupClusters]] already has in this session. */
+   *  are near-dup groups, inherently small). Reads the converged
+   *  cluster frame ([[clusterFrame]]). */
   def dedupSurvivors(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = Tables.documents(spark, sfDir)
     val scores = docs.select(col("doc_id"),
@@ -370,40 +307,20 @@ object PipelineQueries {
     // derives in-plan, so the pairs are identical by construction) AND
     // the incremental assignment's history side. The previous shape
     // re-ran the corpus shingle+minhash kernels once per consumer —
-    // four history passes per invocation with the session memo off
-    // (§1.2; measured 45 jobs / 3.0 s, JobProbe sf0.1/32c).
-    def bandsBuild = DedupOps.clusterBandKeys(hist, col("doc_id"), col("text"))
-    def shsBuild = DedupOps.clusterShingleSets(hist, col("doc_id"), col("text"))
-    val (histBands, histShingles) =
-      if (!SessionMemo.enabled)
-        // lazy snapshots: three consumers each (x/y candidate sides +
-        // the assignment join; both fixpoint verify sides + the
-        // assignment verify)
-        (bandsBuild.localCheckpoint(false), shsBuild.localCheckpoint(false))
-      else {
-        // service shape: memoized per (session, corpus) exactly like
-        // clusterFrame — the stored artifacts a production pipeline
-        // feeds in, deterministic, so reuse is semantics-free; only
-        // the batch-sided work re-runs per call (the incremental-COST
-        // point of the operator)
-        ensureEvictionHook(spark)
-        (clusterCache.computeIfAbsent(
-          (sessionKey(spark), s"$sfDir#hist-mod5-bands"), _ =>
-            bandsBuild.localCheckpoint()),
-          clusterCache.computeIfAbsent(
-            (sessionKey(spark), s"$sfDir#hist-mod5-shs"), _ =>
-              shsBuild.localCheckpoint()))
-      }
-    def buildHistClusters = DedupOps.connectedComponents(
+    // four history passes per invocation (§1.2; measured 45 jobs /
+    // 3.0 s, JobProbe sf0.1/32c). Lazy snapshots: three consumers each
+    // (x/y candidate sides + the assignment join; both fixpoint verify
+    // sides + the assignment verify).
+    val histBands = DedupOps.clusterBandKeys(hist, col("doc_id"), col("text"))
+      .localCheckpoint(false)
+    val histShingles = DedupOps.clusterShingleSets(hist, col("doc_id"),
+      col("text")).localCheckpoint(false)
+    val histClusters = DedupOps.connectedComponents(
         DedupOps.minhashNearDupsPre(histBands, histShingles,
           threshold = 0.5).select("id1", "id2"),
         hist.select(col("doc_id").as("id")))
       .select(col("id").as("doc_id"), col("cluster"))
       .localCheckpoint() // 2 consumers: contraction join + relabel
-    val histClusters =
-      if (!SessionMemo.enabled) buildHistClusters
-      else clusterCache.computeIfAbsent(
-        (sessionKey(spark), s"$sfDir#hist-mod5"), _ => buildHistClusters)
     DedupOps.incrementalClusterAssignPre(fresh, histBands, histShingles,
       histClusters, col("doc_id"), col("text"), threshold = 0.5)
   }
@@ -478,30 +395,8 @@ object PipelineQueries {
    *  similarity-graph construction pass. Shares [[NearDupBits]]/
    *  [[NearDupTables]] with the near-dup path. */
   def knnGraph(spark: SparkSession, sfDir: String): DataFrame =
-    knnGraphFor(spark, sfDir)
-
-  /** The converged k-NN graph frame, built ONCE per (session, corpus)
-   *  and shared by [[knnGraph]] and [[knnLabelEval]] (the clusterFrame
-   *  device — the banded candidate join + per-node top-k is
-   *  deterministic, and the eval ran the identical machinery verbatim
-   *  every suite pass). The corpus under sfDir is immutable for the
-   *  session's lifetime (the clusterCache contract). Eviction rides
-   *  [[ensureEvictionHook]]. */
-  private val knnGraphCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), DataFrame]
-
-  private def knnGraphFor(spark: SparkSession, sfDir: String): DataFrame = {
-    def build = SimilarityOps.knnGraph(Tables.embeddings(spark, sfDir),
+    SimilarityOps.knnGraph(Tables.embeddings(spark, sfDir),
       k = GraphK, bits = NearDupBits, tables = NearDupTables)
-    // memo disabled ([[SessionMemo]]): each invocation builds the graph
-    // fresh; no checkpoint — it has ONE consumer per query then
-    if (!SessionMemo.enabled) build
-    else {
-      ensureEvictionHook(spark)
-      knnGraphCache.computeIfAbsent((sessionKey(spark), sfDir), _ =>
-        build.localCheckpoint())
-    }
-  }
 
   /**
    * k-NN label-consistency evaluation — the embedding-quality monitor a
@@ -521,7 +416,7 @@ object PipelineQueries {
   def knnLabelEval(spark: SparkSession, sfDir: String): DataFrame = {
     val emb = Tables.embeddings(spark, sfDir)
     val labels = emb.select(col("vec_id"), col("label"))
-    val votes = knnGraphFor(spark, sfDir)
+    val votes = knnGraph(spark, sfDir)
       .join(labels.select(col("vec_id").as("neighbor_id"),
         col("label").as("nb_label")), "neighbor_id")
       .groupBy(col("vec_id"), col("nb_label")).agg(count(lit(1)).as("votes"))
@@ -542,8 +437,8 @@ object PipelineQueries {
    *  ([[SimilarityOps.centroidOutliers]]): bit-identical centroids and
    *  cells with [[semDedup]]/[[simIvfKmeans]], row-local scoring. */
   def embedOutliers(spark: SparkSession, sfDir: String): DataFrame =
-    SimilarityOps.centroidOutliersWith(Tables.embeddings(spark, sfDir),
-      kmFor(spark, sfDir, KmCells, KmIters), threshold = OutlierCos)
+    SimilarityOps.centroidOutliers(Tables.embeddings(spark, sfDir),
+      KmCells, KmIters, threshold = OutlierCos)
 
   /** Random-projection dimensionality reduction ([[SimilarityOps
    *  .randomProjection]]): 64-dim embeddings → [[ProjDim]] signed sums
@@ -575,39 +470,9 @@ object PipelineQueries {
    *  means, so the trained centroids are deterministic and the whole
    *  train+probe pipeline is recomputable relationally in DuckDB
    *  (Oracles.simIvfKmeans unrolls the iterations). */
-  /** The coarse k-means quantizer for the embeddings corpus, trained
-   *  ONCE per (session, corpus, k, iters) and shared by
-   *  [[simIvfKmeans]], [[semDedup]], [[embedOutliers]] and
-   *  [[simIvfPq]]'s coarse level (each previously re-paid `iters`
-   *  corpus passes per suite pass). Keyed by the sfDir STRING — the
-   *  corpus identity the caller knows; a plan-derived key cannot
-   *  carry it (canonicalized plans erase paths and names — two
-   *  corpora with the same column count collide; review-verified on
-   *  this Spark build), which is why the memo lives HERE and the
-   *  generic ops take the artifact via their ...With variants. The
-   *  corpus under sfDir is immutable for the session's lifetime
-   *  (the clusterCache contract); eviction rides
-   *  [[ensureEvictionHook]]. */
-  private val kmCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, Int, Int), Array[Array[Float]]]
-
-  private def kmFor(spark: SparkSession, sfDir: String, k: Int,
-      iters: Int): Array[Array[Float]] = {
-    def build = SimilarityOps.kmeansCentroids(
-      Tables.embeddings(spark, sfDir), k, iters)
-    // memo disabled ([[SessionMemo]]): each invocation trains its own
-    // quantizer from the parquet inputs — the timed-bench contract
-    if (!SessionMemo.enabled) build
-    else {
-      ensureEvictionHook(spark)
-      kmCache.computeIfAbsent((sessionKey(spark), sfDir, k, iters),
-        _ => build)
-    }
-  }
-
   def simIvfKmeans(spark: SparkSession, sfDir: String): DataFrame =
-    SimilarityOps.ivfTopKWith(Tables.embeddings(spark, sfDir), SimQueryIds,
-      SimK, kmFor(spark, sfDir, KmCells, KmIters), KmProbe)
+    SimilarityOps.ivfTopKKmeans(Tables.embeddings(spark, sfDir), SimQueryIds,
+      SimK, nCells = KmCells, iters = KmIters, nProbe = KmProbe)
 
   /** Embedding near-duplicate pairs (cosine >= threshold). */
   def embedNearDup(spark: SparkSession, sfDir: String): DataFrame =
@@ -618,8 +483,8 @@ object PipelineQueries {
    *  smaller-id survivor. Oracle replays the full train+scan
    *  relationally (Oracles.semDedup). */
   def semDedup(spark: SparkSession, sfDir: String): DataFrame =
-    SimilarityOps.semDedupWith(Tables.embeddings(spark, sfDir),
-      kmFor(spark, sfDir, KmCells, KmIters), threshold = NearDupCos)
+    SimilarityOps.semDedup(Tables.embeddings(spark, sfDir),
+      KmCells, KmIters, threshold = NearDupCos)
 
   // embed_eval: exact ground truth anchored to a deterministic 1/4
   // pair sample (the dedup_eval device — the exact side is the eval's
@@ -697,39 +562,9 @@ object PipelineQueries {
    *  subspace decimal-exact Lloyd codebooks, corpus encoded to
    *  [[PqM]] codes, queries scored from per-query ADC tables without
    *  touching the original floats. */
-  /** Session-memoized PQ SUB-codebooks per (corpus, m, ks, iters) —
-   *  the [[kmFor]] device for the per-subspace quantizers (trained
-   *  through the SHARED SimilarityOps.pqSubEmb slices, so memoized ==
-   *  freshly-trained bit for bit). Restores the memo `sim_pq` /
-   *  `sim_rerank` lost when the centroid cache moved to the query
-   *  layer (only the COARSE quantizer was rewired — caught by the
-   *  r18 5-pass bench: sim_pq warm 0.5 → 2.4 s, every pass
-   *  retraining m Lloyd runs). Keyed by sfDir (the kmCache
-   *  plan-keys-erase-paths rationale); eviction rides
-   *  [[ensureEvictionHook]]. */
-  private val pqBooksCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, Int, Int, Int), Seq[Array[Array[Float]]]]
-
-  private def pqBooksFor(spark: SparkSession, sfDir: String, m: Int,
-      ks: Int, iters: Int): Seq[Array[Array[Float]]] = {
-    def build = {
-      val sub = EmbeddingDim / m
-      (0 until m).map(i => SimilarityOps.kmeansCentroids(
-        SimilarityOps.pqSubEmb(Tables.embeddings(spark, sfDir), i, sub),
-        ks, iters))
-    }
-    if (!SessionMemo.enabled) build
-    else {
-      ensureEvictionHook(spark)
-      pqBooksCache.computeIfAbsent(
-        (sessionKey(spark), sfDir, m, ks, iters), _ => build)
-    }
-  }
-
   def simPq(spark: SparkSession, sfDir: String): DataFrame =
     SimilarityOps.pqTopK(Tables.embeddings(spark, sfDir), SimQueryIds, SimK,
-      dim = EmbeddingDim, m = PqM, ks = PqKs, iters = KmIters,
-      codebooks = Some(pqBooksFor(spark, sfDir, PqM, PqKs, KmIters)))
+      dim = EmbeddingDim, m = PqM, ks = PqKs, iters = KmIters)
 
   /** IVF-PQ composition ([[SimilarityOps.ivfPqTopK]], IVFADC): coarse
    *  [[KmCells]]-cell k-means + per-cell float32 residuals quantized
@@ -739,44 +574,10 @@ object PipelineQueries {
    *  PQ loses; queries probe [[KmProbe]] cells and score via ADC
    *  tables. SimilarityOpsSpec pins recall@10 strictly above simPq's
    *  on the same corpus. */
-  /** Session-memoized RESIDUAL sub-codebooks per (corpus, nCells, m,
-   *  ks, iters) — the [[pqBooksFor]] device for IVF-PQ's second level
-   *  (each invocation previously re-ran m×iters Lloyd jobs, every one
-   *  re-deriving the residual relation from a full corpus scan +
-   *  coarse-assignment kernel). Trained through the SHARED
-   *  [[SimilarityOps.ivfPqResiduals]]/[[SimilarityOps.trainIvfPqBooks]]
-   *  definitions, so memoized == freshly-trained bit for bit. Keyed by
-   *  sfDir (the kmCache plan-keys-erase-paths rationale); eviction
-   *  rides [[ensureEvictionHook]]. */
-  private val ivfPqBooksCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, Int, Int, Int, Int), Seq[Array[Array[Float]]]]
-
-  private def ivfPqBooksFor(spark: SparkSession, sfDir: String,
-      nCells: Int, m: Int, ks: Int, iters: Int,
-      coarse: Array[Array[Float]]): Seq[Array[Array[Float]]] = {
-    def build = SimilarityOps.trainIvfPqBooks(Tables.embeddings(spark, sfDir),
-      EmbeddingDim, m, ks, iters, coarse)
-    if (!SessionMemo.enabled) build
-    else {
-      ensureEvictionHook(spark)
-      ivfPqBooksCache.computeIfAbsent(
-        (sessionKey(spark), sfDir, nCells, m, ks, iters), _ => build)
-    }
-  }
-
-  def simIvfPq(spark: SparkSession, sfDir: String): DataFrame = {
-    // the coarse quantizer trains ONCE per invocation and feeds both
-    // the residual-book training and the probe (within-invocation
-    // sharing — with the session memo disabled a second kmFor call
-    // would re-run the Lloyd iterations)
-    val coarse = kmFor(spark, sfDir, KmCells, KmIters)
+  def simIvfPq(spark: SparkSession, sfDir: String): DataFrame =
     SimilarityOps.ivfPqTopK(Tables.embeddings(spark, sfDir), SimQueryIds,
       SimK, dim = EmbeddingDim, nCells = KmCells, nProbe = KmProbe,
-      m = PqM, ks = PqKs, iters = KmIters,
-      coarse = Some(coarse),
-      books = Some(ivfPqBooksFor(spark, sfDir, KmCells, PqM, PqKs, KmIters,
-        coarse)))
-  }
+      m = PqM, ks = PqKs, iters = KmIters)
 
   /** Stage-1 candidate pool size for [[simRerank]]: recall@[[SimK]]
    *  of the two-stage query equals PQ's recall@RerankCand, at the
@@ -792,8 +593,7 @@ object PipelineQueries {
   def simRerank(spark: SparkSession, sfDir: String): DataFrame =
     SimilarityOps.rerankTopK(Tables.embeddings(spark, sfDir), SimQueryIds,
       SimK, cand = RerankCand, dim = EmbeddingDim, m = PqM, ks = PqKs,
-      iters = KmIters,
-      codebooks = Some(pqBooksFor(spark, sfDir, PqM, PqKs, KmIters)))
+      iters = KmIters)
 
   /** Prefix widths for [[simMatryoshka]]: the full-width rung (64) is
    *  the built-in recall-exactly-1 sanity anchor. */
@@ -814,29 +614,9 @@ object PipelineQueries {
    *  curve, next to [[simPq]]'s 64× / coarse point), asymmetric
    *  scoring of full-precision queries against midpoint-decoded
    *  corpus vectors. */
-  /** Session-memoized SQ8 per-dim min/max per (corpus, dim) — the
-   *  [[kmFor]] device for the scalar quantizer's model artifact (one
-   *  full-corpus agg per invocation otherwise). Computed through the
-   *  SHARED [[SimilarityOps.sq8Stats]] definition, so memoized ==
-   *  freshly trained. Eviction rides [[ensureEvictionHook]]. */
-  private val sq8StatsCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, Int), (Seq[Double], Seq[Double])]
-
-  private def sq8StatsFor(spark: SparkSession, sfDir: String, dim: Int)
-      : (Seq[Double], Seq[Double]) = {
-    def build = SimilarityOps.sq8Stats(Tables.embeddings(spark, sfDir), dim)
-    if (!SessionMemo.enabled) build
-    else {
-      ensureEvictionHook(spark)
-      sq8StatsCache.computeIfAbsent((sessionKey(spark), sfDir, dim),
-        _ => build)
-    }
-  }
-
   def simSq8(spark: SparkSession, sfDir: String): DataFrame =
     SimilarityOps.sq8TopK(Tables.embeddings(spark, sfDir), SimQueryIds, SimK,
-      dim = EmbeddingDim,
-      stats = Some(sq8StatsFor(spark, sfDir, EmbeddingDim)))
+      dim = EmbeddingDim)
 
   // ---- text analysis ------------------------------------------------------
 
@@ -927,37 +707,11 @@ object PipelineQueries {
   def textLangIdNb(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("lang"), col("text"))
-    val (modelF, priorsF) = nbModelFor(spark, sfDir)
-    langIdNbApply(docs, modelF, priorsF, NbMaxModelEntries)
-  }
-
-  /** The NB langid model frames, trained ONCE per (session, corpus)
-   *  and shared by [[textLangIdNb]] and [[textLangIdEval]] (the
-   *  clusterFrame device): training is deterministic — the char-bigram
-   *  corpus explode plus the Laplace grid is ~4 s at bench SF, and the
-   *  eval query re-ran it in full beside the nb query every suite
-   *  pass. Frames are checkpointed (vocab×langs / langs-sized); the corpus
-   *  under sfDir is immutable for the session's lifetime (the
-   *  clusterCache contract); eviction rides the shared
-   *  [[ensureEvictionHook]] listener. */
-  private val nbModelCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), (DataFrame, DataFrame)]
-
-  private def nbModelFor(spark: SparkSession,
-      sfDir: String): (DataFrame, DataFrame) = {
-    ensureEvictionHook(spark)
-    // docs derive INSIDE the memo (the classifierFor/knnGraphFor
-    // rule): a caller-supplied frame could poison the shared slot
-    // with a model trained on something other than the full corpus
-    def build = {
-      val (m0, p0) = langIdNbModelFrames(Tables.documents(spark, sfDir)
-        .select(col("doc_id"), col("lang"), col("text")))
-      // checkpoints kept in BOTH paths: the model frames have multiple
-      // consumers within one invocation (within-invocation sharing)
-      (m0.localCheckpoint(), p0.localCheckpoint())
-    }
-    if (!SessionMemo.enabled) build
-    else nbModelCache.computeIfAbsent((sessionKey(spark), sfDir), _ => build)
+    val (m0, p0) = langIdNbModelFrames(docs)
+    // both model frames are checkpointed (vocab×langs / langs-sized):
+    // each has several consumers within the apply pass
+    langIdNbApply(docs, m0.localCheckpoint(), p0.localCheckpoint(),
+      NbMaxModelEntries)
   }
 
   /** The LEARN pass of [[langIdNbOf]], factored so the live scoring
@@ -1084,8 +838,8 @@ object PipelineQueries {
   }
 
   /** The ROUTED apply pass of [[langIdNbOf]] over prebuilt model
-   *  frames — factored so [[textLangIdNb]]/[[textLangIdEval]] can
-   *  share one cached training ([[nbModelFor]]). `modelF` must be
+   *  frames — factored so [[textLangIdNb]] can checkpoint both model
+   *  frames before the apply. `modelF` must be
    *  materialized by the caller (the cap count + the collect both
    *  read it). */
   private[graft] def langIdNbApply(docs: DataFrame, modelF: DataFrame,
@@ -1362,32 +1116,11 @@ object PipelineQueries {
    * never exceeds |Dim|.
    */
   def classifyTrain(spark: SparkSession, sfDir: String): DataFrame = {
-    val w = classifierFor(spark, sfDir)._1
+    val w = trainClassifierWeightsWithFeatures(
+      Tables.documents(spark, sfDir))._1
     import spark.implicits._
     w.zipWithIndex.map { case (wm, b) => (b.toLong, wm) }
       .toSeq.toDF("bucket", "w_micro")
-  }
-
-  /** The trained classifier (weights + checkpointed feature snapshot),
-   *  learned ONCE per (session, corpus) and shared by [[classifyTrain]]
-   *  and [[classifyEval]] (the clusterFrame / nbModelFor device —
-   *  training is deterministic, 6 serial gradient jobs ≈ 2 s at bench
-   *  SF that the eval re-ran in full every suite pass). The corpus
-   *  under sfDir is immutable for the session's lifetime (the
-   *  clusterCache contract). Eviction rides the shared
-   *  [[ensureEvictionHook]] listener. */
-  private val classifierCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), (Array[Long], DataFrame)]
-
-  private def classifierFor(spark: SparkSession,
-      sfDir: String): (Array[Long], DataFrame) = {
-    def build = trainClassifierWeightsWithFeatures(
-      Tables.documents(spark, sfDir))
-    if (!SessionMemo.enabled) build
-    else {
-      ensureEvictionHook(spark)
-      classifierCache.computeIfAbsent((sessionKey(spark), sfDir), _ => build)
-    }
   }
 
   /** The learner of [[classifyTrain]], returning the weight array —
@@ -1423,19 +1156,8 @@ object PipelineQueries {
   /** Feature-row gate for the driver-side gradient loop (default 4M
    *  (doc, bucket) rows ≈ 160 MB collected — the LocalGraph budget
    *  class; 0 disables it, env-parameterized for cluster drivers). */
-  private val ClassifyDriverMaxRows: Long = {
-    val default = 4000000L
-    sys.env.get("SPARK_GRAFT_DRIVER_CLASSIFY_ROWS") match {
-      case None => default
-      case Some(raw) =>
-        scala.util.Try(raw.trim.toLong).toOption.filter(_ >= 0).getOrElse {
-          org.slf4j.LoggerFactory.getLogger(getClass).warn(
-            "SPARK_GRAFT_DRIVER_CLASSIFY_ROWS='{}' is not a non-negative " +
-              "long; using the default {}", raw, default)
-          default
-        }
-    }
-  }
+  private lazy val ClassifyDriverMaxRows: Long =
+    graft.GraftEnv.long("SPARK_GRAFT_DRIVER_CLASSIFY_ROWS", 4000000L, min = 0)
 
   private def trainClassifierWeightsWithFeatures(
       corpus: DataFrame): (Array[Long], DataFrame) =
@@ -1536,7 +1258,8 @@ object PipelineQueries {
    * plan literal + one two-phase per-doc sum + a 4-group rollup.
    */
   def classifyEval(spark: SparkSession, sfDir: String): DataFrame = {
-    val (w, feats) = classifierFor(spark, sfDir)
+    val (w, feats) = trainClassifierWeightsWithFeatures(
+      Tables.documents(spark, sfDir))
     val wmap = map((0 until ClassifyDim.toInt).flatMap(b =>
       Seq(lit(b.toLong), lit(w(b)))): _*)
     feats
@@ -1732,8 +1455,8 @@ object PipelineQueries {
    *  stands — the honest form where the dict outgrows driver memory.
    *  Env-parameterized (the MaxBroadcastNodes device); ~100 MB of
    *  (word, freq) rows at the default. */
-  private[graft] val TokenizerDriverVocab: Long =
-    sys.env.getOrElse("SPARK_GRAFT_TOKENIZER_DRIVER_VOCAB", "1000000").toLong
+  private[graft] lazy val TokenizerDriverVocab: Long =
+    graft.GraftEnv.long("SPARK_GRAFT_TOKENIZER_DRIVER_VOCAB", 1000000L, min = 0)
 
   /** Spark's string sort order (UTF8String.binaryCompare = unsigned
    *  UTF-8 byte order) for driver-side tie-breaks — String.compareTo

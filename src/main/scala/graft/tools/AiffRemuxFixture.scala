@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /**
  * Deterministic committed AIFF corpus — the THIRD audio container
  * joining [[AudioDupFixture]] (WAV) and [[AudioRemuxFixture]]
@@ -91,11 +89,7 @@ object AiffRemuxFixture {
    *  construction: every byte is a function of the constants above. */
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse(Path)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession("graft-aiff-remux-fixture")
     import spark.implicits._
     (0 until Total).map(i => (IdBase + i, aiffBytes(i)))
       .toDF("clip_id", "audio")

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /**
  * Deterministic committed MIXED-CONTAINER audio corpus — the
  * cross-container ground truth for `mm_audio_neardup`, the sound
@@ -142,11 +140,7 @@ object AudioRemuxFixture {
    *  construction: every byte is a function of the constants above. */
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse(Path)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession("graft-audio-remux-fixture")
     import spark.implicits._
     (0 until Total).map(i => (IdBase + i, audioBytes(i)))
       .toDF("clip_id", "audio")

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /**
  * Deterministic committed corpus of REAL MJPEG-in-AVI clips — the
  * decoded-pixels VIDEO rung next to [[Mp4Fixture]]'s container probe:
@@ -154,11 +152,7 @@ object AviFixture {
    *  construction: every byte is a function of the constants above. */
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse(Path)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession("graft-avi-fixture")
     import spark.implicits._
     (0 until N).map(i => (i.toLong, aviBytes(i)))
       .toDF("clip_id", "avi")

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /**
  * Deterministic committed MIXED-CONTAINER image corpus — the
  * cross-container ground truth that makes `mm_phash_neardup` /
@@ -161,11 +159,7 @@ object ImageRemuxFixture {
    *  construction: every byte is a function of the constants above. */
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse(Path)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession("graft-image-remux-fixture")
     import spark.implicits._
     (0 until Total).map(i => (IdBase + i, imageBytes(i)))
       .toDF("img_id", "image")

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 /** Dev tool: warm-run named queries and report per-invocation job /
@@ -13,18 +12,8 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 object JobProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "5000"))
-      .getOrCreate()
+    val spark = graft.GraftSession("graft-job-probe")
     spark.sparkContext.setLogLevel("ERROR")
-    System.setProperty(graft.queries.SessionMemo.Prop,
-      sys.env.getOrElse("SPARK_GRAFT_SESSION_MEMO", "off"))
     val jobs = new AtomicInteger
     val stages = new AtomicInteger
     val tasks = new AtomicLong

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /**
  * Deterministic committed corpus of REAL encoded JPEGs — the second
  * image-codec fixture next to [[PngFixture]]: JPEG is the dominant
@@ -119,11 +117,7 @@ object JpegFixture {
    *  construction: every byte is a function of the constants above. */
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse(Path)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession("graft-jpeg-fixture")
     import spark.implicits._
     (0 until N).map(i => (i.toLong, jpegBytes(i)))
       .toDF("img_id", "jpeg")

@@ -2,7 +2,7 @@ package graft.tools
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
@@ -34,10 +34,7 @@ import graft.streaming.{ConsumerLagListener, StreamOps}
   */
 object MaxRateProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession("graft-max-rate-probe")
     spark.sparkContext.setLogLevel("ERROR")
     val wanted: String => Boolean =
       if (args.isEmpty) _ => true else args.toSet
@@ -150,11 +147,17 @@ object MaxRateProbe {
           if (trial(mid)) good = mid else bad = mid
         }
       }
+      // Both bracket edges under the same rule: the FAIL edge took a
+      // failed trial and a failed retry, so the final `good` runs one
+      // more trial (with its own retry). A good edge that fails it is
+      // reported as unconfirmed rather than silently kept.
+      val confirmed = trial(good)
       // unbracketed: the loop exited with `good` as the last VERIFIED
       // sustainable rate; `r` itself was never tried, so claim >= good
       val upper = if (bad > 0) bad.toString else s">=$good(unbracketed)"
       println(f"[maxrate] $name%-18s max sustained ~ ${good / 1000.0}%9.1f k rows/s " +
-        s"(bracket $good..$upper)")
+        s"(bracket $good..$upper)" +
+        (if (confirmed) "" else " [good edge FAILED its confirm trial]"))
       // kernel memo effectiveness across this topology's trials: a low
       // hit rate on a memo'd gate means the plan no longer duplicates
       // back-to-back (the RowMemo assumption) and the measured rate is

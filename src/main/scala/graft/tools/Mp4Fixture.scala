@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /**
  * Deterministic committed corpus of REAL ISO BMFF (MP4) containers —
  * the video sibling of [[PngFixture]]/[[WavFixture]]. No video CODEC
@@ -99,11 +97,7 @@ object Mp4Fixture {
    *  construction: every byte is a function of the constants above. */
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse(Path)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession("graft-mp4-fixture")
     import spark.implicits._
     (0 until N).map(i => (i.toLong, mp4Bytes(i)))
       .toDF("clip_id", "mp4")

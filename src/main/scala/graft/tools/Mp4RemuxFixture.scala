@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /**
  * Deterministic committed MJPEG-in-MP4 corpus — the THIRD video
  * container joining [[VideoDupFixture]] (GIF) and
@@ -193,11 +191,7 @@ object Mp4RemuxFixture {
    *  construction: every byte is a function of the constants above. */
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse(Path)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession("graft-mp4-remux-fixture")
     import spark.implicits._
     (0 until Total).map(i => (IdBase + i, mp4Bytes(i)))
       .toDF("clip_id", "video")

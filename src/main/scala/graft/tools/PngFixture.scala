@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /**
  * Deterministic committed corpus of REAL encoded PNGs — the fixture
  * that lets `MultimodalOps.decodeImagePartitioned` be gated end-to-end
@@ -162,11 +160,7 @@ object PngFixture {
    *  construction: every byte is a function of the constants above. */
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse(Path)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession("graft-png-fixture")
     import spark.implicits._
     (0 until N).map(i => (i.toLong, pngBytes(i)))
       .toDF("img_id", "png")

@@ -1,13 +1,9 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 /** Dev tool: warm steady-state per-query times at two scale factors,
   * printing the 10x-data scaling ratio per query. */
 object ScalingProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession("graft-scaling-probe")
     spark.sparkContext.setLogLevel("ERROR")
     // all registered queries by default; pass names to probe a subset.
     // Scale dirs via SPARK_GRAFT_SF_A/B so the next rung (sf0.1 -> sf1)

@@ -1,22 +1,13 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev scratch: decompose the driver-kernel path cost for the
   * co-purchase graph queries (checkpoint / count / collect / kernel).
   */
 object StepProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession("graft-step-probe")
     spark.sparkContext.setLogLevel("ERROR")
-    System.setProperty(graft.queries.SessionMemo.Prop, "off")
     def t[A](label: String)(f: => A): A = {
       val t0 = System.nanoTime()
       val r = f

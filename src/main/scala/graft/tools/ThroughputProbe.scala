@@ -2,7 +2,7 @@ package graft.tools
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
@@ -19,10 +19,7 @@ import graft.streaming.{ConsumerLagListener, StreamOps}
   */
 object ThroughputProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession("graft-throughput-probe")
     spark.sparkContext.setLogLevel("ERROR")
     val offered = 5000000 // rows/s offered; far above sustainable
     val wanted: String => Boolean =

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /**
  * Deterministic committed corpus of REAL animated GIFs with built-in
  * NEAR-DUPLICATE ground truth — the video-dedup sibling of
@@ -141,11 +139,7 @@ object VideoDupFixture {
    *  construction: every byte is a function of the constants above. */
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse(Path)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession("graft-video-dup-fixture")
     import spark.implicits._
     (0 until Total).map(i => (i.toLong, gifBytes(i)))
       .toDF("clip_id", "gif")

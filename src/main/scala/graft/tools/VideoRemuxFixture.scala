@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /**
  * Deterministic committed MIXED-CONTAINER video corpus — the
  * cross-container ground truth for `mm_video_neardup`: the same clip
@@ -129,11 +127,7 @@ object VideoRemuxFixture {
    *  construction: every byte is a function of the constants above. */
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse(Path)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession("graft-video-remux-fixture")
     import spark.implicits._
     (0 until Total).map(i => (IdBase + i, videoBytes(i)))
       .toDF("clip_id", "video")

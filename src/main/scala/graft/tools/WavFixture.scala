@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /**
  * Deterministic committed corpus of REAL encoded WAV clips — the audio
  * sibling of [[PngFixture]], gating
@@ -126,11 +124,7 @@ object WavFixture {
    *  construction: every byte is a function of the constants above. */
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse(Path)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession("graft-wav-fixture")
     import spark.implicits._
     (0 until N).map(i => (i.toLong, wavBytes(i)))
       .toDF("clip_id", "wav")

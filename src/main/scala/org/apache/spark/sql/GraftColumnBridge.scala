@@ -12,12 +12,6 @@ object GraftColumnBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
-  /** The session's UUID (`sessionUUID` is private[sql]): unique per
-   *  session and never reused — unlike an identity hash — so
-   *  session-scoped caches can't alias a stopped session's slot. */
-  def sessionUUID(spark: SparkSession): String =
-    spark.asInstanceOf[classic.SparkSession].sessionUUID
-
   /** Eager localCheckpoint that PRESERVES a hash partitioning on
    *  `keys`: repartitions with an EXPLICIT partition count (a pinned
    *  count keeps AQE from coalescing the exchange, so the claimed

@@ -17,6 +17,8 @@ import org.scalatest.funsuite.AnyFunSuite
  * the frozen, individually-justified sites below. It also keeps raw
  * `read.parquet(` calls out of ops/ + queries/: every table and fixture
  * loads through `model.Tables`, which infers each schema once per session.
+ * Every main builds its session through `GraftSession`, and ops/ +
+ * queries/ read `SPARK_GRAFT_*` settings only through `GraftEnv`.
  */
 class SourceHygieneSpec extends AnyFunSuite {
 
@@ -32,6 +34,14 @@ class SourceHygieneSpec extends AnyFunSuite {
    *    proximity pairs (tiny fixed-width frame);
    *  - TextOps.scala: sol_shuffled's exchange-per-hop benchmark chain
    *    (the exchange IS the measured artifact). */
+  private def scalaFiles(root: String): Seq[Path] =
+    Files.walk(Paths.get(root)).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") && Files.isRegularFile(p))
+      .toSeq
+
+  private def source(p: Path): String =
+    new String(Files.readAllBytes(p), "UTF-8")
+
   private val frozen = Map(
     "FanOut.scala" -> 1,
     "SimilarityOps.scala" -> 1,
@@ -88,5 +98,35 @@ class SourceHygieneSpec extends AnyFunSuite {
         "a raw spark.read.parquet infers the schema with one Spark job " +
           "per call; read through graft.model.Tables.parquet (or " +
           "Tables.table for an sfDir table) instead:\n", "\n", ""))
+  }
+
+  test("SparkSession.builder appears in src/main only inside " +
+      "GraftSession.scala — every main shares one session policy") {
+    val offenders = scalaFiles("src/main/scala")
+      .filter(p => p.getFileName.toString != "GraftSession.scala")
+      .filter(p => source(p).contains("SparkSession.builder"))
+      .map(_.toString)
+    assert(offenders.isEmpty, offenders.mkString(
+      "build the session with graft.GraftSession instead:\n", "\n", ""))
+    assert(scalaFiles("src/main/scala").exists(p =>
+      p.getFileName.toString == "GraftSession.scala" &&
+        source(p).contains("SparkSession.builder")),
+      "GraftSession.scala no longer holds the builder — the guard is stale")
+  }
+
+  test("ops/ and queries/ read SPARK_GRAFT_* settings only through " +
+      "GraftEnv, which rejects malformed values") {
+    val literal = "\"SPARK_GRAFT_\\w*\"".r
+    val viaHelper = "GraftEnv\\.(long|int)\\(\\s*\"SPARK_GRAFT_\\w*\"".r
+    // every name literal must be the first argument of a helper call,
+    // so no sys.env read (direct or through a named constant) remains
+    val offenders = roots.flatMap(scalaFiles).flatMap { p =>
+      val src = source(p)
+      val stray = literal.findAllIn(src).size - viaHelper.findAllIn(src).size
+      if (stray > 0) Some(s"$p: $stray SPARK_GRAFT_ names outside GraftEnv")
+      else None
+    }
+    assert(offenders.isEmpty, offenders.mkString(
+      "read the setting with graft.GraftEnv.long/int instead:\n", "\n", ""))
   }
 }

@@ -327,42 +327,6 @@ class SimilarityOpsSpec extends SparkSpec {
       f"IVF-PQ residual coding must beat plain PQ: ivfpq=$ivfpq%.3f pq=$pq%.3f")
   }
 
-  test("ivfPqTopK: pre-trained residual books (the session-memo path) " +
-      "reproduce the inline-trained result bit for bit — the memoized " +
-      "and fresh paths share one residual/Lloyd definition") {
-    import graft.queries.PipelineQueries
-    val sfd = "/root/testdata/sf0.01"
-    val corpus = spark.read.parquet(s"$sfd/embeddings.parquet")
-    val qids = PipelineQueries.SimQueryIds
-    val dim = PipelineQueries.EmbeddingDim
-    val (m, ks, iters) = (PipelineQueries.PqM, PipelineQueries.PqKs,
-      PipelineQueries.KmIters)
-    val cents = SimilarityOps.kmeansCentroids(corpus, 8, iters)
-    val books = SimilarityOps.trainIvfPqBooks(corpus, dim, m, ks, iters, cents)
-    def rows(booksOpt: Option[Seq[Array[Array[Float]]]]) =
-      SimilarityOps.ivfPqTopK(corpus, qids, PipelineQueries.SimK, dim,
-        nCells = 8, nProbe = 4, m = m, ks = ks, iters = iters,
-        coarse = Some(cents), books = booksOpt)
-        .collect().map(_.toSeq).sortBy(_.toString)
-    assert(rows(Some(books)).toSeq == rows(None).toSeq,
-      "memoized-books path diverged from inline training")
-  }
-
-  test("sq8TopK: supplied min/max stats (the session-memo path) " +
-      "reproduce the inline-trained result bit for bit") {
-    import graft.queries.PipelineQueries
-    val sfd = "/root/testdata/sf0.01"
-    val corpus = spark.read.parquet(s"$sfd/embeddings.parquet")
-    val qids = PipelineQueries.SimQueryIds
-    val dim = PipelineQueries.EmbeddingDim
-    val stats = SimilarityOps.sq8Stats(corpus, dim)
-    def rows(s: Option[(Seq[Double], Seq[Double])]) =
-      SimilarityOps.sq8TopK(corpus, qids, PipelineQueries.SimK, dim, s)
-        .collect().map(_.toSeq).sortBy(_.toString)
-    assert(rows(Some(stats)).toSeq == rows(None).toSeq,
-      "supplied-stats path diverged from inline training")
-  }
-
   test("ivfPqTopK at production codebook sizes (sf0.1, m=8, ks=64 vs " +
       "256): recall@10 vs exact is monotone in ks and beats the gated " +
       "demo config — the measured curve the 100 TB serving claim cites") {

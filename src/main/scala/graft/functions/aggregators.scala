@@ -19,25 +19,3 @@ class CountAggregator[IN] extends Aggregator[IN, Long, Long] {
   def bufferEncoder: Encoder[Long] = Encoders.scalaLong
   def outputEncoder: Encoder[Long] = Encoders.scalaLong
 }
-
-/** `LongSummer` (lib/reducer/LongSummer.java:22-40): sum monoid. */
-class LongSumAggregator[IN](f: IN => Long) extends Aggregator[IN, Long, Long] {
-  def zero: Long = 0L
-  def reduce(b: Long, a: IN): Long = b + f(a)
-  def merge(b1: Long, b2: Long): Long = b1 + b2
-  def finish(b: Long): Long = b
-  def bufferEncoder: Encoder[Long] = Encoders.scalaLong
-  def outputEncoder: Encoder[Long] = Encoders.scalaLong
-}
-
-/** `SetReducer`/`Distinct` (lib/reducer/SetReducer.java:26-44,
- *  lib/operation/Distinct.java:28-55): set-union combiner -> exact
- *  distinct count. Unbounded buffer — prefer approx_count_distinct at scale. */
-class DistinctAggregator[IN](f: IN => Int) extends Aggregator[IN, Set[Int], Long] {
-  def zero: Set[Int] = Set.empty
-  def reduce(b: Set[Int], a: IN): Set[Int] = b + f(a)
-  def merge(b1: Set[Int], b2: Set[Int]): Set[Int] = b1 union b2
-  def finish(b: Set[Int]): Long = b.size.toLong
-  def bufferEncoder: Encoder[Set[Int]] = Encoders.kryo[Set[Int]]
-  def outputEncoder: Encoder[Long] = Encoders.scalaLong
-}

@@ -2912,7 +2912,7 @@ case class UnigramSegmentModel(child: Expression,
 
 /**
  * Deterministic demo embedding kernel — the live gates' stand-in for
- * an upstream encoder (`Run.synthEmbedding`). One static call per row:
+ * an upstream encoder (`Topologies.synthEmbedding`). One static call per row:
  * the composed-column form is `dim` hash expressions that get INLINED
  * INTO EVERY scoring consumer downstream (8 centroid cosines + the
  * probe-cells call each re-expand the tree), which blew Janino's 64 KB

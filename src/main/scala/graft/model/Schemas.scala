@@ -37,10 +37,6 @@ object Schemas {
   /** `book` topic: raw text line (WordCount.java:63). */
   val sentence: StructType = StructType(Seq(
     StructField("sentence", StringType, nullable = true)))
-
-  /** `rand`/`bytes` topics: fixed-size digit strings (RandomMessageSpout.java:57-65). */
-  val randMessage: StructType = StructType(Seq(
-    StructField("message", StringType, nullable = true)))
 }
 
 /** Typed views of the parsed records, for `Dataset[T]` paths. */

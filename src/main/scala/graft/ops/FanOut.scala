@@ -1,6 +1,8 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
 
 /**
  * Conditional fan-out for heavy row-local stages over narrow scans.
@@ -29,13 +31,26 @@ import org.apache.spark.sql.DataFrame
  * heavy kernel is always the first thing after the scan). A frame
  * with an upstream exchange would make the width probe finalize that
  * exchange's query stage under AQE; such a frame is also already
- * shuffle-partition wide, so it has nothing to gain here.
+ * shuffle-partition wide, so it has nothing to gain here. The contract
+ * is enforced: an input whose physical plan already holds an exchange
+ * throws IllegalArgumentException before the width probe runs.
  */
-object FanOut {
+object FanOut extends AdaptiveSparkPlanHelper {
 
   /** `df` repartitioned to the session shuffle parallelism when — and
-   *  only when — its physical layout is narrower than that. */
+   *  only when — its physical layout is narrower than that. Throws
+   *  IllegalArgumentException if `df` is not a scan-stage frame. */
   def fanOut(df: DataFrame): DataFrame = {
+    // planning the physical plan runs no job; only toRdd below would
+    // finalize an upstream AQE stage
+    find(df.queryExecution.executedPlan) {
+      case _: Exchange | _: ReusedExchangeExec => true
+      case _ => false
+    }.foreach { exchange =>
+      throw new IllegalArgumentException(
+        "FanOut.fanOut takes scan-stage frames only, but the input plan " +
+          s"already holds an exchange (${exchange.nodeName})")
+    }
     val parts = df.sparkSession.sessionState.conf.numShufflePartitions
     if (df.queryExecution.toRdd.getNumPartitions < parts) df.repartition(parts)
     else df

@@ -146,12 +146,4 @@ object SyntheticSources {
       |         CASE WHEN value >= 480 THEN 200.0
       |              ELSE (value * 2) % 360.0 - 180.0 END AS lng
       |  FROM events)""".stripMargin
-
-  /** Sliding-window helper for oracles: each event lands in `slots` hourly
-   *  hops (window length = slots hours, slide = 1 hour) — the DuckDB dual
-   *  of Spark's `window(ts, "<slots> hours", "1 hour")`. */
-  def slidingHoursSql(slots: Int): String = {
-    val vals = (0 until slots).map(i => s"($i)").mkString(",")
-    s"CROSS JOIN (VALUES $vals) h(h)"
-  }
 }

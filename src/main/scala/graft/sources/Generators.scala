@@ -36,13 +36,6 @@ object Generators {
     concat_ws("\t", url, status, zip, user)
   }
 
-  /** Streaming page views: rate source -> TSV lines + event timestamp.
-   *  `rowsPerSecond` plays the role of the spout's emit rate. */
-  def pageViewStream(spark: SparkSession, rowsPerSecond: Int): DataFrame =
-    spark.readStream.format("rate")
-      .option("rowsPerSecond", rowsPerSecond).load()
-      .select(col("timestamp").as("ts"), pageViewLine(col("value")).as("page_view"))
-
   // ---- RandomMessageSpout (lib/spout/RandomMessageSpout.java:31-85) -------
 
   /** Pool of 100 pre-built fixed-size random digit strings
@@ -58,13 +51,6 @@ object Generators {
       array(messagePool(sizeInBytes).map(lit): _*),
       (pmod(idx, lit(100L)) + 1).cast("int"))
 
-  def randomMessageStream(spark: SparkSession, rowsPerSecond: Int,
-      sizeInBytes: Int = 100): DataFrame =
-    spark.readStream.format("rate")
-      .option("rowsPerSecond", rowsPerSecond).load()
-      .select(col("timestamp").as("ts"),
-        randomMessage(col("value"), sizeInBytes).as("message"))
-
   // ---- tweet feed (13 pipe-delimited fields, text at index 4) -------------
 
   /** Pipe-delimited 13-field tweet line with a deterministic hashtag
@@ -77,11 +63,6 @@ object Generators {
       pmod(idx, lit(1000L)).cast("string"))
     concat(lit("u0|u1|u2|u3|"), text, lit("|f5|f6|f7|f8|f9|f10|f11|f12"))
   }
-
-  def tweetStream(spark: SparkSession, rowsPerSecond: Int): DataFrame =
-    spark.readStream.format("rate")
-      .option("rowsPerSecond", rowsPerSecond).load()
-      .select(col("timestamp").as("ts"), tweetLine(col("value")).as("tweet"))
 
   // ---- ADS-B feed (adsb topic wire format, FIXTURES.md §3) ----------------
 
@@ -113,13 +94,6 @@ object Generators {
       lit("},"))
   }
 
-  def adsbStream(spark: SparkSession, rowsPerSecond: Int): DataFrame =
-    spark.readStream.format("rate")
-      .option("rowsPerSecond", rowsPerSecond).load()
-      .select(col("timestamp").as("ts"),
-        adsbLine(col("value"),
-          (col("timestamp").cast("double") * 1000).cast("long")).as("adsb"))
-
   // ---- document feed (curation-pipeline probes) ---------------------------
 
   /** English-looking document line: stopword-heavy so the language-ID
@@ -132,6 +106,55 @@ object Generators {
       lit("the quick brown fox and the lazy dog walked to the market"),
       lit("and then the cat sat on the mat near the old house number"),
       pmod(idx, lit(distinct.toLong)).cast("string"))
+
+  /** Ingest-shaped document line for near-dup clustering: 90% unique
+   *  docs (md5-derived tokens, no cross-doc shingle sharing), 10%
+   *  near-dup FAMILY members (16 shared tokens + a per-doc suffix, 200
+   *  distinct families) — a bounded dup rate with bounded family
+   *  fan-in. [[docLine]] is wrong there: its rows differ only in the
+   *  last token, so EVERY pair is a near-dup and any batch is one
+   *  quadratic mega-cluster — a generator artifact, not an ingest
+   *  shape. */
+  def clusterDocLine(v: Column): Column = {
+    def toks(c: Column) = regexp_replace(md5(c), "(....)", "$1 ")
+    when(v % 10 === 0,
+      concat_ws(" ", toks(concat(lit("famA"), (v % 200).cast("string"))),
+        toks(concat(lit("famB"), (v % 200).cast("string"))),
+        v.cast("string")))
+    .otherwise(
+      concat_ws(" ", toks(v.cast("string")),
+        toks(concat(v.cast("string"), lit("x")))))
+  }
+
+  // ---- live feeds (graft.Topologies) --------------------------------------
+
+  /** A live feed: the line of row index `idx` generated at time `ts`. */
+  type Feed = (Column, Column) => Column
+
+  /** The row index itself as a decimal line — for the demo topologies
+   *  that derive every field from the line (by content hash, or as a
+   *  [[docLine]] index). */
+  val indexFeed: Feed = (idx, _) => idx.cast("string")
+  val randomMessageFeed: Feed = (idx, _) => randomMessage(idx)
+  val pageViewFeed: Feed = (idx, _) => pageViewLine(idx)
+  val tweetFeed: Feed = (idx, _) => tweetLine(idx)
+  val adsbFeed: Feed = (idx, ts) =>
+    adsbLine(idx, (ts.cast("double") * 1000).cast("long"))
+  val docFeed: Feed = (idx, _) => docLine(idx)
+  val clusterDocFeed: Feed = (idx, _) => clusterDocLine(idx)
+
+  /** (ts, value) lines of `feed` over a stream of (ts, value) row
+   *  indexes. */
+  def feedLines(indexes: DataFrame, feed: Feed): DataFrame =
+    indexes.select(col("ts"), feed(col("value"), col("ts")).as("value"))
+
+  /** Rate source -> (ts, value) lines of `feed`; `rowsPerSecond` plays
+   *  the role of the spout's emit rate. */
+  def feedStream(spark: SparkSession, rowsPerSecond: Int,
+      feed: Feed): DataFrame =
+    feedLines(spark.readStream.format("rate")
+      .option("rowsPerSecond", rowsPerSecond).load()
+      .select(col("timestamp").as("ts"), col("value")), feed)
 
   // ---- FileReadSpout (lib/spout/FileReadSpout.java:32-85) -----------------
 

@@ -1415,25 +1415,13 @@ object StreamOps {
    * (count, sum) pair per source, the same O(sources) bound as
    * [[packSequencesStream]].
    */
-  def mixWeightsStream(docs: DataFrame, checkpoint: String,
-      emitFreqSec: Long = 0L)(
-      sink: (DataFrame, Long) => Unit): StreamingQuery = {
+  def mixWeightsStream(docs: DataFrame): ForeachTrigger = {
     val totals = docs.groupBy("source").agg(
       count(lit(1)).as("n_docs"),
       sum(graft.ops.TextAnalyticsOps.wsTokenCount(col("text")))
         .as("n_tokens"))
-    val writer = totals.writeStream
-      .outputMode(OutputMode.Complete)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        sink(graft.queries.PipelineQueries.weightsOf(batch), id)
-      }
-    // same --emit-freq pacing contract as the other Run topologies
-    // (0 = default trigger, for tests that drain as fast as possible)
-    val paced = if (emitFreqSec > 0)
-      writer.trigger(Trigger.ProcessingTime(s"$emitFreqSec seconds"))
-    else writer
-    paced.start()
+    ForeachTrigger(totals, OutputMode.Complete,
+      (batch, _) => graft.queries.PipelineQueries.weightsOf(batch))
   }
 
   /**
@@ -2224,21 +2212,11 @@ object StreamOps {
    * gated batch query on replayed corpus queries, spec-pinned across
    * multiple triggers.
    */
-  def streamingHybrid(queries: DataFrame, docs: DataFrame, emb: DataFrame,
-      checkpoint: String, emitFreqSec: Int = 0)(
-      sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+  def streamingHybrid(queries: DataFrame, docs: DataFrame,
+      emb: DataFrame): ForeachTrigger = {
     val idx = buildHybridIndex(docs, emb)
-    val writer = queries.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        sink(hybridTrigger(idx, batch), id)
-      }
-    (if (emitFreqSec > 0)
-       writer.trigger(Trigger.ProcessingTime(s"$emitFreqSec seconds"))
-     else writer)
-      .start()
+    ForeachTrigger(queries, OutputMode.Append,
+      (batch, _) => hybridTrigger(idx, batch))
   }
 
   /** The build-once serving artifacts of [[streamingHybrid]]. */
@@ -2268,8 +2246,7 @@ object StreamOps {
     HybridServeIndex(withNorm, tfC, dfC, n, avgdl)
   }
 
-  /** One trigger's fused retrieval over the built index — factored so
-   *  the max-rate probe drives the exact per-trigger plan. Arriving
+  /** One trigger's fused retrieval over the built index. Arriving
    *  rows dedupe on query_id first: a repeated query in one
    *  micro-batch (two users typing the same search) would otherwise
    *  double every corpus vector under that qid and corrupt the dense
@@ -2429,16 +2406,10 @@ object StreamOps {
    * time (SURVEY.md §7.4 risk 3).
    */
   def proximityWarnings(positions: Dataset[AdsbPosition], thresholdKm: Double,
-      steps: Int, stepSec: Int, triggerSec: Int, checkpointDir: String,
-      stateDir: String)(
-      onBatch: (DataFrame, Long) => Unit): StreamingQuery = {
-    positions.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.ProcessingTime(s"$triggerSec seconds"))
-      .foreachBatch { (batch: Dataset[AdsbPosition], batchId: Long) =>
+      steps: Int, stepSec: Int, stateDir: String): ForeachTrigger =
+    ForeachTrigger(positions.toDF(), OutputMode.Append, { (batch, _) =>
         val spark = batch.sparkSession
-        val updates = batch.toDF().select(col("icao"),
+        val updates = batch.select(col("icao"),
           col("posTime").as("pos_time"), col("lat"), col("lng"),
           (col("spd") * graft.ops.GeoOps.KnotToKmPerSec).as("spd_kms"),
           col("trak"))
@@ -2470,10 +2441,8 @@ object StreamOps {
           fs.delete(new org.apache.hadoop.fs.Path(statePath, s"v$v"), true)
         }
         val snapshot = spark.read.parquet(s"$stateDir/v$next")
-        onBatch(JoinOps.proximityPairs(snapshot, thresholdKm, steps, stepSec), batchId)
-      }
-      .start()
-  }
+        JoinOps.proximityPairs(snapshot, thresholdKm, steps, stepSec)
+      })
 
   /**
    * Per-EVENT incremental proximity warnings — DistFilterBolt's actual
@@ -2599,8 +2568,7 @@ object StreamOps {
   /** One arrival vs one stored flight: the speculative step loop —
    *  same arithmetic as JoinOps.proximityPairs (one fused GeoMath call
    *  per step), so every formulation is bit-comparable
-   *  (RollingFlightDist.java:230-258). Shared by the
-   *  flatMapGroupsWithState and transformWithState forms. */
+   *  (RollingFlightDist.java:230-258). */
   private[streaming] def speculativeWarnings(r: ShardedReport, icao2: String,
       f: FlightState, thresholdKm: Double, steps: Int,
       stepSec: Int): Seq[ProximityWarning] = {
@@ -2624,53 +2592,19 @@ object StreamOps {
     out.result()
   }
 
-  /**
-   * `transformWithState` formulation of [[proximityWarningsPerEvent]] —
-   * identical semantics (ProximityFidelitySpec asserts equal output),
-   * different STATE GRANULARITY: the fMGWS form reads and rewrites the
-   * shard's whole `Map[icao, FlightState]` blob every trigger, while
-   * this processor keys a `MapState` per aircraft, so a trigger only
-   * writes the entries it updated — point lookups + delta commits
-   * instead of full-map (de)serialization.
-   *
-   * MEASURED (round 10, fleet 2000, 8 shards, bisected max-rate): this
-   * form sustains 421 ev/s vs fMGWS's 841 ev/s — 2× SLOWER, and the
-   * gap is the formulation, not the provider (fMGWS measures 841 on
-   * both HDFS and RocksDB stores). Proximity's access pattern is a
-   * full scan of the owned fleet per arrival, which degenerates
-   * MapState's per-entry granularity into per-entry store reads, while
-   * fMGWS amortizes one blob (de)serialization per trigger. Prefer
-   * [[proximityWarningsPerEvent]] for scan-per-event shapes like this
-   * one; this form is the right granularity when per-event access is
-   * sparse/keyed (O(1) entries touched per arrival). Requires
-   * `spark.sql.streaming.stateStore.providerClass =
-   * ...state.RocksDBStateStoreProvider` (TWS's supported provider).
-   *
-   * Applies the same event-time silence TTL as
-   * [[proximityWarningsPerEvent]] (see its contract; default = the
-   * speculative horizon), with per-entry `removeKey` eviction — point
-   * deletes, matching the per-aircraft state granularity.
-   */
-  def proximityWarningsTws(positions: Dataset[AdsbPosition],
-      thresholdKm: Double, steps: Int, stepSec: Int, numShards: Int = 1,
-      strictSharding: Boolean = false,
-      silenceTtlSec: Long = -1L): Dataset[ProximityWarning] = {
-    val spark0 = positions.sparkSession
-    import spark0.implicits._
-    val ttlMs = resolveTtlMs(silenceTtlSec, steps, stepSec)
-    val sharded = positions.flatMap { p =>
-      val owner = math.floorMod(p.icao.hashCode, numShards)
-      (0 until numShards).iterator.map { s =>
-        ShardedReport(s, s == owner, p.icao, p.posTime, p.lat, p.lng,
-          p.spd * graft.ops.GeoOps.KnotToKmPerSec, p.trak)
-      }
-    }
-    sharded.groupByKey(_.shard)
-      .transformWithState(
-        new ProximityShardProcessor(thresholdKm, steps, stepSec,
-          strictSharding, ttlMs),
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Append)
+  /** A foreachBatch topology: `input` streamed in `mode`, each
+   *  trigger's batch turned into that trigger's result by `body`. The
+   *  runner owns the trigger, the checkpoint and the sink. */
+  final case class ForeachTrigger(input: DataFrame, mode: OutputMode,
+      body: (DataFrame, Long) => DataFrame) {
+    def start(checkpoint: String, trigger: Trigger = Trigger.ProcessingTime(0L))(
+        sink: (DataFrame, Long) => Unit): StreamingQuery =
+      input.writeStream
+        .outputMode(mode)
+        .option("checkpointLocation", checkpoint)
+        .trigger(trigger)
+        .foreachBatch { (batch: DataFrame, id: Long) => sink(body(batch, id), id) }
+        .start()
   }
 
   /** Start a query into the in-memory sink (tests / console parity with

@@ -601,6 +601,19 @@ class PlanShapeSpec extends SparkSpec {
       "wide input re-shuffled before the shingle stage:\n" + sigPlan)
   }
 
+  test("fanOut enforces its scan-stage contract: a scan passes, a frame " +
+      "whose plan already holds an exchange throws before any job runs") {
+    import org.apache.spark.sql.functions.col
+    val scan = graft.model.Tables.documents(spark, "/root/testdata/sf0.001")
+      .select(col("doc_id"), col("text"))
+    ops.FanOut.fanOut(scan)
+    val grouped = scan.groupBy(col("doc_id")).count()
+    val (err, jobs) = countJobs(intercept[IllegalArgumentException](
+      ops.FanOut.fanOut(grouped)))
+    assert(err.getMessage.contains("Exchange"), err.getMessage)
+    assert(jobs == 0, s"the rejected frame still ran $jobs job(s)")
+  }
+
   test("text_langid_nb's apply side is ZERO-exchange: the only shuffles " +
       "in the plan belong to the train half (the bigram agg), never to " +
       "the kernel scoring pass") {

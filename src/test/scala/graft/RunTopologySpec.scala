@@ -10,7 +10,7 @@ import graft.streaming.StreamOps
 
 /** Smoke test for the Run CLI's --ttl wiring: drives the EXACT
   * topology compositions Run serves (`Run.wordCountTopology` /
-  * `Run.pageViewCountTopology`) from a MemoryStream and shows the
+  * `Topologies.pageViewCountTopology`) from a MemoryStream and shows the
   * TTL form really evicts — the 100 TB-shaped bounded-state variant
   * is drivable end-to-end, not spec-only (round-10 punch item). */
 class RunTopologySpec extends SparkSpec {
@@ -68,7 +68,7 @@ class RunTopologySpec extends SparkSpec {
       "the house and the cat slept in the sun all day long once more"
     val in = MemoryStream[(Timestamp, String)]
     val q = StreamOps.toMemory(
-      Run.curateTopology(in.toDF().toDF("ts", "value"),
+      Topologies.curateTopology(in.toDF().toDF("ts", "value"),
         minScore = 0.1, minWords = 5L, watermarkDelay = "1 hour"),
       "run_curate", OutputMode.Append, ckpt())
     try {
@@ -136,7 +136,7 @@ class RunTopologySpec extends SparkSpec {
       .take(graft.queries.PipelineQueries.DecontN).mkString(" ")
     val in = MemoryStream[(Timestamp, String)]
     val q = StreamOps.toMemory(
-      Run.decontaminateTopology(spark, in.toDF().toDF("ts", "value"), benchPath),
+      Topologies.decontaminateTopology(spark, in.toDF().toDF("ts", "value"), benchPath),
       "run_decont", OutputMode.Append, ckpt())
     try {
       in.addData(
@@ -161,7 +161,7 @@ class RunTopologySpec extends SparkSpec {
       .take(graft.queries.PipelineQueries.DecontN).mkString(" ")
     val in = MemoryStream[(Timestamp, String)]
     val q = StreamOps.toMemory(
-      Run.bloomGateTopology(spark, in.toDF().toDF("ts", "value"), benchPath),
+      Topologies.bloomGateTopology(spark, in.toDF().toDF("ts", "value"), benchPath),
       "run_bloom_gate", OutputMode.Append, ckpt())
     try {
       in.addData(
@@ -463,7 +463,7 @@ class RunTopologySpec extends SparkSpec {
       graft.queries.PipelineQueries.NllMicro.toDouble).toLong
     val in = MemoryStream[(Timestamp, String)]
     val q = StreamOps.toMemory(
-      Run.lmScoreTopology(spark, in.toDF().toDF("ts", "value"), corpusPath),
+      Topologies.lmScoreTopology(spark, in.toDF().toDF("ts", "value"), corpusPath),
       "run_lm", OutputMode.Append, ckpt())
     try {
       in.addData(
@@ -499,7 +499,7 @@ class RunTopologySpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getString(1)))
     val in = MemoryStream[(Timestamp, String)]
     val q = StreamOps.toMemory(
-      Run.nbLangIdTopology(spark, in.toDF().toDF("ts", "value"), corpusPath),
+      Topologies.nbLangIdTopology(spark, in.toDF().toDF("ts", "value"), corpusPath),
       "run_nblid", OutputMode.Append, ckpt())
     try {
       in.addData(docs.toIndexedSeq.map(d =>
@@ -549,7 +549,7 @@ class RunTopologySpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getString(1)))
     val in = MemoryStream[(Timestamp, String)]
     val q = StreamOps.toMemory(
-      Run.spanFlagTopology(spark, in.toDF().toDF("ts", "value"), corpusPath),
+      Topologies.spanFlagTopology(spark, in.toDF().toDF("ts", "value"), corpusPath),
       "run_span", OutputMode.Append, ckpt())
     try {
       val t0 = at("2024-01-01 10:00:00")
@@ -600,7 +600,7 @@ class RunTopologySpec extends SparkSpec {
     val aKnown = ca.keys.min // a context word that exists in the model
     val in = MemoryStream[(Timestamp, String)]
     val q2 = StreamOps.toMemory(
-      Run.lmScoreTopology(spark, in.toDF().toDF("ts", "value"),
+      Topologies.lmScoreTopology(spark, in.toDF().toDF("ts", "value"),
         corpusPath, order = 2),
       "run_lm2", OutputMode.Append, ckpt())
     try {
@@ -638,7 +638,7 @@ class RunTopologySpec extends SparkSpec {
       .filter(col("doc_id") === doc.getLong(0)).head()
     val in = MemoryStream[(Timestamp, String)]
     val q3 = StreamOps.toMemory(
-      Run.lmScoreTopology(spark, in.toDF().toDF("ts", "value"),
+      Topologies.lmScoreTopology(spark, in.toDF().toDF("ts", "value"),
         corpusPath, order = 3, smoothing = "kn"),
       "run_lm3", OutputMode.Append, ckpt())
     try {
@@ -653,7 +653,7 @@ class RunTopologySpec extends SparkSpec {
         s"in-corpus doc must score exactly as the batch query: $rows")
     } finally q3.stop()
     val e = intercept[IllegalArgumentException] {
-      Run.lmScoreTopology(spark, in.toDF().toDF("ts", "value"),
+      Topologies.lmScoreTopology(spark, in.toDF().toDF("ts", "value"),
         corpusPath, order = 3, smoothing = "addone")
     }
     assert(e.getMessage.contains("--order 3"), e.getMessage)
@@ -666,7 +666,7 @@ class RunTopologySpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(Timestamp, String)]
     val q = StreamOps.toMemory(
-      Run.phashGateTopology(spark, in.toDF().toDF("ts", "value"),
+      Topologies.phashGateTopology(spark, in.toDF().toDF("ts", "value"),
         graft.tools.PngFixture.Path),
       "run_phash_gate", OutputMode.Append, ckpt())
     try {
@@ -691,7 +691,7 @@ class RunTopologySpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(Timestamp, String)]
     val q = StreamOps.toMemory(
-      Run.videoGateTopology(spark, in.toDF().toDF("ts", "value"),
+      Topologies.videoGateTopology(spark, in.toDF().toDF("ts", "value"),
         graft.tools.VideoDupFixture.Path),
       "run_video_gate", OutputMode.Append, ckpt())
     try {
@@ -715,7 +715,7 @@ class RunTopologySpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(Timestamp, String)]
     val q = StreamOps.toMemory(
-      Run.audioGateTopology(spark, in.toDF().toDF("ts", "value"),
+      Topologies.audioGateTopology(spark, in.toDF().toDF("ts", "value"),
         graft.tools.AudioDupFixture.Path),
       "run_audio_gate", OutputMode.Append, ckpt())
     try {
@@ -739,7 +739,7 @@ class RunTopologySpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(Timestamp, String)]
     val q = StreamOps.toMemory(
-      Run.erGateTopology(spark, in.toDF().toDF("ts", "value"),
+      Topologies.erGateTopology(spark, in.toDF().toDF("ts", "value"),
         "/root/testdata/sf0.001/part.parquet"),
       "run_er_gate", OutputMode.Append, ckpt())
     try {
@@ -766,7 +766,7 @@ class RunTopologySpec extends SparkSpec {
     val gap = "60 seconds"
     val in = MemoryStream[(Timestamp, String)]
     val q = StreamOps.toMemory(
-      Run.sessionizeTopology(in.toDF().toDF("ts", "value"), gap,
+      Topologies.sessionizeTopology(in.toDF().toDF("ts", "value"), gap,
         "0 seconds"),
       "run_sessions", OutputMode.Append, ckpt())
     // two users (distinct line contents), sessions that extend (within
@@ -818,7 +818,7 @@ class RunTopologySpec extends SparkSpec {
       .outputMode(OutputMode.Append)
       .option("checkpointLocation", ckpt())
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
-        val rows = Run.epochShardAssignment(batch)
+        val rows = Topologies.epochShardAssignment(batch)
           .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
         epochs.synchronized { epochs(id) = rows.toSeq }
       }.start()
@@ -860,7 +860,7 @@ class RunTopologySpec extends SparkSpec {
       s"$url\t200\t10001\t7" // user_id is IntegerType — must be numeric
     val in = MemoryStream[(Timestamp, String)]
     val q = StreamOps.toMemory(
-      Run.pageViewCountTopology(in.toDF().toDF("ts", "value"),
+      Topologies.pageViewCountTopology(in.toDF().toDF("ts", "value"),
         Some(600 * 1000L)),
       "run_pvc_ttl", OutputMode.Update, ckpt())
     try {
@@ -903,7 +903,7 @@ class RunTopologySpec extends SparkSpec {
       case (t, i) if admittedIds(i.toLong) => t }.toSet
     val in = MemoryStream[(Timestamp, String)]
     val q = StreamOps.toMemory(
-      Run.nearDupGateTopology(spark, in.toDF().toDF("ts", "value"), corpusPath),
+      Topologies.nearDupGateTopology(spark, in.toDF().toDF("ts", "value"), corpusPath),
       "run_neardup", OutputMode.Append, ckpt())
     try {
       val t0 = at("2024-01-01 10:00:00")
@@ -935,7 +935,7 @@ class RunTopologySpec extends SparkSpec {
     val garbled = (0 until 200).map(i => (33 + (i * 37) % 94).toChar).mkString
     val in = MemoryStream[(Timestamp, String)]
     val q = StreamOps.toMemory(
-      Run.entropyGateTopology(spark, in.toDF().toDF("ts", "value"),
+      Topologies.entropyGateTopology(spark, in.toDF().toDF("ts", "value"),
         s"$sfd/documents.parquet"),
       "run_entropy_gate", OutputMode.Append, ckpt())
     try {
@@ -1001,7 +1001,7 @@ class RunTopologySpec extends SparkSpec {
     }.toSet
     val in = MemoryStream[(Timestamp, String)]
     val q = StreamOps.toMemory(
-      Run.winnowGateTopology(spark, in.toDF().toDF("ts", "value"), corpusPath),
+      Topologies.winnowGateTopology(spark, in.toDF().toDF("ts", "value"), corpusPath),
       "run_winnow_gate", OutputMode.Append, ckpt())
     try {
       in.addData(fresh.map(t => (at("2024-01-01 10:00:00"), t)).toIndexedSeq)
@@ -1038,7 +1038,7 @@ class RunTopologySpec extends SparkSpec {
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val in = MemoryStream[(Timestamp, String)]
     val q = StreamOps.toMemory(
-      Run.trainedGateTopology(spark, in.toDF().toDF("ts", "value"),
+      Topologies.trainedGateTopology(spark, in.toDF().toDF("ts", "value"),
         s"$dir/documents.parquet"),
       "run_trained_gate", OutputMode.Append, ckpt())
     try {
@@ -1097,7 +1097,7 @@ class RunTopologySpec extends SparkSpec {
       math.max(1, (thr / posLr).toInt + 2))(posWord).mkString(" ")
     val in = MemoryStream[(Timestamp, String)]
     val q = StreamOps.toMemory(
-      Run.dsirGateTopology(spark, in.toDF().toDF("ts", "value"), corpusPath),
+      Topologies.dsirGateTopology(spark, in.toDF().toDF("ts", "value"), corpusPath),
       "run_dsir_gate", OutputMode.Append, ckpt())
     try {
       val t0 = at("2024-01-01 10:00:00")

@@ -17,8 +17,9 @@ import org.scalatest.funsuite.AnyFunSuite
  * the frozen, individually-justified sites below. It also keeps raw
  * `read.parquet(` calls out of ops/ + queries/: every table and fixture
  * loads through `model.Tables`, which infers each schema once per session.
- * Every main builds its session through `GraftSession`, and ops/ +
- * queries/ read `SPARK_GRAFT_*` settings only through `GraftEnv`.
+ * Every main builds its session through `GraftSession`, ops/ +
+ * queries/ read `SPARK_GRAFT_*` settings only through `GraftEnv`, and
+ * tools/ takes its live topologies from `graft.Topologies`.
  */
 class SourceHygieneSpec extends AnyFunSuite {
 
@@ -112,6 +113,16 @@ class SourceHygieneSpec extends AnyFunSuite {
       p.getFileName.toString == "GraftSession.scala" &&
         source(p).contains("SparkSession.builder")),
       "GraftSession.scala no longer holds the builder — the guard is stale")
+  }
+
+  test("tools/ composes no topology — live topologies come only from " +
+      "graft.Topologies, the table Run serves") {
+    val composing = "\\b(StreamOps|TextOps|PageViewOps|AdsbOps|PipelineQueries)\\.".r
+    val offenders = scalaFiles("src/main/scala/graft/tools").flatMap { p =>
+      composing.findAllIn(source(p)).toSeq.distinct.map(m => s"$p: $m")
+    }
+    assert(offenders.isEmpty, offenders.mkString(
+      "build the topology from a graft.Topologies entry instead:\n", "\n", ""))
   }
 
   test("ops/ and queries/ read SPARK_GRAFT_* settings only through " +

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
 import graft.SparkSpec
 import graft.model.{AdsbPosition, ProximityWarning}
@@ -77,9 +77,10 @@ class ProximityFidelitySpec extends SparkSpec {
     val in = MemoryStream[AdsbPosition]
     val seen = ArrayBuffer.empty[Warning]
     val q = StreamOps.proximityWarnings(in.toDS(), DistThresholdKm,
-      SpecSteps, SpecStepSec, triggerSec = 1,
+      SpecSteps, SpecStepSec,
+      Files.createTempDirectory("prox-snap-state").toString).start(
       Files.createTempDirectory("prox-snap-ckpt").toString,
-      Files.createTempDirectory("prox-snap-state").toString) { (warnings, _) =>
+      Trigger.ProcessingTime("1 second")) { (warnings, _) =>
       val rows = warnings.collect()
         .map(r => (r.getString(0), r.getString(1), r.getInt(2),
           r.getLong(3), r.getDouble(4)))
@@ -119,43 +120,6 @@ class ProximityFidelitySpec extends SparkSpec {
     val one = runPerEvent(Seq(trigger1, trigger2), shards = 1, strict = false)
     val three = runPerEvent(Seq(trigger1, trigger2), shards = 3, strict = false)
     assert(one.last == three.last)
-  }
-
-  test("transformWithState formulation (MapState per aircraft) emits " +
-      "the same warnings as flatMapGroupsWithState") {
-    implicit val sqlCtx = spark.sqlContext
-    // TWS requires the RocksDB state store provider; set for this
-    // query's session and restore after so other suites keep HDFS state
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val in = MemoryStream[AdsbPosition]
-      val name = s"prox_tws_${System.nanoTime()}"
-      val q = StreamOps.toMemory(
-        StreamOps.proximityWarningsTws(in.toDS(), DistThresholdKm,
-          SpecSteps, SpecStepSec, numShards = 2).toDF(),
-        name, OutputMode.Append,
-        Files.createTempDirectory("prox-tws-ckpt").toString)
-      val tws = try {
-        Seq(trigger1, trigger2).map { batch =>
-          in.addData(batch)
-          q.processAllAvailable()
-          spark.table(name).as[ProximityWarning].collect()
-            .map(w => (w.icao1, w.icao2, w.step, w.curr_time, w.dist_r)).toSet
-        }
-      } finally q.stop()
-      val fmgws = runPerEvent(Seq(trigger1, trigger2), shards = 2, strict = false)
-      assert(tws.last.nonEmpty)
-      assert(tws == fmgws,
-        s"TWS and fMGWS diverged: ${tws.last.diff(fmgws.last)} / ${fmgws.last.diff(tws.last)}")
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
   }
 
   test("per-event state survives a checkpointed restart " +
@@ -242,43 +206,6 @@ class ProximityFidelitySpec extends SparkSpec {
     assert(withTtl.head.nonEmpty)
     assert(withTtl.last == withTtl.head,
       s"stale comparisons leaked: ${withTtl.last.diff(withTtl.head)}")
-  }
-
-  test("silence TTL evicts in the transformWithState processor too " +
-      "(MapState removeKey path): beyond-horizon arrival warns nothing") {
-    implicit val sqlCtx = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val horizonMs = SpecSteps.toLong * SpecStepSec * 1000L
-      val lateTrigger = Seq(
-        AdsbPosition("100", t0 + horizonMs + 20000, 40.50, -73.50, 100.0, 0.0))
-      val in = MemoryStream[AdsbPosition]
-      val name = s"prox_tws_ttl_${System.nanoTime()}"
-      val q = StreamOps.toMemory(
-        StreamOps.proximityWarningsTws(in.toDS(), DistThresholdKm,
-          SpecSteps, SpecStepSec, numShards = 2).toDF(),
-        name, OutputMode.Append,
-        Files.createTempDirectory("prox-tws-ttl-ckpt").toString)
-      val sets = try {
-        Seq(trigger1, lateTrigger).map { batch =>
-          in.addData(batch)
-          q.processAllAvailable()
-          spark.table(name).as[ProximityWarning].collect()
-            .map(w => (w.icao1, w.icao2, w.step, w.curr_time, w.dist_r)).toSet
-        }
-      } finally q.stop()
-      assert(sets.head.nonEmpty, "trigger 1 must warn")
-      assert(sets.last == sets.head,
-        s"TWS leaked stale comparisons: ${sets.last.diff(sets.head)}")
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
   }
 
   test("strict sharding reproduces the reference blind spot: " +

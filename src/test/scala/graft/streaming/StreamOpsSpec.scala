@@ -5,7 +5,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
 import graft.SparkSpec
 import graft.model.AdsbPosition
@@ -780,7 +780,7 @@ class StreamOpsSpec extends SparkSpec {
     val in = MemoryStream[(String, String)]
     @volatile var last: Set[(String, Long, Long, Double)] = Set.empty
     val q = StreamOps.mixWeightsStream(
-      in.toDF().toDF("source", "text"), ckpt()) { (w, _) =>
+      in.toDF().toDF("source", "text")).start(ckpt()) { (w, _) =>
       last = w.select("source", "n_docs", "n_tokens", "weight").collect()
         .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
         .toSet
@@ -911,7 +911,7 @@ class StreamOpsSpec extends SparkSpec {
     val results =
       scala.collection.mutable.ArrayBuffer[(Long, Long, Long, Long)]()
     val q = StreamOps.streamingHybrid(
-      in.toDF().toDF("query_id", "text", "embedding"), docs, emb,
+      in.toDF().toDF("query_id", "text", "embedding"), docs, emb).start(
       ckpt()) { (batch, _) =>
       results ++= batch.select("qid", "rank", "doc_id", "rrf_pico")
         .as[(Long, Long, Long, Long)].collect()
@@ -1136,8 +1136,8 @@ class StreamOpsSpec extends SparkSpec {
     val in = MemoryStream[AdsbPosition]
     @volatile var pairs: Set[(String, String)] = Set.empty
     val q = StreamOps.proximityWarnings(in.toDS(), thresholdKm = 20.0,
-      steps = 1, stepSec = 5, triggerSec = 1, ckpt(),
-      Files.createTempDirectory("graft-state").toString) { (warnings, _) =>
+      steps = 1, stepSec = 5, Files.createTempDirectory("graft-state").toString)
+      .start(ckpt(), Trigger.ProcessingTime("1 second")) { (warnings, _) =>
       pairs = warnings.select("icao1", "icao2")
         .as[(String, String)].collect().toSet
     }
@@ -1161,7 +1161,8 @@ class StreamOpsSpec extends SparkSpec {
     @volatile var pairs: Set[(String, String)] = Set.empty
     def launch(in: MemoryStream[AdsbPosition]) =
       StreamOps.proximityWarnings(in.toDS(), thresholdKm = 20.0,
-        steps = 1, stepSec = 5, triggerSec = 1, ckpt(), stateDir) { (w, _) =>
+        steps = 1, stepSec = 5, stateDir)
+        .start(ckpt(), Trigger.ProcessingTime("1 second")) { (w, _) =>
         pairs = w.select("icao1", "icao2").as[(String, String)].collect().toSet
       }
     val in1 = MemoryStream[AdsbPosition]

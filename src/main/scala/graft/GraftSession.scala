@@ -74,9 +74,11 @@ object GraftEnv {
       v
   }
 
-  /** [[parse]] of variable `name` in the process environment. */
-  def long(name: String, default: Long, min: Long): Long =
-    parse(name, sys.env.get(name), default, min)
+  /** [[parse]] of variable `name` in `env` (the process environment
+    * unless a caller passes another map). */
+  def long(name: String, default: Long, min: Long,
+      env: collection.Map[String, String] = sys.env): Long =
+    parse(name, env.get(name), default, min)
 
   /** [[long]] for an Int-sized setting; a value past Int.MaxValue is
     * rejected like a malformed one. */

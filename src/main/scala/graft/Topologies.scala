@@ -70,6 +70,20 @@ object Topologies {
       Streamed(df, mode)
     })
 
+  /** A new temp directory `prefix*` for a build's state, deleted with
+   *  everything under it when the JVM exits (every MaxRateProbe trial
+   *  and spec run builds afresh). */
+  private def stateDir(prefix: String): String = {
+    val dir = Files.createTempDirectory(prefix)
+    sys.addShutdownHook {
+      if (Files.exists(dir))
+        Files.walk(dir)
+          .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+          .forEach(p => Files.deleteIfExists(p))
+    }
+    dir.toString
+  }
+
   /** A foreachBatch form over `input` lines: each trigger's batch goes
    *  through `body`. */
   private def foreachTrigger(title: String, input: DataFrame)(
@@ -172,7 +186,7 @@ object Topologies {
         StreamOps.proximityWarnings(positions,
           BenchQueries.DistThresholdKm, BenchQueries.SpecSteps,
           BenchQueries.SpecStepSec,
-          Files.createTempDirectory("graft-flight-state").toString))(
+          stateDir("graft-flight-state")))(
         _.orderBy(col("dist_r"))))
     }),
     "hash_sample" -> frame(Generators.randomMessageFeed) { (_, lines, _) =>
@@ -398,11 +412,11 @@ object Topologies {
       // ingestion carries both columns
       val rptLangs = (graft.functions.VectorMath.Stopwords.map(_._1) :+ "und")
       (StreamOps.corpusReportStream(
-        lines.select(Generators.docLine(col("value")).as("text"),
+        lines.select(Generators.docLine(xxhash64(col("value"))).as("text"),
           concat(lit("src"), pmod(xxhash64(col("value")), lit(5L)))
             .as("source"),
           element_at(array(rptLangs.map(lit): _*),
-            (pmod(xxhash64(col("value") + 1), lit(rptLangs.size)) + 1)
+            (pmod(xxhash64(lit(1), col("value")), lit(rptLangs.size)) + 1)
               .cast("int")).as("lang"))),
         OutputMode.Complete)
     },
@@ -428,7 +442,7 @@ object Topologies {
           pmod(xxhash64(col("value")), lit(50L)).as("user_id"),
           element_at(array((graft.queries.AnalyticsQueries.FunnelStages
               :+ "error").map(lit): _*),
-            (pmod(xxhash64(col("value") + 7), lit(4L)) + 1)
+            (pmod(xxhash64(lit(7), col("value")), lit(4L)) + 1)
               .cast("int")).as("event_type"),
           col("ts"))), OutputMode.Append)
     },
@@ -443,7 +457,7 @@ object Topologies {
               "error").map(lit): _*),
             (pmod(xxhash64(col("value")), lit(5L)) + 1).cast("int"))
             .as("event_type"),
-          (pmod(xxhash64(col("value") + 3), lit(100000L)).cast("double")
+          (pmod(xxhash64(lit(3), col("value")), lit(100000L)).cast("double")
             / lit(200.0)).as("value")),
         spark.read.parquet(opts.getOrElse("history",
           s"$DemoSfDir/events.parquet"))), OutputMode.Append)
@@ -459,7 +473,7 @@ object Topologies {
       // carries both columns
       val ev = lines.select(
         pmod(xxhash64(col("value")), lit(50L)).as("user_id"),
-        pmod(xxhash64(col("value") + 7), lit(3L)).as("k"),
+        pmod(xxhash64(lit(7), col("value")), lit(3L)).as("k"),
         col("ts"))
       (StreamOps.streamingRangeJoin(
         ev.filter(col("k") === 0)
@@ -680,7 +694,7 @@ object Topologies {
       // bounded local fixpoint. foreachBatch IS the trigger, like
       // shuffle_shard. doc_id for the anonymous line feed is its
       // content hash (curateTopology's convention).
-      val caState = Files.createTempDirectory("graft-castate").toString
+      val caState = stateDir("graft-castate")
       val caHist = spark.read
         .parquet(s"$DemoSfDir/documents.parquet")
         .select(col("doc_id"), col("text"))

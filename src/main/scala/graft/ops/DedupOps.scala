@@ -229,9 +229,8 @@ object DedupOps {
    *  registered the checkpoint RDD, so the blocks sit in the block
    *  manager until a driver GC (the r14 cross-query leak class).
    *  Every superseded truncated artifact must come back through here
-   *  — the connectedComponents release discipline, factored for the
-   *  other iterative loops (bpeLearn, graphPagerank, unigramLearn,
-   *  compactClusterState). */
+   *  (connectedComponents, bpeLearn, graphPagerank, unigramLearn,
+   *  compactClusterState, [[DriverGate]]'s snapshots). */
   /** CONTRACT: pass the exact checkpointed HANDLE (the frame
    *  `localCheckpoint()`/[[reliableTruncate]] returned), not a frame
    *  derived from it — the match is on the plan ROOT by design.
@@ -1216,104 +1215,54 @@ object DedupOps {
    */
   def connectedComponents(edges: DataFrame, nodes: DataFrame,
       maxIters: Int = 30,
-      driverCap: Long = LocalGraph.MaxDriverPairs,
-      rescanGate: Boolean = false): DataFrame = {
+      driverCap: Long = LocalGraph.MaxDriverPairs): DataFrame = {
     // reliable checkpoint when a checkpoint dir is configured (cluster
-    // mode); executor-memory localCheckpoint otherwise (local/dev)
-    def truncate(df: DataFrame): DataFrame = reliableTruncate(df)
-    // Reliable checkpoint file of a just-checkpointed DataFrame (None
-    // for localCheckpoint / non-checkpoint plans). Spark only deletes
-    // these files itself with referenceTracking.cleanCheckpoints=true,
-    // and then only on driver GC — a 30-iteration run would otherwise
-    // hold 30 full label-set snapshots in reliable storage, so the loop
-    // below deletes iteration i's snapshot as soon as i+1 materializes.
-    def checkpointFileOf(df: DataFrame): Option[String] =
-      df.queryExecution.analyzed match {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.getCheckpointFile
-        case _ => None
-      }
-    // The localCheckpoint counterpart of checkpoint-file deletion:
-    // superseded iteration snapshots hold executor-memory blocks that
-    // the ContextCleaner only releases on a driver GC — a bench or
-    // service running many fixpoints between GCs accumulates every
+    // mode); executor-memory localCheckpoint otherwise (local/dev).
+    // Superseded snapshots go back through [[releaseTruncated]] as
+    // soon as their successor materializes: Spark deletes reliable
+    // files only with referenceTracking.cleanCheckpoints=true (and then
+    // on driver GC), and localCheckpoint blocks wait for a driver GC —
+    // a bench or service running many fixpoints between GCs held every
     // iteration's label set in the block manager, squeezing execution
     // memory for UNRELATED queries (measured as a uniform ~20%
     // slow-down across the suite once dedup_clusters_incremental's
-    // two fixpoints ran per pass). Unpersist eagerly, same timing as
-    // the reliable-file delete: only after the successor materializes.
-    def rddOf(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
-      df.queryExecution.analyzed match {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => Some(lr.rdd)
-        case _ => None
-      }
-    def release(df: DataFrame, file: Option[String],
-        rdd: Option[org.apache.spark.rdd.RDD[_]]): Unit = {
-      file.foreach { p =>
-        val path = new org.apache.hadoop.fs.Path(p)
-        val fs = path.getFileSystem(
-          df.sparkSession.sparkContext.hadoopConfiguration)
-        fs.delete(path, true)
-        ()
-      }
-      rdd.foreach { r =>
-        // RDD.unpersist WARNs that a locally-checkpointed RDD cannot
-        // be recomputed — here that is the POINT (the successor
-        // snapshot is already materialized; this lineage is never
-        // needed again), and the per-iteration repetition would bury
-        // genuine warnings in bench/service logs. Deny exactly that
-        // one message on the concrete RDD class's logger (once per
-        // class); every other warning from the class still flows.
-        if (DedupOps.silencedUnpersistLoggers.add(r.getClass.getName))
-          DedupOps.denyUnpersistWarning(r.getClass.getName)
-        r.unpersist(blocking = false)
-      }
-    }
-    // ONE derivation of the caller's edge relation: the symmetrizing
-    // union references `edges` twice, and while exchange reuse covers
-    // shared shuffle subtrees, everything past the LAST exchange of
-    // the edge derivation (the minhash verify join + jaccard filter
-    // most callers pass in; er_self's lev verification) executed twice
-    // inside the sym0 job. Materialize the pairs once (pair-sized,
-    // fixed-width ids), symmetrize from the in-memory blocks, release
-    // the intermediate as soon as sym0 supersedes it.
-    // `rescanGate` callers (edge relations straight off a cheap
-    // pushed-filter table scan — graphComponents' backbone) gate
-    // WITHOUT the pre-gate snapshot: count + collect re-scan the table
-    // (cheaper than materializing into the block manager, the kCore
-    // rescanGate finding); computed edge relations (minhash verify
-    // joins) keep the single materialization.
+    // two fixpoints ran per pass).
+    def truncate(df: DataFrame): DataFrame = reliableTruncate(df)
+    // DRIVER KERNEL behind [[DriverGate]] (rationale in [[LocalGraph]]):
+    // under the cap the whole fixpoint — measured at 2-3 scheduled
+    // jobs PER ROUND of label propagation (graph_components: 46 jobs
+    // for 0.33 MB of total shuffle) — collapses to one union-find over
+    // the collected pairs, bit-identical by construction (min-label
+    // components are unique; LocalGraphSpec pins kernel == fixpoint on
+    // randomized graphs, and the specs force this arm off with
+    // driverCap = 0). A computed edge relation (minhash verify joins,
+    // er_self's lev verification) is snapshotted ONCE by the gate, so
+    // the collect and the fallback's symmetrizing union — which
+    // references the edges twice — read the same blocks; a
+    // pushed-filter table scan (graphComponents' backbone) is read
+    // directly. Past the cap, or for non-long ids, the distributed
+    // fixpoint below runs unchanged — the honest graph-scale form.
     val eSel = edges.select(col("id1").as("src"), col("id2").as("dst"))
-    val e0 = if (rescanGate) eSel else truncate(eSel)
-    // DRIVER KERNEL under the count-before-collect gate (the bpe_learn
-    // device; rationale and budget in [[LocalGraph]]): the pair count
-    // is one cheap job over the materialized blocks, and under the cap
-    // the whole fixpoint — measured at 2-3 scheduled jobs PER ROUND of
-    // label propagation (graph_components: 46 jobs for 0.33 MB of
-    // total shuffle) — collapses to one union-find over the collected
-    // pairs, bit-identical by construction (min-label components are
-    // unique; LocalGraphSpec pins kernel == fixpoint on randomized
-    // graphs, and the specs force this arm off with driverCap = 0).
-    // Past the cap, or for non-long ids, the distributed fixpoint
-    // below runs unchanged — the honest graph-scale form.
-    val nPairs = e0.count() // cheap: in-memory blocks, or a table scan
-    LocalGraph.collectPairs(e0, nPairs, driverCap) match {
-      case Some(pairs) =>
-        if (!rescanGate) release(e0, checkpointFileOf(e0), rddOf(e0))
-        val lbl = LocalGraph.componentMinLabels(pairs)
-        val lf = LocalGraph.pairFrame(edges.sparkSession,
-          lbl.iterator, lbl.size.toLong, "id", "cluster")
-        val lside =
-          if (lbl.size.toLong <= MaxBroadcastNodes) broadcast(lf) else lf
-        return nodes.select(col("id"))
-          .join(lside, Seq("id"), "left")
-          .select(col("id"),
-            coalesce(col("cluster"), col("id")).as("cluster"))
-      case None => ()
+    val longIds = eSel.schema.fields.forall(
+      _.dataType == org.apache.spark.sql.types.LongType)
+    val e1 = DriverGate("connected_components", eSel,
+        if (longIds) driverCap else 0L)(LocalGraph.pairOf) { pairs =>
+      val lbl = LocalGraph.componentMinLabels(pairs)
+      val lf = LocalGraph.pairFrame(edges.sparkSession,
+        lbl.iterator, lbl.size.toLong, "id", "cluster")
+      val lside =
+        if (lbl.size.toLong <= MaxBroadcastNodes) broadcast(lf) else lf
+      Some(nodes.select(col("id"))
+        .join(lside, Seq("id"), "left")
+        .select(col("id"),
+          coalesce(col("cluster"), col("id")).as("cluster")))
+    } match {
+      case Right(out) => return out
+      case Left(e) => e
     }
-    val e1 = if (rescanGate) truncate(eSel) else e0
     val sym0 = truncate(
       e1.union(e1.select(col("dst").as("src"), col("src").as("dst"))))
-    release(e1, checkpointFileOf(e1), rddOf(e1))
+    releaseTruncated(e1)
     // Propagate only over nodes that appear in an edge: at corpus scale
     // the near-dup subgraph is orders of magnitude smaller than the
     // node set, and isolated nodes are singleton clusters by definition
@@ -1368,7 +1317,7 @@ object DedupOps {
         val s = org.apache.spark.sql.GraftColumnBridge
           .localCheckpointHashPartitioned(sym0, Seq("src"),
             numPartitions = Some(target))
-        release(sym0, checkpointFileOf(sym0), rddOf(sym0))
+        releaseTruncated(sym0)
         symHandle = s
         s
       } else adaptiveCoalesceView(sym0, nSym)
@@ -1384,8 +1333,7 @@ object DedupOps {
       else labels0
     var converged = false
     var i = 0
-    var prevLabelFile = checkpointFileOf(labels0)
-    var prevLabelRdd = rddOf(labels0)
+    var prevLabels = labels0 // the live label checkpoint HANDLE
     while (!converged && i < maxIters) {
       val lblDst = labels.select(col("id").as("dst"), col("cluster"))
       val neighborMin = sym
@@ -1405,9 +1353,8 @@ object DedupOps {
       // so the previous label snapshot is unreachable — reclaim its
       // file AND its cached blocks now rather than waiting for a
       // driver GC that may never run
-      release(updated, prevLabelFile, prevLabelRdd)
-      prevLabelFile = checkpointFileOf(updated)
-      prevLabelRdd = rddOf(updated)
+      releaseTruncated(prevLabels)
+      prevLabels = updated
       labels = updated.select(col("id"), col("cluster"))
       i += 1
     }
@@ -1420,7 +1367,7 @@ object DedupOps {
     // references just the final label snapshot (which must stay live).
     // Release via the HANDLE — `sym` itself may be a coalesce view
     // whose plan root is not the checkpoint.
-    release(symHandle, checkpointFileOf(symHandle), rddOf(symHandle))
+    releaseTruncated(symHandle)
     nodes.select(col("id"))
       .join(labels, Seq("id"), "left")
       .select(col("id"), coalesce(col("cluster"), col("id")).as("cluster"))

@@ -8,7 +8,7 @@ import scala.collection.mutable
 /**
  * Driver-side EXACT kernels for the integer graph fixpoints
  * (connected components, k-core peel, multi-source BFS / shortest
- * paths, label propagation) behind a COUNT-BEFORE-COLLECT gate — the
+ * paths, label propagation) behind [[DriverGate]] — the
  * bpe_learn device (guide §1.2: fix the distributed algorithm before
  * the per-task work).
  *
@@ -21,11 +21,9 @@ import scala.collection.mutable
  * those rounds moves node-sized integer state that a single driver
  * core folds in milliseconds once the edge list is in hand.
  *
- * The gate: callers count the PAIR relation first (a count the
- * engines' broadcast verdicts already pay) and collect it only under
- * [[MaxDriverPairs]] (~64 MB of packed long pairs at the default —
- * same budget class as [[DedupOps.MaxBroadcastNodes]], env-tunable for
- * cluster drivers). Past the gate — the honest 100 TB form — the
+ * The gate is [[DriverGate]]: one bounded collect of the pair
+ * relation under the driver byte budget (16-byte pairs, 24-byte
+ * weighted triples). Past the cap — the honest 100 TB form — the
  * distributed fixpoints run unchanged; unit specs force that arm with
  * `driverCap = 0` and pin bit-equality of both paths. Nothing is
  * cached across invocations: every call re-derives the edge relation
@@ -41,39 +39,16 @@ import scala.collection.mutable
  */
 object LocalGraph {
 
-  /** Pair-count gate for driver-side graph kernels. Default 4M pairs
-   *  (~64 MB packed; the transient collect is bounded and released on
-   *  return). Env-parameterized so a cluster deployment sizes it to
-   *  its driver heap; 0 disables every driver kernel. */
+  /** Row cap of the pair kernels' gate. */
   private[graft] lazy val MaxDriverPairs: Long =
-    graft.GraftEnv.long("SPARK_GRAFT_DRIVER_GRAPH_PAIRS", 4000000L, min = 0)
+    DriverGate.cap(DriverGate.PairBytes)
 
-  /** Collect a two-long-column pair relation iff its row count is
-   *  known (counted by the caller — typically over an already
-   *  materialized snapshot) and under `cap`, and both columns are
-   *  LongType (string-keyed callers fall through to the distributed
-   *  engines). */
-  private[graft] def collectPairs(df: DataFrame, rows: Long,
-      cap: Long): Option[Array[(Long, Long)]] =
-    if (rows > cap || df.schema.fields.length != 2 ||
-        !df.schema.fields.forall(_.dataType == LongType)) None
-    else Some(df.toDF("_1", "_2")
-      .as(org.apache.spark.sql.Encoders.tuple(
-        org.apache.spark.sql.Encoders.scalaLong,
-        org.apache.spark.sql.Encoders.scalaLong))
-      .collect())
+  /** A (u, v) edge row as driver pair. */
+  private[graft] def pairOf(r: Row): (Long, Long) = (r.getLong(0), r.getLong(1))
 
-  /** (u, v, cost) variant for the weighted kernels. */
-  private[graft] def collectTriples(df: DataFrame, rows: Long,
-      cap: Long): Option[Array[(Long, Long, Long)]] =
-    if (rows > cap || df.schema.fields.length != 3 ||
-        !df.schema.fields.forall(_.dataType == LongType)) None
-    else Some(df.toDF("_1", "_2", "_3")
-      .as(org.apache.spark.sql.Encoders.tuple(
-        org.apache.spark.sql.Encoders.scalaLong,
-        org.apache.spark.sql.Encoders.scalaLong,
-        org.apache.spark.sql.Encoders.scalaLong))
-      .collect())
+  /** A (u, v, cost) edge row as driver triple. */
+  private[graft] def tripleOf(r: Row): (Long, Long, Long) =
+    (r.getLong(0), r.getLong(1), r.getLong(2))
 
   /** Two-long-column DataFrame from driver rows, parallelized at the
    *  scale-adaptive width (never a LocalRelation — a node-sized local
@@ -296,9 +271,8 @@ object LocalGraph {
    *  pairs BEFORE committing to the kernel, so a dense graph whose
    *  edge count passes the pair gate but whose wedge volume does not
    *  still takes the distributed census. ~2^28 merge steps ≈ well
-   *  under a second of driver time. */
-  private[graft] lazy val MaxDriverTriWork: Long =
-    graft.GraftEnv.long("SPARK_GRAFT_DRIVER_TRI_WORK", 1L << 28, min = 0)
+   *  under a second of driver time — a CPU bound, not a heap budget. */
+  private[graft] val MaxDriverTriWork: Long = 1L << 28
 
   /** Exact degree-orientation triangle census (the census engine's
    *  adjacency-intersection arm, driver-side): each undirected edge

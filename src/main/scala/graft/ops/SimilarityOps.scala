@@ -228,12 +228,10 @@ object SimilarityOps {
       .select(col("vec_id"), col("embedding")).collect()
       .sortBy(_.getLong(0)).map(_.getSeq[Float](1).toArray)
 
-  /** Vector-count gate for the driver-side Lloyd kernel (default 250k
-   *  vectors ≈ 64 MB of 64-dim floats — the LocalGraph.MaxDriverPairs
-   *  budget class; 0 disables it, env-parameterized for cluster
-   *  drivers). */
+  /** Vector cap of the driver-side Lloyd kernel's [[DriverGate]]
+   *  (a vec_id plus a 64-dim float vector per row). */
   private[graft] lazy val KmDriverMaxVectors: Long =
-    graft.GraftEnv.long("SPARK_GRAFT_DRIVER_KM_VECS", 250000L, min = 0)
+    DriverGate.cap(DriverGate.KmVectorBytes)
 
   /** Spark's FLOAT → DECIMAL(20,10) cast, driver-side: the decimal
    *  string value of the widened double (BigDecimal.valueOf ==
@@ -320,43 +318,33 @@ object SimilarityOps {
    */
   def kmeansCentroids(emb: DataFrame, k: Int, iters: Int,
       driverCap: Long = KmDriverMaxVectors): Array[Array[Float]] = {
-    // DRIVER KERNEL behind a bounded-collect gate: each distributed
+    // DRIVER KERNEL behind [[DriverGate]]: each distributed
     // Lloyd round is one serial assignment+explode+agg+collect job over
     // a corpus whose k × dim decimal partials fit in kilobytes —
     // measured as the dominant job count of every quantizer consumer
     // (sim_pq 29 jobs / 2.5 s, sim_ivfpq 33 / 2.7, JobProbe
-    // sf0.1/32c). ONE collect of at
-    // most driverCap + 1 vectors decides and feeds the gate at once (no
-    // count job first): if it holds ≤ driverCap vectors that is the
-    // whole corpus, and the rounds run locally through the SAME
-    // VectorMath.ivfProbeCells assignment kernel and the same scale-10
-    // HALF_UP decimal sums (exact, order-independent), so the trained
-    // centroids are bit-identical by construction (SimilarityOpsSpec
-    // pins local == distributed). One more vector means the corpus is
-    // past the cap and takes the distributed rounds — the honest
-    // 100 TB form — as does a long-sum overflow (impossible under the
-    // cap for unit-scale embeddings, but checked). The limit collect
-    // is one job over a one-file table (a many-partition input is
-    // scanned in rounds of growing size, one job each). driverCap = 0
-    // skips the collect; a cap past Int.MaxValue - 1 is clamped there
-    // (no JVM array holds more).
-    if (driverCap > 0) {
-      val take = math.min(driverCap, Int.MaxValue - 1L).toInt
-      val rows = emb.select(col("vec_id"), col("embedding"))
-        .limit(take + 1).collect()
-      if (rows.length <= take) {
-        val vecs = rows.map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-        kmeansLloydLocal(vecs, k, iters) match {
-          case Some(c) => return c
-          case None => ()
-        }
-      }
+    // sf0.1/32c). Over a table scan the gate is ONE bounded collect of
+    // at most driverCap + 1 vectors (one job over a one-file table):
+    // under the cap that is the whole corpus, and the rounds run
+    // locally through the SAME VectorMath.ivfProbeCells assignment
+    // kernel and the same scale-10 HALF_UP decimal sums (exact,
+    // order-independent), so the trained centroids are bit-identical
+    // by construction (SimilarityOpsSpec pins local == distributed).
+    // Past the cap the corpus takes the distributed rounds — the
+    // honest 100 TB form — as does a long-sum overflow (impossible
+    // under the cap for unit-scale embeddings, but checked).
+    val vecs = emb.select(col("vec_id"), col("embedding"))
+    val corpus = DriverGate("kmeans", vecs, driverCap)(
+        r => (r.getLong(0), r.getSeq[Float](1).toArray))(
+        kmeansLloydLocal(_, k, iters)) match {
+      case Right(c) => return c
+      case Left(f) => f
     }
-    var cents = seedCentroids(emb, k)
+    var cents = seedCentroids(corpus, k)
     for (_ <- 0 until iters) {
       val cNorms = cents.map(c =>
         math.sqrt(c.foldLeft(0.0)((a, x) => a + x.toDouble * x.toDouble)))
-      val stats = emb
+      val stats = corpus
         .withColumn("cell", element_at(
           graft.functions.native.ivf_probe_cells(col("embedding"), cents, cNorms, 1), 1))
         .select(col("cell"), posexplode(col("embedding")))
@@ -371,6 +359,7 @@ object SimilarityOps {
       }
       cents = next
     }
+    if (corpus ne vecs) DedupOps.releaseTruncated(corpus) // the gate's snapshot
     cents
   }
 

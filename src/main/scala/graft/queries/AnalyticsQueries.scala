@@ -912,29 +912,28 @@ object AnalyticsQueries {
     // arithmetic is the identical micro-unit chain it always was):
     // one copy of the trickiest loop in the file — the checkpoint
     // stride + releaseTruncated handle choreography — lives in [[ppr]]
-    // The incidence derivation (a lineitem-wide distinct) is
-    // materialized ONCE: the gate's count + collect read the blocks,
-    // and the fallback's symmetrizing union reads the SAME snapshot
-    // instead of re-deriving the distinct per union branch.
     val e = Tables.lineitem(spark, sfDir)
       .select((col("l_suppkey") * 2).as("u"),
         (col("l_partkey") * 2 + 1).as("v"))
       .distinct()
-      .localCheckpoint()
-    // DRIVER KERNEL under the count-before-collect gate (rationale in
+    // DRIVER KERNEL behind [[graft.ops.DriverGate]] (rationale in
     // [[graft.ops.LocalGraph]]; bit-exactness argument in [[graphPpr]]
-    // — global pagerank is the every-node-a-seed special case).
-    graft.ops.LocalGraph.collectPairs(e, e.count(),
-        graft.ops.LocalGraph.MaxDriverPairs) match {
-      case Some(pairs) =>
-        graft.ops.DedupOps.releaseTruncated(e)
+    // — global pagerank is the every-node-a-seed special case). The
+    // incidence derivation (a lineitem-wide distinct) holds an
+    // exchange, so the gate materializes it ONCE: the fallback's
+    // symmetrizing union reads the SAME snapshot instead of
+    // re-deriving the distinct per union branch.
+    graft.ops.DriverGate("graph_pagerank", e,
+        graft.ops.LocalGraph.MaxDriverPairs)(graft.ops.LocalGraph.pairOf) {
+      pairs =>
         val r = graft.ops.LocalGraph.pprRanks(pairs,
           _ => true, PrIters, PrScale)
-        return graft.ops.LocalGraph.pairFrame(spark,
-          r.iterator, r.size.toLong, "node", "rank_micro")
-      case None => ()
+        Some(graft.ops.LocalGraph.pairFrame(spark,
+          r.iterator, r.size.toLong, "node", "rank_micro"))
+    } match {
+      case Right(out) => out
+      case Left(snap) => ppr(snap, lit(true), PrIters)
     }
-    ppr(e, lit(true), PrIters)
   }
 
   /**
@@ -964,10 +963,7 @@ object AnalyticsQueries {
    * 3·triangles / wedges, both exact integers, divided once.
    */
   def graphTriangles(spark: SparkSession, sfDir: String): DataFrame =
-    // rescanGate: the edge input is the bucketed co-pair table — the
-    // kernel gate re-scans it instead of snapshotting it first
-    triangleCensusEdges(coPairsTable(spark, sfDir).select("u", "v"),
-      rescanGate = true)
+    triangleCensusEdges(coPairsTable(spark, sfDir).select("u", "v"))
 
   /** Distinct undirected co-membership edges (u < v) of any (o, p)
    *  frame — the graph both [[triangleCensus]] and [[kCore]] analyze.
@@ -1061,9 +1057,8 @@ object AnalyticsQueries {
   /** The [[triangleCensus]] engine over a prebuilt (u, v) edge frame
    *  — the [[coPairsTable]] consumers skip the co-membership join. */
   def triangleCensusEdges(edges0: DataFrame,
-      driverCap: Long = graft.ops.LocalGraph.MaxDriverPairs,
-      rescanGate: Boolean = false): DataFrame = {
-    // DRIVER KERNEL under the count-before-collect gate PLUS an exact
+      driverCap: Long = graft.ops.LocalGraph.MaxDriverPairs): DataFrame = {
+    // DRIVER KERNEL behind [[graft.ops.DriverGate]] PLUS an exact
     // intersection-work budget (rationale in [[graft.ops.LocalGraph]]):
     // the census is one adjacency-intersection pass over oriented
     // out-lists — integer-exact, and the single float (gcc_r) is
@@ -1073,19 +1068,17 @@ object AnalyticsQueries {
     // census on randomized fixtures). A dense graph under the pair cap
     // but over the work budget, an empty edge set (whose engine
     // n_wedges is NULL, not 0), and any graph past the pair cap all
-    // take the distributed census below, unchanged.
-    // rescanGate: see [[kCore]] — table-backed edge inputs gate by
-    // re-scanning instead of paying a pre-gate snapshot.
-    val (gateFrame, nPairs0) =
-      if (rescanGate) { val n = edges0.count(); (edges0, n) }
-      else { val b = edges0.localCheckpoint(); (b, b.count()) }
-    if (nPairs0 > 0) {
-      graft.ops.LocalGraph.collectPairs(gateFrame, nPairs0, driverCap)
-          .flatMap(graft.ops.LocalGraph.triangleCensus) match {
-        case Some((nn, ne, nw, nt)) =>
-          if (!rescanGate) graft.ops.DedupOps.releaseTruncated(gateFrame)
-          val spark = edges0.sparkSession
-          return spark.createDataFrame(
+    // take the distributed census below, unchanged. A table-backed
+    // edge input (graphTriangles' co-pair table) is collected straight
+    // off the scan; a computed one (coEdges' self-join) is snapshotted
+    // once by the gate and the census reads that snapshot.
+    val spark = edges0.sparkSession
+    val edges = graft.ops.DriverGate("graph_triangles", edges0, driverCap)(
+        graft.ops.LocalGraph.pairOf) { pairs =>
+      if (pairs.isEmpty) None
+      else graft.ops.LocalGraph.triangleCensus(pairs).map {
+        case (nn, ne, nw, nt) =>
+          spark.createDataFrame(
               java.util.Arrays.asList(org.apache.spark.sql.Row(nn, ne, nw, nt)),
               org.apache.spark.sql.types.StructType(Seq(
                 org.apache.spark.sql.types.StructField("n_nodes",
@@ -1101,11 +1094,11 @@ object AnalyticsQueries {
               round(lit(3.0) * col("n_triangles") /
                 nullif(col("n_wedges").cast("double"), lit(0.0)), 6)
                 .as("gcc_r"))
-        case None => ()
       }
+    } match {
+      case Right(out) => return out
+      case Left(e) => e
     }
-    val edges =
-      if (rescanGate) edges0.localCheckpoint() else gateFrame
     val deg = endpoints(edges).groupBy("node").agg(count(lit(1)).as("deg"))
     // total orientation order: lexicographic (deg, node) — compared
     // as two fields, never packed into one integer (a deg·2³²+node
@@ -1347,10 +1340,7 @@ object AnalyticsQueries {
    * oracle error, never a silent mismatch.
    */
   def graphKcore(spark: SparkSession, sfDir: String): DataFrame =
-    // rescanGate: the edge input is the bucketed co-pair table — the
-    // kernel gate re-scans it instead of snapshotting it first
-    kCore(coPairsTable(spark, sfDir).select("u", "v"), KCoreK,
-      rescanGate = true)
+    kCore(coPairsTable(spark, sfDir).select("u", "v"), KCoreK)
 
   /** The peeling fixpoint over any (u, v) edge frame. `bcCap` is the
    *  broadcast budget for the cumulative drop set (default: the
@@ -1358,8 +1348,7 @@ object AnalyticsQueries {
    *  the rebase fallback on fixture graphs. */
   def kCore(edges0: DataFrame, k: Int,
       bcCap: Long = graft.ops.DedupOps.MaxBroadcastNodes,
-      driverCap: Long = graft.ops.LocalGraph.MaxDriverPairs,
-      rescanGate: Boolean = false): DataFrame = {
+      driverCap: Long = graft.ops.LocalGraph.MaxDriverPairs): DataFrame = {
     // ONE base edge materialization; each round's peel applies as a
     // pair of BROADCAST anti-joins of the CUMULATIVE drop set over it.
     // Node removal is set subtraction — order-independent — so pruning
@@ -1385,7 +1374,7 @@ object AnalyticsQueries {
     // is one cheap job per (re)base over in-memory blocks.
     def adaptView(b: DataFrame): DataFrame =
       graft.ops.DedupOps.adaptiveCoalesceView(b, b.count())
-    // DRIVER KERNEL under the count-before-collect gate (rationale in
+    // DRIVER KERNEL behind [[graft.ops.DriverGate]] (rationale in
     // [[graft.ops.LocalGraph]]): the peel launched 2 jobs per cascade
     // round — measured 28 jobs / 104 tasks / 0.00 MB shuffled for a
     // 3.06 s median (JobProbe, sf0.1/32c) — pure scheduling for
@@ -1394,28 +1383,21 @@ object AnalyticsQueries {
     // queue cascade equals the synchronous rounds — KCoreSpec pins it
     // against the same reference, and forces THIS arm off with
     // driverCap = 0 to keep the distributed loop covered). Past the
-    // cap the fixpoint below runs unchanged.
-    // `rescanGate` callers (edges0 straight off a bucketed table scan —
-    // graphKcore) gate WITHOUT a pre-gate snapshot: the count and the
-    // collect re-scan the table (metadata count + one columnar read —
-    // cheaper than materializing the relation into the block manager,
-    // measured 2.3–6.9 s for the 19 MB sf0.1 edge set); computed edge
-    // inputs keep the single materialization so count + collect don't
-    // re-derive the upstream join twice.
-    val (gateFrame, nEdges) =
-      if (rescanGate) { val n = edges0.count(); (edges0, n) }
-      else { val b = edges0.localCheckpoint(); (b, b.count()) }
-    graft.ops.LocalGraph.collectPairs(gateFrame, nEdges, driverCap) match {
-      case Some(pairs) =>
-        if (!rescanGate) graft.ops.DedupOps.releaseTruncated(gateFrame)
-        val core = graft.ops.LocalGraph.corePeel(pairs, k)
-        return graft.ops.LocalGraph.pairFrame(edges0.sparkSession,
-          core.iterator, core.size.toLong, "node", "core_deg")
-      case None => ()
+    // cap the fixpoint below runs unchanged over the gate's frame:
+    // edges0 itself when it is a table scan (graphKcore — re-scanning
+    // the bucketed table is cheaper than materializing it into the
+    // block manager, measured 2.3–6.9 s for the 19 MB sf0.1 edge set),
+    // else the gate's one snapshot of the computed edge relation.
+    var base = graft.ops.DriverGate("graph_kcore", edges0, driverCap)(
+        graft.ops.LocalGraph.pairOf) { pairs =>
+      val core = graft.ops.LocalGraph.corePeel(pairs, k)
+      Some(graft.ops.LocalGraph.pairFrame(edges0.sparkSession,
+        core.iterator, core.size.toLong, "node", "core_deg"))
+    } match {
+      case Right(out) => return out
+      case Left(e) => e
     }
-    var base =
-      if (rescanGate) edges0.localCheckpoint() else gateFrame
-    var baseView = graft.ops.DedupOps.adaptiveCoalesceView(base, nEdges)
+    var baseView = adaptView(base)
     var dropCkpts = List.empty[DataFrame] // live handles under dropCum
     var dropCum: Option[DataFrame] = None
     var nCum = 0L
@@ -1458,7 +1440,10 @@ object AnalyticsQueries {
           .join(dropAs("v"), Seq("v"), "left_anti")
           .localCheckpoint() // eager: safe to release the old base
         graft.ops.DedupOps.releaseTruncated(drop)
-        (base :: dropCkpts).foreach(graft.ops.DedupOps.releaseTruncated)
+        // the caller's own frame (a scan the gate read directly) is
+        // never ours to release
+        (if (base eq edges0) dropCkpts else base :: dropCkpts)
+          .foreach(graft.ops.DedupOps.releaseTruncated)
         base = next
         baseView = adaptView(base)
         dropCkpts = Nil
@@ -1509,21 +1494,22 @@ object AnalyticsQueries {
    */
   def graphLpa(spark: SparkSession, sfDir: String): DataFrame = {
     val e = coBackbone(spark, sfDir)
-    // DRIVER KERNEL under the count-before-collect gate (rationale in
+    // DRIVER KERNEL behind [[graft.ops.DriverGate]] (rationale in
     // [[graft.ops.LocalGraph]]): [[LpaIters]] synchronous integer-vote
     // rounds — exact smallest-label tie-break — over a backbone that
     // collects in one pass. LocalGraphSpec pins kernel == the `lpa`
     // engine on randomized fixtures. Past the cap the engine path
     // below runs unchanged.
-    graft.ops.LocalGraph.collectPairs(e, e.count(),
-        graft.ops.LocalGraph.MaxDriverPairs) match {
-      case Some(pairs) =>
+    graft.ops.DriverGate("graph_lpa", e,
+        graft.ops.LocalGraph.MaxDriverPairs)(graft.ops.LocalGraph.pairOf) {
+      pairs =>
         val c = graft.ops.LocalGraph.lpaCommunities(pairs, LpaIters)
-        return graft.ops.LocalGraph.pairFrame(spark,
-          c.iterator, c.size.toLong, "node", "community")
-      case None => ()
+        Some(graft.ops.LocalGraph.pairFrame(spark,
+          c.iterator, c.size.toLong, "node", "community"))
+    } match {
+      case Right(out) => out
+      case Left(edges) => lpa(edges, LpaIters)
     }
-    lpa(e, LpaIters)
   }
 
   /** The weight-≥[[LpaMinWeight]] repeated-co-purchase backbone
@@ -1561,22 +1547,23 @@ object AnalyticsQueries {
    */
   def graphBfs(spark: SparkSession, sfDir: String): DataFrame = {
     val e = coBackbone(spark, sfDir)
-    // DRIVER KERNEL under the count-before-collect gate (rationale in
+    // DRIVER KERNEL behind [[graft.ops.DriverGate]] (rationale in
     // [[graft.ops.LocalGraph]]): 42 scheduled jobs for ~3 BFS waves at
     // sf0.1 (JobProbe) — frontier bookkeeping, zero shuffle bytes. The
     // backbone is a pushed-filter scan of the bucketed coPairs
-    // artifact, so the gate count + collect are two cheap columnar
-    // scans. Same seed rule evaluated driver-side; LocalGraphSpec pins
+    // artifact, so the gate's bounded collect is one cheap columnar
+    // scan. Same seed rule evaluated driver-side; LocalGraphSpec pins
     // kernel == the `bfs` engine on randomized fixtures. Past the cap
     // the engine path below runs unchanged.
-    graft.ops.LocalGraph.collectPairs(e, e.count(),
-        graft.ops.LocalGraph.MaxDriverPairs) match {
-      case Some(pairs) =>
-        val d = graft.ops.LocalGraph.bfsDistances(pairs,
-          _ % BfsSeedMod == 0)
-        return graft.ops.LocalGraph.pairFrame(spark,
-          d.iterator, d.size.toLong, "node", "dist")
-      case None => ()
+    val edges = graft.ops.DriverGate("graph_bfs", e,
+        graft.ops.LocalGraph.MaxDriverPairs)(graft.ops.LocalGraph.pairOf) {
+      pairs =>
+        val d = graft.ops.LocalGraph.bfsDistances(pairs, _ % BfsSeedMod == 0)
+        Some(graft.ops.LocalGraph.pairFrame(spark,
+          d.iterator, d.size.toLong, "node", "dist"))
+    } match {
+      case Right(out) => return out
+      case Left(f) => f
     }
     // adjacency partitioned on dst at build (the ppr device, via the
     // partitioning-preserving checkpoint): while a wave broadcasts
@@ -1589,8 +1576,8 @@ object AnalyticsQueries {
     // AQE-coalesced node-sized exchange per wave; large graphs keep
     // the zero-exchange wave plan.
     val adj = graft.ops.DedupOps.checkpointHashPartitionedGated(
-      e.select(col("u").as("src"), col("v").as("dst"))
-        .unionAll(e.select(col("v").as("src"), col("u").as("dst"))),
+      edges.select(col("u").as("src"), col("v").as("dst"))
+        .unionAll(edges.select(col("v").as("src"), col("u").as("dst"))),
       Seq("dst"))
     val seeds = adj.select(col("src").as("node")).distinct()
       .filter(col("node") % BfsSeedMod === 0)
@@ -1622,7 +1609,7 @@ object AnalyticsQueries {
    */
   def graphPpr(spark: SparkSession, sfDir: String): DataFrame = {
     val e = coBackbone(spark, sfDir)
-    // DRIVER KERNEL under the count-before-collect gate (rationale in
+    // DRIVER KERNEL behind [[graft.ops.DriverGate]] (rationale in
     // [[graft.ops.LocalGraph]]): ppr's micro-unit arithmetic is
     // integer-exact (long contribution sums are order-independent;
     // the two floored double quotients are deterministic scalar ops —
@@ -1630,16 +1617,17 @@ object AnalyticsQueries {
     // formula), so the driver ranks are bit-identical. The same
     // %-seed rule evaluates driver-side. Past the cap the engine
     // path below runs unchanged.
-    graft.ops.LocalGraph.collectPairs(e, e.count(),
-        graft.ops.LocalGraph.MaxDriverPairs) match {
-      case Some(pairs) =>
+    graft.ops.DriverGate("graph_ppr", e,
+        graft.ops.LocalGraph.MaxDriverPairs)(graft.ops.LocalGraph.pairOf) {
+      pairs =>
         val r = graft.ops.LocalGraph.pprRanks(pairs,
           _ % BfsSeedMod == 0, PrIters, PrScale)
-        return graft.ops.LocalGraph.pairFrame(spark,
-          r.iterator, r.size.toLong, "node", "rank_micro")
-      case None => ()
+        Some(graft.ops.LocalGraph.pairFrame(spark,
+          r.iterator, r.size.toLong, "node", "rank_micro"))
+    } match {
+      case Right(out) => out
+      case Left(edges) => ppr(edges, col("node") % BfsSeedMod === 0, PrIters)
     }
-    ppr(e, col("node") % BfsSeedMod === 0, PrIters)
   }
 
   /** The personalized-pagerank iteration over any (u, v) edge frame —
@@ -1764,10 +1752,7 @@ object AnalyticsQueries {
     val nodes = e.select(col("u").as("id"))
       .unionAll(e.select(col("v").as("id"))).distinct()
     graft.ops.DedupOps.connectedComponents(
-        e.select(col("u").as("id1"), col("v").as("id2")), nodes,
-        // rescanGate: the backbone is a pushed-filter bucketed scan —
-        // the kernel gate re-scans it instead of snapshotting it first
-        rescanGate = true)
+        e.select(col("u").as("id1"), col("v").as("id2")), nodes)
       .groupBy(col("cluster")).agg(count(lit(1)).as("sz"))
       .groupBy(col("sz").as("component_size"))
       .agg(count(lit(1)).as("n_components"))
@@ -1808,27 +1793,29 @@ object AnalyticsQueries {
     val e = coPairsTable(spark, sfDir)
       .filter(col("w") >= LpaMinWeight)
       .select(col("u"), col("v"), ssspCost(col("w")).as("cost"))
-    // DRIVER KERNEL under the count-before-collect gate (rationale in
+    // DRIVER KERNEL behind [[graft.ops.DriverGate]] (rationale in
     // [[graft.ops.LocalGraph]]): 57 scheduled jobs at sf0.1 (JobProbe)
     // for integer frontier relaxation. Dijkstra over positive long
     // costs equals the Bellman–Ford fixpoint exactly; LocalGraphSpec
     // pins kernel == the `sssp` engine on randomized weighted
     // fixtures. Past the cap the engine path below runs unchanged.
-    graft.ops.LocalGraph.collectTriples(e, e.count(),
-        graft.ops.LocalGraph.MaxDriverPairs) match {
-      case Some(t) =>
-        val d = graft.ops.LocalGraph.ssspDistances(t, _ % BfsSeedMod == 0)
-        return graft.ops.LocalGraph.pairFrame(spark,
-          d.iterator, d.size.toLong, "node", "dist")
-      case None => ()
+    val edges = graft.ops.DriverGate("graph_sssp", e,
+        graft.ops.DriverGate.cap(graft.ops.DriverGate.TripleBytes))(
+        graft.ops.LocalGraph.tripleOf) { t =>
+      val d = graft.ops.LocalGraph.ssspDistances(t, _ % BfsSeedMod == 0)
+      Some(graft.ops.LocalGraph.pairFrame(spark,
+        d.iterator, d.size.toLong, "node", "dist"))
+    } match {
+      case Right(out) => return out
+      case Left(f) => f
     }
     // weighted adjacency partitioned on dst at build (the graphBfs
     // rationale): the relax pass's per-node min (grouped on node = dst)
     // runs exchange-free while the frontier broadcasts. ROW-COUNT-GATED
     // like graphBfs (r22): small graphs skip the build.
     val adjW = graft.ops.DedupOps.checkpointHashPartitionedGated(
-      e.select(col("u").as("src"), col("v").as("dst"), col("cost"))
-        .unionAll(e.select(col("v").as("src"), col("u").as("dst"),
+      edges.select(col("u").as("src"), col("v").as("dst"), col("cost"))
+        .unionAll(edges.select(col("v").as("src"), col("u").as("dst"),
           col("cost"))),
       Seq("dst"))
     val seeds = adjW.select(col("src").as("node")).distinct()

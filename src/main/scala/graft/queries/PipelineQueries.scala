@@ -1153,39 +1153,28 @@ object PipelineQueries {
    *  relation the weights were trained on, so [[classifyEval]] scores
    *  the materialized snapshot instead of re-deriving the identical
    *  relation with a second corpus pass. */
-  /** Feature-row gate for the driver-side gradient loop (default 4M
-   *  (doc, bucket) rows ≈ 160 MB collected — the LocalGraph budget
-   *  class; 0 disables it, env-parameterized for cluster drivers). */
-  private lazy val ClassifyDriverMaxRows: Long =
-    graft.GraftEnv.long("SPARK_GRAFT_DRIVER_CLASSIFY_ROWS", 4000000L, min = 0)
-
-  private def trainClassifierWeightsWithFeatures(
-      corpus: DataFrame): (Array[Long], DataFrame) =
-    trainClassifierWeightsWithFeatures(corpus, ClassifyDriverMaxRows)
-
   private[graft] def trainClassifierWeightsWithFeatures(corpus: DataFrame,
-      driverCap: Long): (Array[Long], DataFrame) = {
+      driverCap: Long = graft.ops.DriverGate.cap(
+        graft.ops.DriverGate.ClassifierRowBytes)): (Array[Long], DataFrame) = {
     val micro = 1000000.0
     val feats = classifierFeatures(corpus).localCheckpoint()
     val w = Array.fill(ClassifyDim.toInt)(0L)
-    // DRIVER KERNEL under the count-before-collect gate (the
-    // bpe_learn / LocalGraph device): each of the TrainIters gradient
-    // rounds is a doc-keyed agg + join + 64-group agg + collect —
-    // measured 32 serial jobs / 3.1 s (JobProbe sf0.1/32c) moving
-    // ~3 MB of shuffle for 64 gradient scalars. Under the cap the
-    // feature rows collect ONCE (fixed-width longs off the snapshot
-    // the eval scores anyway) and the rounds run locally through the
-    // IDENTICAL arithmetic — long multiply, the same double widenings
-    // and floors, per-doc and per-bucket LONG sums (order-independent)
-    // — so the weights are bit-identical by construction
-    // (ClassifySpec pins driver == distributed). Past the cap the
-    // distributed rounds below run unchanged — the honest 100 TB form.
-    val nFeat = feats.count() // cheap: in-memory checkpointed blocks
-    if (nFeat <= driverCap) {
-      val rows = feats.select(col("doc_id"), col("y"), col("n_words"),
-          col("bucket"), col("c")).collect()
-        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
-          r.getLong(3), r.getLong(4)))
+    // DRIVER KERNEL behind [[graft.ops.DriverGate]] (the bpe_learn /
+    // LocalGraph device): each of the TrainIters gradient rounds is a
+    // doc-keyed agg + join + 64-group agg + collect — measured 32
+    // serial jobs / 3.1 s (JobProbe sf0.1/32c) moving ~3 MB of shuffle
+    // for 64 gradient scalars. Under the cap the feature rows collect
+    // ONCE (fixed-width longs, read straight off the snapshot the eval
+    // scores anyway) and the rounds run locally through the IDENTICAL
+    // arithmetic — long multiply, the same double widenings and
+    // floors, per-doc and per-bucket LONG sums (order-independent) —
+    // so the weights are bit-identical by construction (ClassifySpec
+    // pins driver == distributed). Past the cap the distributed rounds
+    // below run unchanged — the honest 100 TB form.
+    graft.ops.DriverGate("classify_train", feats.select(col("doc_id"),
+        col("y"), col("n_words"), col("bucket"), col("c")), driverCap)(
+        r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3),
+          r.getLong(4))) { rows =>
       val docIdx = scala.collection.mutable.LongMap.empty[Int]
       val docY = scala.collection.mutable.ArrayBuffer.empty[Int]
       rows.foreach { case (doc, y, _, _, _) =>
@@ -1214,7 +1203,10 @@ object PipelineQueries {
           w(b) -= math.floor(grad(b).toDouble / nDocs).toLong
         }
       }
-      return (w, feats)
+      Some(w)
+    } match {
+      case Right(trained) => return (trained, feats)
+      case Left(_) => () // feats itself: the snapshot is read directly
     }
     val nDocs = feats.select("doc_id").distinct().count()
     (1 to TrainIters).foreach { _ =>
@@ -1442,21 +1434,20 @@ object PipelineQueries {
    * (`text_tokens_bpe`) all agree cross-engine.
    */
   def bpeLearn(spark: SparkSession, sfDir: String): DataFrame =
-    bpeLearnOf(Tables.documents(spark, sfDir), TokenizerDriverVocab)
+    bpeLearnOf(Tables.documents(spark, sfDir))
 
   /** Word-frequency dicts at or under this row count run the tokenizer
    *  MERGE LOOPS driver-side ([[bpeLearnOf]]/[[wordpieceLearnOf]]): the
-   *  dict collects behind a count-before-collect gate (the bounded
+   *  dict collects behind [[graft.ops.DriverGate]] (the bounded
    *  model-artifact contract — the dict IS the model input, and it is
    *  what every production tokenizer trainer holds in memory) and the K
    *  merge rounds run as plain Scala over it, replacing ~2K serial
    *  vocab-sized Spark jobs (pair agg + argmax collect per rule, plus
    *  stride checkpoints) with zero. Past the cap the distributed loop
    *  stands — the honest form where the dict outgrows driver memory.
-   *  Env-parameterized (the MaxBroadcastNodes device); ~100 MB of
-   *  (word, freq) rows at the default. */
+   *  A (word, freq) row is budgeted at 100 bytes. */
   private[graft] lazy val TokenizerDriverVocab: Long =
-    graft.GraftEnv.long("SPARK_GRAFT_TOKENIZER_DRIVER_VOCAB", 1000000L, min = 0)
+    graft.ops.DriverGate.cap(graft.ops.DriverGate.VocabRowBytes)
 
   /** Spark's string sort order (UTF8String.binaryCompare = unsigned
    *  UTF-8 byte order) for driver-side tie-breaks — String.compareTo
@@ -1618,20 +1609,21 @@ object PipelineQueries {
   /** The learning loop of [[bpeLearn]] over any (text) frame with an
    *  explicit driver-dict cap — factored for the driver==distributed
    *  equivalence spec. */
-  private[graft] def bpeLearnOf(docs: DataFrame, driverCap: Long): DataFrame = {
+  private[graft] def bpeLearnOf(docs: DataFrame,
+      driverCap: Long = TokenizerDriverVocab): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    // ONE corpus pass either way: the dict materializes eagerly, then
-    // the count-before-collect gate reads the snapshot, not the corpus
-    val vocab = FanOut.fanOut(docs)
-      .select(explode(TextAnalyticsOps.words(lower(col("text")))).as("w"))
-      .groupBy("w").agg(count(lit(1)).as("freq"))
-      .localCheckpoint()
-    if (vocab.count() <= driverCap) {
-      val dict = vocab.collect().map(r => (r.getString(0), r.getLong(1)))
-      graft.ops.DedupOps.releaseTruncated(vocab)
-      return driverMergeRules(dict, BpeLearnK, wordpiece = false)
-        .map { case (r, a, b, _) => (r, a, b) }.toDF("rank", "a", "b")
+    // ONE corpus pass either way: the gate snapshots the dict (an
+    // aggregate) once, and the collect and the fallback read it
+    val vocab = graft.ops.DriverGate("bpe_learn", FanOut.fanOut(docs)
+        .select(explode(TextAnalyticsOps.words(lower(col("text")))).as("w"))
+        .groupBy("w").agg(count(lit(1)).as("freq")), driverCap)(
+        r => (r.getString(0), r.getLong(1))) { dict =>
+      Some(driverMergeRules(dict, BpeLearnK, wordpiece = false)
+        .map { case (r, a, b, _) => (r, a, b) }.toDF("rank", "a", "b"))
+    } match {
+      case Right(out) => return out
+      case Left(snap) => snap
     }
     val chars = filter(split(col("w"), ""), c => length(c) > 0)
     var segs = vocab
@@ -1731,28 +1723,24 @@ object PipelineQueries {
     wordpieceLearnOf(Tables.documents(spark, sfDir))
 
   /** The learning loop of [[wordpieceLearn]] over any (text) frame —
-   *  factored for fixture-corpus specs. */
-  def wordpieceLearnOf(docs: DataFrame): DataFrame =
-    wordpieceLearnOf(docs, TokenizerDriverVocab)
-
-  /** [[wordpieceLearnOf]] with an explicit driver-dict cap — factored
-   *  for the driver==distributed equivalence spec. */
-  private[graft] def wordpieceLearnOf(docs: DataFrame,
-      driverCap: Long): DataFrame = {
+   *  factored for fixture-corpus specs; `driverCap` forces either arm
+   *  in the driver==distributed equivalence spec. */
+  def wordpieceLearnOf(docs: DataFrame,
+      driverCap: Long = TokenizerDriverVocab): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     // ONE corpus pass either way (the bpeLearnOf gate)
-    val vocab = FanOut.fanOut(docs)
-      .select(explode(TextAnalyticsOps.words(lower(col("text")))).as("w"))
-      .groupBy("w").agg(count(lit(1)).as("freq"))
-      .localCheckpoint()
-    if (vocab.count() <= driverCap) {
-      val dict = vocab.collect().map(r => (r.getString(0), r.getLong(1)))
-      graft.ops.DedupOps.releaseTruncated(vocab)
-      return driverMergeRules(dict, WordpieceLearnK, wordpiece = true)
+    val vocab = graft.ops.DriverGate("wordpiece_learn", FanOut.fanOut(docs)
+        .select(explode(TextAnalyticsOps.words(lower(col("text")))).as("w"))
+        .groupBy("w").agg(count(lit(1)).as("freq")), driverCap)(
+        r => (r.getString(0), r.getLong(1))) { dict =>
+      Some(driverMergeRules(dict, WordpieceLearnK, wordpiece = true)
         .toDF("rank", "a", "b", "score")
         .select(col("rank"), col("a"), col("b"),
-          round(col("score"), 6).as("score_r"))
+          round(col("score"), 6).as("score_r")))
+    } match {
+      case Right(out) => return out
+      case Left(snap) => snap
     }
     val chars = filter(split(col("w"), ""), c => length(c) > 0)
     val syms = transform(chars,

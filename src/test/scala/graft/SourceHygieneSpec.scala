@@ -18,8 +18,9 @@ import org.scalatest.funsuite.AnyFunSuite
  * `read.parquet(` calls out of ops/ + queries/: every table and fixture
  * loads through `model.Tables`, which infers each schema once per session.
  * Every main builds its session through `GraftSession`, ops/ +
- * queries/ read `SPARK_GRAFT_*` settings only through `GraftEnv`, and
- * tools/ takes its live topologies from `graft.Topologies`.
+ * queries/ read `SPARK_GRAFT_*` settings only through `GraftEnv`,
+ * tools/ takes its live topologies from `graft.Topologies`, and every
+ * driver kernel is gated by `ops.DriverGate` under its one byte budget.
  */
 class SourceHygieneSpec extends AnyFunSuite {
 
@@ -139,5 +140,29 @@ class SourceHygieneSpec extends AnyFunSuite {
     }
     assert(offenders.isEmpty, offenders.mkString(
       "read the setting with graft.GraftEnv.long/int instead:\n", "\n", ""))
+  }
+
+  test("SPARK_GRAFT_DRIVER_BYTES is the only driver-cap knob in src/main " +
+      "and only DriverGate.scala names it; the per-site gate plumbing " +
+      "is gone") {
+    val knob = "SPARK_GRAFT_DRIVER\\w*|\\w*_DRIVER_VOCAB".r
+    val offenders = scalaFiles("src/main/scala").flatMap { p =>
+      knob.findAllIn(source(p)).toSeq.distinct
+        .filterNot(_ == "SPARK_GRAFT_DRIVER_BYTES" &&
+          p.getFileName.toString == "DriverGate.scala")
+        .map(m => s"$p: $m")
+    }
+    assert(offenders.isEmpty, offenders.mkString(
+      "size a driver kernel's collect with DriverGate.cap(rowBytes) " +
+        "under SPARK_GRAFT_DRIVER_BYTES instead:\n", "\n", ""))
+    assert(source(Paths.get("src/main/scala/graft/ops/DriverGate.scala"))
+      .contains("\"SPARK_GRAFT_DRIVER_BYTES\""),
+      "DriverGate.scala no longer reads the budget — the guard is stale")
+    val plumbing = "\\b(rescanGate|collectPairs|collectTriples)\\b".r
+    val stale = scalaFiles("src/main/scala").flatMap { p =>
+      plumbing.findAllIn(source(p)).toSeq.distinct.map(m => s"$p: $m")
+    }
+    assert(stale.isEmpty, stale.mkString(
+      "collect through DriverGate instead:\n", "\n", ""))
   }
 }

@@ -79,4 +79,13 @@ class TopologiesSpec extends SparkSpec {
         assert(emitted(name, Generators.randomMessageFeed, parsed) == 0)
       }
     }
+
+  // the four demos that derive their fields from a content hash of the
+  // line run over any --source, not only the row-index feed (a BIGINT
+  // cast of the line failed every random message with CAST_INVALID_INPUT)
+  Seq("corpus_report", "funnel", "anomaly_gate", "attrib_join").foreach { name =>
+    test(s"$name runs a trigger over random messages and emits rows") {
+      assert(emitted(name, Generators.randomMessageFeed, lit(true), n = 200) > 0)
+    }
+  }
 }

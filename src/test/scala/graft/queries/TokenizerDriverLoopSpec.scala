@@ -4,7 +4,8 @@ import graft.SparkSpec
 
 /** Driver-side tokenizer merge loop ([[PipelineQueries.bpeLearnOf]] /
   * [[PipelineQueries.wordpieceLearnOf]] under
-  * [[PipelineQueries.TokenizerDriverVocab]]) == the distributed fold,
+  * [[PipelineQueries.TokenizerDriverVocab]], the dict cap of
+  * [[graft.ops.DriverGate]]) == the distributed fold,
   * row-for-row including the wordpiece one-division scores. The cap
   * parameter forces each path: 0 → distributed (the 100 TB form),
   * Long.MaxValue → driver. Corpora are chosen so the loops exercise
@@ -73,8 +74,8 @@ class TokenizerDriverLoopSpec extends SparkSpec {
     val d = PipelineQueries.wordpieceLearnOf(docs, 0L)
     assert(c.schema == d.schema,
       s"wordpiece schema drift: ${c.schema} vs ${d.schema}")
-    assert(PipelineQueries.TokenizerDriverVocab >= 1000000L ||
-      sys.env.contains("SPARK_GRAFT_TOKENIZER_DRIVER_VOCAB"),
-      "default driver-vocab cap drifted below the documented 1M")
+    assert(PipelineQueries.TokenizerDriverVocab ==
+      graft.ops.DriverGate.Budget / 100,
+      "the dict cap is the driver budget over 100-byte (word, freq) rows")
   }
 }

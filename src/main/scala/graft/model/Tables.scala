@@ -40,16 +40,21 @@ object Tables {
 
   /** (file count, total bytes, latest mtime) of the file or the tree
    *  under `path`; None when it cannot be listed, in which case the read
-   *  goes through uncached so Spark reports the error as usual. */
+   *  goes through uncached so Spark reports the error as usual. The walk
+   *  uses `listStatus`, not `listFiles`: `listFiles` wraps each status in
+   *  a `LocatedFileStatus`, whose constructor reads the permission, and
+   *  on a local file system without native Hadoop that forks one
+   *  `ls -ld` per file. */
   private def stamp(spark: SparkSession, path: String): Option[(Long, Long, Long)] =
     scala.util.Try {
       val p = new Path(path)
-      val it = p.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(p, true)
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       var n, len, mtime = 0L
-      while (it.hasNext) {
-        val f = it.next()
-        n += 1; len += f.getLen; mtime = math.max(mtime, f.getModificationTime)
+      def walk(dir: Path): Unit = fs.listStatus(dir).foreach { f =>
+        if (f.isDirectory) walk(f.getPath)
+        else { n += 1; len += f.getLen; mtime = math.max(mtime, f.getModificationTime) }
       }
+      walk(p)
       (n, len, mtime)
     }.toOption
 

@@ -160,7 +160,7 @@ object MaxRateProbe {
           try q.stop() catch { case _: Throwable => () }
           // let async state-store maintenance quiesce before the dir
           // delete below (it races the removal with harmless but noisy
-          // FileNotFound/chmod errors otherwise)
+          // FileNotFound errors otherwise)
           Thread.sleep(500)
         }
       } catch { case e: Throwable =>

@@ -19,8 +19,10 @@ import org.scalatest.funsuite.AnyFunSuite
  * loads through `model.Tables`, which infers each schema once per session.
  * Every main builds its session through `GraftSession`, ops/ +
  * queries/ read `SPARK_GRAFT_*` settings only through `GraftEnv`,
- * tools/ takes its live topologies from `graft.Topologies`, and every
- * driver kernel is gated by `ops.DriverGate` under its one byte budget.
+ * tools/ takes its live topologies from `graft.Topologies`, every
+ * driver kernel is gated by `ops.DriverGate` under its one byte budget,
+ * and graft's `core-site.xml` is the one place that configures local
+ * file I/O.
  */
 class SourceHygieneSpec extends AnyFunSuite {
 
@@ -164,5 +166,27 @@ class SourceHygieneSpec extends AnyFunSuite {
     }
     assert(stale.isEmpty, stale.mkString(
       "collect through DriverGate instead:\n", "\n", ""))
+  }
+
+  test("core-site.xml sets exactly one property, the FileContext file " +
+      "system for file:, to a class that loads") {
+    val conf = new org.apache.hadoop.conf.Configuration(false)
+    conf.addResource(new org.apache.hadoop.fs.Path("src/main/resources/core-site.xml"))
+    val props = conf.iterator().asScala.map(e => e.getKey -> e.getValue).toMap
+    assert(props.keySet == Set("fs.AbstractFileSystem.file.impl"), props)
+    Class.forName(props("fs.AbstractFileSystem.file.impl"))
+  }
+
+  test("no file in src/main names fs.file.impl or " +
+      "checkpointFileManagerClass — core-site.xml alone configures " +
+      "local file I/O") {
+    val knob = "\\bfs\\.file\\.impl\\b|checkpointFileManagerClass".r
+    val offenders = Files.walk(Paths.get("src/main")).iterator().asScala
+      .filter(Files.isRegularFile(_))
+      .flatMap(p => knob.findAllIn(source(p)).toSeq.distinct.map(m => s"$p: $m"))
+      .toSeq
+    assert(offenders.isEmpty, offenders.mkString(
+      "local checkpoint I/O goes through graft.streaming.LocalFs, " +
+        "registered in src/main/resources/core-site.xml:\n", "\n", ""))
   }
 }

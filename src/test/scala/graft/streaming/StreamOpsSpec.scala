@@ -1365,7 +1365,10 @@ class StreamOpsSpec extends SparkSpec {
         StreamOps.compactClusterState(spark, statePath, lastVersion)
       }
       ()
-    } finally q.stop()
+    } finally {
+      q.stop()
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(statePath))
+    }
   }
 
   test("clusterAssignStream: a legacy statePath (docs-only, no derived " +

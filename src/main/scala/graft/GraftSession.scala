@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one SparkSession builder of every graft main: Run, Bench, Verify,
-  * the probes, Explain/ExplainAll and the fixture generators. The
+  * the probes, ExplainAll and the fixture generators. The
   * session policy lives here so the mains cannot drift apart:
   *  - cores: `SPARK_GRAFT_CPUS`, else every available processor; the
   *    master is `local[cores]` unless the caller passes one (Run's

@@ -687,41 +687,37 @@ object Topologies {
     },
     "cluster_assign" -> Entry(Generators.clusterDocFeed, (spark, lines, _) => {
       // per-trigger incremental cluster-id maintenance against a FIXED
-      // precomputed history (the demo corpus's stored
-      // band/shingle/cluster state) — state is NOT mutated across
-      // triggers, so every trigger measures the same steady-state
-      // ingest cost: batch banding + the stored-band join + the
-      // bounded local fixpoint. foreachBatch IS the trigger, like
-      // shuffle_shard. doc_id for the anonymous line feed is its
-      // content hash (curateTopology's convention).
+      // history (the demo corpus): its band keys, shingle sets and
+      // converged clusters are written once under the state dir and
+      // read back once. State is NOT mutated across triggers, so every
+      // trigger measures the same steady-state ingest cost: batch
+      // banding + the stored-band join + the bounded local fixpoint.
+      // foreachBatch IS the trigger, like shuffle_shard. doc_id for
+      // the anonymous line feed is its content hash (curateTopology's
+      // convention).
       val caState = stateDir("graft-castate")
       val caHist = spark.read
         .parquet(s"$DemoSfDir/documents.parquet")
         .select(col("doc_id"), col("text"))
-      // write the flat pre-manifest layout, then ADOPT it — the r16
-      // manifest protocol makes clusterAssignTrigger read ONLY
-      // manifest-committed partitions, so an unadopted layout would
-      // silently measure against EMPTY history
-      DedupOps.clusterBandKeys(caHist, col("doc_id"), col("text"))
-        .write.mode("overwrite").parquet(s"$caState/bands/version=0")
-      DedupOps.clusterShingleSets(caHist, col("doc_id"), col("text"))
-        .write.mode("overwrite").parquet(s"$caState/shingles/version=0")
-      require(StreamOps.adoptClusterStateLayout(spark, caState).exists(m =>
-        m.liveOf("bands").nonEmpty && m.liveOf("shingles").nonEmpty),
-        "cluster_assign: state adoption failed — the topology would " +
-          "run against empty history")
-      DedupOps.connectedComponents(
-          DedupOps.minhashNearDups(caHist, col("doc_id"), col("text"), 0.5)
-            .select("id1", "id2"),
-          caHist.select(col("doc_id").as("id")))
-        .select(col("id").as("doc_id"), col("cluster"))
-        .write.mode("overwrite").parquet(s"$caState/v0/clusters")
-      val caClusters = spark.read.parquet(s"$caState/v0/clusters")
+      def stored(table: String, df: DataFrame): DataFrame = {
+        df.write.mode("overwrite").parquet(s"$caState/$table")
+        spark.read.parquet(s"$caState/$table")
+      }
+      val bands = stored("bands",
+        DedupOps.clusterBandKeys(caHist, col("doc_id"), col("text")))
+      val shingles = stored("shingles",
+        DedupOps.clusterShingleSets(caHist, col("doc_id"), col("text")))
+      val clusters = stored("clusters",
+        DedupOps.connectedComponents(
+            DedupOps.minhashNearDups(caHist, col("doc_id"), col("text"), 0.5)
+              .select("id1", "id2"),
+            caHist.select(col("doc_id").as("id")))
+          .select(col("id").as("doc_id"), col("cluster")))
       foreachTrigger("cluster assignment", lines) { batch =>
-        StreamOps.clusterAssignTrigger(spark, caState, 1,
+        DedupOps.incrementalClusterAssignPre(
           batch.select(xxhash64(col("value")).as("doc_id"),
             col("value").as("text")),
-          caClusters, 0.5)
+          bands, shingles, clusters, col("doc_id"), col("text"), 0.5)
       }
     }))
 

@@ -321,22 +321,6 @@ object VectorMath {
    *  hashes whose k bits are ALL set). Bloom guarantee: a gram that IS
    *  in the filter's build set always hits (no false negatives); a hit
    *  is only probabilistic evidence (FPR set by m/n and k). */
-  /** Morton/Z-curve interleave of the low `bits` bits of two
-   *  non-negative keys (a in even positions); see [[ZInterleave]].
-   *  Monotone in each coordinate with the other fixed (interleaving
-   *  preserves per-dimension bit order), which is exactly why sorting
-   *  by z clusters BOTH dimensions at once. */
-  def zInterleave(a: Long, b: Long, bits: Int): Long = {
-    var z = 0L
-    var i = 0
-    while (i < bits) {
-      z |= ((a >>> i) & 1L) << (2 * i)
-      z |= ((b >>> i) & 1L) << (2 * i + 1)
-      i += 1
-    }
-    z
-  }
-
   /** All-k-bits-set test of one 60-bit hash against a Bloom bitmap;
    *  see [[BloomHashProbe]]. Same 20-bit-field enhanced double
    *  hashing as [[bloomHits]]. */
@@ -2574,43 +2558,6 @@ case class LineFilterStats(child: Expression)
 }
 
 /**
- * Morton/Z-curve key: interleaves the low `bits` bits of two
- * non-negative integer keys so that sorting by ONE value clusters
- * BOTH dimensions — the data-layout lever behind multi-dimensional
- * file skipping (a z-sorted file's row groups have tight min/max
- * envelopes on EVERY interleaved column, so parquet row-group stats
- * prune 2-d box predicates that a single-key sort order cannot; the
- * same idea Delta/Iceberg expose as OPTIMIZE ZORDER, here as a plain
- * write-path column over OSS parquet —
- * [[graft.sources.ZOrderLayout]]). Codegen'd. Keys MUST be
- * pre-scaled into [0, 2^bits): low-bit truncation means an
- * out-of-range key ALIASES mod 2^bits (the maximum key lands in the
- * same cell as key 0 — not a coarsening), which is why
- * [[graft.sources.ZOrderLayout.writeZOrdered]] min/max-scales first.
- * `bits` is capped at 31 so both dimensions' top bits stay clear of
- * the long sign bit (bit 63 set would make z negative and invert the
- * sort; shifts past 63 would wrap) — checked at plan build.
- */
-case class ZInterleave(left: Expression, right: Expression, bits: Int)
-    extends BinaryExpression {
-  require(bits >= 1 && bits <= 31,
-    s"z-interleave bits must be in [1, 31], got $bits")
-
-  override def dataType: DataType = org.apache.spark.sql.types.LongType
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    VectorMath.zInterleave(a.asInstanceOf[Long], b.asInstanceOf[Long], bits)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.functions.VectorMath.zInterleave($a, $b, $bits)")
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-/**
  * Single-hash Bloom membership probe: TRUE iff all k bits of a 60-bit
  * hash are set in the broadcast bitmap — the SEMI-JOIN-REDUCTION side
  * of the Bloom family ([[BloomProbe]] is the per-document gram
@@ -3776,10 +3723,6 @@ object native {
       model: org.apache.spark.broadcast.Broadcast[Array[Long]]): Column =
     GraftColumnBridge.column(
       BloomHashProbe(GraftColumnBridge.expression(h), k, model))
-
-  def z_interleave(a: Column, b: Column, bits: Int): Column =
-    GraftColumnBridge.column(ZInterleave(
-      GraftColumnBridge.expression(a), GraftColumnBridge.expression(b), bits))
 
   def lsh_band_collide(text: Column, n: Int, k: Int, bands: Int,
       model: org.apache.spark.broadcast.Broadcast[Array[Long]]): Column =

@@ -230,7 +230,7 @@ object DedupOps {
    *  manager until a driver GC (the r14 cross-query leak class).
    *  Every superseded truncated artifact must come back through here
    *  (connectedComponents, bpeLearn, graphPagerank, unigramLearn,
-   *  compactClusterState, [[DriverGate]]'s snapshots). */
+   *  [[DriverGate]]'s snapshots). */
   /** CONTRACT: pass the exact checkpointed HANDLE (the frame
    *  `localCheckpoint()`/[[reliableTruncate]] returned), not a frame
    *  derived from it — the match is on the plan ROOT by design.
@@ -576,8 +576,8 @@ object DedupOps {
    * |batch| + |touched clusters| — the whole point. THIS overload
    * re-derives the history bands in-plan (the one-shot batch-query
    * convention); a steady-state ingest path persists them instead and
-   * calls [[incrementalClusterAssignPre]], which is what
-   * `StreamOps.clusterAssignStream` does — history is then never
+   * calls [[incrementalClusterAssignPre]], which is what the
+   * `cluster_assign` topology does — history is then never
    * re-shingled per trigger. Only ids, band triples, and shingle-hash
    * arrays shuffle; text never does.
    *
@@ -600,8 +600,9 @@ object DedupOps {
 
   /** The per-doc LSH band triples (id, band, bh) of a corpus — the
    *  deterministic, text-derived half of incremental cluster
-   *  assignment that a versioned state store persists ONCE per batch
-   *  so steady-state ingest never re-shingles history
+   *  assignment that an ingest path persists ONCE (the
+   *  `cluster_assign` topology's history) so a trigger never
+   *  re-shingles history
    *  ([[incrementalClusterAssignPre]]). */
   def clusterBandKeys(df: DataFrame, id: Column, text: Column,
       k: Int = 64, bands: Int = 16, shingleN: Int = 3): DataFrame =
@@ -629,29 +630,22 @@ object DedupOps {
    * incremental SEMANTICS (the contracted fixpoint) and incremental
    * COST: per-ingest compute is O(|batch|) + the band-key equi-join,
    * not O(|history|) re-shingling. At warehouse scale the stored band
-   * table rides the bucketed layout BucketedTablesSpec proves
-   * shuffle-free on the history side.
+   * table can ride the bucketed layout whose history side
+   * BucketedTablesSpec's near-dup ingest test proves shuffle-free.
    */
   def incrementalClusterAssignPre(fresh: DataFrame, histBands: DataFrame,
       histShingles: DataFrame, histClusters: DataFrame, id: Column,
       text: Column, threshold: Double = 0.5, shingleN: Int = 3,
-      k: Int = 64, bands: Int = 16, maxIters: Int = 30,
-      freshBands: Option[DataFrame] = None,
-      freshShingles: Option[DataFrame] = None): DataFrame = {
+      k: Int = 64, bands: Int = 16, maxIters: Int = 30): DataFrame = {
     def banded(df: DataFrame) = clusterBandKeys(df, id, text, k, bands, shingleN)
     def shingleSets(df: DataFrame) = clusterShingleSets(df, id, text, shingleN)
-    // freshBands/freshShingles: a caller that already PERSISTED the
-    // batch's derived triples (clusterAssignStream writes them as
-    // state before assigning) passes the stored frames back instead
-    // of paying up to three more shingle+minhash passes in-plan —
-    // fb feeds two joins, fshs two verifies. A caller with NOTHING
-    // stored (the batch query path) gets a LAZY snapshot instead:
-    // fb executes under three consumers and fshs under two, so
-    // without it each consumer re-runs the batch-sized
-    // shingle+minhash subtree; the checkpoint pins one derivation
-    // (ContextCleaner reclaims the blocks when the result frame is
-    // dropped — the multi-consumer snapshot idiom used throughout)
-    val fb = freshBands.getOrElse(banded(fresh).localCheckpoint(false))
+    // LAZY snapshots of the batch's derived triples: fb executes
+    // under three consumers and fshs under two, so without them each
+    // consumer re-runs the batch-sized shingle+minhash subtree; the
+    // checkpoint pins one derivation (ContextCleaner reclaims the
+    // blocks when the result frame is dropped — the multi-consumer
+    // snapshot idiom used throughout)
+    val fb = banded(fresh).localCheckpoint(false)
     val histCand = fb.as("x").join(histBands.as("y"),
         col("x.band") === col("y.band") && col("x.bh") === col("y.bh"))
       .select(col("x.id").as("fid"), col("y.id").as("oid")).distinct()
@@ -659,8 +653,7 @@ object DedupOps {
         col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
           col("x.id") < col("y.id"))
       .select(col("x.id").as("fid"), col("y.id").as("oid")).distinct()
-    val fshs = freshShingles.getOrElse(
-      shingleSets(fresh).localCheckpoint(false))
+    val fshs = shingleSets(fresh).localCheckpoint(false)
     val hshs = histShingles
     def verified(cand: DataFrame, partner: DataFrame) = cand
       .join(fshs.as("a"), col("fid") === col("a.sid"))

@@ -3,8 +3,6 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.model.Schemas
-
 /**
  * Page-view wire-format operators. Reference: PageViewBolt
  * (lib/bolt/PageViewBolt.java:40-62) parses TSV `url\tstatus\tzip\tuser`
@@ -20,21 +18,10 @@ object PageViewOps {
    * event-time envelope) are carried through. The parse is the native
    * one-pass PageViewFields kernel (raw tab split — the reference's own
    * PageView.fromString semantics; from_csv pays a full Univocity CSV
-   * parser per row for quoting this feed never uses). The from_csv
-   * formulation is kept in [[parseHof]] for cross-checks.
+   * parser per row for quoting this feed never uses).
    */
   def parse(df: DataFrame, line: Column): DataFrame = {
     val parsed = df.withColumn("pv", graft.functions.native.pageview_fields(line))
-    parsed
-      .filter(col("pv.url").isNotNull && col("pv.http_status").isNotNull &&
-        col("pv.zip_code").isNotNull && col("pv.user_id").isNotNull)
-      .select((df.columns.map(col).toSeq :+ col("pv.*")): _*)
-  }
-
-  /** from_csv reference formulation of [[parse]] (cross-check). */
-  def parseHof(df: DataFrame, line: Column): DataFrame = {
-    val parsed = df.withColumn(
-      "pv", from_csv(line, Schemas.pageView, Map("sep" -> "\t")))
     parsed
       .filter(col("pv.url").isNotNull && col("pv.http_status").isNotNull &&
         col("pv.zip_code").isNotNull && col("pv.user_id").isNotNull)

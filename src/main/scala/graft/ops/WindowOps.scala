@@ -32,20 +32,12 @@ object WindowOps {
    * Sliding-window exact distinct per key. Reference: UniqueVisitorBolt
    * (lib/bolt/UniqueVisitorBolt.java:36-93) — its cache-then-fold is
    * partial aggregation, which Catalyst's partial/final HashAggregate
-   * already performs. At 100 TB use `approxDistinct` below instead.
+   * already performs.
    */
   def windowedDistinct(df: DataFrame, ts: Column, key: Column, keyName: String,
       item: Column, winLen: String, slide: String): DataFrame =
     df.groupBy(window(ts, winLen, slide).as("w"), key.as(keyName))
       .agg(count_distinct(item).as("uniques"))
-      .select(col("w.start").as("w_start"), col(keyName), col("uniques"))
-
-  /** HLL++ variant of [[windowedDistinct]] — the 100 TB scale path
-   *  (single-pass, fixed-size sketch state, no expand). */
-  def approxDistinct(df: DataFrame, ts: Column, key: Column, keyName: String,
-      item: Column, winLen: String, slide: String, rsd: Double = 0.05): DataFrame =
-    df.groupBy(window(ts, winLen, slide).as("w"), key.as(keyName))
-      .agg(approx_count_distinct(item, rsd).as("uniques"))
       .select(col("w.start").as("w_start"), col(keyName), col("uniques"))
 
   /**

@@ -3015,7 +3015,7 @@ object PipelineQueries {
 
   /** The per-source keep thresholds of [[mixSample]] over any
    *  (source, n_tokens) frame — shared by the batch query and the live
-   *  gate (`StreamOps.mixSampleStream`), which learns them at build
+   *  gate (`StreamOps.mixSampleGate`), which learns them at build
    *  from a static corpus (the lm_score offline-model split). */
   def mixThresholds(tokens: DataFrame): DataFrame =
     tokens.groupBy("source")

@@ -31,29 +31,4 @@ object BucketedTables {
       .mode("overwrite")
       .format("parquet")
       .saveAsTable(table)
-
-  /** [[writeBucketed]] with a COMPOSITE bucket key — the layout for
-    * equi-joins on multiple columns (the cluster-assign stored band
-    * table joins on (band, bh)). Spark elides the history-side shuffle
-    * only when the join keys equal the bucket columns exactly. */
-  def writeBucketedKeys(df: DataFrame, table: String, keys: Seq[String],
-      buckets: Int): Unit =
-    df.write
-      .bucketBy(buckets, keys.head, keys.tail: _*)
-      .sortBy(keys.head, keys.tail: _*)
-      .mode("overwrite")
-      .format("parquet")
-      .saveAsTable(table)
-
-  /** Write `df` hive-style partitioned by `partCol` (low-cardinality
-    * columns only — day, source shard, event type). Scans filtered on
-    * the partition column read ONLY the matching directories
-    * (PartitionFilters in the scan, zero data touched elsewhere) — the
-    * other half of the 100 TB layout story next to bucketing: partition
-    * prune the time/shard axis, bucket the join-key axis. */
-  def writePartitioned(df: DataFrame, path: String, partCol: String): Unit =
-    df.write
-      .partitionBy(partCol)
-      .mode("overwrite")
-      .parquet(path)
 }

@@ -1242,11 +1242,24 @@ object StreamOps {
       .filter(col("n_words") > 0L && col("logw_micro") >= thr)
   }
 
+  /** The learned (source, keep-threshold) entries of [[mixSampleGate]],
+   *  collected ONCE — a caller that also needs the source names (the
+   *  `mix_sample` topology's demo labeler) shares this single collect
+   *  instead of re-deriving the threshold frame per consumer (and the
+   *  entries are sorted by source so downstream label indexing is
+   *  deterministic). */
+  def mixThresholdEntries(corpus: DataFrame): Array[(String, Long)] =
+    graft.queries.PipelineQueries.mixThresholds(
+      corpus.select(col("source"),
+        graft.ops.TextAnalyticsOps.wsTokenCount(col("text")).as("n_tokens")))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).sortBy(_._1)
+
   /**
    * Live temperature-mixture SAMPLING GATE — the streaming form of
    * `PipelineQueries.mixSample`, offline-statistic / online-filter
    * like [[lmScoreStream]] and [[spanFlagStream]]: the per-source keep
-   * thresholds are learned ONCE at topology build from a static corpus
+   * thresholds ([[mixThresholdEntries]]) are learned ONCE at topology
+   * build from a static corpus
    * (the gated batch query's own `mixThresholds` arithmetic), embedded
    * as a LITERAL map (source-count entries — codegen'd lookup, no
    * broadcast join whose static subtree would re-run per micro-batch),
@@ -1257,22 +1270,6 @@ object StreamOps {
    * same cap the batch query applies to under-target sources. Docs
    * must carry (source, text); all input columns pass through.
    */
-  def mixSampleStream(docs: DataFrame, corpus: DataFrame): DataFrame =
-    mixSampleGate(docs, mixThresholdEntries(corpus))
-
-  /** The learned (source, keep-threshold) entries of [[mixSampleStream]],
-   *  collected ONCE — callers that also need the source names (Run's
-   *  demo labeler, MaxRateProbe) share this single collect instead of
-   *  re-deriving the threshold frame per consumer (and the entries are
-   *  sorted by source so downstream label indexing is deterministic). */
-  def mixThresholdEntries(corpus: DataFrame): Array[(String, Long)] =
-    graft.queries.PipelineQueries.mixThresholds(
-      corpus.select(col("source"),
-        graft.ops.TextAnalyticsOps.wsTokenCount(col("text")).as("n_tokens")))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).sortBy(_._1)
-
-  /** The filter stage of [[mixSampleStream]] over pre-collected
-   *  threshold entries. */
   def mixSampleGate(docs: DataFrame,
       thresholds: Array[(String, Long)]): DataFrame = {
     import graft.queries.PipelineQueries
@@ -1412,8 +1409,7 @@ object StreamOps {
    * via the SAME `weightsOf` the gated batch query uses. A chained
    * streaming agg (totals → normalizer) would be unsupported — and
    * unnecessary: the per-trigger batch is a static frame. State is one
-   * (count, sum) pair per source, the same O(sources) bound as
-   * [[packSequencesStream]].
+   * (count, sum) pair per source: O(sources).
    */
   def mixWeightsStream(docs: DataFrame): ForeachTrigger = {
     val totals = docs.groupBy("source").agg(
@@ -1422,46 +1418,6 @@ object StreamOps {
         .as("n_tokens"))
     ForeachTrigger(totals, OutputMode.Complete,
       (batch, _) => graft.queries.PipelineQueries.weightsOf(batch))
-  }
-
-  /**
-   * Live greedy sequence PACKING — the streaming form of
-   * `PipelineQueries.packSequences`: each arriving document is assigned
-   * to the training sequence where its first token lands, from a
-   * per-source RUNNING token offset held in keyed state (one long per
-   * source — state is O(sources), never O(stream)). Within a trigger a
-   * source's docs pack in doc_id order; across triggers the offset
-   * carries forward, so with per-source-ordered arrival (the loader
-   * contract for an ingest feed — same caveat as [[temporalAsOf]]) the
-   * assignment equals the batch query's bit-for-bit. Emits
-   * (doc_id, source, n_tokens, seq_id), Append (an assignment never
-   * retracts — exactly why the greedy cut, not bin-packing, is the
-   * loader standard).
-   */
-  def packSequencesStream(docs: DataFrame, budget: Int): DataFrame = {
-    val spark0 = docs.sparkSession
-    import spark0.implicits._
-    docs.select(col("doc_id").cast("long"), col("source"),
-        graft.ops.TextAnalyticsOps.wsTokenCount(col("text")).as("n_tokens"))
-      // a null id/source/text row would crash the primitive-Long
-      // encoder below — drop malformed rows BEFORE binding it, the
-      // same guard order as Run's rolling_sort_lastn
-      .na.drop()
-      .as[(Long, String, Long)]
-      .groupByKey(_._2)
-      .flatMapGroupsWithState[Long, (Long, String, Long, Long)](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (src: String, rows: Iterator[(Long, String, Long)],
-            state: GroupState[Long]) =>
-          var cum = state.getOption.getOrElse(0L)
-          val out = rows.toSeq.sortBy(_._1).map { case (id, _, tok) =>
-            val seq = cum / budget // floor(preceding tokens / budget)
-            cum += tok
-            (id, src, tok, seq)
-          }
-          state.update(cum)
-          out.iterator
-      }.toDF("doc_id", "source", "n_tokens", "seq_id")
   }
 
   /**
@@ -1574,623 +1530,6 @@ object StreamOps {
           col(rightTs) <= col(leftTs) + expr(s"INTERVAL $gap"))
 
   /**
-   * Similarity search as a continuous service: a stream of query
-   * vectors (query_id, embedding) scored per trigger against a static
-   * corpus. Each micro-batch broadcasts that trigger's queries and
-   * streams the corpus through the SAME scoring pipeline the batch
-   * operator uses (corpus never shuffles; only the tiny per-query rank
-   * exchanges) — foreachBatch is the honest idiom for per-trigger
-   * relational algebra that streaming-native operators can't express
-   * (global rank over a micro-batch).
-   */
-  def streamingTopK(queries: DataFrame, corpus: DataFrame, k: Int,
-      checkpoint: String)(sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.ops.SimilarityOps
-    val withNorm = corpus.select(col("vec_id"), col("embedding"),
-      SimilarityOps.l2Norm(col("embedding")).as("nrm"))
-    queries.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val q = batch.select(col("query_id"), col("embedding").as("q_emb"),
-          SimilarityOps.l2Norm(col("embedding")).as("q_nrm"))
-        val scored = withNorm.crossJoin(broadcast(q))
-          .filter(col("vec_id") =!= col("query_id"))
-          .withColumn("cos", SimilarityOps.cosine(col("embedding"),
-            col("q_emb"), col("nrm"), col("q_nrm")))
-        val rank = org.apache.spark.sql.functions.row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .partitionBy(col("query_id"))
-            .orderBy(col("cos").desc, col("vec_id")))
-        sink(scored.withColumn("rank", rank.cast("bigint"))
-          .filter(col("rank") <= k)
-          .select(col("query_id"), col("rank"),
-            col("vec_id").as("neighbor_id"), round(col("cos"), 4).as("cos_r")),
-          id)
-      }
-      .start()
-  }
-
-  /**
-   * Streaming incremental cluster-id maintenance — the live form of
-   * [[graft.ops.DedupOps.incrementalClusterAssign]]: each micro-batch
-   * of documents adopts the converged cluster frame accumulated so
-   * far (and triggers the merges it causes) through the contracted
-   * local fixpoint, then becomes history for the next trigger.
-   * foreachBatch is the honest idiom — a per-trigger CC fixpoint is
-   * relational algebra no streaming-native operator expresses.
-   *
-   * State rides at `statePath` as VERSIONED parquet keyed by batch id:
-   * `v<id>/docs` holds ONLY that batch's documents (append-only — text
-   * is written once and never rewritten, the 100 TB requirement),
-   * `bands/version=<id>/gen=<g>` and `shingles/version=<id>/gen=<g>`
-   * (manifest-committed — see [[ClusterStateManifest]]) that batch's
-   * [[graft.ops.DedupOps.clusterBandKeys]] / `clusterShingleSets`
-   * (append-only, fixed-width — the PRECOMPUTED derived state that
-   * makes steady-state ingest O(|batch|): band keys and shingle
-   * hashes are pure functions of text, so computing them once at
-   * ingest and reading the stored triples thereafter is exact), and
-   * `v<id>/clusters` a full snapshot of the converged frame
-   * (fixed-width (doc_id, cluster) rows — the small, rewritable half;
-   * superseded snapshots are PRUNED each trigger down to the current
-   * and one prior version — the prior is what a retry of the next
-   * batch reads — so cluster state is bounded at two frames while
-   * docs/bands/shingles grow append-only).
-   *
-   * Incremental in COST, not just semantics: a trigger shingles and
-   * minhashes ONLY its own batch; history enters as ONE partitioned
-   * read each of the stored band and shingle tables (`version` is a
-   * hive partition column, so the plan is a single scan relation with
-   * a `version < id` partition filter — never an O(#versions) union —
-   * and history TEXT is never scanned; StreamOpsSpec pins both at the
-   * plan level). At warehouse scale the stored band table additionally
-   * rides the bucketed layout BucketedTablesSpec proves erases the
-   * history-side join exchanges.
-   *
-   * doc_ids are IMMUTABLE IDENTITIES: a doc_id already in state
-   * re-arriving (at-least-once upstream, replay) is dropped by an
-   * anti-join against the accumulated cluster frame — its stored text
-   * stays authoritative, state gains no duplicate (doc_id, cluster)
-   * rows, and the sink still reports its CURRENT cluster (content
-   * updates need a new doc_id). Duplicates WITHIN a trigger collapse
-   * to one deterministic representative (min text).
-   *
-   * A trigger reads history as every version STRICTLY BELOW its own
-   * batch id, so a retried batch never sees its own partial writes
-   * (overwrite mode makes the rewrite idempotent). Because versions
-   * are keyed by batch id, the statePath is BOUND to its checkpoint:
-   * a `_graft_checkpoint` marker records it on the first trigger and
-   * every later trigger verifies the match — pointing a fresh or
-   * rewound checkpoint at existing state fails loud instead of
-   * restarting ids at 0 (which would silently ignore all history and
-   * overwrite v0). The derived band/shingle tables carry their own
-   * transactional layer: every partition set is resolved through the
-   * [[ClusterStateManifest]] commit log, so torn writes are invisible,
-   * gap detection is exact, and [[compactClusterState]] runs safely
-   * CONCURRENT with the stream.
-   *
-   * `sink` receives each batch's assignment AT INGEST TIME (a later
-   * merge may relabel a cluster retroactively — the STATE snapshot is
-   * the current truth, exactly like the batch operator's history
-   * frame; StreamOpsSpec pins state == full recompute after every
-   * trigger).
-   */
-  def clusterAssignStream(docs: DataFrame, statePath: String,
-      checkpoint: String, threshold: Double = 0.5)(
-      sink: (DataFrame, Long) => Unit): StreamingQuery = {
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val spark = batch.sparkSession
-        val fs = new org.apache.hadoop.fs.Path(statePath).getFileSystem(
-          spark.sparkContext.hadoopConfiguration)
-        // state ↔ checkpoint binding: versions are keyed by BATCH ID,
-        // so a fresh/rewound checkpoint over an existing statePath
-        // restarts ids at 0, silently ignores all history (version <
-        // id sees nothing) AND overwrites legacy v0 — fail loud
-        // instead. The marker is written FIRST on the first-ever
-        // trigger (before any state write, so a crash can't strand
-        // state without it); thereafter the recorded checkpoint must
-        // match.
-        val marker = new org.apache.hadoop.fs.Path(
-          s"$statePath/_graft_checkpoint")
-        if (fs.exists(marker)) {
-          val recorded = {
-            val in = fs.open(marker)
-            try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-            finally in.close()
-          }
-          require(recorded == checkpoint,
-            s"clusterAssignStream: statePath $statePath belongs to " +
-              s"checkpoint '$recorded' but this query runs under " +
-              s"'$checkpoint' — batch ids would restart and silently " +
-              "ignore/overwrite existing state; resume the original " +
-              "checkpoint or use a fresh statePath")
-        } else {
-          val all = clusterAssignVersions(spark, statePath, Long.MaxValue)
-          require(all.forall(_ < id),
-            s"clusterAssignStream: statePath $statePath already holds " +
-              s"versions >= batch id $id and carries no checkpoint " +
-              "marker — a fresh/rewound checkpoint over existing state " +
-              "would overwrite it; resume the original checkpoint or " +
-              "use a fresh statePath")
-          val out = fs.create(marker, true)
-          try out.write(checkpoint.getBytes("UTF-8")) finally out.close()
-        }
-        val versions = clusterAssignVersions(spark, statePath, id)
-        // migrate / guard: a statePath written before the derived-state
-        // layout (docs only, no bands/shingles) would otherwise read as
-        // EMPTY history and silently mis-cluster — backfill instead
-        ensureDerivedClusterState(spark, statePath, versions)
-        val histClusters = clusterAssignHistClusters(spark, statePath, versions)
-        // admission: collapse within-trigger duplicates to one
-        // deterministic representative, then drop doc_ids already in
-        // state (immutable-identity contract — see scaladoc).
-        // localCheckpoint: four actions consume this frame per trigger
-        // (bands write, shingles write, the assignment, the docs
-        // write) — materialize the admission ONCE; released below.
-        val batchDocs = batch.select(col("doc_id"), col("text"))
-          .groupBy(col("doc_id")).agg(min(col("text")).as("text"))
-          .join(histClusters.select("doc_id"), Seq("doc_id"), "left_anti")
-          .localCheckpoint()
-        // persist this batch's derived state FIRST (overwrite = retry-
-        // idempotent; readers resolve partitions through the COMMITTED
-        // manifest, so the write is invisible until the commit below),
-        // then assign against the STORED history triples — and pass
-        // the just-written batch triples back in, so the assignment
-        // never re-shingles even its own batch. gen is 0 unless a
-        // crashed prior attempt already committed this version (then
-        // rewrite the same directory — nothing reads version=id until
-        // this trigger's own read-back).
-        val g = readClusterManifest(spark, statePath)
-          .flatMap(_.liveOf("bands").find(_._1 == id)).map(_._2)
-          .getOrElse(0L)
-        val bandsDir = clusterPartDir(statePath, "bands", id, g)
-        val shinglesDir = clusterPartDir(statePath, "shingles", id, g)
-        graft.ops.DedupOps
-          .clusterBandKeys(batchDocs, col("doc_id"), col("text"))
-          .write.mode("overwrite").parquet(bandsDir)
-        graft.ops.DedupOps
-          .clusterShingleSets(batchDocs, col("doc_id"), col("text"))
-          .write.mode("overwrite").parquet(shinglesDir)
-        // COMMIT: both tables' new partition enter the manifest in ONE
-        // atomic publish — a crash before this line leaves orphan
-        // directories no reader ever lists (the retry rewrites them)
-        commitClusterManifest(spark, statePath) { prev =>
-          val m = prev.getOrElse(ClusterStateManifest.empty)
-          m.copy(live = m.live
-            .updated("bands",
-              ClusterStateManifest.upsert(m.liveOf("bands"), id, g))
-            .updated("shingles",
-              ClusterStateManifest.upsert(m.liveOf("shingles"), id, g)))
-        }
-        val assigned = clusterAssignTrigger(
-          spark, statePath, id, batchDocs, histClusters, threshold,
-          freshBands = Some(spark.read.parquet(bandsDir)),
-          freshShingles = Some(spark.read.parquet(shinglesDir)))
-        // materialize the new frame BEFORE it becomes readable state
-        assigned.write.mode("overwrite")
-          .parquet(s"$statePath/v$id/clusters")
-        batchDocs.write.mode("overwrite")
-          .parquet(s"$statePath/v$id/docs")
-        // prune superseded cluster snapshots: only the LATEST frame is
-        // ever read forward, but a RETRY of batch id+1 reads the
-        // latest below id+1 — so keep this version's and the one
-        // prior, delete older (docs are history and never pruned).
-        // Only the most recent TWO superseded versions are targeted —
-        // constant filesystem RPCs per trigger (everything older was
-        // deleted by earlier triggers; the second covers the
-        // crash-between-write-and-prune window, whose straggler the
-        // next trigger reclaims)
-        versions.dropRight(1).takeRight(2).foreach { v =>
-          fs.delete(new org.apache.hadoop.fs.Path(
-            s"$statePath/v$v/clusters"), true)
-          ()
-        }
-        // the batch's ORIGINAL doc_ids (pre-admission): re-ingested
-        // ids report their current cluster from the new snapshot
-        sink(spark.read.parquet(s"$statePath/v$id/clusters")
-          .join(batch.select("doc_id").distinct(), "doc_id"), id)
-        graft.ops.DedupOps.releaseTruncated(batchDocs)
-      }
-      .start()
-  }
-
-  /** Backfill missing derived band/shingle partitions — EXACT gap
-   *  detection against the committed manifest: a version is missing
-   *  iff it is above the table's compaction floor AND absent from the
-   *  live set. An on-disk partition directory the manifest does not
-   *  list (a torn write from a crash mid-ingest or mid-backfill) is
-   *  never trusted — it is rewritten with overwrite and only then
-   *  committed. Pre-manifest layouts adopt first (the one place
-   *  directory listings are trusted, see
-   *  [[adoptClusterStateLayout]]). A warning names each backfill. */
-  private[graft] def ensureDerivedClusterState(spark: SparkSession,
-      statePath: String, versions: Array[Long]): Unit = {
-    val m0 = adoptClusterStateLayout(spark, statePath)
-      .getOrElse(ClusterStateManifest.empty)
-    val missing = ClusterStateManifest.Tables.map { table =>
-      table -> versions.filter(v =>
-        v > m0.floor(table) && !m0.liveOf(table).exists(_._1 == v))
-    }.toMap
-    if (missing.values.exists(_.nonEmpty)) {
-      missing.foreach { case (table, vs) => vs.foreach { v =>
-        org.slf4j.LoggerFactory.getLogger(getClass).warn(
-          "clusterAssignStream: backfilling {} for uncommitted state " +
-            "version {} at {}", table, v.toString, statePath)
-        val docs = spark.read.parquet(s"$statePath/v$v/docs")
-        val derived =
-          if (table == "bands")
-            graft.ops.DedupOps.clusterBandKeys(docs, col("doc_id"), col("text"))
-          else
-            graft.ops.DedupOps.clusterShingleSets(docs, col("doc_id"), col("text"))
-        derived.write.mode("overwrite")
-          .parquet(clusterPartDir(statePath, table, v, 0L))
-      }}
-      commitClusterManifest(spark, statePath) { prev =>
-        val m = prev.getOrElse(ClusterStateManifest.empty)
-        m.copy(live = ClusterStateManifest.Tables.map { table =>
-          table -> missing(table).foldLeft(m.liveOf(table))(
-            (es, v) => ClusterStateManifest.upsert(es, v, 0L))
-        }.toMap)
-      }
-      ()
-    }
-  }
-
-  /** The versions strictly below `id` present at `statePath`. */
-  private[graft] def clusterAssignVersions(spark: SparkSession,
-      statePath: String, id: Long): Array[Long] = {
-    val root = new org.apache.hadoop.fs.Path(statePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) Array.empty[Long]
-    else fs.listStatus(root).map(_.getPath.getName)
-      .filter(_.startsWith("v"))
-      .flatMap(n => scala.util.Try(n.drop(1).toLong).toOption)
-      .filter(_ < id).sorted
-  }
-
-  private[graft] def clusterAssignHistClusters(spark: SparkSession,
-      statePath: String, versions: Array[Long]): DataFrame = {
-    import spark.implicits._
-    versions.lastOption.map(v =>
-        spark.read.parquet(s"$statePath/v$v/clusters"))
-      .getOrElse(Seq.empty[(Long, Long)].toDF("doc_id", "cluster"))
-  }
-
-  /** One trigger's assignment PLAN against the stored derived state —
-   *  factored out so StreamOpsSpec can pin its shape: the only file
-   *  scans are the batch-invisible ones (stored bands, stored
-   *  shingles, the cluster snapshot); history DOCS never appear, so
-   *  history text is provably never re-shingled. */
-  private[graft] def clusterAssignTrigger(spark: SparkSession,
-      statePath: String, id: Long, batchDocs: DataFrame,
-      histClusters: DataFrame, threshold: Double,
-      freshBands: Option[DataFrame] = None,
-      freshShingles: Option[DataFrame] = None): DataFrame = {
-    import spark.implicits._
-    // partitions resolve through the COMMITTED manifest — an
-    // uncommitted (torn) directory is invisible, and the explicit
-    // path list still reads as one scan relation with the version
-    // partition filter
-    val manifest = readClusterManifest(spark, statePath)
-    def stored(table: String, cols: Seq[String], empty: => DataFrame)
-        : DataFrame =
-      manifest.map(_.liveOf(table)).filter(_.nonEmpty)
-        .map(entries => spark.read
-          .option("basePath", s"$statePath/$table")
-          .parquet(entries.map(e =>
-            clusterPartDir(statePath, table, e._1, e._2)): _*)
-          .filter(col("version") < id).select(cols.map(col): _*))
-        .getOrElse(empty)
-    val histBands = stored("bands", Seq("id", "band", "bh"),
-      Seq.empty[(Long, Int, Long)].toDF("id", "band", "bh"))
-    val histShingles = stored("shingles", Seq("sid", "shs"),
-      Seq.empty[(Long, Array[Long])].toDF("sid", "shs"))
-    graft.ops.DedupOps.incrementalClusterAssignPre(
-      batchDocs, histBands, histShingles, histClusters,
-      col("doc_id"), col("text"), threshold,
-      freshBands = freshBands, freshShingles = freshShingles)
-  }
-
-  /** A committed derived-state partition directory:
-   *  `<statePath>/<table>/version=<v>/gen=<g>`. The `gen` sublevel is
-   *  what makes compaction concurrent-safe — a fold writes a FRESH
-   *  directory (never overwrites a live one) and becomes visible only
-   *  through the manifest commit. */
-  private[graft] def clusterPartDir(statePath: String, table: String,
-      v: Long, g: Long): String = s"$statePath/$table/version=$v/gen=$g"
-
-  /** Serializes manifest commits within this JVM; cross-JVM the
-   *  create-no-overwrite sequence file is the arbiter. */
-  private object ClusterManifestLock
-
-  private def clusterManifestDir(statePath: String) =
-    new org.apache.hadoop.fs.Path(s"$statePath/_manifests")
-
-  /** The newest COMPLETE manifest (with its sequence number). A torn
-   *  file from a writer crash — missing the `eof=true` terminator or
-   *  unparseable — was never committed; the reader steps down to the
-   *  previous sequence. */
-  private[graft] def readClusterManifestSeq(spark: SparkSession,
-      statePath: String): Option[(Long, ClusterStateManifest)] = {
-    val dir = clusterManifestDir(statePath)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) None
-    else fs.listStatus(dir).map(_.getPath.getName)
-      .filter(_.endsWith(".manifest"))
-      .flatMap(n => scala.util.Try(
-        n.stripSuffix(".manifest").toLong).toOption)
-      .sorted.reverseIterator
-      .map { seq =>
-        // the open/read can race commitClusterManifest's pruning (file
-        // listed, then deleted before fs.open) — a vanished or
-        // unreadable candidate is treated exactly like a torn one:
-        // step down a sequence (the newest COMPLETE manifest is
-        // always within the ManifestKeep window)
-        scala.util.Try {
-          val in = fs.open(new org.apache.hadoop.fs.Path(
-            dir, f"$seq%020d.manifest"))
-          try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        }.toOption
-          .flatMap(ClusterStateManifest.parse).map(seq -> _)
-      }
-      .collectFirst { case Some(x) => x }
-  }
-
-  private[graft] def readClusterManifest(spark: SparkSession,
-      statePath: String): Option[ClusterStateManifest] =
-    readClusterManifestSeq(spark, statePath).map(_._2)
-
-  /** Manifest files older than the newest minus this many sequences
-   *  are pruned at commit time — enough step-down depth for torn
-   *  manifests and in-flight readers, while bounding the directory a
-   *  long-running stream's per-trigger reads must list. */
-  private val ManifestKeep = 16L
-
-  /** Commit a manifest transformation with optimistic concurrency:
-   *  read the newest complete manifest, apply `update`, publish as
-   *  sequence `max-present + 1` via create-no-overwrite. A
-   *  [[org.apache.hadoop.fs.FileAlreadyExistsException]] means
-   *  another writer claimed the number first — re-read and retry, so
-   *  concurrent trigger and compaction commits MERGE instead of
-   *  clobbering; any other I/O failure (disk full, permissions)
-   *  propagates loud rather than spinning. `update` must therefore be
-   *  a pure transformation of the CURRENT manifest, re-runnable on
-   *  retry. Concurrency envelope: within one JVM the lock serializes
-   *  writers outright; across JVMs the claim is atomic wherever
-   *  create-no-overwrite is (HDFS and object stores with conditional
-   *  create — local filesystems check-then-create, so multi-PROCESS
-   *  writers on a local statePath are outside the contract; the
-   *  stream + its in-process maintenance job is the supported local
-   *  shape). After publishing, sequences older than the newest
-   *  [[ManifestKeep]] are pruned so per-trigger manifest reads list a
-   *  bounded directory. */
-  private[graft] def commitClusterManifest(spark: SparkSession,
-      statePath: String)(
-      update: Option[ClusterStateManifest] => ClusterStateManifest)
-      : ClusterStateManifest = ClusterManifestLock.synchronized {
-    val dir = clusterManifestDir(statePath)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(dir)
-    def seqs(): Array[Long] = fs.listStatus(dir).map(_.getPath.getName)
-      .filter(_.endsWith(".manifest"))
-      .flatMap(n => scala.util.Try(
-        n.stripSuffix(".manifest").toLong).toOption)
-    var committed: Option[(Long, ClusterStateManifest)] = None
-    while (committed.isEmpty) {
-      // next sequence counts every file PRESENT (torn ones included —
-      // their number is burned, not reusable), content comes from the
-      // newest COMPLETE one
-      val next = seqs().maxOption.getOrElse(-1L) + 1
-      val out = update(readClusterManifest(spark, statePath))
-      try {
-        val os = fs.create(new org.apache.hadoop.fs.Path(
-          dir, f"$next%020d.manifest"), false)
-        try os.write(ClusterStateManifest.render(out).getBytes("UTF-8"))
-        finally os.close()
-        committed = Some((next, out))
-      } catch {
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException =>
-          () // lost the sequence race — merge onto the winner and retry
-      }
-    }
-    val (seq, out) = committed.get
-    seqs().filter(_ < seq - ManifestKeep).foreach { s =>
-      fs.delete(new org.apache.hadoop.fs.Path(
-        dir, f"$s%020d.manifest"), false)
-      ()
-    }
-    out
-  }
-
-  /** One-time adoption of a pre-manifest `<table>/version=<v>` layout:
-   *  restructure each partition directory to `version=<v>/gen=0` (so
-   *  partition depth is uniform) and seed the manifest from the
-   *  directory listing — the single point where on-disk directories
-   *  are trusted; thereafter only manifest-committed partitions are
-   *  ever read. Legacy gaps below a table's lowest stored version are
-   *  prior folds, recorded as that table's floor. NOT concurrent-safe
-   *  (the move is multi-step): runs inside the single-writer trigger
-   *  or a quiesced maintenance call, and is a no-op once the manifest
-   *  exists. Crash-resumable — an interrupted move leaves a
-   *  `.mig-version=<v>` staging directory the next call completes. */
-  private[graft] def adoptClusterStateLayout(spark: SparkSession,
-      statePath: String): Option[ClusterStateManifest] =
-    readClusterManifest(spark, statePath).orElse {
-      val fs = new org.apache.hadoop.fs.Path(statePath).getFileSystem(
-        spark.sparkContext.hadoopConfiguration)
-      def finishMove(root: org.apache.hadoop.fs.Path, v: Long): Unit = {
-        fs.mkdirs(new org.apache.hadoop.fs.Path(root, s"version=$v"))
-        fs.rename(new org.apache.hadoop.fs.Path(root, s".mig-version=$v"),
-          new org.apache.hadoop.fs.Path(root, s"version=$v/gen=0"))
-        ()
-      }
-      val present = ClusterStateManifest.Tables.map { table =>
-        val root = new org.apache.hadoop.fs.Path(s"$statePath/$table")
-        if (!fs.exists(root)) table -> Array.empty[Long]
-        else {
-          fs.listStatus(root).map(_.getPath.getName)
-            .filter(_.startsWith(".mig-version=")).foreach(n =>
-              finishMove(root, n.stripPrefix(".mig-version=").toLong))
-          val vs = fs.listStatus(root).map(_.getPath.getName)
-            .filter(_.startsWith("version="))
-            .flatMap(n => scala.util.Try(
-              n.stripPrefix("version=").toLong).toOption).sorted
-          vs.foreach { v =>
-            val d = new org.apache.hadoop.fs.Path(root, s"version=$v")
-            if (!fs.exists(new org.apache.hadoop.fs.Path(d, "gen=0"))) {
-              fs.rename(d, new org.apache.hadoop.fs.Path(
-                root, s".mig-version=$v"))
-              finishMove(root, v)
-            }
-          }
-          table -> vs
-        }
-      }.toMap
-      if (present.values.forall(_.isEmpty)) None
-      else Some(commitClusterManifest(spark, statePath) { prev =>
-        prev.getOrElse(ClusterStateManifest(
-          floors = present.map { case (t, vs) =>
-            t -> (if (vs.isEmpty) -1L else vs.min - 1) },
-          genHw = ClusterStateManifest.Tables.map(_ -> 0L).toMap,
-          live = present.map { case (t, vs) =>
-            t -> vs.map(v => (v, 0L)).toSeq },
-          retired = Nil))
-      })
-    }
-
-  /**
-   * MAINTENANCE compaction for [[clusterAssignStream]]'s derived
-   * state: fold every `bands`/`shingles` partition with
-   * `version <= upTo` into one partition and retire the lower ones. A
-   * long-running stream otherwise accumulates one partition directory
-   * (of possibly many small files) per trigger; compaction bounds the
-   * per-trigger file-listing and scan-open cost at O(triggers since
-   * last compaction) and reclaims the superseded storage. Row content
-   * is unchanged, so trigger results are identical before/after
-   * (spec-pinned).
-   *
-   * CONCURRENT-SAFE under running triggers via the manifest-commit
-   * protocol: the fold is written to a FRESH `version=upTo/gen=<g+1>`
-   * directory (no live directory is ever overwritten), published by
-   * ONE manifest commit (atomic create of the next sequence file), and
-   * every reader resolves its partition set from the manifest — a
-   * trigger concurrent with compaction reads either the pre-fold set
-   * or the post-fold set, never a half-fold, and since row content is
-   * identical both give the same assignment. Superseded directories
-   * are not deleted at commit (an in-flight reader may still hold
-   * them): they are RETIRED in the manifest and swept at the START of
-   * the NEXT compaction — the retention contract is that no single
-   * trigger spans two whole compaction runs, trivially true when
-   * maintenance is spaced beyond the trigger interval. Run ONE
-   * compactor at a time (it is a maintenance job); triggers may keep
-   * flowing.
-   *
-   * The enforced `upTo < latest` bound covers the other hazard — a
-   * post-restart retry of the latest batch must not find its own rows
-   * folded into history (it would pair documents with themselves).
-   *
-   * Crash-recovery: before the commit, the only effect is an orphan
-   * fold directory no manifest references (a re-run recomputes the
-   * same generation number and overwrites it); after the commit the
-   * fold is fully live and the old directories await the next sweep.
-   * A re-run is idempotent throughout (sweeping already-deleted paths
-   * is a no-op, folding a single live partition is skipped).
-   */
-  def compactClusterState(spark: SparkSession, statePath: String,
-      upTo: Long): Unit = {
-    val maxV = clusterAssignVersions(spark, statePath, Long.MaxValue)
-      .lastOption.getOrElse(
-        sys.error(s"compactClusterState: no versions at $statePath"))
-    require(upTo < maxV,
-      s"compactClusterState: upTo=$upTo must stay below the latest " +
-        s"version $maxV — a post-restart retry of batch $maxV reads " +
-        "versions below itself and must not find its own rows there")
-    adoptClusterStateLayout(spark, statePath).foreach { m0 =>
-      val fs = new org.apache.hadoop.fs.Path(statePath).getFileSystem(
-        spark.sparkContext.hadoopConfiguration)
-      // SWEEP: directories retired by the PREVIOUS compaction have had
-      // a full compaction interval of reader grace — delete them now
-      // (and the version= parent when its last gen leaves)
-      m0.retired.foreach { case (t, v, g) =>
-        val gone = new org.apache.hadoop.fs.Path(
-          clusterPartDir(statePath, t, v, g))
-        fs.delete(gone, true)
-        val parent = gone.getParent
-        if (fs.exists(parent) && fs.listStatus(parent).isEmpty) {
-          fs.delete(parent, false)
-          ()
-        }
-      }
-      val folds: Map[String, Long] =
-        ClusterStateManifest.Tables.flatMap { table =>
-          val entries = m0.liveOf(table).filter(_._1 <= upTo)
-          if (entries.length <= 1) None
-          else {
-            val g = m0.genHw.getOrElse(table, 0L) + 1
-            // materialize before writing — same statePath filesystem
-            val combined = spark.read
-              .option("basePath", s"$statePath/$table")
-              .parquet(entries.map(e =>
-                clusterPartDir(statePath, table, e._1, e._2)): _*)
-              .drop("version", "gen")
-              .localCheckpoint()
-            combined.write.mode("overwrite")
-              .parquet(clusterPartDir(statePath, table, upTo, g))
-            graft.ops.DedupOps.releaseTruncated(combined)
-            Some(table -> g)
-          }
-        }.toMap
-      if (folds.nonEmpty || m0.retired.nonEmpty) {
-        commitClusterManifest(spark, statePath) { prev =>
-          val m = prev.getOrElse(ClusterStateManifest.empty)
-          // remove EXACTLY the entries this fold consumed (the m0
-          // snapshot) — an entry <= upTo committed concurrently (a
-          // restarted stream's backfill) is NOT in the fold and must
-          // stay live, or its rows would vanish with the floor raised
-          // past re-detection
-          val consumed: Map[String, Set[(Long, Long)]] =
-            folds.keys.map(t =>
-              t -> m0.liveOf(t).filter(_._1 <= upTo).toSet).toMap
-          val newRetired = folds.keys.toSeq.sorted.flatMap { table =>
-            consumed(table).toSeq.sortBy(_._1).map(e =>
-              (table, e._1, e._2))
-          }
-          m.copy(
-            floors = m.floors ++ folds.keys.map(t =>
-              t -> math.max(m.floor(t), upTo)),
-            genHw = m.genHw ++ folds.map { case (t, g) =>
-              t -> math.max(m.genHw.getOrElse(t, 0L), g) },
-            live = m.live ++ folds.map { case (t, g) =>
-              t -> ClusterStateManifest.upsert(
-                m.liveOf(t).filterNot(consumed(t)), upTo, g) },
-            // entries we just swept leave; this fold's victims enter
-            retired = m.retired.filterNot(m0.retired.contains)
-              ++ newRetired)
-        }
-        ()
-      }
-    }
-  }
-
-  /**
-   * IVF-PQ similarity serving — [[streamingTopK]]'s 100 TB sibling:
-   * the two-level IVFADC index (coarse centroids + shared residual
-   * codebooks + the ENCODED corpus) is built ONCE at topology start
-   * and the code relation localCheckpointed, so per trigger the
-   * corpus floats are never read again — each micro-batch's query
-   * vectors probe nProbe cells and score against the compact codes
-   * via broadcast ADC tables (`SimilarityOps.ivfPqScore`, the exact
-   * scoring tail the gated batch query runs; StreamOpsSpec pins
-   * stream == batch per trigger). This is the serving shape at scale:
-   * bytes scanned per query are codes (4 B/vector at the default
-   * config) in the probed cells only, not embeddings.
-   */
-  /**
    * HYBRID retrieval SERVING — the live form of
    * `PipelineQueries.simHybrid` and the composition a production
    * search stack actually deploys: arriving queries carry BOTH
@@ -2203,7 +1542,8 @@ object StreamOps {
    * term) tf relation with doc lengths, exactly what a lexical engine
    * materializes — plus the vocab-sized df table, the 1-double avgdl,
    * and the norm-carrying embedding relation, all reliable-truncated
-   * ([[streamingTopKIvfPq]]'s executor-loss trade). Per trigger the
+   * (a serving topology must survive executor loss; local blocks are
+   * the single-JVM fallback). Per trigger the
    * postings relation is read through a BROADCAST restriction to the
    * batch's query terms (map-side, no index shuffle), scored by the
    * SHARED `bm25Contribution` expression (the quantized integers
@@ -2286,113 +1626,6 @@ object StreamOps {
         PipelineQueries.bm25Contribution(idx.n.toDouble).as("c"))
       .groupBy("qid", "doc_id").agg(sum(col("c")).as("score_nano"))
     PipelineQueries.rrfFuse(dense, PipelineQueries.lexRankCut(scores))
-  }
-
-  def streamingTopKIvfPq(queries: DataFrame, corpus: DataFrame, k: Int,
-      dim: Int, nCells: Int = 8, nProbe: Int = 4, m: Int = 4, ks: Int = 8,
-      iters: Int = 2, checkpoint: String)(sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.ops.SimilarityOps
-    val built = SimilarityOps.buildIvfPqIndex(corpus, dim, nCells, nProbe,
-      m, ks, iters)
-    // reliableTruncate, not bare localCheckpoint: a long-running serving
-    // topology on a cluster must survive executor loss — when a reliable
-    // checkpoint dir is configured the code snapshot goes there; local
-    // blocks are the single-JVM fallback only (the same trade the
-    // dedup/CC family makes).
-    val idx = built.copy(
-      codes = graft.ops.DedupOps.reliableTruncate(built.codes))
-    queries.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        import scala.math.Ordering.Implicits.seqOrdering
-        val raw = batch.select(col("query_id"), col("embedding")).collect()
-          .map(r => r.getLong(0) ->
-            Option(r.getSeq[Float](1)).map(_.toArray).orNull)
-        // the serving-boundary hygiene a real service needs: malformed
-        // vectors (null / wrong width) QUARANTINE — yield no rows, not
-        // a killed topology (the decode convention); duplicate
-        // query_ids in one trigger collapse to ONE deterministic
-        // representative (lexicographically smallest vector — an
-        // at-least-once upstream must not double every neighbor row
-        // and halve the served k)
-        val (valid, malformed) = raw.partition { case (_, v) =>
-          v != null && v.length == dim }
-        if (malformed.nonEmpty)
-          org.slf4j.LoggerFactory.getLogger(getClass).warn(
-            "streamingTopKIvfPq: trigger {} quarantined {} malformed " +
-              "query vectors (null or wrong dim): ids {}",
-            id.toString, malformed.length.toString,
-            malformed.map(_._1).take(10).mkString(","))
-        val qs = valid.groupBy(_._1).map { case (qid, rs) =>
-          qid -> rs.map(_._2).minBy(_.toSeq)
-        }.toSeq.sortBy(_._1)
-        sink(SimilarityOps.ivfPqScore(idx, qs, k), id)
-      }
-      .start()
-  }
-
-  /** Envelope for [[temporalAsOf]]: both sides union into one tagged
-   *  relation (probe rows have isBuild = false). */
-  case class Timed(key: Long, ts: Long, id: Long, isBuild: Boolean)
-  case class LatestBuild(ts: Long, id: Long)
-  case class TemporalMatch(key: Long, probeId: Long, probeTs: Long,
-      buildId: Long, buildTs: Long)
-
-  /**
-   * Streaming temporal join (the streaming as-of): each probe event
-   * joins the latest build row with ts <= probe.ts on its key, where
-   * "latest" is keyed state maintained across triggers — Flink calls
-   * this a temporal table join; it is the streaming form of
-   * JoinOps.asOfJoin. Within a micro-batch the group's rows process in
-   * (ts, side, id) order — builds before probes at equal ts, so <=
-   * matches — and the state only moves forward (a stale build arriving
-   * after a newer one never regresses it). Caveat shared with Flink's
-   * processing-time temporal join: a build row arriving in a LATER
-   * trigger than a probe cannot retro-match it; with per-key-ordered
-   * sources the result equals the batch as-of join. Probes with no
-   * prior build drop (inner semantics, like the batch op).
-   */
-  def temporalAsOf(events: Dataset[Timed]): Dataset[TemporalMatch] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.key)
-      .flatMapGroupsWithState[LatestBuild, TemporalMatch](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key, rows, state: GroupState[LatestBuild]) =>
-          var latest = state.getOption.orNull
-          val out = scala.collection.mutable.ArrayBuffer[TemporalMatch]()
-          rows.toSeq.sortBy(e => (e.ts, if (e.isBuild) 0 else 1, e.id)).foreach { e =>
-            if (e.isBuild) {
-              if (latest == null || e.ts > latest.ts ||
-                (e.ts == latest.ts && e.id > latest.id)) {
-                latest = LatestBuild(e.ts, e.id)
-              }
-            } else if (latest != null) {
-              out += TemporalMatch(key, e.id, e.ts, latest.id, latest.ts)
-            }
-          }
-          if (latest != null) state.update(latest)
-          out.iterator
-      }
-  }
-
-  /**
-   * Continuously-maintained latest position per aircraft via keyed state
-   * (mapGroupsWithState) — the streaming form of WindowOps.latestPerKey
-   * and the exact analog of DistFilterBolt's flightMap
-   * (RollingFlightDist.java:216-218: newer PosTime wins).
-   */
-  def latestPositions(positions: Dataset[AdsbPosition]): Dataset[AdsbPosition] = {
-    import positions.sparkSession.implicits._
-    positions.groupByKey(_.icao)
-      .mapGroupsWithState[AdsbPosition, AdsbPosition](GroupStateTimeout.NoTimeout) {
-        (_, updates, state: GroupState[AdsbPosition]) =>
-          val freshest = (state.getOption.iterator ++ updates)
-            .maxBy(p => (p.posTime, p.lat, p.lng)) // posTime wins; determinisitic tiebreak
-          state.update(freshest)
-          freshest
-      }
   }
 
   /**
@@ -2613,140 +1846,4 @@ object StreamOps {
       checkpointDir: String): StreamingQuery =
     df.writeStream.format("memory").queryName(name)
       .outputMode(mode).option("checkpointLocation", checkpointDir).start()
-}
-
-/**
- * A committed snapshot of [[StreamOps.clusterAssignStream]]'s derived
- * band/shingle state — the manifest-commit protocol that gives the
- * bare-parquet layout transactional reads (the Delta/Iceberg shape,
- * hand-rolled at the two-table scale this operator needs):
- *
- *  - `live`: per table, the exact committed partition set as
- *    (version, gen) pairs — readers list ONLY these directories, so a
- *    torn write (crash mid-ingest, mid-backfill, or mid-fold) is
- *    never visible.
- *  - `floors`: per table, the highest compaction fold bound — a
- *    version `<= floor` absent from `live` was folded, one `> floor`
- *    absent is MISSING and gets backfilled (exact gap detection).
- *  - `genHw`: highest fold generation ever allocated per table, so a
- *    fold never reuses a directory name still awaiting sweep.
- *  - `retired`: partitions superseded by the last compaction as
- *    (table, version, gen) tuples RELATIVE to the state path (paths
- *    are reconstructed through [[StreamOps.clusterPartDir]] at sweep
- *    time, so the state directory is relocatable and no path byte —
- *    '|', newline — can tear the manifest), swept at the start of the
- *    next compaction (reader grace window).
- *
- * Manifests live as `_manifests/<seq>.manifest` line files; commit =
- * create-no-overwrite of the next sequence (serialized in-JVM by a
- * lock; atomic across JVMs wherever create-no-overwrite is — see
- * [[StreamOps.commitClusterManifest]] for the exact envelope),
- * complete = trailing `eof=true` (a torn manifest parses as absent
- * and readers step down one sequence); sequences older than the
- * newest [[StreamOps.ManifestKeep]] prune at commit so reads list a
- * bounded directory.
- */
-private[graft] case class ClusterStateManifest(
-    floors: Map[String, Long],
-    genHw: Map[String, Long],
-    live: Map[String, Seq[(Long, Long)]],
-    retired: Seq[(String, Long, Long)]) {
-  def floor(table: String): Long = floors.getOrElse(table, -1L)
-  def liveOf(table: String): Seq[(Long, Long)] =
-    live.getOrElse(table, Nil)
-}
-
-private[graft] object ClusterStateManifest {
-  val Tables: Seq[String] = Seq("bands", "shingles")
-  val empty: ClusterStateManifest =
-    ClusterStateManifest(Map.empty, Map.empty, Map.empty, Nil)
-
-  def upsert(es: Seq[(Long, Long)], v: Long, g: Long)
-      : Seq[(Long, Long)] = (es.filterNot(_._1 == v) :+ (v, g)).sortBy(_._1)
-
-  def render(m: ClusterStateManifest): String = {
-    def longMap(p: Map[String, Long]): String =
-      p.toSeq.sorted.map { case (k, v) => s"$k:$v" }.mkString(",")
-    (Seq(s"floors=${longMap(m.floors)}", s"gens=${longMap(m.genHw)}") ++
-      Tables.map(t => s"live.$t=" + m.liveOf(t).sortBy(_._1)
-        .map { case (v, g) => s"$v:$g" }.mkString(",")) ++
-      Seq("retired=" + m.retired
-        .map { case (t, v, g) => s"$t:$v:$g" }.mkString(","),
-        "eof=true"))
-      .mkString("\n") + "\n"
-  }
-
-  /** Pre-tuple manifests stored retired entries as ABSOLUTE partition
-   *  paths joined on '|' — recover the (table, version, gen) triple
-   *  from the path tail (every legacy entry came from
-   *  [[StreamOps.clusterPartDir]], so the tail shape is fixed). */
-  private val LegacyRetired =
-    """([^/|]+)/version=(\d+)/gen=(\d+)/?$""".r.unanchored
-
-  /** A manifest that WAS committed (the `eof=true` terminator is the
-   *  last rendered line, so no torn prefix can carry it) but does not
-   *  parse — a legacy retired entry outside the fixed
-   *  [[StreamOps.clusterPartDir]] shape, a corrupt line, or a newer
-   *  format this reader does not know. This must FAIL LOUD: treating
-   *  it as torn would make readers silently step down to an older
-   *  sequence — a quiet state regression (resurrected floors and live
-   *  sets) on real committed state. */
-  final class UnmigratableManifestException(msg: String,
-      cause: Throwable = null)
-    extends RuntimeException(msg, cause)
-
-  /** None for a torn manifest — it was never committed (a torn write
-   *  is a strict prefix of [[render]]'s output, which ends with the
-   *  `eof=true` terminator, so completeness is decidable from the last
-   *  line). A COMMITTED manifest that fails to parse for ANY reason —
-   *  unmigratable legacy entry, corrupt line, unknown future format —
-   *  throws [[UnmigratableManifestException]] instead of reading as
-   *  absent — see its scaladoc. */
-  def parse(text: String): Option[ClusterStateManifest] = {
-    val lines = text.split("\n", -1).map(_.trim).filter(_.nonEmpty)
-    if (lines.isEmpty || lines.last != "eof=true") None
-    else scala.util.Try {
-      val kv = lines.dropRight(1).map { l =>
-        val i = l.indexOf('=')
-        (l.substring(0, i), l.substring(i + 1))
-      }.toMap
-      def longMap(s: String): Map[String, Long] =
-        if (s.isEmpty) Map.empty
-        else s.split(",").map { p =>
-          val Array(a, b) = p.split(":"); a -> b.toLong
-        }.toMap
-      def entries(s: String): Seq[(Long, Long)] =
-        if (s.isEmpty) Nil
-        else s.split(",").toSeq.map { p =>
-          val Array(a, b) = p.split(":"); (a.toLong, b.toLong)
-        }
-      ClusterStateManifest(
-        floors = longMap(kv("floors")),
-        genHw = longMap(kv("gens")),
-        live = Tables.map(t => t -> entries(kv(s"live.$t"))).toMap,
-        retired = kv("retired") match {
-          case "" => Nil
-          case s if s.contains('/') => // legacy absolute-path form
-            s.split("\\|").toSeq.map {
-              case LegacyRetired(t, v, g) => (t, v.toLong, g.toLong)
-              case p => throw new UnmigratableManifestException(
-                s"committed manifest has a legacy retired entry outside " +
-                  s"the clusterPartDir shape (cannot migrate): $p")
-            }
-          case s => s.split(",").toSeq.map { p =>
-            val Array(t, v, g) = p.split(":")
-            (t, v.toLong, g.toLong)
-          }
-        })
-    } match {
-      case scala.util.Success(m) => Some(m)
-      // the Try only runs past the eof-terminator gate, so EVERY
-      // failure here is committed-but-unparseable ≠ torn: fail loud
-      // instead of stepping down past real committed state
-      case scala.util.Failure(e: UnmigratableManifestException) => throw e
-      case scala.util.Failure(e) => throw new UnmigratableManifestException(
-        s"committed manifest (eof terminator present) failed to parse: " +
-          s"${e.getMessage}", e)
-    }
-  }
 }

@@ -6,7 +6,7 @@ package graft.tools
   *
   * Usage: runMain graft.tools.ExplainAll <outDir> <suffix> <q1> <q2> ...
   *
-  * One JVM for the whole list (a per-query Explain run pays ~20 s of
+  * One JVM for the whole list (a JVM per query would pay ~20 s of
   * sbt+session startup each). Iterative driver-loop queries (bpe_learn,
   * wordpiece_learn) return a LocalRelation of collected rules — for
   * those this dumps the FIRST-ROUND statistics job's plan (the frame

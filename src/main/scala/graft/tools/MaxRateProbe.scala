@@ -1,10 +1,10 @@
 package graft.tools
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path}
 
 import scala.collection.immutable.ListMap
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -33,7 +33,10 @@ import graft.streaming.ConsumerLagListener
   * The topologies are the entries of [[graft.Topologies]], built as
   * `graft.Run` builds them; the probe owns only the sink (noop, or a
   * noop write of each trigger's result for the foreachBatch forms),
-  * the 1 s trigger and the checkpoint.
+  * the 1 s trigger and the checkpoint. Every trial's checkpoint sits
+  * under one probe root, deleted once after `spark.stop()`: a stopped
+  * query's async state-store maintenance can outlive the query, and
+  * deleting its checkpoint under it logs FileNotFound traces.
   *
   * Args: optional topology names to probe a subset (default: all).
   * Output: one `[maxrate]` line per topology; paste into SCALE.md.
@@ -109,7 +112,16 @@ object MaxRateProbe {
     names.foreach(Topologies(_)) // an unknown name fails before the session starts
     val spark = graft.GraftSession("graft-max-rate-probe")
     spark.sparkContext.setLogLevel("ERROR")
+    val probeRoot = Files.createTempDirectory("maxrate")
+    try probe(spark, names, probeRoot)
+    finally {
+      spark.stop()
+      org.apache.commons.io.FileUtils.deleteQuietly(probeRoot.toFile)
+    }
+  }
 
+  private def probe(spark: SparkSession, names: Seq[String],
+      probeRoot: Path): Unit = {
     val lagListener = new ConsumerLagListener
     spark.streams.addListener(lagListener)
 
@@ -134,7 +146,7 @@ object MaxRateProbe {
       * consume all `rate x genSec` rows within genSec + grace? */
     def sustainable(name: String, rate: Long): Boolean = {
       val total = rate * genSec
-      val ckpt = Files.createTempDirectory(s"maxrate-$name-$rate")
+      val ckpt = Files.createTempDirectory(probeRoot, s"$name-$rate-")
       try {
         val entry = Topologies(name)
         val lines = Generators.feedLines(throttled(rate), entry.feed)
@@ -158,16 +170,12 @@ object MaxRateProbe {
           consumed() >= total
         } finally {
           try q.stop() catch { case _: Throwable => () }
-          // let async state-store maintenance quiesce before the dir
-          // delete below (it races the removal with harmless but noisy
-          // FileNotFound errors otherwise)
-          Thread.sleep(500)
         }
       } catch { case e: Throwable =>
         println(s"[maxrate] $name@$rate FAILED: " +
           s"${e.getClass.getSimpleName} ${e.getMessage}")
         false
-      } finally org.apache.commons.io.FileUtils.deleteQuietly(ckpt.toFile)
+      }
     }
 
     /** Bracket by doubling from the seed, then geometric bisection;
@@ -244,6 +252,5 @@ object MaxRateProbe {
       val (seed, floor) = Seeds(name)
       search(name, seed, floor)
     }
-    spark.stop()
   }
 }

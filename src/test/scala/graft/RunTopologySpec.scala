@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -16,7 +15,7 @@ import graft.streaming.StreamOps
 class RunTopologySpec extends SparkSpec {
   import spark.implicits._
 
-  private def ckpt() = Files.createTempDirectory("graft-run-spec").toString
+  private def ckpt() = tempDir("graft-run-spec")
   private def at(s: String) = Timestamp.valueOf(s)
 
   test("Run wordcount --ttl evicts a silent word's count; " +
@@ -1032,7 +1031,7 @@ class RunTopologySpec extends SparkSpec {
       ((0 until 15).map(j => v((i + j * 3) % v.length)).mkString(" "),
         if (i % 2 == 0) "en" else "xx")
     }
-    val dir = java.nio.file.Files.createTempDirectory("trained-gate").toString
+    val dir = tempDir("trained-gate")
     docs.zipWithIndex.map { case ((t, l), i) => (i.toLong, t, l) }
       .toDF("doc_id", "text", "lang")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")

@@ -1,11 +1,12 @@
 package graft
 
+import java.nio.file.{Files, Path}
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
+import org.scalatest.{BeforeAndAfterAll, Outcome}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for specs (one per suite; cheap on local[*]). */
@@ -19,6 +20,23 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     // managed tables (bucketing specs) land under target/, not the repo root
     .config("spark.sql.warehouse.dir", "target/spark-warehouse")
     .getOrCreate()
+
+  private val testDirs = scala.collection.mutable.ArrayBuffer.empty[Path]
+
+  /** A new temp directory `prefix*`, deleted with everything under it
+   *  when the running test ends. */
+  def tempDir(prefix: String): String = {
+    val dir = Files.createTempDirectory(prefix)
+    testDirs += dir
+    dir.toString
+  }
+
+  override def withFixture(test: NoArgTest): Outcome =
+    try super.withFixture(test)
+    finally {
+      testDirs.foreach(d => org.apache.commons.io.FileUtils.deleteQuietly(d.toFile))
+      testDirs.clear()
+    }
 
   /** `body`'s result and the number of Spark jobs it started, counted
    *  with a listener between two listener-bus drains. */

@@ -4,9 +4,11 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.analysis.UnsupportedOperationChecker
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
+import graft.ops.DedupOps
 import graft.sources.{Generators, ThrottledSeqSource}
 import graft.streaming.StreamOps
 
@@ -87,5 +89,56 @@ class TopologiesSpec extends SparkSpec {
     test(s"$name runs a trigger over random messages and emits rows") {
       assert(emitted(name, Generators.randomMessageFeed, lit(true), n = 200) > 0)
     }
+  }
+
+  test("cluster_assign: each of two triggers over its own feed equals a " +
+      "full connected-components recompute over the demo history and " +
+      "that trigger's docs") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val entry = Topologies("cluster_assign")
+    def lines(indexes: DataFrame) = Generators.feedLines(
+      indexes.select(current_timestamp().as("ts"), col("value")), entry.feed)
+    def assignment(df: DataFrame): Map[Long, Long] = {
+      val rows = df.collect().map(r => r.getLong(0) -> r.getLong(1))
+      assert(rows.map(_._1).distinct.length == rows.length,
+        "one row per doc_id")
+      rows.toMap
+    }
+    val hist = spark.read.parquet(s"${Topologies.DemoSfDir}/documents.parquet")
+      .select(col("doc_id"), col("text"))
+    def recompute(docs: DataFrame): Map[Long, Long] = {
+      val all = hist.unionByName(docs)
+      assignment(DedupOps.connectedComponents(
+        DedupOps.minhashNearDups(all, col("doc_id"), col("text"), 0.5)
+          .select("id1", "id2"),
+        all.select(col("doc_id").as("id"))))
+    }
+    val in = MemoryStream[Long]
+    val form = entry.build(spark, lines(in.toDF()), noOptions) match {
+      case Topologies.PerTrigger(_, f) => f
+      case other => fail(s"cluster_assign is a per-trigger form, got $other")
+    }
+    val emitted = scala.collection.mutable.Map[Long, Map[Long, Long]]()
+    val q = form.start(tempDir("graft-topo-ca")) { (df, id) =>
+      emitted(id) = assignment(df)
+    }
+    try {
+      Seq(0L until 400L, 400L until 800L).zipWithIndex.foreach {
+        case (idx, t) =>
+          in.addData(idx)
+          q.processAllAvailable()
+          val docs = lines(idx.toDF("value"))
+            .select(xxhash64(col("value")).as("doc_id"), col("value").as("text"))
+          val want = recompute(docs)
+          assert(emitted(t.toLong) == want, s"trigger $t")
+          // the feed's near-dup families put trigger docs into shared
+          // clusters, so the check is not over singletons only
+          val ids = docs.select("doc_id").as[Long].collect().toSet
+          assert(want.filter(e => ids(e._1)).values.groupBy(identity)
+            .exists(_._2.size > 1), s"trigger $t: no multi-doc cluster")
+      }
+      assert(emitted.keySet == Set(0L, 1L))
+    } finally q.stop()
   }
 }

@@ -901,53 +901,6 @@ object EngineProps extends Properties("graft") {
       }
     }
 
-  // ---- cluster-state manifest codec (the r16 commit-log) -------------------
-
-  private val tableGen = Gen.oneOf(
-    graft.streaming.ClusterStateManifest.Tables)
-  private val entryGen = for {
-    v <- Gen.choose(0L, 1000000L)
-    g <- Gen.choose(0L, 64L)
-  } yield (v, g)
-  private val manifestGen = for {
-    floors <- Gen.mapOf(tableGen.flatMap(t =>
-      Gen.choose(-1L, 1000L).map(t -> _)))
-    gens <- Gen.mapOf(tableGen.flatMap(t =>
-      Gen.choose(0L, 64L).map(t -> _)))
-    bands <- Gen.listOf(entryGen)
-    shingles <- Gen.listOf(entryGen)
-    retired <- Gen.listOf(for {
-      t <- tableGen
-      v <- Gen.choose(0L, 1000000L)
-      g <- Gen.choose(0L, 64L)
-    } yield (t, v, g))
-  } yield graft.streaming.ClusterStateManifest(
-    floors, gens,
-    Map("bands" -> bands.distinctBy(_._1).sortBy(_._1),
-      "shingles" -> shingles.distinctBy(_._1).sortBy(_._1)),
-    retired.distinct)
-
-  property("cluster-state manifest render/parse round-trips EXACTLY, " +
-      "and any truncation that loses the eof terminator parses as " +
-      "absent (torn = never committed)") =
-    forAll(manifestGen) { m =>
-      import graft.streaming.ClusterStateManifest
-      val text = ClusterStateManifest.render(m)
-      val roundTrip = ClusterStateManifest.parse(text).contains(m)
-      // cut anywhere inside the terminator line (or earlier): either
-      // the parse rejects it outright, or — when the cut lands on a
-      // whole earlier prefix — it must NOT produce a manifest, because
-      // eof=true is gone
-      // NOTE: render ends "eof=true\n" — a len-1 cut only drops the
-      // trailing newline and the terminator LINE survives, so every
-      // cut here must bite into (or drop) the terminator itself
-      val cuts = Seq(text.length - 2, text.length - 6,
-        math.max(text.indexOf('\n'), 1), text.length / 2)
-      val tornRejected = cuts.forall(c =>
-        ClusterStateManifest.parse(text.take(c)).isEmpty)
-      roundTrip && tornRejected
-    }
-
   // ---- NB langid kernel: code-point bigram walk ----------------------------
 
   private val uniCharGen: Gen[String] = Gen.frequency(

@@ -196,7 +196,7 @@ class AiffRemuxSpec extends SparkSpec {
     val q = StreamOps.toMemory(
       gated.select("clip_id", "decision", "matched_id", "hamming"),
       "audio_gate_aiff_test", OutputMode.Append,
-      java.nio.file.Files.createTempDirectory("graft-ckpt").toString)
+      tempDir("graft-ckpt"))
     try {
       in.addData((0 to M).map(i =>
         (7000L + i, AiffRemuxFixture.aiffBytes(i))).toIndexedSeq)

@@ -75,7 +75,7 @@ class AudioNeardupSpec extends SparkSpec {
     val q = StreamOps.toMemory(
       gated.select("clip_id", "decision", "matched_id", "hamming"),
       "audio_gate_test", OutputMode.Append,
-      java.nio.file.Files.createTempDirectory("graft-ckpt").toString)
+      tempDir("graft-ckpt"))
     try {
       in.addData(
         (0 until N).map(i =>

@@ -145,7 +145,7 @@ class AudioRemuxSpec extends SparkSpec {
     val q = StreamOps.toMemory(
       gated.select("clip_id", "decision", "matched_id", "hamming"),
       "audio_gate_remux_test", OutputMode.Append,
-      java.nio.file.Files.createTempDirectory("graft-ckpt").toString)
+      tempDir("graft-ckpt"))
     try {
       in.addData((0 until M).map(i =>
         (6000L + i, AudioRemuxFixture.audioBytes(M + i))).toIndexedSeq)

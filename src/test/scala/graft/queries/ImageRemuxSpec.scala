@@ -166,7 +166,7 @@ class ImageRemuxSpec extends SparkSpec {
     val q = StreamOps.toMemory(
       gated.select("img_id", "decision", "matched_id", "hamming"),
       "phash_gate_remux_test", OutputMode.Append,
-      java.nio.file.Files.createTempDirectory("graft-ckpt").toString)
+      tempDir("graft-ckpt"))
     try {
       in.addData((0 until 2 * M).map(i =>
         (5000L + i, ImageRemuxFixture.imageBytes(M + i))).toIndexedSeq)

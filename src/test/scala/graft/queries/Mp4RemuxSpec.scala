@@ -173,7 +173,7 @@ class Mp4RemuxSpec extends SparkSpec {
     val q = StreamOps.toMemory(
       gated.select("clip_id", "decision", "matched_id", "max_hamming"),
       "video_gate_mp4_test", OutputMode.Append,
-      java.nio.file.Files.createTempDirectory("graft-ckpt").toString)
+      tempDir("graft-ckpt"))
     try {
       in.addData((0 to M).map(i =>
         (6000L + i, Mp4RemuxFixture.mp4Bytes(i))).toIndexedSeq)

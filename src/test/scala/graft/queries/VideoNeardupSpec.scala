@@ -113,8 +113,7 @@ class VideoNeardupSpec extends SparkSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import org.apache.spark.sql.streaming.OutputMode
     import graft.streaming.StreamOps
-    def ckpt() = java.nio.file.Files
-      .createTempDirectory("graft-ckpt").toString
+    def ckpt() = tempDir("graft-ckpt")
     implicit val sqlCtx = spark.sqlContext
     val N = VideoDupFixture.N
     val (w2, h2) = VideoDupFixture.dims(2)

@@ -132,7 +132,7 @@ class VideoRemuxSpec extends SparkSpec {
     val q = StreamOps.toMemory(
       gated.select("clip_id", "decision", "matched_id", "max_hamming"),
       "video_gate_remux_test", OutputMode.Append,
-      java.nio.file.Files.createTempDirectory("graft-ckpt").toString)
+      tempDir("graft-ckpt"))
     try {
       in.addData((0 until M).map(i =>
         (5000L + i, VideoRemuxFixture.videoBytes(M + i))).toIndexedSeq)

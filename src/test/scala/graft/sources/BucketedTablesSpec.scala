@@ -174,71 +174,4 @@ class BucketedTablesSpec extends SparkSpec {
       assert(got == want && got.nonEmpty)
     }
   }
-
-  test("cluster-assign ingest: the stored history band table bucketed " +
-      "on (band, bh) joins bucket-local — only the batch side shuffles") {
-    // the 100 TB claim in StreamOps.clusterAssignStream /
-    // DedupOps.incrementalClusterAssignPre made concrete: the
-    // persisted derived state rides the composite-key bucket layout,
-    // so steady-state ingest pays no history-side exchange on the
-    // candidate join — the same proof the near-dup admit path carries,
-    // extended to the (band, bh) two-column key the cluster path uses
-    dropTable("ca_bands_hist_b")
-    import graft.ops.DedupOps
-    val docs = Tables.documents(spark, sfDir)
-    val hist = docs.filter(col("doc_id") % 5 =!= 0)
-    val batch = docs.filter(col("doc_id") % 5 === 0)
-    BucketedTables.writeBucketedKeys(
-      DedupOps.clusterBandKeys(hist, col("doc_id"), col("text")),
-      "ca_bands_hist_b", Seq("band", "bh"), buckets = 4)
-    withNoBroadcast {
-      val fb = DedupOps.clusterBandKeys(batch, col("doc_id"), col("text"))
-      // the exact histCand shape from incrementalClusterAssignPre
-      def candidates(hb: org.apache.spark.sql.DataFrame) =
-        fb.as("x").join(hb.as("y"),
-            col("x.band") === col("y.band") && col("x.bh") === col("y.bh"))
-          .select(col("x.id").as("fid"), col("y.id").as("oid")).distinct()
-      val bucketed = candidates(spark.table("ca_bands_hist_b"))
-      val inPlan = candidates(
-        DedupOps.clusterBandKeys(hist, col("doc_id"), col("text")))
-      def nEx(p: String) = "Exchange hashpartitioning".r.findAllIn(p).size
-      val pB = bucketed.queryExecution.executedPlan.toString
-      val pI = inPlan.queryExecution.executedPlan.toString
-      // in-plan history pays exactly its join-side shuffle (since r21
-      // the signature is a row-local kernel — no minhash agg exchange
-      // on either form); the bucket layout erases that one exchange
-      assert(nEx(pB) == nEx(pI) - 1,
-        s"bucketed history must erase exactly its join exchange " +
-          s"(got ${nEx(pB)} vs in-plan ${nEx(pI)}):\n" + pB)
-      assert(pB.contains("Bucketed: true"),
-        "history scan must report its bucket layout:\n" + pB)
-      // layout is semantics-free: same candidate pairs
-      val got = bucketed.as[(Long, Long)].collect().toSet
-      val want = inPlan.as[(Long, Long)].collect().toSet
-      assert(got == want && got.nonEmpty)
-    }
-  }
-
-  test("partitioned layout prunes non-matching partitions at the scan") {
-    val path = "target/part-events"
-    val byType = Tables.events(spark, sfDir)
-      .select("event_id", "user_id", "event_type", "value")
-    BucketedTables.writePartitioned(byType, path, "event_type")
-    val scan = spark.read.parquet(path).filter(col("event_type") === "click")
-    val plan = scan.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") &&
-      (plan.contains("isnotnull(event_type") || plan.contains("event_type#")),
-      "expected partition filters in scan:\n" + plan)
-    // pruning is observable: only the click directory is listed
-    val parts = new java.io.File(path).listFiles()
-      .filter(_.getName.startsWith("event_type=")).map(_.getName).toSet
-    assert(parts.size > 1, s"expected multiple partition dirs, got $parts")
-    assert(scan.count() ==
-      byType.filter(col("event_type") === "click").count())
-    // the scan's selected partitions metadata shows 1 of N
-    val fileScan = scan.queryExecution.executedPlan.collectLeaves()
-      .collectFirst { case f: org.apache.spark.sql.execution.FileSourceScanExec => f }
-    assert(fileScan.nonEmpty)
-    assert(fileScan.get.metadata("PartitionFilters").contains("event_type"))
-  }
 }

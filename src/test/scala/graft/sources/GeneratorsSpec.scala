@@ -39,9 +39,11 @@ class GeneratorsSpec extends SparkSpec {
 
   test("indexedLines + cyclic replay indexing") {
     val f = Files.createTempFile("graft-lines", ".txt")
-    Files.writeString(f, "line a\nline b\nline c\n")
-    val lines = Generators.indexedLines(spark, f.toString)
-    val m = lines.as[(Long, String)].collect().toMap
-    assert(m == Map(0L -> "line a", 1L -> "line b", 2L -> "line c"))
+    try {
+      Files.writeString(f, "line a\nline b\nline c\n")
+      val lines = Generators.indexedLines(spark, f.toString)
+      val m = lines.as[(Long, String)].collect().toMap
+      assert(m == Map(0L -> "line a", 1L -> "line b", 2L -> "line c"))
+    } finally Files.deleteIfExists(f)
   }
 }

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -14,7 +13,7 @@ import graft.ops.TextOps
 class StreamOpsSpec extends SparkSpec {
   import spark.implicits._
 
-  private def ckpt() = Files.createTempDirectory("graft-ckpt").toString
+  private def ckpt() = tempDir("graft-ckpt")
 
   test("runningCount under update mode matches WordCount per-trigger totals") {
     implicit val sqlCtx = spark.sqlContext
@@ -274,8 +273,8 @@ class StreamOpsSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2)))
     val in = MemoryStream[(Long, String, String)]
     val q = StreamOps.toMemory(
-      StreamOps.mixSampleStream(
-        in.toDF().toDF("doc_id", "source", "text"), corpus),
+      StreamOps.mixSampleGate(in.toDF().toDF("doc_id", "source", "text"),
+        StreamOps.mixThresholdEntries(corpus)),
       "mix_sample_test", OutputMode.Append, ckpt())
     try {
       val (a, b) = rows.splitAt(rows.length / 2)
@@ -804,38 +803,6 @@ class StreamOpsSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("packSequencesStream carries the per-source token offset across " +
-      "triggers: assignments match the batch packing on ordered arrival") {
-    import graft.queries.PipelineQueries
-    implicit val sqlCtx = spark.sqlContext
-    val sfDir = "/root/testdata/sf0.001"
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      .select("doc_id", "source", "text").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2)))
-      .sortBy(_._1) // per-source-ordered arrival (ids are total order)
-    val in = MemoryStream[(Long, String, String)]
-    val q = StreamOps.toMemory(
-      StreamOps.packSequencesStream(
-        in.toDF().toDF("doc_id", "source", "text"),
-        PipelineQueries.PackTokens),
-      "pack_test", OutputMode.Append, ckpt())
-    try {
-      // three triggers: the running offset must survive the batch cuts
-      docs.grouped(math.max(docs.length / 3, 1)).foreach { chunk =>
-        in.addData(chunk.toIndexedSeq); q.processAllAvailable()
-      }
-      val got = spark.table("pack_test")
-        .select("doc_id", "source", "n_tokens", "seq_id").collect()
-        .map(r => r.getLong(0) -> (r.getString(1), r.getLong(2), r.getLong(3)))
-        .toMap
-      val expected = PipelineQueries.packSequences(spark, sfDir)
-        .select("doc_id", "source", "n_tokens", "seq_id").collect()
-        .map(r => r.getLong(0) -> (r.getString(1), r.getLong(2), r.getLong(3)))
-        .toMap
-      assert(expected.nonEmpty && got == expected)
-    } finally q.stop()
-  }
-
   test("curateStream: enrich + filter + dedup match batch curation semantics") {
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(Timestamp, Long, String)]
@@ -856,31 +823,6 @@ class StreamOpsSpec extends SparkSpec {
       q.processAllAvailable()
       val ids = spark.table("cur_test").select("doc_id").as[Long].collect().toSet
       assert(ids == Set(1L)) // es doc filtered, short doc filtered, dup dropped
-    } finally q.stop()
-  }
-
-  test("streamingTopK: per-trigger neighbors match the batch operator") {
-    implicit val sqlCtx = spark.sqlContext
-    val corpus = Seq(
-      (0L, Seq(1.0f, 0.0f)), (1L, Seq(0.9f, 0.1f)),
-      (2L, Seq(0.0f, 1.0f)), (3L, Seq(-1.0f, 0.0f)))
-      .toDF("vec_id", "embedding")
-    val in = MemoryStream[(Long, Seq[Float])]
-    val results = scala.collection.mutable.ArrayBuffer[(Long, Long, Long)]()
-    val q = StreamOps.streamingTopK(
-      in.toDF().toDF("query_id", "embedding"), corpus, k = 2, ckpt()) {
-      (batch, _) =>
-        results ++= batch.select("query_id", "rank", "neighbor_id")
-          .as[(Long, Long, Long)].collect()
-    }
-    try {
-      in.addData((100L, Seq(1.0f, 0.05f)))
-      q.processAllAvailable()
-      // nearest to (1, .05): vec 0, then vec 1
-      assert(results.toList == List((100L, 1L, 0L), (100L, 2L, 1L)))
-      in.addData((200L, Seq(0.0f, 1.0f)))
-      q.processAllAvailable()
-      assert(results.exists { case (qid, r, n) => qid == 200L && r == 1L && n == 2L })
     } finally q.stop()
   }
 
@@ -976,57 +918,6 @@ class StreamOpsSpec extends SparkSpec {
     assert(e.getMessage.contains("empty docs corpus"), e.getMessage)
   }
 
-  test("streamingTopKIvfPq: per-trigger neighbors equal the gated batch " +
-      "operator on replayed corpus vectors — the index built once, " +
-      "floats never re-read at serve time") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.queries.PipelineQueries._
-    val corpus = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-      .select("vec_id", "embedding")
-    val qids = SimQueryIds
-    val want = graft.ops.SimilarityOps.ivfPqTopK(corpus, qids, SimK,
-      dim = EmbeddingDim, nCells = KmCells, nProbe = KmProbe,
-      m = PqM, ks = PqKs, iters = KmIters)
-      .select("query_id", "rank", "neighbor_id")
-      .as[(Long, Long, Long)].collect().toSet
-    val qvecs = corpus.filter(col("vec_id").isInCollection(qids))
-      .as[(Long, Array[Float])].collect()
-    val in = MemoryStream[(Long, Array[Float])]
-    val results = scala.collection.mutable.Set[(Long, Long, Long)]()
-    val q = StreamOps.streamingTopKIvfPq(
-      in.toDF().toDF("query_id", "embedding"), corpus, SimK,
-      dim = EmbeddingDim, nCells = KmCells, nProbe = KmProbe,
-      m = PqM, ks = PqKs, iters = KmIters, checkpoint = ckpt()) {
-      (batch, _) =>
-        results ++= batch.select("query_id", "rank", "neighbor_id")
-          .as[(Long, Long, Long)].collect()
-    }
-    try {
-      // two triggers: the index must serve both without rebuilding
-      val (a, b) = qvecs.splitAt(qvecs.length / 2)
-      in.addData(a.toIndexedSeq); q.processAllAvailable()
-      in.addData(b.toIndexedSeq); q.processAllAvailable()
-      assert(results.toSet == want,
-        s"stream must equal the gated batch IVFADC results: " +
-          s"extra=${results.toSet diff want} missing=${want diff results.toSet}")
-      // serving-boundary hygiene: a duplicated query id collapses to
-      // ONE ranked list (k rows, k distinct neighbors, not doubles)
-      // and a wrong-width vector quarantines instead of killing the
-      // topology
-      results.clear()
-      val dupQ = qvecs.head
-      in.addData(dupQ, dupQ, (999L, Array.fill(3)(0.5f)))
-      q.processAllAvailable()
-      val perQ = results.toSeq.filter(_._1 == dupQ._1)
-      assert(perQ.map(_._2).sorted == (1L to SimK.toLong),
-        s"duplicate ids must serve one clean rank list: $perQ")
-      assert(perQ.map(_._3).distinct.size == SimK,
-        s"neighbors must be distinct, not doubled: $perQ")
-      assert(!results.exists(_._1 == 999L),
-        "a wrong-width vector must quarantine, yielding no rows")
-    } finally q.stop()
-  }
-
   test("stateless text-analysis ops run unchanged under streaming") {
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[String]
@@ -1078,65 +969,12 @@ class StreamOpsSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("temporalAsOf: probes match latest prior build, state spans batches") {
-    implicit val sqlCtx = spark.sqlContext
-    import StreamOps.{Timed, TemporalMatch}
-    val in = MemoryStream[Timed]
-    val q = StreamOps.temporalAsOf(in.toDS()).toDF()
-      .writeStream.format("memory").queryName("ta_join")
-      .outputMode(OutputMode.Append).option("checkpointLocation", ckpt()).start()
-    try {
-      in.addData(
-        Timed(1L, 10L, 100L, isBuild = true),
-        Timed(1L, 10L, 101L, isBuild = true), // tie -> larger id wins
-        Timed(1L, 10L, 500L, isBuild = false), // equal ts matches (<=)
-        Timed(1L, 5L, 501L, isBuild = false), // before any build -> drops
-        Timed(2L, 99L, 502L, isBuild = false)) // key with no build -> drops
-      q.processAllAvailable()
-      // batch 2: probe must see the build kept in state from batch 1
-      in.addData(Timed(1L, 20L, 503L, isBuild = false))
-      q.processAllAvailable()
-      // batch 3: stale build must not regress state
-      in.addData(
-        Timed(1L, 7L, 102L, isBuild = true),
-        Timed(1L, 30L, 504L, isBuild = false))
-      q.processAllAvailable()
-      val out = spark.table("ta_join")
-        .select("probeId", "buildId", "buildTs")
-        .as[(Long, Long, Long)].collect().toSet
-      assert(out == Set(
-        (500L, 101L, 10L),
-        (503L, 101L, 10L),
-        (504L, 101L, 10L)))
-    } finally q.stop()
-  }
-
-  test("latestPositions keyed state: newest posTime wins across batches") {
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[AdsbPosition]
-    val q = StreamOps.toMemory(
-      StreamOps.latestPositions(in.toDS()).toDF(),
-      "lp_test", OutputMode.Update, ckpt())
-    try {
-      in.addData(AdsbPosition("A", 100L, 40.0, -73.0, 300.0, 90.0))
-      q.processAllAvailable()
-      in.addData(
-        AdsbPosition("A", 50L, 41.0, -75.0, 310.0, 180.0), // stale -> ignored
-        AdsbPosition("B", 10L, 42.0, -70.0, 250.0, 45.0))
-      q.processAllAvailable()
-      val latest = spark.table("lp_test").as[AdsbPosition].collect()
-        .groupBy(_.icao).map { case (k, vs) => k -> vs.last }
-      assert(latest("A").posTime == 100L && latest("A").lat == 40.0)
-      assert(latest("B").posTime == 10L)
-    } finally q.stop()
-  }
-
   test("proximityWarnings: cumulative state joins across triggers") {
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[AdsbPosition]
     @volatile var pairs: Set[(String, String)] = Set.empty
     val q = StreamOps.proximityWarnings(in.toDS(), thresholdKm = 20.0,
-      steps = 1, stepSec = 5, Files.createTempDirectory("graft-state").toString)
+      steps = 1, stepSec = 5, tempDir("graft-state"))
       .start(ckpt(), Trigger.ProcessingTime("1 second")) { (warnings, _) =>
       pairs = warnings.select("icao1", "icao2")
         .as[(String, String)].collect().toSet
@@ -1157,7 +995,7 @@ class StreamOpsSpec extends SparkSpec {
 
   test("proximityWarnings: snapshot state survives a restarted query") {
     implicit val sqlCtx = spark.sqlContext
-    val stateDir = Files.createTempDirectory("graft-state-restart").toString
+    val stateDir = tempDir("graft-state-restart")
     @volatile var pairs: Set[(String, String)] = Set.empty
     def launch(in: MemoryStream[AdsbPosition]) =
       StreamOps.proximityWarnings(in.toDS(), thresholdKm = 20.0,
@@ -1206,493 +1044,5 @@ class StreamOpsSpec extends SparkSpec {
       val lastEmit = rows.takeRight(3).map { case (_, rn, v) => (rn, v) }.toSet
       assert(lastEmit == Set((1L, 2.0), (2L, 5.0), (3L, 8.0)), s"got ${rows.toSeq}")
     } finally q.stop()
-  }
-
-  test("clusterAssignStream: the per-trigger state frame equals a full " +
-      "CC recompute over everything ingested — adoption in trigger 2, " +
-      "a cross-history merge in trigger 3") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.ops.DedupOps
-    def filler(tag: String, n: Int): String =
-      (1 to n).map(i => s"$tag$i").mkString(" ")
-    // the DedupOpsSpec overlap-segment topology: X = A++C, Y = C++B
-    // are separate clusters (J ≈ 0.31); Z = A++C++B merges them
-    // (J(Z, ·) ≈ 0.66)
-    val a = filler("alpha", 24); val c = filler("mid", 24)
-    val b = filler("beta", 24)
-    val x = s"$a $c"; val y = s"$c $b"
-    val batch1 = Seq((10L, x), (20L, y), (40L, filler("solo", 20)))
-    val batch2 = Seq((11L, s"$x hc hd"), (21L, s"$y hg hh")) // adoption
-    val batch3 = Seq((100L, s"$a $c $b")) // merges 10 and 20
-    val statePath = Files.createTempDirectory("graft-castate").toString
-    val in = MemoryStream[(Long, String)]
-    val emitted = scala.collection.mutable.Map[Long, Map[Long, Long]]()
-    val q = StreamOps.clusterAssignStream(
-      in.toDF().toDF("doc_id", "text"), statePath, ckpt()) { (df, id) =>
-      emitted(id) = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    }
-    def stateFrame(): Map[Long, Long] = {
-      val vs = new java.io.File(statePath).listFiles.map(_.getName)
-        .filter(_.startsWith("v")).map(_.drop(1).toLong).sorted
-      spark.read.parquet(s"$statePath/v${vs.last}/clusters")
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    }
-    def fullRecompute(docs: Seq[(Long, String)]): Map[Long, Long] = {
-      val df = docs.toDF("doc_id", "text")
-      DedupOps.connectedComponents(
-        DedupOps.minhashNearDups(df, col("doc_id"), col("text"), 0.5)
-          .select("id1", "id2"),
-        df.select(col("doc_id").as("id")))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    }
-    try {
-      in.addData(batch1.toIndexedSeq); q.processAllAvailable()
-      assert(stateFrame() == fullRecompute(batch1))
-      in.addData(batch2.toIndexedSeq); q.processAllAvailable()
-      val s2 = stateFrame()
-      assert(s2 == fullRecompute(batch1 ++ batch2))
-      assert(s2(11L) == 10L && s2(21L) == 20L, s"adoption: $s2")
-      in.addData(batch3.toIndexedSeq); q.processAllAvailable()
-      val s3 = stateFrame()
-      assert(s3 == fullRecompute(batch1 ++ batch2 ++ batch3))
-      // the merge relabeled BOTH history clusters to the union minimum
-      assert(s3(100L) == 10L && s3(20L) == 10L && s3(21L) == 10L,
-        s"merge: $s3")
-      assert(s3(40L) == 40L, "the singleton stayed untouched")
-      // emitted rows are each batch's ingest-time assignment
-      assert(emitted.values.map(_.keySet).reduce(_ ++ _) ==
-        (batch1 ++ batch2 ++ batch3).map(_._1).toSet,
-        s"every doc assigned exactly once across triggers: $emitted")
-      assert(emitted.maxBy(_._1)._2 == Map(100L -> 10L),
-        s"the merger's ingest-time assignment: $emitted")
-      // trigger 4: a RE-INGESTED doc_id (at-least-once upstream) plus
-      // a genuinely new doc — the duplicate is dropped by the
-      // admission anti-join (no duplicate (doc_id, cluster) state
-      // rows), state equals the recompute over DISTINCT docs, and the
-      // sink still reports the re-ingested id's current cluster
-      in.addData(Seq((10L, x), (200L, filler("zeta", 20))))
-      q.processAllAvailable()
-      val s4 = stateFrame()
-      assert(s4 == fullRecompute(
-        batch1 ++ batch2 ++ batch3 ++ Seq((200L, filler("zeta", 20)))))
-      val lastVersion = new java.io.File(statePath).listFiles
-        .map(_.getName).filter(_.startsWith("v"))
-        .map(_.drop(1).toLong).max
-      val stateRows = spark.read
-        .parquet(s"$statePath/v$lastVersion/clusters")
-        .groupBy("doc_id").count().filter(col("count") > 1).count()
-      assert(stateRows == 0, "re-ingest must not duplicate state rows")
-      assert(emitted(lastVersion) == Map(10L -> 10L, 200L -> 200L),
-        s"sink reports the re-ingested id's CURRENT cluster: $emitted")
-      // superseded cluster snapshots are pruned to the current + one
-      // prior (retry safety); docs stay append-only for every version
-      val dirs = new java.io.File(statePath).listFiles
-        .filter(_.getName.startsWith("v")).sortBy(_.getName.drop(1).toLong)
-      assert(dirs.length == 4, s"four versions: ${dirs.toSeq}")
-      val withClusters = dirs.filter(d =>
-        new java.io.File(d, "clusters").exists).map(_.getName)
-      assert(withClusters.sameElements(dirs.takeRight(2).map(_.getName)),
-        s"cluster state must be bounded at the last two frames: " +
-          s"${withClusters.toSeq}")
-      assert(dirs.forall(d => new java.io.File(d, "docs").exists),
-        "docs are append-only history, never pruned")
-      // INCREMENTAL COST, pinned at the plan: a trigger's assignment
-      // reads history as the STORED band/shingle tables (one
-      // partitioned scan each, version-filtered) and the cluster
-      // snapshot — history DOCS never appear in the plan, so history
-      // text is provably never re-shingled or re-minhashed
-      val versions = StreamOps.clusterAssignVersions(
-        spark, statePath, lastVersion + 1)
-      val trig = StreamOps.clusterAssignTrigger(
-        spark, statePath, lastVersion + 1,
-        Seq((300L, "probe text only")).toDF("doc_id", "text"),
-        StreamOps.clusterAssignHistClusters(spark, statePath, versions), 0.5)
-      val plan = trig.queryExecution.executedPlan.toString
-      assert(!plan.contains("/docs"),
-        "per-trigger plan must never scan history docs:\n" + plan)
-      assert(plan.contains("/bands") && plan.contains("/shingles"),
-        "per-trigger plan must read the stored derived state:\n" + plan)
-      assert(plan.contains("PartitionFilters") && plan.contains("version"),
-        "stored-state reads must partition-filter on version:\n" + plan)
-      // MAINTENANCE COMPACTION: folding all derived-state partitions
-      // <= upTo into one changes NOTHING a trigger computes — same
-      // probe batch, identical assignment — while the partition-dir
-      // count (the per-trigger discovery cost) drops to the retained
-      // window
-      def probeAssign(): Map[Long, Long] = StreamOps.clusterAssignTrigger(
-        spark, statePath, lastVersion + 1,
-        Seq((300L, x)).toDF("doc_id", "text"),
-        StreamOps.clusterAssignHistClusters(spark, statePath,
-          StreamOps.clusterAssignVersions(spark, statePath, lastVersion + 1)),
-        0.5).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val before = probeAssign()
-      assert(before(300L) == 10L, s"the probe doc adopts doc 10's cluster: $before")
-      StreamOps.compactClusterState(spark, statePath, lastVersion - 1)
-      assert(probeAssign() == before,
-        "compaction must not change any trigger result")
-      // the fold is PUBLISHED in the manifest (live = the fold + the
-      // retained tail) while the superseded directories are only
-      // RETIRED — still on disk for the in-flight-reader grace window
-      val m1 = StreamOps.readClusterManifest(spark, statePath).get
-      Seq("bands", "shingles").foreach { t =>
-        assert(m1.liveOf(t).map(_._1) ==
-          Seq(lastVersion - 1, lastVersion),
-          s"$t live versions after compaction: ${m1.liveOf(t)}")
-      }
-      def retiredDir(e: (String, Long, Long)): java.io.File =
-        new java.io.File(
-          StreamOps.clusterPartDir(statePath, e._1, e._2, e._3))
-      assert(m1.retired.nonEmpty && m1.retired.forall(retiredDir(_).exists),
-        s"retired dirs linger until the next compaction: ${m1.retired}")
-      // a re-run (the crash-recovery path) folds nothing new, SWEEPS
-      // the retired directories, and converges to the same results
-      StreamOps.compactClusterState(spark, statePath, lastVersion - 1)
-      assert(probeAssign() == before)
-      val m2 = StreamOps.readClusterManifest(spark, statePath).get
-      assert(m2.retired.isEmpty && m2.live == m1.live,
-        s"the sweep clears retired and folds nothing new: $m2")
-      assert(m1.retired.forall(e => !retiredDir(e).exists),
-        "the next compaction sweeps the retired dirs")
-      Seq("bands", "shingles").foreach { t =>
-        val parts = new java.io.File(s"$statePath/$t").listFiles
-          .map(_.getName).filter(_.startsWith("version=")).sorted
-        assert(parts.sameElements(
-          Seq(s"version=${lastVersion - 1}", s"version=$lastVersion")),
-          s"$t partitions after the sweep: ${parts.toSeq}")
-      }
-      // the retry window is enforced
-      intercept[IllegalArgumentException] {
-        StreamOps.compactClusterState(spark, statePath, lastVersion)
-      }
-      ()
-    } finally {
-      q.stop()
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(statePath))
-    }
-  }
-
-  test("clusterAssignStream: a legacy statePath (docs-only, no derived " +
-      "band/shingle state) is backfilled on the first trigger instead " +
-      "of silently reading empty history") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.ops.DedupOps
-    def filler(tag: String, n: Int): String =
-      (1 to n).map(i => s"$tag$i").mkString(" ")
-    val a = filler("alpha", 24); val c = filler("mid", 24)
-    val x = s"$a $c"
-    // hand-write the PRE-derived-state layout: v0/docs + v0/clusters,
-    // no bands/ or shingles/ directories
-    val statePath = Files.createTempDirectory("graft-calegacy").toString
-    val legacy = Seq((10L, x), (40L, filler("solo", 20)))
-    legacy.toDF("doc_id", "text").write.parquet(s"$statePath/v0/docs")
-    Seq((10L, 10L), (40L, 40L)).toDF("doc_id", "cluster")
-      .write.parquet(s"$statePath/v0/clusters")
-    // migration happens under the stream's ORIGINAL checkpoint (batch
-    // ids continue past the existing versions), so exercise the
-    // trigger units at id=1 directly — a fresh MemoryStream checkpoint
-    // would restart ids at 0 and never see v0 by the version contract
-    val versions = StreamOps.clusterAssignVersions(spark, statePath, 1L)
-    assert(versions.sameElements(Array(0L)))
-    StreamOps.ensureDerivedClusterState(spark, statePath, versions)
-    Seq("bands", "shingles").foreach { t =>
-      assert(new java.io.File(s"$statePath/$t/version=0/gen=0").exists,
-        s"legacy version 0 must be backfilled into $t")
-    }
-    // the backfill is COMMITTED — the manifest lists it live
-    val m0 = StreamOps.readClusterManifest(spark, statePath).get
-    Seq("bands", "shingles").foreach(t =>
-      assert(m0.liveOf(t) == Seq((0L, 0L)), s"$t: ${m0.liveOf(t)}"))
-    // doc 11 is a near-dup of legacy doc 10 — with EMPTY history it
-    // would become its own cluster; with backfilled history it adopts
-    val assigned = StreamOps.clusterAssignTrigger(spark, statePath, 1L,
-      Seq((11L, s"$x hc hd")).toDF("doc_id", "text"),
-      StreamOps.clusterAssignHistClusters(spark, statePath, versions), 0.5)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(assigned == Map(11L -> 10L, 10L -> 10L, 40L -> 40L),
-      s"legacy history must be adopted, not ignored: $assigned")
-    // idempotent: a second pass backfills nothing (no version above
-    // the newest stored partition)
-    StreamOps.ensureDerivedClusterState(spark, statePath, versions)
-    // and the STREAM path refuses this layout under a FRESH checkpoint
-    // (batch ids would restart at 0 and clobber legacy v0) — the
-    // checkpoint-marker guard fails the query loud
-    val in = MemoryStream[(Long, String)]
-    val q = StreamOps.clusterAssignStream(
-      in.toDF().toDF("doc_id", "text"), statePath, ckpt()) { (_, _) => }
-    try {
-      in.addData(Seq((500L, "fresh doc text")))
-      val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-        q.processAllAvailable()
-      }
-      def chain(t: Throwable): Seq[String] =
-        if (t == null) Nil
-        else Option(t.getMessage).toSeq ++ chain(t.getCause)
-      assert(chain(ex).exists(_.contains("resume the original checkpoint")),
-        s"expected the marker guard, got: ${chain(ex)}")
-    } finally q.stop()
-  }
-
-  test("cluster-state manifest ADOPTION: a flat pre-manifest layout is " +
-      "restructured to version=/gen= once, gaps below the lowest stored " +
-      "version are recorded as prior folds, and nothing phantom-backfills") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.ops.DedupOps
-    def filler(tag: String, n: Int): String =
-      (1 to n).map(i => s"$tag$i").mkString(" ")
-    val statePath = Files.createTempDirectory("graft-caadopt").toString
-    // docs for v0..v2; FLAT derived dirs for v1 and v2 only — v0 was
-    // folded into v1 by a legacy (pre-manifest) compaction
-    val docsByV = Map(
-      0L -> Seq((10L, filler("alpha", 24))),
-      1L -> Seq((20L, filler("beta", 24))),
-      2L -> Seq((30L, filler("gamma", 24))))
-    docsByV.foreach { case (v, docs) =>
-      docs.toDF("doc_id", "text").write.parquet(s"$statePath/v$v/docs")
-    }
-    Seq((10L, 10L), (20L, 20L), (30L, 30L)).toDF("doc_id", "cluster")
-      .write.parquet(s"$statePath/v2/clusters")
-    Seq(1L, 2L).foreach { v =>
-      val docs = (if (v == 1L) docsByV(0L) ++ docsByV(1L) else docsByV(2L))
-        .toDF("doc_id", "text")
-      DedupOps.clusterBandKeys(docs, col("doc_id"), col("text"))
-        .write.parquet(s"$statePath/bands/version=$v")
-      DedupOps.clusterShingleSets(docs, col("doc_id"), col("text"))
-        .write.parquet(s"$statePath/shingles/version=$v")
-    }
-    val m = StreamOps.adoptClusterStateLayout(spark, statePath).get
-    Seq("bands", "shingles").foreach { t =>
-      assert(m.liveOf(t) == Seq((1L, 0L), (2L, 0L)), s"$t: ${m.liveOf(t)}")
-      assert(m.floor(t) == 0L, s"v0's legacy fold sits below the floor")
-      assert(new java.io.File(s"$statePath/$t/version=1/gen=0").exists,
-        s"$t/version=1 restructured under gen=0")
-      assert(!new java.io.File(s"$statePath/$t/version=1").listFiles
-        .exists(_.getName.endsWith(".parquet")),
-        s"$t/version=1's files all moved under gen=0")
-    }
-    // adoption is once: a second call returns the committed manifest
-    assert(StreamOps.adoptClusterStateLayout(spark, statePath).contains(m))
-    // exact gap detection: v0 is folded (below floor), v1 v2 live — a
-    // backfill pass must touch NOTHING
-    StreamOps.ensureDerivedClusterState(spark, statePath,
-      Array(0L, 1L, 2L))
-    val m2 = StreamOps.readClusterManifest(spark, statePath).get
-    assert(m2.live == m.live, s"no phantom backfill of the folded v0: $m2")
-    // and the restructured store still reads correctly through a trigger
-    val assigned = StreamOps.clusterAssignTrigger(spark, statePath, 3L,
-      Seq((40L, filler("alpha", 24) + " x1 x2")).toDF("doc_id", "text"),
-      Seq((10L, 10L), (20L, 20L), (30L, 30L)).toDF("doc_id", "cluster"),
-      0.5).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(assigned(40L) == 10L,
-      s"history reads through the manifest paths: $assigned")
-  }
-
-  test("cluster-state manifest: a torn (uncommitted) partition write is " +
-      "never trusted — exact gap detection rewrites it from the docs") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.ops.DedupOps
-    def filler(tag: String, n: Int): String =
-      (1 to n).map(i => s"$tag$i").mkString(" ")
-    val statePath = Files.createTempDirectory("graft-catorn").toString
-    val docs0 = Seq((10L, filler("alpha", 24)))
-    docs0.toDF("doc_id", "text").write.parquet(s"$statePath/v0/docs")
-    StreamOps.ensureDerivedClusterState(spark, statePath, Array(0L))
-    // crash mid-ingest of v1: the docs landed, the bands write was
-    // TORN (any uncommitted content — here rows derived from docs
-    // that were never ingested), the shingles directory is missing
-    // entirely, and no manifest commit ran
-    val docs1 = Seq((20L, filler("beta", 24)))
-    docs1.toDF("doc_id", "text").write.parquet(s"$statePath/v1/docs")
-    DedupOps.clusterBandKeys(
-        Seq((999L, "garbage from a crashed writer")).toDF("doc_id", "text"),
-        col("doc_id"), col("text"))
-      .write.mode("overwrite")
-      .parquet(StreamOps.clusterPartDir(statePath, "bands", 1L, 0L))
-    // the pre-manifest gap detection trusted ANY existing directory —
-    // the garbage would have survived forever; the manifest makes the
-    // check exact (v1 is above the floor and not live => rewrite)
-    StreamOps.ensureDerivedClusterState(spark, statePath, Array(0L, 1L))
-    val want = DedupOps.clusterBandKeys(docs1.toDF("doc_id", "text"),
-        col("doc_id"), col("text"))
-      .collect().map(_.toSeq).toSet
-    val got = spark.read.parquet(
-        StreamOps.clusterPartDir(statePath, "bands", 1L, 0L))
-      .collect().map(_.toSeq).toSet
-    assert(got == want, "the torn partition must be rewritten from v1's docs")
-    val m = StreamOps.readClusterManifest(spark, statePath).get
-    Seq("bands", "shingles").foreach(t =>
-      assert(m.liveOf(t).map(_._1) == Seq(0L, 1L), s"$t: ${m.liveOf(t)}"))
-  }
-
-  test("cluster-state manifest: a torn manifest (no eof terminator) is " +
-      "invisible — readers step down a sequence and the next commit " +
-      "burns past it") {
-    val statePath = Files.createTempDirectory("graft-camani").toString
-    val m0 = StreamOps.commitClusterManifest(spark, statePath)(_ =>
-      ClusterStateManifest.empty.copy(
-        live = Map("bands" -> Seq((0L, 0L)), "shingles" -> Seq((0L, 0L)))))
-    // a writer crash mid-manifest leaves the next sequence file
-    // incomplete (no eof=true)
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(
-        s"$statePath/_manifests/${"%020d".format(1)}.manifest"),
-      "floors=\ngens=\nlive.bands=0:0,5:0\nlive.shingles=".getBytes("UTF-8"))
-    assert(StreamOps.readClusterManifest(spark, statePath).contains(m0),
-      "a torn manifest was never committed — readers use the previous")
-    val m2 = StreamOps.commitClusterManifest(spark, statePath)(prev =>
-      prev.get.copy(retired = Seq(("bands", 99L, 0L))))
-    assert(StreamOps.readClusterManifest(spark, statePath).contains(m2))
-    assert(new java.io.File(
-      s"$statePath/_manifests/${"%020d".format(2)}.manifest").exists,
-      "the torn sequence number is burned, not reused")
-  }
-
-  test("cluster-state manifest: legacy absolute-path retired entries " +
-      "parse into relative tuples, and an unreadable newest candidate " +
-      "(pruning racing the open) steps down like a torn one") {
-    val statePath = Files.createTempDirectory("graft-camlegacy").toString
-    // the pre-tuple on-disk form: absolute partition paths joined on '|'
-    val legacy =
-      "floors=bands:0,shingles:0\ngens=bands:1,shingles:1\n" +
-        "live.bands=1:0\nlive.shingles=1:0\n" +
-        s"retired=$statePath/bands/version=0/gen=0|" +
-        s"$statePath/shingles/version=0/gen=0\neof=true\n"
-    new java.io.File(s"$statePath/_manifests").mkdirs()
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(
-        s"$statePath/_manifests/${"%020d".format(0)}.manifest"),
-      legacy.getBytes("UTF-8"))
-    val m = StreamOps.readClusterManifest(spark, statePath).get
-    assert(m.retired ==
-      Seq(("bands", 0L, 0L), ("shingles", 0L, 0L)),
-      s"legacy paths must migrate to relative tuples: ${m.retired}")
-    // a newer candidate that cannot be read (here: a directory wearing
-    // a manifest name — the same observable as a file deleted between
-    // listStatus and open) must NOT throw: the reader steps down
-    new java.io.File(
-      s"$statePath/_manifests/${"%020d".format(1)}.manifest").mkdirs()
-    assert(StreamOps.readClusterManifest(spark, statePath).contains(m),
-      "an unreadable candidate steps down to the previous sequence")
-  }
-
-  test("cluster-state manifest: a COMMITTED manifest (eof=true) with an " +
-      "unmigratable legacy retired entry FAILS LOUD instead of reading " +
-      "as torn — stepping down past real committed state would be a " +
-      "silent regression") {
-    val statePath = Files.createTempDirectory("graft-cambad").toString
-    // committed (eof terminator present) but the retired path lacks
-    // the fixed version=/gen= tail every real legacy entry carries
-    val bad =
-      "floors=bands:0,shingles:0\ngens=bands:1,shingles:1\n" +
-        "live.bands=1:0\nlive.shingles=1:0\n" +
-        s"retired=$statePath/bands/oops-not-a-partition\neof=true\n"
-    new java.io.File(s"$statePath/_manifests").mkdirs()
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(
-        s"$statePath/_manifests/${"%020d".format(0)}.manifest"),
-      bad.getBytes("UTF-8"))
-    val e = intercept[
-      graft.streaming.ClusterStateManifest.UnmigratableManifestException] {
-      StreamOps.readClusterManifest(spark, statePath)
-    }
-    assert(e.getMessage.contains("oops-not-a-partition"))
-    // the rule is GENERAL, not a legacy special case: any committed
-    // manifest that fails to parse (here a modern retired entry with
-    // too few fields — a corrupt line or a future format) fails loud
-    val statePath2 = Files.createTempDirectory("graft-cambad2").toString
-    val bad2 =
-      "floors=bands:0,shingles:0\ngens=bands:1,shingles:1\n" +
-        "live.bands=1:0\nlive.shingles=1:0\n" +
-        "retired=bands:0\neof=true\n" // t:v:g expected, got 2 fields
-    new java.io.File(s"$statePath2/_manifests").mkdirs()
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(
-        s"$statePath2/_manifests/${"%020d".format(0)}.manifest"),
-      bad2.getBytes("UTF-8"))
-    intercept[
-      graft.streaming.ClusterStateManifest.UnmigratableManifestException] {
-      StreamOps.readClusterManifest(spark, statePath2)
-    }
-    ()
-  }
-
-  test("compactClusterState runs CONCURRENT with live triggers: state " +
-      "equals a full recompute after every trigger while a background " +
-      "compactor folds (one fold per round — the retention contract)") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.ops.DedupOps
-    def filler(tag: String, n: Int): String =
-      (1 to n).map(i => s"$tag$i").mkString(" ")
-    val a = filler("alpha", 24); val b = filler("beta", 24)
-    val batches: Seq[Seq[(Long, String)]] = Seq(
-      Seq((10L, a), (11L, s"$a x1 x2"), (30L, filler("solo", 20))),
-      Seq((20L, b), (40L, filler("uniq", 20))),
-      Seq((21L, s"$b y1 y2"), (50L, filler("mono", 20))),
-      Seq((12L, s"$a z1 z2 z3"), (60L, filler("hapax", 20))),
-      Seq((22L, s"$b w1"), (70L, filler("dis", 20))))
-    val statePath = Files.createTempDirectory("graft-caconc").toString
-    val in = MemoryStream[(Long, String)]
-    val q = StreamOps.clusterAssignStream(
-      in.toDF().toDF("doc_id", "text"), statePath, ckpt()) { (_, _) => }
-    def stateFrame(): Map[Long, Long] = {
-      val vs = new java.io.File(statePath).listFiles.map(_.getName)
-        .filter(_.startsWith("v")).map(_.drop(1).toLong).sorted
-      spark.read.parquet(s"$statePath/v${vs.last}/clusters")
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    }
-    def fullRecompute(docs: Seq[(Long, String)]): Map[Long, Long] = {
-      val df = docs.toDF("doc_id", "text")
-      DedupOps.connectedComponents(
-        DedupOps.minhashNearDups(df, col("doc_id"), col("text"), 0.5)
-          .select("id1", "id2"),
-        df.select(col("doc_id").as("id")))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    }
-    // one compaction per round, OVERLAPPING the trigger: `go` releases
-    // a fold as each round starts, `done` gates the next round so no
-    // trigger ever spans two compactions (the documented retention
-    // contract — a reader outlives at most one concurrent fold)
-    val go = new java.util.concurrent.Semaphore(0)
-    val done = new java.util.concurrent.Semaphore(0)
-    val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
-    @volatile var stopCompactor = false
-    val compactor = new Thread(() => {
-      while (!stopCompactor) {
-        if (go.tryAcquire(50, java.util.concurrent.TimeUnit.MILLISECONDS)) {
-          try {
-            val vs = StreamOps.clusterAssignVersions(
-              spark, statePath, Long.MaxValue)
-            if (vs.length >= 2)
-              StreamOps.compactClusterState(spark, statePath, vs.last - 1)
-          } catch {
-            case t: Throwable => errs.add(t); ()
-          } finally done.release()
-        }
-      }
-    }, "graft-test-compactor")
-    compactor.start()
-    try {
-      var seen = Seq.empty[(Long, String)]
-      batches.foreach { batch =>
-        go.release()
-        in.addData(batch.toIndexedSeq)
-        q.processAllAvailable()
-        seen ++= batch
-        assert(stateFrame() == fullRecompute(seen),
-          s"state == recompute after batch ${batch.map(_._1)}")
-        done.acquire()
-      }
-    } finally {
-      stopCompactor = true
-      compactor.join()
-      q.stop()
-    }
-    assert(errs.isEmpty, s"compactor must never error: " +
-      s"${errs.toArray.toSeq.map(_.toString)}")
-    // the compactor really folded: the live set is bounded below the
-    // trigger count
-    val m = StreamOps.readClusterManifest(spark, statePath).get
-    Seq("bands", "shingles").foreach(t =>
-      assert(m.liveOf(t).length < batches.length,
-        s"$t live set after concurrent folds: ${m.liveOf(t)}"))
   }
 }

@@ -42,13 +42,28 @@ import graft.streaming.StreamOps
  *                                     retain-forever runningCount)
  *
  * Topologies: every name in [[Topologies.table]]; an unknown name
- * prints the list.
- * (curate also takes --threshold <minScore> and --min-words <n>;
- *  decontaminate takes --bench <parquet path> for the benchmark set;
- *  lm_score takes --corpus <parquet path> for the model corpus and
- *  --order 1|2|3 for unigram / bigram / trigram scoring;
- *  span_flag, mix_sample, neardup_gate, phash_gate, outlier_gate and nb_langid
- *  take --corpus <parquet path> for their offline models)
+ * prints the list. Options only some topologies read (each defaults to
+ * the demo data):
+ *     --corpus <parquet path>        (the offline model's corpus:
+ *                                     lm_score, nb_langid, span_flag,
+ *                                     mix_sample, neardup_gate,
+ *                                     phash_gate, outlier_gate,
+ *                                     ppl_gate, entropy_gate,
+ *                                     winnow_gate, trained_gate,
+ *                                     dsir_gate, embed_gate,
+ *                                     video_gate, audio_gate)
+ *     --bench <parquet path>         (the benchmark set: decontaminate,
+ *                                     bloom_gate)
+ *     --catalog <parquet path>       (the entity catalog: er_gate)
+ *     --history <parquet path>       (the event history: anomaly_gate)
+ *     --delay <interval>             (dedup_gate's watermark delay,
+ *                                     default "60 seconds")
+ *     --order 1|2|3                  (lm_score: unigram / bigram /
+ *                                     trigram, default 1)
+ *     --smoothing addone|kn          (lm_score, default addone)
+ *     --threshold <minScore>         (quality_cut, default 0.3;
+ *                                     curate, default 0.1)
+ *     --min-words <n>                (curate, default 5)
  */
 object Run {
 

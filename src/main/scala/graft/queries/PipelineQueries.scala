@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -692,7 +692,7 @@ object PipelineQueries {
    * as windows over the grid, so nothing corpus-sized crosses the
    * model boundary. Apply = ONE row-local [[graft.functions.NbLangId]]
    * kernel pass against the collected broadcast model (vocab × langs
-   * rows, capped at [[NbMaxModelEntries]] — the lm_score
+   * rows, behind [[graft.ops.DriverGate]] — the lm_score
    * offline-model/online-score device; zero apply-side exchanges,
    * [[langIdNbOf]] has the relational-fallback note). On this driver
    * corpus the label is text-independent (every lang shares one
@@ -704,15 +704,9 @@ object PipelineQueries {
    * planted multilingual corpus with genuinely distinct character
    * statistics.
    */
-  def textLangIdNb(spark: SparkSession, sfDir: String): DataFrame = {
-    val docs = Tables.documents(spark, sfDir)
-      .select(col("doc_id"), col("lang"), col("text"))
-    val (m0, p0) = langIdNbModelFrames(docs)
-    // both model frames are checkpointed (vocab×langs / langs-sized):
-    // each has several consumers within the apply pass
-    langIdNbApply(docs, m0.localCheckpoint(), p0.localCheckpoint(),
-      NbMaxModelEntries)
-  }
+  def textLangIdNb(spark: SparkSession, sfDir: String): DataFrame =
+    langIdNbOf(Tables.documents(spark, sfDir)
+      .select(col("doc_id"), col("lang"), col("text")))
 
   /** The LEARN pass of [[langIdNbOf]], factored so the live scoring
    *  topology (`StreamOps.nbLangIdStream`) trains the identical model
@@ -747,29 +741,21 @@ object PipelineQueries {
     (model, priors)
   }
 
-  /** Broadcast-artifact cap for the NB langid model (vocab × langs
-   *  rows): past it, [[langIdNbOf]] ROUTES to the distributed
-   *  relational apply instead of collecting — the cap switches plans,
-   *  it never strands an over-cap corpus. */
-  val NbMaxModelEntries = 4000000L
-
-  /** Collect the [[langIdNbModelFrames]] artifacts into the broadcast
-   *  form both the gated apply pass and the live topology score with:
+  /** Build, from the collected model rows and the priors frame of
+   *  [[langIdNbModelFrames]], the broadcast form both the gated apply
+   *  pass and the live topology score with:
    *  bigram → lang-indexed micro-nat arrays, the prior array, and the
    *  sorted lang table. The lang table comes from the GRID, not the
    *  priors — a label whose docs carry no bigrams cannot be predicted
    *  (its model join would yield no rows), so a prior-only slot must
-   *  not enter the argmax. None when the model is empty. CALLERS
-   *  size-guard (count against [[NbMaxModelEntries]]) before invoking
-   *  — this collects unconditionally. */
-  private[graft] def nbLangIdBroadcast(modelF: DataFrame,
+   *  not enter the argmax. None when the model is empty. */
+  private[graft] def nbLangIdBroadcast(entries: Array[Row],
       priorsF: DataFrame)
       : Option[(
         org.apache.spark.broadcast.Broadcast[
           java.util.HashMap[String, Array[Long]]],
         org.apache.spark.broadcast.Broadcast[Array[Long]],
         org.apache.spark.broadcast.Broadcast[Array[String]])] = {
-    val entries = modelF.collect()
     val priorByLang = priorsF.collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     val langs = entries.map(_.getString(1)).distinct.sorted
@@ -783,13 +769,13 @@ object PipelineQueries {
           _ => new Array[Long](langs.length))
         arr(idx(r.getString(1))) = r.getLong(2)
       }
-      val sc = modelF.sparkSession.sparkContext
+      val sc = priorsF.sparkSession.sparkContext
       Some((sc.broadcast(m), sc.broadcast(langs.map(priorByLang)),
         sc.broadcast(langs)))
     }
   }
 
-  /** The distributed relational apply — the over-cap route of
+  /** The distributed relational apply — the distributed arm of
    *  [[langIdNbOf]] for corpora whose bigram alphabet × langs exceeds
    *  what a driver should collect (CJK-scale alphabets): explode +
    *  model join (no broadcast hint — the model being too big to
@@ -817,40 +803,26 @@ object PipelineQueries {
   /** The train+apply plan of [[textLangIdNb]] over any
    *  (doc_id, lang, text) frame — factored so the spec trains on
    *  planted corpora. Train is relational (the corpus is never
-   *  collected); the model — vocab × langs rows — localCheckpoints
-   *  ONCE (the size-guard count and the collect would otherwise each
-   *  re-derive the grid), then the apply ROUTES on
-   *  [[NbMaxModelEntries]]: under the cap it is ONE row-local
-   *  [[graft.functions.NbLangId]] kernel pass against the collected
-   *  broadcast model (the lm_score offline-model/online-score device
-   *  — zero apply-side exchanges; the r16 relational first cut
-   *  measured 10.4 s at sf0.1 in-suite vs 4.7 with the kernel), over
-   *  it the [[langIdNbRelationalApply]] join form runs distributed.
-   *  The `length(lower(text)) >= 2` filter IS the bigram-less-doc
-   *  drop contract — on the LOWERCASED text, because lowercasing can
-   *  lengthen a string (U+0130 'İ' lowers to two code points) and
-   *  bigrams are defined over the lowered form. */
+   *  collected); the model — vocab × langs rows — goes through
+   *  [[graft.ops.DriverGate]] (`driverCap` forces either arm): on the
+   *  driver arm the apply is ONE row-local [[graft.functions.NbLangId]]
+   *  kernel pass against the collected broadcast model (the lm_score
+   *  offline-model/online-score device — zero apply-side exchanges;
+   *  the r16 relational first cut measured 10.4 s at sf0.1 in-suite
+   *  vs 4.7 with the kernel), on the distributed arm the
+   *  [[langIdNbRelationalApply]] join form runs over the gate's
+   *  snapshot of the model. The `length(lower(text)) >= 2` filter IS
+   *  the bigram-less-doc drop contract — on the LOWERCASED text,
+   *  because lowercasing can lengthen a string (U+0130 'İ' lowers to
+   *  two code points) and bigrams are defined over the lowered form. */
   def langIdNbOf(docs: DataFrame,
-      maxModelEntries: Long = NbMaxModelEntries): DataFrame = {
-    val (modelF0, priorsF) = langIdNbModelFrames(docs)
-    langIdNbApply(docs, modelF0.localCheckpoint(), priorsF,
-      maxModelEntries)
-  }
-
-  /** The ROUTED apply pass of [[langIdNbOf]] over prebuilt model
-   *  frames — factored so [[textLangIdNb]] can checkpoint both model
-   *  frames before the apply. `modelF` must be
-   *  materialized by the caller (the cap count + the collect both
-   *  read it). */
-  private[graft] def langIdNbApply(docs: DataFrame, modelF: DataFrame,
-      priorsF: DataFrame, maxModelEntries: Long): DataFrame = {
-    if (modelF.count() > maxModelEntries)
-      langIdNbRelationalApply(docs, modelF, priorsF)
-    else nbLangIdBroadcast(modelF, priorsF) match {
-      case None =>
-        docs.select(col("doc_id"), lit("").as("lang_pred"),
-          lit(0L).as("score_micro")).filter(lit(false))
-      case Some((bcM, bcP, bcL)) =>
+      driverCap: Long = DriverGate.cap(DriverGate.VocabRowBytes))
+      : DataFrame = {
+    val (modelF, priorsF) = langIdNbModelFrames(docs)
+    // an empty model declines the kernel: the join form over it is
+    // the same empty answer
+    DriverGate("langid_nb", modelF, driverCap)(r => r) { entries =>
+      nbLangIdBroadcast(entries, priorsF).map { case (bcM, bcP, bcL) =>
         // fanOut: the NB kernel re-walks every char of every doc — the
         // apply-side twin of the training explode's narrow-scan hazard
         FanOut.fanOut(docs).filter(length(lower(col("text"))) >= 2)
@@ -859,6 +831,10 @@ object PipelineQueries {
               lower(col("text")), bcM, bcP, bcL).as("s"))
           .select(col("doc_id"), col("s.lang_pred").as("lang_pred"),
             col("s.score_micro").as("score_micro"))
+      }
+    } match {
+      case Right(out) => out
+      case Left(model) => langIdNbRelationalApply(docs, model, priorsF)
     }
   }
 

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
 import graft.model.{AdsbPosition, FlightState, ProximityWarning, ShardedReport}
-import graft.ops.JoinOps
+import graft.ops.{DriverGate, JoinOps}
 
 /**
  * Structured Streaming forms of the reference topologies. Each reuses
@@ -359,15 +359,20 @@ object StreamOps {
    * drops them): a live gate should never silently swallow rows.
    * Scale: the model is VOCAB-sized (the natural-language vocabulary
    * curve — megabytes at web scale), resident per executor either
-   * way (a broadcast join would hold the same hash table);
+   * way (a broadcast join would hold the same hash table), and the
+   * build refuses past `driverCap` words ([[DriverGate.collect]]);
    * throughput is bounded by the tokenize kernel, not state I/O.
    * Docs must carry a `text` column; all input columns pass through
    * with (n_words, nll_micro_sum) appended.
    */
-  def lmScoreStream(docs: DataFrame, corpus: DataFrame): DataFrame = {
+  def lmScoreStream(docs: DataFrame, corpus: DataFrame,
+      driverCap: Long = DriverGate.cap(DriverGate.VocabRowBytes))
+      : DataFrame = {
     val micro = graft.queries.PipelineQueries.NllMicro
-    val entries = graft.queries.PipelineQueries.unigramModel(corpus)
-      .select(col("w"), col("nll_micro"), col("freq")).collect()
+    val entries = DriverGate.collect("lm_unigram",
+      graft.queries.PipelineQueries.unigramModel(corpus)
+        .select(col("w"), col("nll_micro"), col("freq")),
+      driverCap, "PipelineQueries.textUnigramNll")
     val m = new java.util.HashMap[String, java.lang.Long](entries.length * 2)
     var tot = 0L
     entries.foreach { r =>
@@ -399,9 +404,10 @@ object StreamOps {
    * unknown context costs -ln(1/V). Keys are space-joined ("a b") —
    * unambiguous because words are whitespace-split (the BpeRank
    * device). The model is learned ONCE at topology build — the
-   * vocab²-bounded bigram relation is collected (nll values computed
-   * by the SAME Spark expression shape the batch query uses, so
-   * engine-side float identity is by construction) and sc.broadcast
+   * vocab²-bounded bigram count relation is collected, c_a and V are
+   * summed on the driver, and the nll values are the batch query's
+   * own IEEE operations (StrictMath.log, Math.floor: Spark's Log and
+   * Floor), so float identity is by construction — and sc.broadcast
    * as real hash maps probed by the native
    * [[graft.functions.LmBigramScore]] kernel. The first cut was a
    * stream-static join + `element_at` fold: it re-ran the model
@@ -418,73 +424,46 @@ object StreamOps {
    * not vocab²-sized (natural text realizes a tiny, Zipf-thinned
    * fraction of the square), but still the one collect in the gate
    * family whose size is quadratic in a corpus statistic. Past
-   * `maxModelEntries` distinct bigrams the build REFUSES (one count of
-   * the already-aggregated bigram relation — model-sized, not
-   * corpus-sized) instead of collecting a map that would brown-out the
-   * driver and every executor: use the batch
+   * `driverCap` distinct bigrams the build REFUSES
+   * ([[DriverGate.collect]]) instead of collecting a map that would
+   * brown-out the driver and every executor: use the batch
    * `PipelineQueries.textBigramNll` join form, which keeps the model
-   * distributed, for corpora past the cap (the `embed_neardup`
-   * maxCorpus device; StreamOpsSpec asserts the refusal).
+   * distributed, for corpora past the cap (StreamOpsSpec asserts the
+   * refusal).
    */
   def bigramScoreStream(docs: DataFrame, corpus: DataFrame,
-      maxModelEntries: Long = 4000000L): DataFrame = {
+      driverCap: Long = DriverGate.cap(DriverGate.VocabRowBytes))
+      : DataFrame = {
     val micro = graft.queries.PipelineQueries.NllMicro
-    def nllOf(num: Column, den: Column): Column =
-      floor(-log(num.cast("double") / den.cast("double")) *
-        lit(micro.toDouble)).cast("bigint")
-    val bgCounts = corpus
+    def nllOf(num: Long, den: Long): Long =
+      math.floor(-StrictMath.log(num.toDouble / den.toDouble) *
+        micro.toDouble).toLong
+    val counts = DriverGate.collect("lm_bigram", corpus
       .select(graft.ops.TextAnalyticsOps.words(lower(col("text"))).as("ws"))
       .filter(size(col("ws")) >= 2)
       .select(explode(transform(sequence(lit(0), size(col("ws")) - 2),
         i => struct(element_at(col("ws"), i + 1).as("a"),
           element_at(col("ws"), i + 2).as("b")))).as("p"))
       .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-      .agg(count(lit(1)).as("c_ab"))
-      // lazy snapshot (the unigramModel device): the cap count below
-      // materializes it once; the model rows and the V scalar then
-      // read blocks instead of re-deriving the corpus agg
-      .localCheckpoint(false)
-    val nEntries = bgCounts.count()
-    require(nEntries > 0,
+      .agg(count(lit(1)).as("c_ab")),
+      driverCap, "PipelineQueries.textBigramNll")
+    require(counts.nonEmpty,
       "bigram model is EMPTY (no corpus doc has two words) — every " +
         "score would read 0 micro-nats (probability 1) and a " +
         "downstream quality gate would admit everything; point " +
         "--corpus at a real text corpus")
-    require(nEntries <= maxModelEntries,
-      s"bigram model has $nEntries entries > cap $maxModelEntries; a " +
-        "broadcast map this size risks driver/executor memory — score " +
-        "with the distributed batch join form " +
-        "(PipelineQueries.textBigramNll) instead, or raise " +
-        "maxModelEntries if the memory budget allows")
-    val bg = bgCounts
-      .withColumn("c_a", sum("c_ab").over(
-        org.apache.spark.sql.expressions.Window.partitionBy("a")))
-      // V (= distinct contexts) as a scalar aggregate broadcast back
-      // by crossJoin — the whole-frame-window collect_set form moved
-      // the entire (capped, but up to 4M-row) type relation to ONE
-      // partition and built a vocab-sized set there (guide §2.5's
-      // monster-partition class); same value, batch arithmetic
-      // unchanged (PipelineQueries.textBigramNll uses the same form)
-      .crossJoin(broadcast(bgCounts.agg(
-        count_distinct(col("a")).as("v"))))
-    val entries = bg.select(
-      concat(col("a"), lit(" "), col("b")).as("k"),
-      nllOf(col("c_ab") + 1, col("c_a") + col("v")).as("nll"),
-      col("a"),
-      nllOf(lit(1), col("c_a") + col("v")).as("ctx_nll"),
-      col("v")).collect()
-    val lm = new java.util.HashMap[String, java.lang.Long](entries.length * 2)
-    val ctx = new java.util.HashMap[String, java.lang.Long]
-    var v = 1L
-    entries.foreach { r =>
-      lm.put(r.getString(0), r.getLong(1))
-      ctx.put(r.getString(2), r.getLong(3))
-      v = r.getLong(4)
+    val cA = counts.groupMapReduce(_.getString(0))(_.getLong(2))(_ + _)
+    val v = cA.size.toLong // V = distinct contexts
+    val lm = new java.util.HashMap[String, java.lang.Long](counts.length * 2)
+    counts.foreach { r =>
+      lm.put(r.getString(0) + " " + r.getString(1),
+        nllOf(r.getLong(2) + 1, cA(r.getString(0)) + v))
     }
+    val ctx = new java.util.HashMap[String, java.lang.Long](cA.size * 2)
+    cA.foreach { case (a, c) => ctx.put(a, nllOf(1, c + v)) }
     // -ln(1/V), NOT ln(V): the 1/V rounding step can move the result
-    // an ulp, and the quantized ceiling must be the exact number the
-    // model's own nllOf(1, V) form would produce
-    val unk = math.floor(-StrictMath.log(1.0 / v.toDouble) * micro.toDouble).toLong
+    // an ulp
+    val unk = nllOf(1, v)
     val spark0 = docs.sparkSession
     val bcLm = spark0.sparkContext.broadcast(lm)
     val bcCtx = spark0.sparkContext.broadcast(ctx)
@@ -514,11 +493,13 @@ object StreamOps {
    * summing (≤ 1 micro-nat from a single-ln form — a definitional
    * choice, spec-pinned per case, the add-one kernel's convention).
    * Same bounded-broadcast contract as the add-one form: the build
-   * REFUSES past `maxModelEntries` distinct bigrams, counted BEFORE
-   * the collect, naming the distributed batch form as the tool.
+   * REFUSES past `driverCap` distinct bigrams ([[DriverGate.collect]]
+   * of the per-pair rows, which bound the other two collects), naming
+   * the distributed batch form as the tool.
    */
   def bigramKnScoreStream(docs: DataFrame, corpus: DataFrame,
-      maxModelEntries: Long = 4000000L): DataFrame = {
+      driverCap: Long = DriverGate.cap(DriverGate.VocabRowBytes))
+      : DataFrame = {
     import graft.queries.PipelineQueries.{KnDiscount, NllMicro}
     val bgCounts = corpus
       .select(graft.ops.TextAnalyticsOps.words(lower(col("text"))).as("ws"))
@@ -532,42 +513,31 @@ object StreamOps {
       floor(e * lit(NllMicro.toDouble)).cast("bigint")
     // the SHARED batch definitions (knStats + knSeenNllMicro), so a
     // seen pair scores micro-nat-identical live and gated.
-    // Checkpointed once, BEFORE the cap count: counting the raw agg
-    // first would run the whole corpus aggregation twice (once for
-    // the count, once for the checkpoint — review-pass fix); the
-    // count still happens BEFORE any driver collect, which is what
-    // the cap protects (localCheckpoint is distributed
-    // MEMORY_AND_DISK state, never driver memory). Three MINIMAL
-    // driver round-trips read it below (per-pair nll, per-context
-    // ctx_base, per-word cont_nll) instead of one denormalized
-    // 7-column collect — the old form duplicated every word string
-    // across the concatenated key and the a/b columns and carried
-    // per-pair copies of the per-context and per-word components,
-    // ~2-3× the driver footprint of the add-one model under the same
-    // maxModelEntries cap.
+    // Checkpointed once (distributed MEMORY_AND_DISK state, never
+    // driver memory): three MINIMAL driver round-trips read it below
+    // (per-pair nll, per-context ctx_base, per-word cont_nll) instead
+    // of one denormalized 7-column collect — the old form duplicated
+    // every word string across the concatenated key and the a/b
+    // columns and carried per-pair copies of the per-context and
+    // per-word components, ~2-3× the driver footprint of the add-one
+    // model under the same cap.
     val bg = graft.queries.PipelineQueries.knStats(bgCounts)
       .localCheckpoint()
-    val nEntries = bg.count()
-    def refuse(msg: String): Nothing = {
-      graft.ops.DedupOps.releaseTruncated(bg)
-      throw new IllegalArgumentException(msg)
-    }
-    if (nEntries == 0) refuse(
-      "KN bigram model is EMPTY (no corpus doc has two words) — every " +
-        "score would read 0 micro-nats (probability 1) and a " +
-        "downstream quality gate would admit everything; point " +
-        "--corpus at a real text corpus")
-    if (nEntries > maxModelEntries) refuse(
-      s"KN bigram model has $nEntries entries > cap $maxModelEntries; " +
-        "a broadcast map this size risks driver/executor memory — " +
-        "score with the distributed batch join form " +
-        "(PipelineQueries.textBigramKn) instead, or raise " +
-        "maxModelEntries if the memory budget allows")
-    val lm = new java.util.HashMap[String, java.lang.Long](
-      (nEntries * 2).toInt)
-    bg.select(concat(col("a"), lit(" "), col("b")).as("k"),
-        graft.queries.PipelineQueries.knSeenNllMicro.as("nll"))
-      .collect().foreach(r => lm.put(r.getString(0), r.getLong(1)))
+    val pairs = try {
+      val rows = DriverGate.collect("lm_bigram_kn",
+        bg.select(concat(col("a"), lit(" "), col("b")).as("k"),
+          graft.queries.PipelineQueries.knSeenNllMicro.as("nll")),
+        driverCap, "PipelineQueries.textBigramKn")
+      require(rows.nonEmpty,
+        "KN bigram model is EMPTY (no corpus doc has two words) — " +
+          "every score would read 0 micro-nats (probability 1) and a " +
+          "downstream quality gate would admit everything; point " +
+          "--corpus at a real text corpus")
+      rows
+    } catch { case e: IllegalArgumentException =>
+      graft.ops.DedupOps.releaseTruncated(bg); throw e }
+    val lm = new java.util.HashMap[String, java.lang.Long](pairs.length * 2)
+    pairs.foreach(r => lm.put(r.getString(0), r.getLong(1)))
     val base = new java.util.HashMap[String, java.lang.Long]
     bg.select(col("a"),
         micro(-log((lit(KnDiscount) * col("n1p_a")) /
@@ -621,14 +591,16 @@ object StreamOps {
    * unknown continuation word → the 1/T₂ floor. Each component is
    * floored to micro-nats before summing (spec-pinned per case).
    * Same bounded-broadcast contract: the build REFUSES past
-   * `maxModelEntries` distinct trigrams, counted BEFORE any collect,
-   * naming the distributed batch form as the tool; five MINIMAL
+   * `driverCap` distinct trigrams ([[DriverGate.collect]] of the
+   * per-triple rows, which bound the other four collects), naming the
+   * distributed batch form as the tool; five MINIMAL
    * driver round-trips (per-triple nll, per-context ctx_base,
    * per-(b,c) mid nll, per-middle-word mid base, per-word cont) read
    * a once-checkpointed stats frame — never one denormalized collect.
    */
   def trigramKnScoreStream(docs: DataFrame, corpus: DataFrame,
-      maxModelEntries: Long = 4000000L): DataFrame = {
+      driverCap: Long = DriverGate.cap(DriverGate.VocabRowBytes))
+      : DataFrame = {
     import graft.queries.PipelineQueries.{KnDiscount, NllMicro}
     val tgCounts = corpus
       .select(graft.ops.TextAnalyticsOps.words(lower(col("text"))).as("ws"))
@@ -641,34 +613,25 @@ object StreamOps {
       .agg(count(lit(1)).as("c_abc"))
     def micro(e: Column): Column =
       floor(e * lit(NllMicro.toDouble)).cast("bigint")
-    // checkpoint BEFORE the cap count (the bigram stream's
-    // review-pass rule: counting the raw agg first runs the corpus
-    // aggregation twice; the cap protects driver collects, which a
-    // distributed checkpoint never touches)
+    // checkpointed once: the five model collects below all read it
     val tg = graft.queries.PipelineQueries.kn3Stats(tgCounts)
       .localCheckpoint()
-    val nEntries = tg.count()
-    def refuse(msg: String): Nothing = {
-      graft.ops.DedupOps.releaseTruncated(tg)
-      throw new IllegalArgumentException(msg)
-    }
-    if (nEntries == 0) refuse(
-      "KN trigram model is EMPTY (no corpus doc has three words) — " +
-        "every score would read 0 micro-nats (probability 1) and a " +
-        "downstream quality gate would admit everything; point " +
-        "--corpus at a real text corpus")
-    if (nEntries > maxModelEntries) refuse(
-      s"KN trigram model has $nEntries entries > cap $maxModelEntries; " +
-        "a broadcast map this size risks driver/executor memory — " +
-        "score with the distributed batch join form " +
-        "(PipelineQueries.textTrigramKn) instead, or raise " +
-        "maxModelEntries if the memory budget allows")
-    val lm = new java.util.HashMap[String, java.lang.Long](
-      (nEntries * 2).toInt)
-    tg.select(concat(col("a"), lit(" "), col("b"), lit(" "), col("c"))
-          .as("k"),
-        graft.queries.PipelineQueries.kn3SeenNllMicro.as("nll"))
-      .collect().foreach(r => lm.put(r.getString(0), r.getLong(1)))
+    val triples = try {
+      val rows = DriverGate.collect("lm_trigram_kn",
+        tg.select(concat(col("a"), lit(" "), col("b"), lit(" "), col("c"))
+            .as("k"),
+          graft.queries.PipelineQueries.kn3SeenNllMicro.as("nll")),
+        driverCap, "PipelineQueries.textTrigramKn")
+      require(rows.nonEmpty,
+        "KN trigram model is EMPTY (no corpus doc has three words) — " +
+          "every score would read 0 micro-nats (probability 1) and a " +
+          "downstream quality gate would admit everything; point " +
+          "--corpus at a real text corpus")
+      rows
+    } catch { case e: IllegalArgumentException =>
+      graft.ops.DedupOps.releaseTruncated(tg); throw e }
+    val lm = new java.util.HashMap[String, java.lang.Long](triples.length * 2)
+    triples.foreach(r => lm.put(r.getString(0), r.getLong(1)))
     val base = new java.util.HashMap[String, java.lang.Long]
     tg.select(concat(col("a"), lit(" "), col("b")).as("k"),
         micro(-log((lit(KnDiscount) * col("n1p_ab")) /
@@ -741,14 +704,18 @@ object StreamOps {
    * emitted (n_grams, n_dup, dup_tokens) equal the batch query's
    * exactly (RunTopologySpec pins it). Scale: the model is the
    * DUP-gram set of the reference corpus — bounded by the curated
-   * corpus's repetition, not the stream; at sizes past executor
-   * memory the batch join form is the right tool instead. Docs must
-   * carry a `text` column; all input columns pass through.
+   * corpus's repetition, not the stream; past `driverCap` hashes the
+   * build refuses ([[DriverGate.collect]]) and the batch join form is
+   * the right tool instead. Docs must carry a `text` column; all input
+   * columns pass through.
    */
   def spanFlagStream(docs: DataFrame, corpus: DataFrame,
-      n: Int = graft.queries.PipelineQueries.SpanN): DataFrame = {
-    val dup = graft.ops.DedupOps.repeatedGramHashes(corpus, col("text"), n)
-      .collect().map(_.getLong(0)).sorted
+      n: Int = graft.queries.PipelineQueries.SpanN,
+      driverCap: Long = DriverGate.cap(DriverGate.LongBytes)): DataFrame = {
+    val dup = DriverGate.collect("span_flag",
+        graft.ops.DedupOps.repeatedGramHashes(corpus, col("text"), n),
+        driverCap, "PipelineQueries.dedupSpans")
+      .map(_.getLong(0)).sorted
     val bc = docs.sparkSession.sparkContext.broadcast(dup)
     val passthrough = docs.columns.map(col)
     docs
@@ -777,14 +744,18 @@ object StreamOps {
    * before any signature exists). RunTopologySpec pins stream == batch
    * admit sets. Scale: the model is bands × |corpus| keys less
    * sharing — 8 bytes each, ~1.3 GB per 10⁹ history docs; past
-   * executor memory the batch join form is the right tool (the
-   * [[spanFlagStream]] bound). Docs must carry a `text` column; all
-   * input columns pass through.
+   * `driverCap` keys the build refuses and the batch join form is the
+   * right tool (the [[spanFlagStream]] bound). Docs must carry a
+   * `text` column; all input columns pass through.
    */
   def nearDupGateStream(docs: DataFrame, corpus: DataFrame,
-      shingleN: Int = 3, k: Int = 64, bands: Int = 16): DataFrame = {
-    val keys = graft.ops.DedupOps.corpusBandKeys(corpus, col("doc_id"),
-      col("text"), k, bands, shingleN).collect().map(_.getLong(0)).sorted
+      shingleN: Int = 3, k: Int = 64, bands: Int = 16,
+      driverCap: Long = DriverGate.cap(DriverGate.LongBytes)): DataFrame = {
+    val keys = DriverGate.collect("neardup_gate",
+        graft.ops.DedupOps.corpusBandKeys(corpus, col("doc_id"),
+          col("text"), k, bands, shingleN),
+        driverCap, "DedupOps.bandCollideAdmit join")
+      .map(_.getLong(0)).sorted
     val bc = docs.sparkSession.sparkContext.broadcast(keys)
     docs.filter(graft.functions.native
       .lsh_band_collide(col("text"), shingleN, k, bands, bc)
@@ -810,8 +781,8 @@ object StreamOps {
    * decision column instead of a silent filter is the mm-family
    * observability convention (quarantine routing matters). Stateless,
    * Append-safe, replay-stable. Same bounded-broadcast contract as
-   * the text gates: the build REFUSES past `maxCorpus` decoded
-   * hashes, counted BEFORE the collect, and an EMPTY corpus refuses
+   * the text gates: the build REFUSES past `driverCap` decoded
+   * hashes ([[DriverGate.collect]]), and an EMPTY corpus refuses
    * loud (a gate over zero fingerprints would admit everything —
    * the buildHybridIndex rule). Scale: the model is ~28 int entries
    * + 16 bytes per corpus image — ~0.2 GB per 10⁹ images; past
@@ -821,26 +792,19 @@ object StreamOps {
   def phashGateStream(images: DataFrame, corpus: DataFrame,
       maxHamming: Int =
         graft.queries.PipelineQueries.PhashNeardupMaxHamming,
-      maxCorpus: Long = 4000000L): DataFrame = {
-    val hashed = graft.ops.MultimodalOps.phashPartitioned(
-        corpus, "img_id", "png", 0)
-      .toDF()
-      .filter(col("width") =!= -1)
-      .select(col("id"), col("phash"))
-      .localCheckpoint() // the count + the collect both read it
-    val n = hashed.count()
-    require(n > 0,
+      driverCap: Long = DriverGate.cap(DriverGate.PairBytes)): DataFrame = {
+    val hashed = DriverGate.collect("phash_gate",
+      graft.ops.MultimodalOps.phashPartitioned(corpus, "img_id", "png", 0)
+        .toDF()
+        .filter(col("width") =!= -1)
+        .select(col("id"), col("phash")),
+      driverCap, "banded join PipelineQueries.mmPhashNeardup")
+    require(hashed.nonEmpty,
       "phash gate corpus is EMPTY (no image decoded) — a gate over " +
         "zero fingerprints would admit everything; point --corpus at " +
         "a real image corpus")
-    require(n <= maxCorpus,
-      s"phash gate corpus has $n decoded images > cap $maxCorpus; a " +
-        "broadcast index this size risks executor memory — dedup with " +
-        "the batch banded join (PipelineQueries.mmPhashNeardup) " +
-        "instead, or raise maxCorpus if the memory budget allows")
     val idx = graft.ops.MultimodalOps.PhashBandIndex(
-      hashed.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq)
-    graft.ops.DedupOps.releaseTruncated(hashed)
+      hashed.map(r => (r.getLong(0), r.getLong(1))).toSeq)
     val bc = images.sparkSession.sparkContext.broadcast(idx)
     graft.ops.MultimodalOps.phashGatePartitioned(
       images, "png", bc, maxHamming)
@@ -864,36 +828,29 @@ object StreamOps {
    * by the per-frame pigeonhole. Decisions
    * admit/neardup/quarantine with matched_id + max_hamming
    * observability, full column passthrough. Empty corpus and the
-   * index cap refuse loud; the corpus count is checked BEFORE the
-   * collect (the KN-model rule).
+   * index cap (`driverCap` frames, [[DriverGate.collect]]) refuse
+   * loud.
    */
   def videoGateStream(clips: DataFrame, corpus: DataFrame,
       maxHamming: Int =
         graft.queries.PipelineQueries.VideoFrameMaxHamming,
-      maxCorpus: Long = 4000000L,
+      driverCap: Long = DriverGate.cap(DriverGate.TripleBytes),
       bytesCol: String = "gif",
       corpusIdCol: String = "clip_id",
       corpusBytesCol: String = "gif"): DataFrame = {
-    val hashed = graft.ops.MultimodalOps.videoFramePhashesPartitioned(
-        corpus, corpusIdCol, corpusBytesCol, brightShift = 0)
-      .toDF()
-      .filter(col("width") =!= -1)
-      .select(col("id"), col("frame"), col("phash"))
-      .localCheckpoint() // the count + the collect both read it
-    val n = hashed.count()
-    require(n > 0,
+    val hashed = DriverGate.collect("video_gate",
+      graft.ops.MultimodalOps.videoFramePhashesPartitioned(
+          corpus, corpusIdCol, corpusBytesCol, brightShift = 0)
+        .toDF()
+        .filter(col("width") =!= -1)
+        .select(col("id"), col("frame"), col("phash")),
+      driverCap, "aligned banded join PipelineQueries.mmVideoNeardup")
+    require(hashed.nonEmpty,
       "video gate corpus is EMPTY (no clip decoded) — a gate over " +
         "zero fingerprints would admit everything; point --corpus at " +
         "a real clip corpus")
-    require(n <= maxCorpus,
-      s"video gate corpus has $n decoded frames > cap $maxCorpus; a " +
-        "broadcast index this size risks executor memory — dedup with " +
-        "the batch aligned banded join (PipelineQueries.mmVideoNeardup) " +
-        "instead, or raise maxCorpus if the memory budget allows")
     val idx = graft.ops.MultimodalOps.VideoBandIndex(
-      hashed.collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq)
-    graft.ops.DedupOps.releaseTruncated(hashed)
+      hashed.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq)
     val bc = clips.sparkSession.sparkContext.broadcast(idx)
     graft.ops.MultimodalOps.videoGatePartitioned(
       clips, bytesCol, bc, maxHamming)
@@ -922,35 +879,29 @@ object StreamOps {
    * fixture's ground truth, spec-pinned.
    *
    * Guardrails (the phash-gate corpus conventions): empty corpus and
-   * the index cap refuse loud; the corpus count is checked BEFORE the
-   * collect (the KN-model rule).
+   * the index cap (`driverCap` clips, [[DriverGate.collect]]) refuse
+   * loud.
    */
   def audioGateStream(clips: DataFrame, corpus: DataFrame,
       maxHamming: Int =
         graft.queries.PipelineQueries.AudioNeardupMaxHamming,
-      maxCorpus: Long = 4000000L,
+      driverCap: Long = DriverGate.cap(DriverGate.PairBytes),
       bytesCol: String = "wav",
       corpusIdCol: String = "clip_id",
       corpusBytesCol: String = "wav"): DataFrame = {
-    val hashed = graft.ops.MultimodalOps.audioFingerprintPartitioned(
-        corpus, corpusIdCol, corpusBytesCol)
-      .toDF()
-      .filter(col("sample_rate") =!= -1)
-      .select(col("id"), col("fp"))
-      .localCheckpoint() // the count + the collect both read it
-    val n = hashed.count()
-    require(n > 0,
+    val hashed = DriverGate.collect("audio_gate",
+      graft.ops.MultimodalOps.audioFingerprintPartitioned(
+          corpus, corpusIdCol, corpusBytesCol)
+        .toDF()
+        .filter(col("sample_rate") =!= -1)
+        .select(col("id"), col("fp")),
+      driverCap, "banded join PipelineQueries.mmAudioNeardup")
+    require(hashed.nonEmpty,
       "audio gate corpus is EMPTY (no clip decoded) — a gate over " +
         "zero fingerprints would admit everything; point --corpus at " +
         "a real audio corpus")
-    require(n <= maxCorpus,
-      s"audio gate corpus has $n decoded clips > cap $maxCorpus; a " +
-        "broadcast index this size risks executor memory — dedup with " +
-        "the batch banded join (PipelineQueries.mmAudioNeardup) " +
-        "instead, or raise maxCorpus if the memory budget allows")
     val idx = graft.ops.MultimodalOps.PhashBandIndex(
-      hashed.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq)
-    graft.ops.DedupOps.releaseTruncated(hashed)
+      hashed.map(r => (r.getLong(0), r.getLong(1))).toSeq)
     val bc = clips.sparkSession.sparkContext.broadcast(idx)
     graft.ops.MultimodalOps.audioGatePartitioned(
       clips, bytesCol, bc, maxHamming)
@@ -1141,13 +1092,17 @@ object StreamOps {
    * partner doc) — the admission form of dedupWinnow's pairwise rule;
    * RunTopologySpec pins stream == the batch relational rule. Scale:
    * model = rare-fingerprint count × 8 B — bounded by the df cap ×
-   * vocabulary, the spanFlagStream bound. Docs must carry `text`.
+   * vocabulary, the spanFlagStream bound (refused past `driverCap`
+   * fingerprints). Docs must carry `text`.
    */
-  def winnowGateStream(docs: DataFrame, corpus: DataFrame): DataFrame = {
+  def winnowGateStream(docs: DataFrame, corpus: DataFrame,
+      driverCap: Long = DriverGate.cap(DriverGate.LongBytes)): DataFrame = {
     import graft.queries.PipelineQueries
-    val model = PipelineQueries.rareWinnowFingerprints(
-        PipelineQueries.winnowDocFingerprints(corpus))
-      .collect().map(_.getLong(0)).sorted
+    val model = DriverGate.collect("winnow_gate",
+        PipelineQueries.rareWinnowFingerprints(
+          PipelineQueries.winnowDocFingerprints(corpus)),
+        driverCap, "PipelineQueries.dedupWinnow")
+      .map(_.getLong(0)).sorted
     val bc = docs.sparkSession.sparkContext.broadcast(model)
     docs.filter(graft.functions.native
       .winnow_collide(col("text"), PipelineQueries.WinnowK,
@@ -1305,8 +1260,8 @@ object StreamOps {
    * the IDENTICAL batch formulation over the static corpus (so the
    * integer micro-nat values match by construction), collected
    * (vocab × langs rows — bounded by the character alphabet squared,
-   * guarded by `maxModelEntries` with the distributed batch join
-   * named as the alternative), and broadcast as a bigram →
+   * refused past `driverCap` rows by [[DriverGate.collect]], which
+   * names the distributed batch join as the alternative), and broadcast as a bigram →
    * lang-indexed score array probed by the native
    * [[graft.functions.NbLangId]] codegen kernel — one row-local call
    * per line, zero joins, zero state. Contract deltas vs batch: a
@@ -1316,25 +1271,13 @@ object StreamOps {
    * line); stream == batch is spec-pinned on the corpus itself.
    */
   def nbLangIdStream(docs: DataFrame, corpus: DataFrame,
-      maxModelEntries: Long =
-        graft.queries.PipelineQueries.NbMaxModelEntries): DataFrame = {
-    val (modelF0, priorsF) = graft.queries.PipelineQueries
+      driverCap: Long = DriverGate.cap(DriverGate.VocabRowBytes))
+      : DataFrame = {
+    val (modelF, priorsF) = graft.queries.PipelineQueries
       .langIdNbModelFrames(corpus.select(col("lang"), col("text")))
-    // one grid materialization serves the size-guard count AND the
-    // collect; the count runs BEFORE the collect it protects — a live
-    // topology has no distributed fallback, so over-cap fails fast
-    // pointing at the batch query
-    val modelF = modelF0.localCheckpoint()
-    val nEntries = modelF.count()
-    require(nEntries <= maxModelEntries,
-      s"NB langid model has $nEntries entries > cap " +
-        s"$maxModelEntries; a broadcast map this size risks driver/" +
-        "executor memory — score in batch with " +
-        "PipelineQueries.textLangIdNb (which routes to a distributed " +
-        "relational apply), or raise maxModelEntries if the memory " +
-        "budget allows")
     val (bcM, bcP, bcL) = graft.queries.PipelineQueries
-      .nbLangIdBroadcast(modelF, priorsF)
+      .nbLangIdBroadcast(DriverGate.collect("nb_langid", modelF, driverCap,
+        "PipelineQueries.textLangIdNb (its distributed arm)"), priorsF)
       .getOrElse(throw new IllegalArgumentException(
         "NB langid model is empty (no labeled docs with >= 2 chars " +
           "in the corpus) — nothing to score against; fix the corpus " +

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
@@ -52,7 +50,7 @@ class IntegrationSmokeSpec extends SparkSpec {
     val sampled = in.toDF().toDF("value")
       .filter(graft.queries.PipelineQueries.hashSamplePredicate(md5(col("value"))))
     val q = graft.streaming.StreamOps.toMemory(sampled, "hs_smoke",
-      OutputMode.Append, Files.createTempDirectory("hs-ckpt").toString)
+      OutputMode.Append, tempDir("hs-ckpt"))
     try {
       in.addData(docs)
       q.processAllAvailable()
@@ -81,7 +79,7 @@ class IntegrationSmokeSpec extends SparkSpec {
     val in = MemoryStream[String]
     val q = graft.streaming.StreamOps.toMemory(gate(in.toDF().toDF("value")),
       "qc_smoke", OutputMode.Append,
-      Files.createTempDirectory("qc-ckpt").toString)
+      tempDir("qc-ckpt"))
     try {
       in.addData(texts)
       q.processAllAvailable()
@@ -105,7 +103,7 @@ class IntegrationSmokeSpec extends SparkSpec {
     val in = MemoryStream[String]
     val q = graft.streaming.StreamOps.toMemory(props(in.toDF().toDF("value")),
       "jp_smoke", OutputMode.Update,
-      Files.createTempDirectory("jp-ckpt").toString)
+      tempDir("jp-ckpt"))
     try {
       in.addData(lines.take(30))
       q.processAllAvailable()

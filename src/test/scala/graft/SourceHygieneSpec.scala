@@ -20,9 +20,10 @@ import org.scalatest.funsuite.AnyFunSuite
  * Every main builds its session through `GraftSession`, ops/ +
  * queries/ read `SPARK_GRAFT_*` settings only through `GraftEnv`,
  * tools/ takes its live topologies from `graft.Topologies`, every
- * driver kernel is gated by `ops.DriverGate` under its one byte budget,
- * and graft's `core-site.xml` is the one place that configures local
- * file I/O.
+ * driver kernel and model collect is gated by `ops.DriverGate` under
+ * its one byte budget, graft's `core-site.xml` is the one place that
+ * configures local file I/O, and specs make temp directories only
+ * through `SparkSpec`, which deletes them.
  */
 class SourceHygieneSpec extends AnyFunSuite {
 
@@ -166,6 +167,37 @@ class SourceHygieneSpec extends AnyFunSuite {
     }
     assert(stale.isEmpty, stale.mkString(
       "collect through DriverGate instead:\n", "\n", ""))
+  }
+
+  test("model builds carry no private row cap: maxModelEntries and " +
+      "NbMaxModelEntries are gone from src/main, and maxCorpus is left " +
+      "only on SimilarityOps.embeddingNearDups' quadratic CPU bound") {
+    val privateCap = "\\b(maxModelEntries|NbMaxModelEntries|maxCorpus)\\b".r
+    val offenders = scalaFiles("src/main/scala").flatMap { p =>
+      privateCap.findAllIn(source(p)).toSeq.distinct
+        .filterNot(_ == "maxCorpus" &&
+          p.getFileName.toString == "SimilarityOps.scala")
+        .map(m => s"$p: $m")
+    }
+    assert(offenders.isEmpty, offenders.mkString(
+      "collect a model through DriverGate (DriverGate.collect where " +
+        "nothing falls back) with a driverCap parameter instead:\n",
+      "\n", ""))
+    assert(source(Paths.get("src/main/scala/graft/ops/SimilarityOps.scala"))
+      .contains("maxCorpus"),
+      "embeddingNearDups no longer has maxCorpus — the guard is stale")
+  }
+
+  test("specs make temp directories only through SparkSpec, which " +
+      "deletes them when the test (tempDir) or the suite (suiteDir) ends") {
+    // this spec names the call only to search for it
+    val offenders = scalaFiles("src/test/scala")
+      .filterNot(p => Set("SparkSpec.scala", "SourceHygieneSpec.scala")
+        .contains(p.getFileName.toString))
+      .filter(p => source(p).contains("createTempDirectory"))
+      .map(_.toString)
+    assert(offenders.isEmpty, offenders.mkString(
+      "use SparkSpec.tempDir or SparkSpec.suiteDir instead:\n", "\n", ""))
   }
 
   test("core-site.xml sets exactly one property, the FileContext file " +

@@ -22,21 +22,29 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     .getOrCreate()
 
   private val testDirs = scala.collection.mutable.ArrayBuffer.empty[Path]
+  private val suiteDirs = scala.collection.mutable.ArrayBuffer.empty[Path]
 
-  /** A new temp directory `prefix*`, deleted with everything under it
-   *  when the running test ends. */
-  def tempDir(prefix: String): String = {
+  private def newDir(prefix: String, owner: collection.mutable.Buffer[Path]) = {
     val dir = Files.createTempDirectory(prefix)
-    testDirs += dir
+    owner += dir
     dir.toString
   }
 
+  private def deleteAll(dirs: collection.mutable.Buffer[Path]): Unit = {
+    dirs.foreach(d => org.apache.commons.io.FileUtils.deleteQuietly(d.toFile))
+    dirs.clear()
+  }
+
+  /** A new temp directory `prefix*`, deleted with everything under it
+   *  when the running test ends. */
+  def tempDir(prefix: String): String = newDir(prefix, testDirs)
+
+  /** A new temp directory `prefix*` that the suite's tests share (a
+   *  lazily written fixture), deleted when the suite ends. */
+  def suiteDir(prefix: String): String = newDir(prefix, suiteDirs)
+
   override def withFixture(test: NoArgTest): Outcome =
-    try super.withFixture(test)
-    finally {
-      testDirs.foreach(d => org.apache.commons.io.FileUtils.deleteQuietly(d.toFile))
-      testDirs.clear()
-    }
+    try super.withFixture(test) finally deleteAll(testDirs)
 
   /** `body`'s result and the number of Spark jobs it started, counted
    *  with a listener between two listener-bus drains. */
@@ -58,6 +66,6 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = {
     // keep the session alive across suites in the same JVM (sbt forks once)
-    super.afterAll()
+    try deleteAll(suiteDirs) finally super.afterAll()
   }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.analysis.UnsupportedOperationChecker
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -64,7 +62,7 @@ class TopologiesSpec extends SparkSpec {
       Generators.feedLines(indexes, feed), noOptions))
     val table = s"topo_${name}_${System.nanoTime()}"
     val q = StreamOps.toMemory(df, table, mode,
-      Files.createTempDirectory("topo-spec").toString)
+      tempDir("topo-spec"))
     try {
       q.processAllAvailable()
       spark.table(table).na.drop().filter(parsed).count()

@@ -1,7 +1,5 @@
 package graft.model
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -12,12 +10,9 @@ import graft.SparkSpec
 class TablesSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tempDir(): String =
-    Files.createTempDirectory("tables-spec").toString
-
   test("a second read of the same table in the session runs no Spark " +
       "job and still returns a fresh relation") {
-    val dir = tempDir()
+    val dir = tempDir("tables-spec")
     Seq((1L, "a"), (2L, "b")).toDF("doc_id", "text")
       .write.parquet(s"$dir/documents.parquet")
     val (first, inferJobs) = countJobs(Tables.documents(spark, dir))
@@ -37,7 +32,7 @@ class TablesSpec extends SparkSpec {
 
   test("overwriting the table with an extra column makes the next read " +
       "return the new schema") {
-    val dir = tempDir()
+    val dir = tempDir("tables-spec")
     val path = s"$dir/documents.parquet"
     Seq((1L, "a")).toDF("doc_id", "text").write.parquet(path)
     assert(Tables.documents(spark, dir).columns.toSeq == Seq("doc_id", "text"))
@@ -53,7 +48,7 @@ class TablesSpec extends SparkSpec {
     val nanos = 1704067200123456789L // 2024-01-01T00:00:00.123456789Z
     val wantMicros = 1704067200123456L
     // TIMESTAMP(NANOS): Spark cannot write it, so parquet-mr does
-    val nanosDir = tempDir()
+    val nanosDir = tempDir("tables-spec")
     val schema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
       "message events { required int64 event_id; " +
         "required int64 ts (TIMESTAMP(NANOS,false)); }")
@@ -67,7 +62,7 @@ class TablesSpec extends SparkSpec {
         .newGroup().append("event_id", 1L).append("ts", nanos))
     } finally writer.close()
     // TIMESTAMP(MICROS) without UTC adjustment: Spark's TIMESTAMP_NTZ
-    val ntzDir = tempDir()
+    val ntzDir = tempDir("tables-spec")
     Seq((1L, java.time.LocalDateTime.of(2024, 1, 1, 0, 0, 0, 123456000)))
       .toDF("event_id", "ts").write.parquet(s"$ntzDir/events.parquet")
     for (dir <- Seq(nanosDir, ntzDir); pass <- 1 to 2) {

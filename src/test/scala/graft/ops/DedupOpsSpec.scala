@@ -186,7 +186,7 @@ class DedupOpsSpec extends SparkSpec {
   test("connectedComponents uses reliable checkpoints when a dir is set") {
     val sc = spark.sparkContext
     assert(sc.getCheckpointDir.isEmpty) // suite-order guard: dir leaks to later suites
-    val dir = java.nio.file.Files.createTempDirectory("cc-ckpt")
+    val dir = java.nio.file.Paths.get(tempDir("cc-ckpt"))
     sc.setCheckpointDir(dir.toString)
     try {
       val edges = Seq((0L, 1L), (1L, 2L), (2L, 3L)).toDF("id1", "id2")
@@ -224,7 +224,6 @@ class DedupOpsSpec extends SparkSpec {
             s"(field renamed in this Spark version?): $e — later suites " +
             "would inherit a reliable checkpoint dir", e)
       }
-      org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
     }
   }
 
@@ -539,7 +538,7 @@ class DedupOpsSpec extends SparkSpec {
       Seq((p * 2L, s"$shared ${half(s"a$p", 8)}"),
         (p * 2L + 1, s"$shared ${half(s"b$p", 8)}"))
     }
-    val dir = java.nio.file.Files.createTempDirectory("dedup-eval").toString
+    val dir = tempDir("dedup-eval")
     docs.toDF("doc_id", "text").write.mode("overwrite")
       .parquet(s"$dir/documents.parquet")
     val mid = PipelineQueries.dedupEval(spark, dir).collect()

@@ -1,7 +1,5 @@
 package graft.ops
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
@@ -10,7 +8,8 @@ import graft.SparkSpec
 
 /** [[DriverGate]]: the one byte budget, the per-width row caps, and the
   * single bounded collect — read straight off an exchange-free input,
-  * through one snapshot otherwise. */
+  * through one snapshot otherwise, and never through one in the
+  * refusing form. */
 class DriverGateSpec extends SparkSpec {
   import spark.implicits._
 
@@ -31,7 +30,8 @@ class DriverGateSpec extends SparkSpec {
   test("a site's row cap is the budget divided by its row width") {
     Seq(DriverGate.PairBytes -> 16, DriverGate.TripleBytes -> 24,
         DriverGate.KmVectorBytes -> (8 + 4 * 64),
-        DriverGate.ClassifierRowBytes -> 36, DriverGate.VocabRowBytes -> 100)
+        DriverGate.ClassifierRowBytes -> 36, DriverGate.VocabRowBytes -> 100,
+        DriverGate.LongBytes -> 8)
       .foreach { case (width, bytes) =>
         assert(width == bytes)
         assert(DriverGate.cap(width) == DriverGate.Budget / width)
@@ -44,7 +44,7 @@ class DriverGateSpec extends SparkSpec {
 
   /** A one-file parquet (u, v) table of [[pairs]]: a scan, no exchange. */
   private lazy val scan: DataFrame = {
-    val dir = Files.createTempDirectory("driver-gate").toString
+    val dir = suiteDir("driver-gate")
     pairs.toDF("u", "v").coalesce(1).write.parquet(s"$dir/pairs")
     spark.read.parquet(s"$dir/pairs")
   }
@@ -99,5 +99,28 @@ class DriverGateSpec extends SparkSpec {
         DedupOps.releaseTruncated(snap)
         assert(newlyPersisted(before).isEmpty)
       }
+  }
+
+  test("the refusing form: cap rows come back in one job with no " +
+      "snapshot, even over an exchange; cap + 1 rows throw naming the " +
+      "site, the cap and the batch form; cap 0 throws without a job") {
+    val in = scan // written and its schema read outside the counts
+    def refusing(df: DataFrame, cap: Long) =
+      DriverGate.collect("spec_model", df, cap, "SpecQueries.specForm")
+    val before = persisted
+    val (atCap, atCapJobs) = countJobs(refusing(in, pairs.size.toLong))
+    assert(atCap.map(LocalGraph.pairOf).toSeq.sorted == pairs.sorted)
+    assert(atCapJobs == 1, s"the bounded collect ran $atCapJobs jobs")
+    Seq(pairs.size - 1L -> 1, 0L -> 0).foreach { case (cap, jobs) =>
+      val (e, ran) = countJobs(
+        intercept[IllegalArgumentException](refusing(in, cap)))
+      assert(ran == jobs, s"cap $cap ran $ran jobs")
+      Seq("spec_model", s"driver cap of $cap rows", "SpecQueries.specForm")
+        .foreach(m => assert(e.getMessage.contains(m), e.getMessage))
+    }
+    val agg = scan.groupBy("u").agg(max("v").as("v"))
+    assert(refusing(agg, 7L).length == 7)
+    assert(newlyPersisted(before).isEmpty,
+      "nothing falls back, so no snapshot may be taken")
   }
 }

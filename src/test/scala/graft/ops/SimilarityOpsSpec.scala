@@ -199,7 +199,7 @@ class SimilarityOpsSpec extends SparkSpec {
       "locally in one Spark job, driverCap + 1 take the distributed " +
       "rounds, bit-identical; driverCap = 0 and the empty corpus") {
     val rnd = new scala.util.Random(11)
-    val dir = java.nio.file.Files.createTempDirectory("km-gate").toString
+    val dir = tempDir("km-gate")
     // one parquet file, the shape of the embeddings table
     (0L until 40L).map(i => (i, Seq.fill(5)((rnd.nextFloat() - 0.5f) * 2.3f)))
       .toDF("vec_id", "embedding").coalesce(1).write.parquet(s"$dir/corpus")

@@ -238,7 +238,7 @@ class SkewSpec extends SparkSpec {
           else ""
         (i.toLong, src, s"${filler(s"d$i", 5)} $boiler$extra")
       }
-    val dir = java.nio.file.Files.createTempDirectory("skew-src").toString
+    val dir = tempDir("skew-src")
     docs.toDF("doc_id", "source", "text")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val got = graft.queries.PipelineQueries.sourceOverlap(spark, dir)

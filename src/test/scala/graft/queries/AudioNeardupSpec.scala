@@ -101,7 +101,7 @@ class AudioNeardupSpec extends SparkSpec {
     } finally q.stop()
     val e1 = intercept[IllegalArgumentException] {
       StreamOps.audioGateStream(
-        in.toDF().toDF("clip_id", "wav"), bases, maxCorpus = 2)
+        in.toDF().toDF("clip_id", "wav"), bases, driverCap = 2)
     }
     assert(e1.getMessage.contains("mmAudioNeardup"), e1.getMessage)
     val junk = Seq((900L, Array[Byte](1, 2))).toDF("clip_id", "wav")

@@ -201,7 +201,7 @@ class CurationQueriesSpec extends SparkSpec {
       (1L, s"alpha beta gamma $run omega psi"),
       (2L, s"uno dos tres cuatro $run fin"),
       (3L, (1 to 40).map(i => s"other$i").mkString(" ")))
-    val dir = java.nio.file.Files.createTempDirectory("winnow-fixture").toString
+    val dir = tempDir("winnow-fixture")
     docs.toDF("doc_id", "text").write.mode("overwrite")
       .parquet(s"$dir/documents.parquet")
     val pairs = PipelineQueries.dedupWinnow(spark, dir).collect()
@@ -245,7 +245,7 @@ class CurationQueriesSpec extends SparkSpec {
       (runs ++ runs).zipWithIndex.map { case (r, i) => s"${filler(tag + i, 7)} $r" }
         .mkString(" ") + " " + filler(tag + "z", 7)
     val docs = Seq((1L, doc("a")), (2L, doc("b")), (3L, filler("c", 40)))
-    val dir = java.nio.file.Files.createTempDirectory("winnow-repeat").toString
+    val dir = tempDir("winnow-repeat")
     docs.toDF("doc_id", "text").write.mode("overwrite")
       .parquet(s"$dir/documents.parquet")
     // the fixture really exercises within-doc repetition
@@ -337,7 +337,7 @@ class CurationQueriesSpec extends SparkSpec {
       val text = (0 until 15).map(j => v((i + j * 3) % v.length)).mkString(" ")
       (i.toLong, text, if (i % 2 == 0) "en" else "xx")
     }
-    val dir = java.nio.file.Files.createTempDirectory("classify-train").toString
+    val dir = tempDir("classify-train")
     docs.toDF("doc_id", "text", "lang")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val w = PipelineQueries.classifyTrain(spark, dir).collect()

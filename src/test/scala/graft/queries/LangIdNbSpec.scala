@@ -74,16 +74,28 @@ class LangIdNbSpec extends SparkSpec {
     val want = ref(docs)
     assert(got == want, s"got $got\nwant $want")
     assert(!got.contains(5L), "a 1-char doc has no bigrams and drops out")
-    // the over-cap DISTRIBUTED route (maxModelEntries = 0 forces the
+    // the over-cap DISTRIBUTED route (driverCap = 0 forces the
     // relational apply) must produce the identical integers — the cap
     // switches plans, never results
     import spark.implicits._
     val relational = PipelineQueries
-      .langIdNbOf(docs.toDF("doc_id", "lang", "text"), maxModelEntries = 0L)
+      .langIdNbOf(docs.toDF("doc_id", "lang", "text"), driverCap = 0L)
       .collect().map(r => r.getLong(0) -> (r.getString(1), r.getLong(2)))
       .toMap
     assert(relational == want,
       s"relational route diverged: $relational\nwant $want")
+  }
+
+  test("a corpus with no bigrams has an empty model and labels nothing " +
+      "on either arm") {
+    import spark.implicits._
+    val docs = Seq((1L, "aa", "x"), (2L, "bb", ""), (3L, "aa", "y"))
+      .toDF("doc_id", "lang", "text")
+    Seq(PipelineQueries.langIdNbOf(docs),
+        PipelineQueries.langIdNbOf(docs, driverCap = 0L)).foreach { out =>
+      assert(out.columns.toSeq == Seq("doc_id", "lang_pred", "score_micro"))
+      assert(out.collect().isEmpty)
+    }
   }
 
   test("REAL LEARNING on a planted multilingual corpus: distinct " +

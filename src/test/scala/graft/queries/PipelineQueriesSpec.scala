@@ -688,7 +688,7 @@ class PipelineQueriesSpec extends SparkSpec {
     val planted =
       (0L until 8L).map(i => (i, s"src0", "en", filler("tvoc", 30, i.toInt + 2))) ++
         (8L until 16L).map(i => (i, s"src0", "xx", filler("ovoc", 30, i.toInt + 2)))
-    val dir = java.nio.file.Files.createTempDirectory("dsir-fix").toString
+    val dir = tempDir("dsir-fix")
     planted.toDF("doc_id", "source", "lang", "text")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val ranked = PipelineQueries.sampleDsir(spark, dir)
@@ -740,7 +740,7 @@ class PipelineQueriesSpec extends SparkSpec {
     val docs = Seq(
       (0L, "srcA", ("w " * p).trim), (1L, "srcA", ""),
       (2L, "srcB", ""), (3L, "srcB", "   "))
-    val dir = java.nio.file.Files.createTempDirectory("pack-edge").toString
+    val dir = tempDir("pack-edge")
     docs.toDF("doc_id", "source", "text")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val eval = PipelineQueries.packEval(spark, dir).collect()

@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -24,7 +22,7 @@ class SketchQueriesSpec extends SparkSpec {
    *  (no count ties -> fully deterministic rank order). ts is written as
    *  long nanos, matching the driver parquet that Tables.events decodes. */
   private lazy val fixtureDir: String = {
-    val dir = Files.createTempDirectory("sketch-fixture").toString
+    val dir = suiteDir("sketch-fixture")
     val sp = spark
     import sp.implicits._
     val rows = for {

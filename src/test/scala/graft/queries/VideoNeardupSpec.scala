@@ -178,7 +178,7 @@ class VideoNeardupSpec extends SparkSpec {
     } finally q.stop()
     val e1 = intercept[IllegalArgumentException] {
       StreamOps.videoGateStream(
-        in.toDF().toDF("clip_id", "tag", "gif"), corpus, maxCorpus = 4)
+        in.toDF().toDF("clip_id", "tag", "gif"), corpus, driverCap = 4)
     }
     assert(e1.getMessage.contains("mmVideoNeardup"), e1.getMessage)
     import spark.implicits._

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -39,7 +37,7 @@ class ConsumerLagSpec extends SparkSpec {
   test("listener records per-trigger lag samples for a rate query") {
     val listener = new ConsumerLagListener
     spark.streams.addListener(listener)
-    val ckpt = Files.createTempDirectory("lag-ckpt").toString
+    val ckpt = tempDir("lag-ckpt")
     val q = spark.readStream.format("rate")
       .option("rowsPerSecond", 100).load()
       .select(col("value"))
@@ -76,7 +74,7 @@ class ConsumerLagSpec extends SparkSpec {
     // ThrottledSeqSource exists.)
     val listener = new ConsumerLagListener
     spark.streams.addListener(listener)
-    val ckpt = Files.createTempDirectory("lag-drain-ckpt").toString
+    val ckpt = tempDir("lag-drain-ckpt")
     val q = spark.readStream
       .format(classOf[graft.sources.ThrottledSeqSource].getName)
       .option("totalRows", 50).option("maxRowsPerTrigger", 10).load()
@@ -98,7 +96,7 @@ class ConsumerLagSpec extends SparkSpec {
     import spark.implicits._
     val listener = new ConsumerLagListener
     spark.streams.addListener(listener)
-    val ckpt = Files.createTempDirectory("seq-once-ckpt").toString
+    val ckpt = tempDir("seq-once-ckpt")
     val q = spark.readStream
       .format(classOf[graft.sources.ThrottledSeqSource].getName)
       .option("totalRows", 1000).option("maxRowsPerTrigger", 300)

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import java.io.FileNotFoundException
-import java.nio.file.{Files, Path => JPath}
+import java.nio.file.{Files, Path => JPath, Paths}
 import java.nio.file.attribute.PosixFilePermissions
 import java.util.EnumSet
 
@@ -9,7 +9,6 @@ import scala.jdk.CollectionConverters._
 
 import jdk.jfr.Recording
 import jdk.jfr.consumer.RecordingFile
-import org.apache.commons.io.FileUtils
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{CreateFlag, FileContext, Path}
 import org.apache.hadoop.fs.permission.FsPermission
@@ -35,11 +34,6 @@ class LocalFsSpec extends SparkSpec {
     val conf = new Configuration()
     impl.foreach(conf.set(Impl, _))
     FileContext.getLocalFSFileContext(conf)
-  }
-
-  private def withTempDir[T](body: JPath => T): T = {
-    val dir = Files.createTempDirectory("graft-localfs")
-    try body(dir) finally FileUtils.deleteQuietly(dir.toFile)
   }
 
   /** Spark's own housekeeping threads, which fork whatever the file
@@ -104,81 +98,76 @@ class LocalFsSpec extends SparkSpec {
   }
 
   test("a file and a directory get the umasked modes stock Hadoop gives") {
-    withTempDir { dir =>
-      def modes(impl: Option[String], sub: String): Seq[String] = {
-        val fc = context(impl)
-        val root = dir.resolve(sub)
-        fc.mkdir(new Path(root.resolve("a/b").toUri), FsPermission.getDirDefault, true)
-        val out = fc.create(new Path(root.resolve("a/b/f").toUri),
-          EnumSet.of(CreateFlag.CREATE))
-        out.write(1)
-        out.close()
-        Seq("a", "a/b", "a/b/f", "a/b/.f.crc").map(s => PosixFilePermissions
-          .toString(Files.getPosixFilePermissions(root.resolve(s))))
-      }
-      val graft = modes(None, "graft")
-      assert(graft == modes(Some(Stock), "stock"))
-      assert(graft == Seq("rwxr-xr-x", "rwxr-xr-x", "rw-r--r--", "rw-r--r--"))
+    val dir = Paths.get(tempDir("graft-localfs"))
+    def modes(impl: Option[String], sub: String): Seq[String] = {
+      val fc = context(impl)
+      val root = dir.resolve(sub)
+      fc.mkdir(new Path(root.resolve("a/b").toUri), FsPermission.getDirDefault, true)
+      val out = fc.create(new Path(root.resolve("a/b/f").toUri),
+        EnumSet.of(CreateFlag.CREATE))
+      out.write(1)
+      out.close()
+      Seq("a", "a/b", "a/b/f", "a/b/.f.crc").map(s => PosixFilePermissions
+        .toString(Files.getPosixFilePermissions(root.resolve(s))))
     }
+    val graft = modes(None, "graft")
+    assert(graft == modes(Some(Stock), "stock"))
+    assert(graft == Seq("rwxr-xr-x", "rwxr-xr-x", "rw-r--r--", "rw-r--r--"))
   }
 
   test("getFileLinkStatus matches getFileStatus on a regular file and " +
       "still reports a real symlink with its target") {
-    withTempDir { dir =>
-      val fc = context()
-      val file = Files.write(dir.resolve("f"), Array[Byte](1, 2, 3))
-      val path = new Path(file.toUri)
-      val (link, plain) = (fc.getFileLinkStatus(path), fc.getFileStatus(path))
-      assert(!link.isSymlink && link.isFile && link.getPath == plain.getPath)
-      assert(link.getLen == 3 && plain.getLen == 3)
-      assert(link.getModificationTime == plain.getModificationTime)
-      assert(link.getPermission == plain.getPermission)
+    val dir = Paths.get(tempDir("graft-localfs"))
+    val fc = context()
+    val file = Files.write(dir.resolve("f"), Array[Byte](1, 2, 3))
+    val path = new Path(file.toUri)
+    val (link, plain) = (fc.getFileLinkStatus(path), fc.getFileStatus(path))
+    assert(!link.isSymlink && link.isFile && link.getPath == plain.getPath)
+    assert(link.getLen == 3 && plain.getLen == 3)
+    assert(link.getModificationTime == plain.getModificationTime)
+    assert(link.getPermission == plain.getPermission)
 
-      val sym = Files.createSymbolicLink(dir.resolve("l"), file)
-      val st = fc.getFileLinkStatus(new Path(sym.toUri))
-      assert(st.isSymlink, s"a real symlink: $st")
-      assert(st.getSymlink == fc.makeQualified(path))
-    }
+    val sym = Files.createSymbolicLink(dir.resolve("l"), file)
+    val st = fc.getFileLinkStatus(new Path(sym.toUri))
+    assert(st.isSymlink, s"a real symlink: $st")
+    assert(st.getSymlink == fc.makeQualified(path))
   }
 
   test("a missing path throws FileNotFoundException") {
-    withTempDir { dir =>
-      val fc = context()
-      val missing = new Path(dir.resolve("missing").toUri)
-      intercept[FileNotFoundException](fc.getFileStatus(missing))
-      intercept[FileNotFoundException](fc.getFileLinkStatus(missing))
-      intercept[FileNotFoundException](
-        fc.setPermission(missing, FsPermission.getFileDefault))
-    }
+    val dir = Paths.get(tempDir("graft-localfs"))
+    val fc = context()
+    val missing = new Path(dir.resolve("missing").toUri)
+    intercept[FileNotFoundException](fc.getFileStatus(missing))
+    intercept[FileNotFoundException](fc.getFileLinkStatus(missing))
+    intercept[FileNotFoundException](
+      fc.setPermission(missing, FsPermission.getFileDefault))
   }
 
   test("a stateful checkpoint written through graft's LocalFs has stock " +
       "Hadoop's file names, .crc files included, and the same results") {
-    withTempDir { dir =>
-      val stock = statefulRun(dir.resolve("stock"), Some(Stock))
-      val graft = statefulRun(dir.resolve("graft"), None)
-      assert(graft == stock)
-      assert(graft.last == Seq(1 -> 2L, 2 -> 3L, 3 -> 1L, 4 -> 3L))
-      val names = fileNames(dir.resolve("graft"))
-      assert(names == fileNames(dir.resolve("stock")))
-      assert(names.exists(_.startsWith("state/")) && names.exists(_.endsWith(".crc")),
-        s"state-store and checksum files: $names")
-    }
+    val dir = Paths.get(tempDir("graft-localfs"))
+    val stock = statefulRun(dir.resolve("stock"), Some(Stock))
+    val graft = statefulRun(dir.resolve("graft"), None)
+    assert(graft == stock)
+    assert(graft.last == Seq(1 -> 2L, 2 -> 3L, 3 -> 1L, 4 -> 3L))
+    val names = fileNames(dir.resolve("graft"))
+    assert(names == fileNames(dir.resolve("stock")))
+    assert(names.exists(_.startsWith("state/")) && names.exists(_.endsWith(".crc")),
+      s"state-store and checksum files: $names")
   }
 
   test("a stateful query and two Tables.parquet reads start no process " +
       "(stock Hadoop's local FileContext forks chmod and readlink)") {
     import spark.implicits._
-    withTempDir { dir =>
-      val table = dir.resolve("t.parquet").toString
-      Seq((1L, "a"), (2L, "b")).toDF("id", "s").write.parquet(table)
-      val stock = processStarts(statefulRun(dir.resolve("stock"), Some(Stock)))
-      assert(stock.nonEmpty, "the recording sees stock Hadoop's forks")
-      val graft = processStarts {
-        statefulRun(dir.resolve("graft"), None)
-        Seq.fill(2)(Tables.parquet(spark, table).filter(col("id") > 0).count())
-      }
-      assert(graft.isEmpty, s"${graft.size} processes: ${graft.distinct.take(5)}")
+    val dir = Paths.get(tempDir("graft-localfs"))
+    val table = dir.resolve("t.parquet").toString
+    Seq((1L, "a"), (2L, "b")).toDF("id", "s").write.parquet(table)
+    val stock = processStarts(statefulRun(dir.resolve("stock"), Some(Stock)))
+    assert(stock.nonEmpty, "the recording sees stock Hadoop's forks")
+    val graft = processStarts {
+      statefulRun(dir.resolve("graft"), None)
+      Seq.fill(2)(Tables.parquet(spark, table).filter(col("id") > 0).count())
     }
+    assert(graft.isEmpty, s"${graft.size} processes: ${graft.distinct.take(5)}")
   }
 }

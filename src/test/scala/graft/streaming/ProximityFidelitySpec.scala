@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -59,7 +57,7 @@ class ProximityFidelitySpec extends SparkSpec {
       StreamOps.proximityWarningsPerEvent(in.toDS(), DistThresholdKm,
         SpecSteps, SpecStepSec, shards, strict).toDF(),
       name, OutputMode.Append,
-      Files.createTempDirectory("prox-pe-ckpt").toString)
+      tempDir("prox-pe-ckpt"))
     try triggers.map { batch =>
       in.addData(batch)
       q.processAllAvailable()
@@ -78,8 +76,8 @@ class ProximityFidelitySpec extends SparkSpec {
     val seen = ArrayBuffer.empty[Warning]
     val q = StreamOps.proximityWarnings(in.toDS(), DistThresholdKm,
       SpecSteps, SpecStepSec,
-      Files.createTempDirectory("prox-snap-state").toString).start(
-      Files.createTempDirectory("prox-snap-ckpt").toString,
+      tempDir("prox-snap-state")).start(
+      tempDir("prox-snap-ckpt"),
       Trigger.ProcessingTime("1 second")) { (warnings, _) =>
       val rows = warnings.collect()
         .map(r => (r.getString(0), r.getString(1), r.getInt(2),
@@ -125,7 +123,7 @@ class ProximityFidelitySpec extends SparkSpec {
   test("per-event state survives a checkpointed restart " +
       "(same warnings as an uninterrupted run)") {
     implicit val sqlCtx = spark.sqlContext
-    val ckpt = Files.createTempDirectory("prox-restart-ckpt").toString
+    val ckpt = tempDir("prox-restart-ckpt")
     val seen = ArrayBuffer.empty[Warning]
     // memory sink can't recover a checkpoint; foreachBatch can
     def start(in: MemoryStream[AdsbPosition]) =

@@ -397,14 +397,40 @@ class StreamOpsSpec extends SparkSpec {
     val in = MemoryStream[(java.sql.Timestamp, String)]
     val docs = in.toDF().toDF("ts", "text")
     val e = intercept[IllegalArgumentException] {
-      StreamOps.bigramScoreStream(docs, corpus, maxModelEntries = 4)
+      StreamOps.bigramScoreStream(docs, corpus, driverCap = 4)
     }
     assert(e.getMessage.contains("textBigramNll"),
       s"refusal must point at the batch join form: ${e.getMessage}")
-    assert(e.getMessage.contains("5") && e.getMessage.contains("4"),
-      s"refusal must name the size and the cap: ${e.getMessage}")
+    assert(e.getMessage.contains("lm_bigram model exceeds its driver " +
+      "cap of 4 rows"), s"refusal must name the site and the cap: ${e.getMessage}")
     // the cap is a guard, not a tax: at exactly the cap the model builds
-    StreamOps.bigramScoreStream(docs, corpus, maxModelEntries = 5)
+    StreamOps.bigramScoreStream(docs, corpus, driverCap = 5)
+  }
+
+  test("the unigram, span, near-dup, winnow and NB langid builds refuse " +
+      "a model past driverCap, naming the site, the cap and the batch " +
+      "form") {
+    implicit val sqlCtx = spark.sqlContext
+    val corpus = spark.read.parquet(
+      s"${graft.Topologies.DemoSfDir}/documents.parquet")
+    val in = MemoryStream[(Timestamp, Long, String)]
+    val docs = in.toDF().toDF("ts", "doc_id", "text")
+    Seq[(String, String, Long => org.apache.spark.sql.DataFrame)](
+      ("lm_unigram", "textUnigramNll",
+        cap => StreamOps.lmScoreStream(docs, corpus, driverCap = cap)),
+      ("span_flag", "dedupSpans",
+        cap => StreamOps.spanFlagStream(docs, corpus, driverCap = cap)),
+      ("neardup_gate", "bandCollideAdmit",
+        cap => StreamOps.nearDupGateStream(docs, corpus, driverCap = cap)),
+      ("winnow_gate", "dedupWinnow",
+        cap => StreamOps.winnowGateStream(docs, corpus, driverCap = cap)),
+      ("nb_langid", "textLangIdNb",
+        cap => StreamOps.nbLangIdStream(docs, corpus, driverCap = cap))
+    ).foreach { case (site, batch, build) =>
+      val e = intercept[IllegalArgumentException](build(1L))
+      assert(e.getMessage.contains(s"$site model exceeds its driver cap " +
+        "of 1 rows") && e.getMessage.contains(batch), e.getMessage)
+    }
   }
 
   test("bigramKnScoreStream: replayed corpus docs score IDENTICAL " +
@@ -480,7 +506,7 @@ class StreamOpsSpec extends SparkSpec {
     val tiny = Seq("a b c d", "b c a d").toDF("text")
     val e = intercept[IllegalArgumentException] {
       StreamOps.bigramKnScoreStream(
-        in.toDF().toDF("doc_id", "text"), tiny, maxModelEntries = 4)
+        in.toDF().toDF("doc_id", "text"), tiny, driverCap = 4)
     }
     assert(e.getMessage.contains("textBigramKn"), e.getMessage)
     // ...and an EMPTY model refuses loud (every score would read 0
@@ -601,7 +627,7 @@ class StreamOpsSpec extends SparkSpec {
     val tiny = Seq("a b c d", "b c a d").toDF("text")
     val e = intercept[IllegalArgumentException] {
       StreamOps.trigramKnScoreStream(
-        in.toDF().toDF("doc_id", "text"), tiny, maxModelEntries = 2)
+        in.toDF().toDF("doc_id", "text"), tiny, driverCap = 2)
     }
     assert(e.getMessage.contains("textTrigramKn"), e.getMessage)
     // ...and an EMPTY model refuses loud
@@ -697,7 +723,7 @@ class StreamOpsSpec extends SparkSpec {
     // the bounded-broadcast + empty-model contracts
     val e1 = intercept[IllegalArgumentException] {
       StreamOps.phashGateStream(
-        in.toDF().toDF("img_id", "tag", "png"), corpus, maxCorpus = 4)
+        in.toDF().toDF("img_id", "tag", "png"), corpus, driverCap = 4)
     }
     assert(e1.getMessage.contains("mmPhashNeardup"), e1.getMessage)
     import spark.implicits._

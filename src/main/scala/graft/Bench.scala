@@ -32,6 +32,7 @@ object Bench {
     val iters = GraftEnv.int("SPARK_GRAFT_BENCH_ITERS", 3, min = 1)
     val spark = GraftSession("graft-bench")
     spark.sparkContext.setLogLevel("WARN")
+    ops.DriverGate.logDecisions()
     // warm-up (uncounted): JVM/codegen/parquet-footer machinery
     try SparkEntry.queries("wordcount")(spark, sfDir)
       .write.format("noop").mode("overwrite").save()

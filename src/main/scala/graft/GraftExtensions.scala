@@ -1,80 +1,42 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.{SparkSessionExtensions, SparkSessionExtensionsProvider}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import org.apache.spark.sql.catalyst.expressions.{Coalesce, Expression, ExpressionInfo, Literal}
 
-import org.apache.spark.sql.catalyst.expressions.Literal
-
-import graft.functions.{BpeishTokenCount, FloatVectorDot, LangId, LshBucket, ProjectedDist, QualityStats, ShingleHashes, SimHash64, WordHashes, WsTokenCount}
+import graft.functions.{BpeTokenCount, BpeishTokenCount, ClassifyScore, FloatVectorDot, LangId, LshBucket, ProjectedDist, QualityStats, ShingleHashes, SimHash64, WordHashes, WsTokenCount}
 
 /**
  * Spark extension point: registers the engine's native expressions as
- * SQL functions, so `spark.sql("SELECT vec_dot(a, b) ...")` works in any
- * session created with
- * `.config("spark.sql.extensions", "graft.GraftExtensions")` (a static
- * conf — set it on the session that creates the SparkContext, e.g. via
- * spark-submit --conf) or `.withExtensions(new GraftExtensions)`.
+ * SQL functions, so `spark.sql("SELECT vec_dot(a, b) ...")` works, and
+ * injects [[EvalKernelsOnce]], which evaluates a repeated kernel call
+ * once per row. `META-INF/services` names this class as a
+ * SparkSessionExtensionsProvider, so every SparkSession the builder
+ * creates with graft on its classpath loads it; no session opts in.
  */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
+class GraftExtensions extends SparkSessionExtensionsProvider {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("vec_dot"),
-      new ExpressionInfo(classOf[FloatVectorDot].getName, "vec_dot"),
-      (args: Seq[Expression]) => FloatVectorDot(args(0), args(1))))
-    ext.injectFunction((
-      FunctionIdentifier("simhash64"),
-      new ExpressionInfo(classOf[SimHash64].getName, "simhash64"),
-      (args: Seq[Expression]) => SimHash64(args.head)))
-    ext.injectFunction((
-      FunctionIdentifier("projected_dist"),
-      new ExpressionInfo(classOf[ProjectedDist].getName, "projected_dist"),
-      (args: Seq[Expression]) => ProjectedDist(args)))
-    ext.injectFunction((
-      FunctionIdentifier("ws_token_count"),
-      new ExpressionInfo(classOf[WsTokenCount].getName, "ws_token_count"),
-      (args: Seq[Expression]) => WsTokenCount(args.head)))
-    ext.injectFunction((
-      FunctionIdentifier("bpeish_token_count"),
-      new ExpressionInfo(classOf[BpeishTokenCount].getName, "bpeish_token_count"),
-      (args: Seq[Expression]) => BpeishTokenCount(args.head)))
-    ext.injectFunction((
-      FunctionIdentifier("bpe_token_count"),
-      new ExpressionInfo(classOf[graft.functions.BpeTokenCount].getName,
-        "bpe_token_count"),
-      (args: Seq[Expression]) => graft.functions.BpeTokenCount(args.head)))
+    ext.injectPreCBORule(_ => EvalKernelsOnce)
+    def fn(name: String, kernel: Class[_])(build: Seq[Expression] => Expression): Unit =
+      ext.injectFunction(
+        (FunctionIdentifier(name), new ExpressionInfo(kernel.getName, name), build))
+    fn("vec_dot", classOf[FloatVectorDot])(a => FloatVectorDot(a(0), a(1)))
+    fn("simhash64", classOf[SimHash64])(a => SimHash64(a.head))
+    fn("projected_dist", classOf[ProjectedDist])(ProjectedDist(_))
+    fn("ws_token_count", classOf[WsTokenCount])(a => WsTokenCount(a.head))
+    fn("bpeish_token_count", classOf[BpeishTokenCount])(a => BpeishTokenCount(a.head))
+    fn("bpe_token_count", classOf[BpeTokenCount])(a => BpeTokenCount(a.head))
     // coalesce to 'und' so SQL callers get the same null contract as the
     // Scala path (TextAnalyticsOps.langId: null text -> 'und')
-    ext.injectFunction((
-      FunctionIdentifier("lang_id"),
-      new ExpressionInfo(classOf[LangId].getName, "lang_id"),
-      (args: Seq[Expression]) =>
-        org.apache.spark.sql.catalyst.expressions.Coalesce(
-          Seq(LangId(args.head), Literal("und")))))
-    ext.injectFunction((
-      FunctionIdentifier("quality_stats"),
-      new ExpressionInfo(classOf[QualityStats].getName, "quality_stats"),
-      (args: Seq[Expression]) => QualityStats(args.head)))
+    fn("lang_id", classOf[LangId])(a => Coalesce(Seq(LangId(a.head), Literal("und"))))
+    fn("quality_stats", classOf[QualityStats])(a => QualityStats(a.head))
     // int-literal second arguments (n / bits / portable flag)
-    ext.injectFunction((
-      FunctionIdentifier("shingle_hashes"),
-      new ExpressionInfo(classOf[ShingleHashes].getName, "shingle_hashes"),
-      (args: Seq[Expression]) => ShingleHashes(args.head, intArg(args, 1, "n"))))
-    ext.injectFunction((
-      FunctionIdentifier("lsh_bucket"),
-      new ExpressionInfo(classOf[LshBucket].getName, "lsh_bucket"),
-      (args: Seq[Expression]) => LshBucket(args.head, intArg(args, 1, "bits"))))
-    ext.injectFunction((
-      FunctionIdentifier("word_hashes"),
-      new ExpressionInfo(classOf[WordHashes].getName, "word_hashes"),
-      (args: Seq[Expression]) =>
-        WordHashes(args.head, boolArg(args, 1, "portable"))))
-    ext.injectFunction((
-      FunctionIdentifier("classify_score"),
-      new ExpressionInfo(classOf[graft.functions.ClassifyScore].getName,
-        "classify_score"),
-      (args: Seq[Expression]) => graft.functions.ClassifyScore(args.head)))
+    fn("shingle_hashes", classOf[ShingleHashes])(a =>
+      ShingleHashes(a.head, intArg(a, 1, "n")))
+    fn("lsh_bucket", classOf[LshBucket])(a => LshBucket(a.head, intArg(a, 1, "bits")))
+    fn("word_hashes", classOf[WordHashes])(a =>
+      WordHashes(a.head, boolArg(a, 1, "portable")))
+    fn("classify_score", classOf[ClassifyScore])(a => ClassifyScore(a.head))
   }
 
   private def intArg(args: Seq[Expression], i: Int, name: String): Int =

@@ -7,6 +7,7 @@ object Verify {
     val Array(sfDir, outDir) = args
     val spark = GraftSession("graft-verify")
     spark.sparkContext.setLogLevel("WARN")
+    ops.DriverGate.logDecisions()
     new java.io.File(outDir).mkdirs()
     // Dev-only subset filter (SPARK_GRAFT_ONLY=q1,q2): dump + oracle for
     // just the named queries so scripts/check.py gates them in isolation

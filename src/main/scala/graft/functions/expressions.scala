@@ -61,11 +61,7 @@ object VectorMath {
    *  table order whose count is > 0 and >= every later language's
    *  count; no hits at all -> "und". Equal to the composed
    *  split/filter/isin argmax column formulation (NativeExprSpec). */
-  private val langIdMemo = new RowMemo("langid")
-
   def langId(text: String): org.apache.spark.unsafe.types.UTF8String = {
-    val hit = langIdMemo.lookup(text, null)
-    if (hit != null) return hit.asInstanceOf[org.apache.spark.unsafe.types.UTF8String]
     val nLang = stopSets.length
     val counts = new Array[Int](nLang)
     var i = 0
@@ -89,8 +85,7 @@ object VectorMath {
       if (counts(l) > 0 && (best == nLang || counts(l) >= counts(best))) best = l
       l -= 1
     }
-    langIdMemo.store(text, null, langTags(best))
-      .asInstanceOf[org.apache.spark.unsafe.types.UTF8String]
+    langTags(best)
   }
 
   /** Sequential left-fold dot product in double precision (same
@@ -339,18 +334,7 @@ object VectorMath {
     hit
   }
 
-  private val bloomHitsMemo = new RowMemo("bloom_hits")
-
   def bloomHits(text: String, n: Int, k: Int, bits: Array[Long]): InternalRow = {
-    // keyed on (bitmap ARRAY identity, n, k) — the lshCollide device
-    // plus shingleHashes' parameter keying: the same broadcast bitmap
-    // probed at a different gram width or probe count must recompute,
-    // never cross-hit (Tuple equality compares the array by eq).
-    // Purpose: filter pushdown duplicates gate kernels — project(
-    // kernel) → filter(keep) evaluates the probe twice per row
-    val memoKey = (bits, n, k)
-    val hit = bloomHitsMemo.lookup(text, memoKey)
-    if (hit != null) return hit.asInstanceOf[InternalRow]
     val words = new java.util.ArrayList[String]()
     var i = 0
     val len = text.length
@@ -391,9 +375,8 @@ object VectorMath {
       }
       g += 1
     }
-    bloomHitsMemo.store(text, memoKey,
-      new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-        Array[Any](seen.size.toLong, nHits))).asInstanceOf[InternalRow]
+    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
+      Array[Any](seen.size.toLong, nHits))
   }
 
   /** Row-local MinHash+LSH band collision count against a SORTED array
@@ -407,15 +390,9 @@ object VectorMath {
    *  encoding. Membership is a binary search per band. A doc with no
    *  shingles has no bands (returns (0, 0)) — the batch explode drops
    *  it before any signature exists, so both forms admit it. */
-  private val lshCollideMemo = new RowMemo("lsh_collide")
-
   def lshCollide(text: String, n: Int, k: Int, bands: Int,
       model: Array[Long]): InternalRow = {
     import org.apache.spark.sql.catalyst.expressions.{XXH64 => xh}
-    // keyed on the model ARRAY identity: same text under a different
-    // broadcast model on this thread must recompute, never cross-hit
-    val hit = lshCollideMemo.lookup(text, model)
-    if (hit != null) return hit.asInstanceOf[InternalRow]
     val words = new java.util.ArrayList[String]()
     var i = 0
     val len = text.length
@@ -426,7 +403,7 @@ object VectorMath {
       if (i > start) words.add(text.substring(start, i))
     }
     val m = words.size - n + 1
-    val row = if (m <= 0) {
+    if (m <= 0) {
       new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
         Array[Any](0L, 0L))
     } else {
@@ -477,7 +454,6 @@ object VectorMath {
       new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
         Array[Any](bands.toLong, nCollide))
     }
-    lshCollideMemo.store(text, model, row).asInstanceOf[InternalRow]
   }
 
   /** Deterministic demo embedding of a text: `dim` floats in [-1, 1)
@@ -504,12 +480,7 @@ object VectorMath {
    *  ASCII whitespace); hash matches Spark's xxhash64 (XXH64, seed 42)
    *  over the gram's UTF-8 bytes; first-occurrence dedup matches
    *  array_distinct. */
-  private val shingleMemo = new RowMemo("shingle")
-
   def shingleHashes(text: String, n: Int): org.apache.spark.sql.catalyst.util.ArrayData = {
-    val nKey = Integer.valueOf(n) // memo compares keys by equals, so n > 127 still hits
-    val hit = shingleMemo.lookup(text, nKey)
-    if (hit != null) return hit.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
     val words = new java.util.ArrayList[String]()
     var i = 0
     val len = text.length
@@ -535,9 +506,7 @@ object VectorMath {
     val it = seen.iterator()
     var k = 0
     while (it.hasNext) { out(k) = it.next(); k += 1 }
-    shingleMemo.store(text, nKey,
-      org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(out))
-      .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
+    org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(out)
   }
 
   /** Per-k slot-seed cache for [[minhashSig]] (seeds depend only on
@@ -1372,11 +1341,7 @@ object VectorMath {
    *  char counts are Unicode code points (surrogate pair = 1), matching
    *  Spark's `length` (UTF8String.numChars) and the regex-replace
    *  length deltas of the composed form. */
-  private val qualityMemo = new RowMemo("quality")
-
   def qualityStats(text: String): InternalRow = {
-    val hit = qualityMemo.lookup(text, null)
-    if (hit != null) return hit.asInstanceOf[InternalRow]
     val len = text.length
     var nWords = 0L
     var nStop = 0L
@@ -1404,11 +1369,20 @@ object VectorMath {
         Character.isLowSurrogate(text.charAt(i + 1))) i += 1
       i += 1
     }
-    qualityMemo.store(text, null,
-      new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-        Array[Any](nWords, nNonWs, nStop, nAlpha, nChars)))
-      .asInstanceOf[InternalRow]
+    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
+      Array[Any](nWords, nNonWs, nStop, nAlpha, nChars))
   }
+
+  /** Per-thread scratch map for [[gopherStats]] — per-DOCUMENT counts,
+   *  but the map itself can be reused across rows
+   *  (clear() beats re-allocation + rehash growth on every row). */
+  private val gopherScratch =
+    new ThreadLocal[java.util.HashMap[String, java.lang.Long]] {
+      override def initialValue() = new java.util.HashMap[String, java.lang.Long](256)
+    }
+  private val sumLongs: java.util.function.BiFunction[
+      java.lang.Long, java.lang.Long, java.lang.Long] =
+    (a, b) => java.lang.Long.valueOf(a.longValue + b.longValue)
 
   /** One-pass Gopher rule statistics; see [[GopherStats]]. The first
    *  five fields are bit-identical to [[qualityStats]] (same word
@@ -1419,84 +1393,7 @@ object VectorMath {
    *  vocabulary. Fused because the gate runs both: two kernels = two
    *  tokenization passes = the measured 841 k rows/s; one pass holds
    *  the word in hand for the stop probe and the count update. */
-  /**
-   * One-entry per-thread (input → result) memo for row-level kernels.
-   * Filter pushdown inlines a gate's admission predicate BELOW the
-   * projection, duplicating the kernel call once per predicate term —
-   * and codegen's subexpression elimination deliberately skips
-   * conditionally-evaluated AND/CASE branches, so every copy really
-   * runs (gopher_gate measured 841 k rows/s against the kernel's
-   * ~10 M ceiling; the memo took it to 5.2 M). The duplicates always
-   * evaluate on the SAME row back-to-back, so one remembered pair
-   * turns N plan-level copies into one compute plus N−1 string
-   * compares, whatever shape the optimizer picks. `key` guards
-   * parameterized kernels (model broadcast / gram size): a hit needs
-   * the same input AND the same key (reference OR value equality —
-   * model artifacts are `eq`-stable broadcast objects, but boxed
-   * parameter keys like `Integer.valueOf(n)` are only cached to 127,
-   * so `eq` alone silently disabled the memo for large gram sizes),
-   * so two models scoring the same text on one thread can never
-   * cross-contaminate.
-   *
-   * Each memo registers under `name` and counts hits/misses
-   * ([[RowMemo.stats]]): the memo's benefit assumes the optimizer
-   * keeps plan-level duplicates evaluating the same row back-to-back,
-   * which is true under every shape Spark picks today but is not a
-   * contract — the throughput specs assert a floor on the hit rate so
-   * a future plan change that breaks the assumption fails a test
-   * instead of silently costing the measured 6×.
-   */
-  final class RowMemo(val name: String) {
-    RowMemo.register(this)
-    val hits = new java.util.concurrent.atomic.LongAdder
-    val misses = new java.util.concurrent.atomic.LongAdder
-    private val tl = new ThreadLocal[Array[AnyRef]] {
-      override def initialValue() = new Array[AnyRef](3)
-    }
-    def lookup(text: String, key: AnyRef): AnyRef = {
-      val s = tl.get()
-      if (((key eq s(2)) || (key != null && key.equals(s(2)))) &&
-          text.equals(s(0))) { hits.increment(); s(1) }
-      else { misses.increment(); null }
-    }
-    def store(text: String, key: AnyRef, v: AnyRef): AnyRef = {
-      val s = tl.get()
-      s(0) = text; s(2) = key; s(1) = v
-      v
-    }
-  }
-
-  object RowMemo {
-    private val all = new java.util.concurrent.CopyOnWriteArrayList[RowMemo]
-    private def register(m: RowMemo): Unit = all.add(m)
-    /** (hits, misses) per kernel memo since the last [[reset]]. */
-    def stats: Map[String, (Long, Long)] = {
-      val it = all.iterator(); val b = Map.newBuilder[String, (Long, Long)]
-      while (it.hasNext) { val m = it.next(); b += m.name -> (m.hits.sum, m.misses.sum) }
-      b.result()
-    }
-    def reset(): Unit = {
-      val it = all.iterator()
-      while (it.hasNext) { val m = it.next(); m.hits.reset(); m.misses.reset() }
-    }
-  }
-
-  /** Per-thread scratch map for [[gopherStats]] — per-DOCUMENT counts
-   *  can't share a memo, but the map itself can be reused across rows
-   *  (clear() beats re-allocation + rehash growth on every row). */
-  private val gopherScratch =
-    new ThreadLocal[java.util.HashMap[String, java.lang.Long]] {
-      override def initialValue() = new java.util.HashMap[String, java.lang.Long](256)
-    }
-  private val sumLongs: java.util.function.BiFunction[
-      java.lang.Long, java.lang.Long, java.lang.Long] =
-    (a, b) => java.lang.Long.valueOf(a.longValue + b.longValue)
-
-  private val gopherMemo = new RowMemo("gopher")
-
   def gopherStats(text: String): InternalRow = {
-    val hit = gopherMemo.lookup(text, null)
-    if (hit != null) return hit.asInstanceOf[InternalRow]
     val len = text.length
     var nWords = 0L
     var nStop = 0L
@@ -1538,10 +1435,8 @@ object VectorMath {
       val n = counts.merge(w, 1L, sumLongs)
       if (n > top) top = n
     }
-    gopherMemo.store(text, null,
-      new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-        Array[Any](nWords, nNonWs, nStop, nAlpha, nChars, top)))
-      .asInstanceOf[InternalRow]
+    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
+      Array[Any](nWords, nNonWs, nStop, nAlpha, nChars, top))
   }
 
   /** Row-local winnowing fingerprint statistics; see [[WinnowStats]].
@@ -1660,8 +1555,6 @@ object VectorMath {
     override def initialValue() = new Array[Int](ClassifyDim.toInt)
   }
 
-  private val trainedMemo = new RowMemo("classify_trained")
-
   /** Margin of a TRAINED weight table over one (already-lowercased)
    *  text; see [[ClassifyTrainedMargin]]. Tokenize once, count per
    *  bucket, then margin_micro = Σ_b floor(w(b)·c_b / n_words) — the
@@ -1669,8 +1562,6 @@ object VectorMath {
    *  per-bucket terms, integer sum), so the live gate's admissions are
    *  the trained model's own predictions, not an approximation. */
   def classifyTrainedMargin(text: String, w: Array[Long]): InternalRow = {
-    val hit = trainedMemo.lookup(text, w)
-    if (hit != null) return hit.asInstanceOf[InternalRow]
     val counts = trainedScratch.get()
     java.util.Arrays.fill(counts, 0)
     var nWords = 0L
@@ -1694,9 +1585,8 @@ object VectorMath {
         b += 1
       }
     }
-    val row = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
+    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
       Array[Any](nWords, margin))
-    trainedMemo.store(text, w, row).asInstanceOf[InternalRow]
   }
 
   /** Word → 60-bit md5 prefix memo for [[dsirScore]] — the value is
@@ -1723,8 +1613,6 @@ object VectorMath {
     v
   }
 
-  private val dsirMemo = new RowMemo("dsir")
-
   /** One-pass DSIR importance scoring; see [[DsirScore]]: tokenize the
    *  (already lowercased) text by whitespace and sum the broadcast
    *  B-row micro-nat log-ratio model over each word's md5-60 bucket —
@@ -1733,8 +1621,6 @@ object VectorMath {
    *  integer arithmetic; the model rides as a long[] indexed by
    *  bucket. */
   def dsirScore(text: String, model: Array[Long]): InternalRow = {
-    val hit = dsirMemo.lookup(text, model)
-    if (hit != null) return hit.asInstanceOf[InternalRow]
     var nWords = 0L
     var logw = 0L
     var i = 0
@@ -1749,9 +1635,8 @@ object VectorMath {
         nWords += 1
       }
     }
-    val row = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
+    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
       Array[Any](nWords, logw))
-    dsirMemo.store(text, model, row).asInstanceOf[InternalRow]
   }
 
   /** Per-thread code-point count scratch for [[charEntropy]] —
@@ -1760,7 +1645,6 @@ object VectorMath {
     new ThreadLocal[java.util.HashMap[Integer, Integer]] {
       override def initialValue() = new java.util.HashMap[Integer, Integer](128)
     }
-  private val entropyMemo = new RowMemo("entropy")
 
   /**
    * One-pass character-entropy statistics; see [[CharEntropy]]:
@@ -1774,8 +1658,6 @@ object VectorMath {
    * code point, matching a character-split on the SQL side.
    */
   def charEntropy(text: String): InternalRow = {
-    val hit = entropyMemo.lookup(text, null)
-    if (hit != null) return hit.asInstanceOf[InternalRow]
     val counts = entropyScratch.get()
     counts.clear()
     var n = 0L
@@ -1798,9 +1680,8 @@ object VectorMath {
             * 1000000.0).toLong
       }
     }
-    val row = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
+    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
       Array[Any](n, nd, ent))
-    entropyMemo.store(text, null, row).asInstanceOf[InternalRow]
   }
 
   private val sumInts: java.util.function.BiFunction[
@@ -1811,11 +1692,7 @@ object VectorMath {
    *  SORTED array of rare corpus fingerprint hashes; see
    *  [[WinnowCollide]]. One [[winnowFingerprints]] deque scan, per-doc
    *  hash dedup in a set, binary-search membership (the sorted-long[]
-   *  model device) — returns (n_fp distinct hashes, n_collide). NO
-   *  row memo: the gate's plan evaluates the kernel once per row
-   *  (measured 0% hit rate), so a memo would add per-row key work for
-   *  nothing — and a memo ignoring (k, w) would serve stale counts
-   *  under a second parameterization. */
+   *  model device) — returns (n_fp distinct hashes, n_collide). */
   def winnowCollide(text: String, k: Int, w: Int,
       model: Array[Long]): InternalRow = {
     // A > 2^20-gram document overflows the packed position field —
@@ -1882,15 +1759,11 @@ object VectorMath {
     wt
   }
 
-  private val classifyRowMemo = new RowMemo("classify")
-
   /** One-pass classifier scoring; see [[ClassifyScore]]. Word loop
    *  mirrors \s+ tokenization (the [[qualityStats]] loop); expects
    *  already-lowercased text so engine `lower` semantics stay in the
    *  plan. */
   def classifyScore(text: String): InternalRow = {
-    val hit = classifyRowMemo.lookup(text, null)
-    if (hit != null) return hit.asInstanceOf[InternalRow]
     val len = text.length
     var nWords = 0L
     var sum = 0L
@@ -1904,10 +1777,8 @@ object VectorMath {
         sum += classifyWordWeight(text.substring(start, i))
       }
     }
-    classifyRowMemo.store(text, null,
-      new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-        Array[Any](nWords, sum)))
-      .asInstanceOf[InternalRow]
+    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
+      Array[Any](nWords, sum))
   }
 
   /** One-pass page-view TSV parse; see [[PageViewFields]]. Raw tab
@@ -2565,8 +2436,7 @@ case class LineFilterStats(child: Expression)
  * uses to shrink its probe-side input to the possibly-present
  * sliver). Same enhanced-double-hashing position arithmetic as the
  * whole family; false = DEFINITELY absent (the one-sided guarantee
- * the pre-filter's correctness rests on). No memo: one masked-add
- * loop per row, cheaper than a lookup.
+ * the pre-filter's correctness rests on).
  */
 case class BloomHashProbe(child: Expression, k: Int,
     model: org.apache.spark.broadcast.Broadcast[Array[Long]])

@@ -31,16 +31,10 @@ object AdsbOps {
   /** Parse + the LatLongFilterBolt guards (RollingFlightDist.java:91-113):
    *  all six fields present, on-ground (Gnd==true) dropped, Gnd null
    *  treated airborne. Rows that survive keep the parsed struct as `j`.
-   *
-   *  The parse rides inside `explode(array(...))`: the Generate node is
-   *  a predicate-pushdown barrier, so the guard filter evaluates on the
-   *  parsed STRUCT attribute instead of being pushed below the
-   *  projection and alias-substituted into 7 independent
-   *  build+parse-the-line copies (one per conjunct — measured 7.6x
-   *  scaling vs the struct form at sf0.1 when the line itself is a
-   *  synthesized column). One parse per row, guaranteed by plan shape. */
+   *  Pushdown copies the parse into every guard term;
+   *  [[graft.EvalKernelsOnce]] runs it once per row. */
   private def validReports(df: DataFrame, line: Column): DataFrame =
-    df.select(explode(array(parsed(line))).as("j"))
+    df.select(parsed(line).as("j"))
       .filter(col("j.Icao").isNotNull && col("j.PosTime").isNotNull &&
         col("j.Lat").isNotNull && col("j.Long").isNotNull &&
         col("j.Spd").isNotNull && col("j.Trak").isNotNull &&

@@ -66,6 +66,10 @@ object DriverGate extends AdaptiveSparkPlanHelper {
 
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
+  /** Keeps the INFO decision lines under a WARN root level (Verify, Bench). */
+  def logDecisions(): Unit = org.apache.logging.log4j.core.config.Configurator
+    .setLevel(getClass.getName, org.apache.logging.log4j.Level.INFO)
+
   /** `cap` clamped to what one JVM array holds; 0 or less collects
    *  nothing. */
   private def take(cap: Long): Int =

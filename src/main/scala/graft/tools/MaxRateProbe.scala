@@ -39,7 +39,7 @@ import graft.streaming.ConsumerLagListener
   * deleting its checkpoint under it logs FileNotFound traces.
   *
   * Args: optional topology names to probe a subset (default: all).
-  * Output: one `[maxrate]` line per topology; paste into SCALE.md.
+  * Output: one `[maxrate]` line per topology (bracket, admitted share).
   */
 object MaxRateProbe {
 
@@ -142,6 +142,10 @@ object MaxRateProbe {
     val trigger = Trigger.ProcessingTime("1 second")
     val noOptions = Topologies.Options(Map.empty)
 
+    /** The latest trial's sink rows over rows read (`n/a` for a
+      * foreachBatch form): a reject-path-only gate reads 0%. */
+    var admitted = "n/a"
+
     /** One trial: does topology `name` over its feed of `throttled(rate)`
       * consume all `rate x genSec` rows within genSec + grace? */
     def sustainable(name: String, rate: Long): Boolean = {
@@ -170,6 +174,11 @@ object MaxRateProbe {
           consumed() >= total
         } finally {
           try q.stop() catch { case _: Throwable => () }
+          // a foreachBatch sink reports no output rows (-1)
+          val progress = q.recentProgress
+          val in = progress.map(_.numInputRows).sum
+          admitted = if (in == 0 || progress.exists(_.sink.numOutputRows < 0)) "n/a"
+            else f"${100.0 * progress.map(_.sink.numOutputRows).sum / in}%.1f%%"
         }
       } catch { case e: Throwable =>
         println(s"[maxrate] $name@$rate FAILED: " +
@@ -233,19 +242,8 @@ object MaxRateProbe {
       // sustainable rate; `r` itself was never tried, so claim >= good
       val upper = if (bad > 0) bad.toString else s">=$good(unbracketed)"
       println(f"[maxrate] $name%-18s max sustained ~ ${good / 1000.0}%9.1f k rows/s " +
-        s"(bracket $good..$upper)" +
+        s"(bracket $good..$upper, admitted $admitted)" +
         (if (confirmed) "" else " [good edge FAILED its confirm trial]"))
-      // kernel memo effectiveness across this topology's trials: a low
-      // hit rate on a memo'd gate means the plan no longer duplicates
-      // back-to-back (the RowMemo assumption) and the measured rate is
-      // the kernel-per-duplicate one — NativeExprSpec asserts the floor
-      val memo = graft.functions.VectorMath.RowMemo.stats
-        .filter { case (_, (h, m)) => h + m > 0 }
-      if (memo.nonEmpty)
-        println("[memo] " + name + " " + memo.toSeq.sortBy(_._1).map {
-          case (n, (h, m)) => f"$n=${h * 100.0 / math.max(h + m, 1)}%.0f%%($h/${h + m})"
-        }.mkString(" "))
-      graft.functions.VectorMath.RowMemo.reset()
     }
 
     names.foreach { name =>

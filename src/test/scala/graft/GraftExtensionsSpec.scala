@@ -6,21 +6,21 @@ import org.scalatest.funsuite.AnyFunSuite
 class GraftExtensionsSpec extends AnyFunSuite {
   test("extensions register native functions for SQL") {
     // Force a NEW session (sharing any existing SparkContext): getOrCreate
-    // would silently return another suite's session without extensions.
+    // would silently return another suite's session. A plain builder:
+    // META-INF/services names GraftExtensions as a
+    // SparkSessionExtensionsProvider, so every new session loads it.
     val prior = SparkSession.getDefaultSession
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    // withExtensions (not the spark.sql.extensions conf): the conf is
-    // static and only applies when the session creates the SparkContext,
-    // which another suite already did here
     val spark = SparkSession.builder()
       .master("local[2]")
       .appName("ext-spec")
-      .withExtensions(new GraftExtensions)
       .config("spark.sql.shuffle.partitions", "2")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     try {
+      assert(prior.forall(_ ne spark), "getOrCreate returned the shared session")
+      assert(spark.sessionState.optimizer.preCBORules.contains(EvalKernelsOnce))
       val dot = spark.sql(
         "SELECT vec_dot(array(CAST(1.0 AS FLOAT), CAST(2.0 AS FLOAT)), " +
           "array(CAST(3.0 AS FLOAT), CAST(4.0 AS FLOAT))) AS d")

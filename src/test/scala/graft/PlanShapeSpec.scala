@@ -12,6 +12,88 @@ class PlanShapeSpec extends SparkSpec {
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, sfDir).queryExecution.executedPlan.toString
 
+  /** For each graft kernel class (a class in `graft.functions`), the
+    * copies of its most-copied call across any Filter, the Project
+    * directly above it and the Projects directly below it, in the
+    * executed plan `plan` (for a batch query, the AQE final plan after
+    * it runs: planning can re-inline an alias the optimized plan reads
+    * once). */
+  private def kernelCopies(plan: org.apache.spark.sql.execution.SparkPlan)
+      : Map[String, Int] = {
+    import org.apache.spark.sql.execution.{FilterExec, ProjectExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case s: QueryStageExec => nodes(s.plan)
+      case other => (other.children ++ other.subqueries).flatMap(nodes)
+    })
+    val all = nodes(plan)
+    all.collect { case f: FilterExec => f }.flatMap { f =>
+      val above = all.collect { case p: ProjectExec if p.child eq f => p.projectList }
+      val below = Iterator.iterate(f.child)(_.children.headOption.orNull)
+        .takeWhile(_.isInstanceOf[ProjectExec])
+        .flatMap(_.asInstanceOf[ProjectExec].projectList)
+      (above.flatten ++ below :+ f.condition).flatMap(_.collect {
+        case k if k.getClass.getName.startsWith("graft.functions.") => k
+      }).groupBy(_.canonicalized).values
+        .map(ks => ks.head.getClass.getSimpleName -> ks.size)
+    }.groupMapReduce(_._1)(_._2)(math.max)
+  }
+
+  /** The executed plan of `name`, run once at the smoke scale. */
+  private def queryPlan(name: String): org.apache.spark.sql.execution.SparkPlan = {
+    val df = SparkEntry.queries(name)(spark, sfDir)
+    df.collect()
+    df.queryExecution.executedPlan
+  }
+
+  /** The executed plan of topology `name`'s last trigger over 2000 of its
+    * feed's lines through the memory sink, or None for a foreachBatch
+    * form. */
+  private def topologyPlan(name: String): Option[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+    import org.apache.spark.sql.functions.{col, current_timestamp}
+    val entry = Topologies(name)
+    val indexes = spark.readStream.format(classOf[sources.ThrottledSeqSource].getName)
+      .option("totalRows", 2000L).load()
+      .select(current_timestamp().as("ts"), col("value"))
+    entry.build(spark, sources.Generators.feedLines(indexes, entry.feed),
+        Topologies.Options(Map.empty)) match {
+      case Topologies.Streamed(df, mode) =>
+        val q = streaming.StreamOps.toMemory(df, s"plan_${name}_${System.nanoTime}",
+          mode, tempDir("plan-shape"))
+        try {
+          q.processAllAvailable()
+          Some(q.asInstanceOf[StreamingQueryWrapper].streamingQuery
+            .lastExecution.executedPlan)
+        } finally q.stop()
+      case _: Topologies.PerTrigger => None
+    }
+  }
+
+  test("every declared query and streamed topology evaluates each graft " +
+      "kernel call at most once across a Filter and the Projects " +
+      "around it") {
+    val plans = SparkEntry.queries.keysIterator.map(n => n -> queryPlan(n)) ++
+      Topologies.table.keysIterator.flatMap(n => topologyPlan(n).map(s"topology $n" -> _))
+    val repeated = plans.flatMap { case (name, plan) =>
+      kernelCopies(plan).filter(_._2 > 1).map { case (k, n) => s"$name: $k x$n" }
+    }.toList
+    assert(repeated.isEmpty, repeated.mkString("\n"))
+  }
+
+  test("the gates whose pushed-down predicates copied a kernel into " +
+      "every term now evaluate it once: gopher_gate (was 14 copies), " +
+      "quality_cut (9), dataclean (5), pageview_count (5), " +
+      "outlier_gate's SynthEmbedding (25)") {
+    Seq("gopher_gate" -> "GopherStats", "quality_cut" -> "QualityStats",
+        "dataclean" -> "PageViewFields", "pageview_count" -> "PageViewFields",
+        "outlier_gate" -> "SynthEmbedding").foreach { case (name, kernel) =>
+      assert(topologyPlan(name).map(kernelCopies(_).get(kernel)) == Some(Some(1)),
+        s"$name: $kernel")
+    }
+  }
+
   test("plan trees stay bounded (no exponential expression blowup)") {
     // round-2 regression: a when-chain fold that referenced its own
     // accumulator twice per step made sim_ivf's plan 2^16x larger (a

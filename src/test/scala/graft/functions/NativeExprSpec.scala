@@ -545,33 +545,4 @@ class NativeExprSpec extends SparkSpec {
     val fps = graft.functions.VectorMath.winnowFingerprints(atBoundary, 3, 4)
     assert(fps.numElements() > 0, "m == 2^20 must be inside the domain")
   }
-
-  test("RowMemo collapses plan-duplicated kernel calls: the gopher gate's " +
-      "pushed-down predicate copies hit the memo at >= 50%, so an " +
-      "optimizer change that stops evaluating duplicates back-to-back " +
-      "fails here instead of silently costing the measured 6x") {
-    // Filter pushdown inlines the admission predicate BELOW the
-    // projection, duplicating gopher_stats once per predicate term on
-    // the same row — the shape the gate family runs live. With N
-    // plan-level copies the memo hits (N-1)/N of calls; the gopher
-    // battery has 4 rule terms + the projection, so >= 50% is a
-    // conservative floor that still catches a total collapse to 0.
-    // delta-scoped (not reset-then-read): the counters are JVM-global,
-    // so a concurrently-running suite evaluating gopher_stats would
-    // pollute an absolute read; the before/after difference isolates
-    // this query's own calls under sequential suite execution
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val (h0, m0) = VectorMath.RowMemo.stats("gopher")
-    val kept = graft.queries.PipelineQueries.gopherProjection(docs)
-      .filter(col("keep")).collect()
-    assert(kept.nonEmpty)
-    val (h1, m1) = VectorMath.RowMemo.stats("gopher")
-    val (hits, misses) = (h1 - h0, m1 - m0)
-    assert(hits + misses > 0, "gopher kernel did not run")
-    val rate = hits.toDouble / (hits + misses)
-    assert(rate >= 0.5,
-      f"gopher memo hit rate $rate%.2f ($hits hits / $misses misses) — " +
-        "plan-duplicated kernel calls no longer evaluate the same row " +
-        "back-to-back; the gate family silently loses its speedup")
-  }
 }
